@@ -7561,10 +7561,12 @@ SELECT lang, CAST(rank AS BIGINT) AS rank, doc_id, weight,
        round(lnkey, 6) + 0 AS lnkey
 FROM wr WHERE rank <= {R.WS_K}"""
 
-    # qdigest_quantiles twin: the QD_L bottom-up compression levels
-    # unrolled as generated CTE chains — the same merge rule, level
-    # order, and walk ordering as functions/sketches.qdigest_quantiles,
-    # so the digest itself is hash-pinned.
+    # qdigest_quantiles twin: kept on purpose in the level-by-level form
+    # — the QD_L bottom-up compression levels unrolled as generated CTE
+    # chains, with a window walk and rank joins — as an implementation
+    # independent of the Spark side's single array fold. The merge rule,
+    # level order and walk ordering are the same, so the digest itself
+    # is hash-pinned.
     _qd_L, _qd_K = SK.QD_L, SK.QD_K
     _qd_ctes = [f"""qd AS (
     SELECT lang, least(CAST(len({_WORDS}) AS INT), {(1 << _qd_L) - 1}) AS v

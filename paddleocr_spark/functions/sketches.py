@@ -1,14 +1,16 @@
-"""Deterministic cardinality sketches (HyperLogLog).
+"""Deterministic mergeable sketches: HyperLogLog (distinct counts),
+Count-Min (frequencies, heavy hitters) and q-digest (quantiles).
 
-At 10^12 documents, exact ``count_distinct`` over high-cardinality keys
-(vocabulary, shingles, media refs) is its own shuffle-heavy job; the
-production answer is a mergeable sketch. Spark ships HLL++ inside
-``approx_count_distinct``, but its register layout is engine-internal —
-useless for a cross-engine oracle. This module implements the published
-HyperLogLog estimator (Flajolet, Fusy, Gandouet, Meunier 2007) from
-scratch with a DETERMINISTIC, engine-neutral register construction, so
-the DuckDB twin computes the IDENTICAL registers and the gate hashes the
-estimate itself:
+At 10^12 documents, exact ``count_distinct``, per-item counts and order
+statistics over high-cardinality keys (vocabulary, shingles, media
+refs) are each their own shuffle-heavy job; the production answer is a
+mergeable sketch. Spark ships HLL++ inside ``approx_count_distinct``,
+but its register layout is engine-internal — useless for a cross-engine
+oracle. This module implements the published estimators from scratch
+with DETERMINISTIC, engine-neutral constructions, so each DuckDB twin
+computes the IDENTICAL sketch and the gate hashes the sketch itself.
+The Count-Min and q-digest sections below document their own rules;
+for HyperLogLog (Flajolet, Fusy, Gandouet, Meunier 2007):
 
 * item hash = the top 15 hex digits of md5 (a 60-bit integer both
   engines derive with the same string ops — the bloom-filter trick);
@@ -207,12 +209,45 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q-digest quantile sketch (Shrivastava, Buragohain, Agrawal, Suri 2004)
 # ---------------------------------------------------------------------------
 
-#: Universe bits: values clamped to [0, 2^QD_L).
+#: Universe bits: values clamped to [0, 2^QD_L). The build holds a dense
+#: array of 2^QD_L leaf counts per group, so the depth must stay small.
 QD_L = 7
+assert 1 <= QD_L <= 16, "q-digest universe depth outside 1..16"
 #: Compression parameter: digest keeps O(k) nodes, rank error <= L*n/k.
 QD_K = 64
 #: Quantiles the gate query reports.
 QD_QS = (0.5, 0.9, 0.99)
+
+# Bottom-up compression over levels QD_L..1 as one fold. State: ``cur``,
+# the dense counts of the level being processed (2^lvl entries), and
+# ``kept``, the nodes fixed so far. A sibling pair whose sum s is in
+# (0, thr) becomes one parent count at the next level up; otherwise its
+# non-zero children are kept at this level. What is left at level 0 is
+# the root. Each level reads only the previous level's counts.
+_QD_FOLD = f"""aggregate(
+  sequence({QD_L}, 1, -1),
+  named_struct('cur', leaves, 'kept',
+               CAST(array() AS array<struct<lvl:int,idx:int,cnt:bigint>>)),
+  (st, l) -> named_struct(
+    'cur', transform(sequence(0, size(st.cur) div 2 - 1),
+      j -> IF(st.cur[2 * j] + st.cur[2 * j + 1] < thr,
+              st.cur[2 * j] + st.cur[2 * j + 1], 0L)),
+    'kept', concat(st.kept, filter(
+      transform(st.cur, (c, i) -> named_struct('lvl', l, 'idx', i, 'cnt', c)),
+      e -> e.cnt > 0 AND e.cnt + st.cur[e.idx ^ 1] >= thr))),
+  st -> concat(st.kept, filter(
+    array(named_struct('lvl', 0, 'idx', 0, 'cnt', st.cur[0])),
+    e -> e.cnt > 0)))"""
+
+
+def _first_at_rank(arr: str, cnt: str, val: str) -> str:
+    """SQL: ``val`` of the first element of ``arr`` at which the running
+    sum of ``cnt`` reaches the rank column ``rk`` (lambda var ``e``)."""
+    return (f"aggregate({arr}, named_struct('cum', 0L, 'at', "
+            f"CAST(NULL AS BIGINT)), (st, e) -> named_struct("
+            f"'cum', st.cum + {cnt}, 'at', coalesce(st.at, "
+            f"IF(st.cum + {cnt} >= rk, CAST({val} AS BIGINT), NULL))), "
+            f"st -> st.at)")
 
 
 def qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,89 +268,46 @@ def qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is over integers, and the walk's ordering key
     (hi, range, idx) is total — both engines build the IDENTICAL digest,
     so the oracle hash-pins the sketch itself, not just its accuracy.
-    The build unrolls the QD_L bottom-up levels as QD_L self-
-    aggregations (bounded by the universe depth, not the data); at
-    10^12 docs each level is one map-side-combinable aggregate over
-    <= 3k surviving nodes per group, and two shards merge by adding
-    node counts then re-compressing — the mergeable-artifact property
-    the paper proves.
-    """
-    from pyspark.sql.window import Window as W
 
+    Scale shape: one map-side-combinable (lang, value) count, then one
+    per-language aggregate that collects the leaf counts into a dense
+    array of 2^QD_L counts (bounded by the universe, not the data).
+    The compression is local to each level, so the whole build is one
+    ``aggregate`` fold over that array (``_QD_FOLD``); the walk sorts
+    the kept nodes and scans their running sum, and the exact statistic
+    scans the same leaf array. Two shards merge by adding leaf counts
+    then re-compressing — the mergeable-artifact property the paper
+    proves.
+    """
     n_top = 1 << QD_L
     d = docs_table(spark, sf_dir).select(
         "lang",
         F.least(F.expr(
             "CAST(size(filter(split(lower(text), ' '), w -> w != '')) "
             "AS INT)"), F.lit(n_top - 1)).alias("v"))
-    strat = d.groupBy("lang").agg(F.count("*").cast("long").alias("n"))
-    # leaves: level QD_L, idx = value
-    cur = (d.groupBy("lang", "v").agg(F.count("*").cast("long").alias("cnt"))
-           .select("lang", F.lit(QD_L).alias("lvl"),
-                   F.col("v").cast("int").alias("idx"), "cnt"))
-    thr = F.ceil(F.col("n") / QD_K).cast("long")
-    for lvl in range(QD_L, 0, -1):
-        ch = cur.where(F.col("lvl") == lvl)
-        par = cur.where(F.col("lvl") == lvl - 1)
-        others = cur.where(~F.col("lvl").isin(lvl, lvl - 1))
-        grp = (ch.groupBy("lang", (F.col("idx") / 2).cast("int")
-                          .alias("pidx"))
-               .agg(F.sum("cnt").alias("csum")))
-        j = (grp.join(par.select("lang", F.col("idx").alias("pidx"),
-                                 F.col("cnt").alias("pcnt")),
-                      ["lang", "pidx"], "full_outer")
-             .join(strat, "lang")
-             .withColumn("s", F.coalesce("csum", F.lit(0))
-                         + F.coalesce("pcnt", F.lit(0)))
-             .withColumn("merge", F.col("csum").isNotNull()
-                         & (F.col("s") < thr)))
-        new_parents = (j.where(F.col("merge")
-                               | (F.col("csum").isNull()
-                                  & F.col("pcnt").isNotNull()))
-                       .select("lang", F.lit(lvl - 1).alias("lvl"),
-                               F.col("pidx").alias("idx"),
-                               F.col("s").cast("long").alias("cnt")))
-        kept_parents = (j.where(~F.col("merge") & F.col("pcnt").isNotNull()
-                                & F.col("csum").isNotNull())
-                        .select("lang", F.lit(lvl - 1).alias("lvl"),
-                                F.col("pidx").alias("idx"),
-                                F.col("pcnt").cast("long").alias("cnt")))
-        kept_children = (ch.withColumn(
-            "pidx", (F.col("idx") / 2).cast("int"))
-            .join(j.where(~F.col("merge") & F.col("csum").isNotNull())
-                  .select("lang", "pidx"), ["lang", "pidx"])
-            .select("lang", "lvl", "idx", "cnt"))
-        cur = others.unionByName(new_parents).unionByName(kept_parents) \
-                    .unionByName(kept_children)
-        cur = cur.localCheckpoint(eager=False)
-    nodes = (cur.withColumn(
-        "lo", F.expr(f"CAST(idx * CAST(pow(2, {QD_L} - lvl) AS LONG) "
-                     f"AS LONG)"))
-        .withColumn("hi", F.expr(
-            f"CAST((idx + 1) * CAST(pow(2, {QD_L} - lvl) AS LONG) - 1 "
-            f"AS LONG)")))
-    w = W.partitionBy("lang").orderBy(
-        "hi", (F.col("hi") - F.col("lo")), "idx")
-    walked = nodes.withColumn("cum", F.sum("cnt").over(
-        w.rowsBetween(W.unboundedPreceding, 0)))
-    qs = spark.createDataFrame([(float(q),) for q in QD_QS], "q double")
-    ranks = (strat.crossJoin(qs)
-             .withColumn("rk", F.ceil(F.col("q") * F.col("n"))
-                         .cast("long")))
-    est = (walked.join(ranks, "lang")
-           .where(F.col("cum") >= F.col("rk"))
-           .groupBy("lang", "q", "n", "rk")
-           .agg(F.min("hi").cast("long").alias("qd_est")))
-    # exact type-1 order statistic over the raw values
-    vc = d.groupBy("lang", "v").agg(F.count("*").alias("c"))
-    wv = W.partitionBy("lang").orderBy("v")
-    vcum = vc.withColumn("vcum", F.sum("c").over(
-        wv.rowsBetween(W.unboundedPreceding, 0)))
-    exact = (vcum.join(ranks, "lang")
-             .where(F.col("vcum") >= F.col("rk"))
-             .groupBy("lang", "q")
-             .agg(F.min("v").cast("long").alias("exact")))
-    return (est.join(exact, ["lang", "q"])
-            .select("lang", "q", "n", "qd_est", "exact",
-                    (F.col("qd_est") - F.col("exact")).cast("long")
-                    .alias("err")))
+    per_lang = (
+        d.groupBy("lang", "v").agg(F.count("*").alias("c"))
+        .groupBy("lang").agg(
+            F.sum("c").cast("long").alias("n"),
+            F.map_from_entries(F.collect_list(F.struct("v", "c")))
+            .alias("m"))
+        .select("lang", "n",
+                F.ceil(F.col("n") / QD_K).cast("long").alias("thr"),
+                F.expr(f"transform(sequence(0, {n_top - 1}), "
+                       f"i -> coalesce(try_element_at(m, i), 0L))")
+                .alias("leaves")))
+    walk = (f"array_sort(transform({_QD_FOLD}, e -> named_struct("
+            f"'hi', shiftleft(e.idx + 1, {QD_L} - e.lvl) - 1, "
+            f"'rng', shiftleft(1, {QD_L} - e.lvl) - 1, "
+            f"'idx', e.idx, 'cnt', e.cnt)))")
+    ranked = (per_lang.withColumn("walk", F.expr(walk))
+              .withColumn("q", F.explode(F.array(
+                  *[F.lit(float(q)) for q in QD_QS])))
+              .withColumn("rk", F.ceil(F.col("q") * F.col("n"))
+                          .cast("long")))
+    return (ranked.select(
+        "lang", "q", "n",
+        F.expr(_first_at_rank("walk", "e.cnt", "e.hi")).alias("qd_est"),
+        F.expr(_first_at_rank(f"sequence(0, {n_top - 1})", "leaves[e]",
+                              "e")).alias("exact"))
+        .withColumn("err", (F.col("qd_est") - F.col("exact")).cast("long")))

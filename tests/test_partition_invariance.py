@@ -61,7 +61,7 @@ REPRESENTATIVE = [
     "hll_cardinality",         # integer register fold (order-free sum)
     "cms_heavy_hitters",       # D-row counter fold + min estimate
     "weighted_sample",         # per-stratum top-k rank
-    "qdigest_quantiles",       # 7-level iterative compression + walk
+    "qdigest_quantiles",       # collected leaf array + HOF fold + walk
     "wordpiece_encode",        # vocab threshold + unrolled matcher
 ]
 

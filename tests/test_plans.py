@@ -166,3 +166,15 @@ def test_sketch_family_plan_shapes(spark):
     # in HashAggregate's functions list when map-side combine is planned
     assert "partial_max" in _formatted(hll_cardinality(spark, SF))
     assert "partial_count" in _formatted(cms_heavy_hitters(spark, SF))
+
+
+def test_qdigest_plan_is_one_fold(spark):
+    """q-digest is two aggregates and array HOFs: the leaf count and the
+    per-language collect are the only exchanges, and the level-by-level
+    compression, the walk and the exact rank need no join, no window
+    and no checkpointed RDD between levels."""
+    from paddleocr_spark.functions.sketches import qdigest_quantiles
+    plan = _plan(qdigest_quantiles(spark, SF))
+    for node in ("Join", "CartesianProduct", "Window", "Scan ExistingRDD"):
+        assert node not in plan, node
+    assert plan.count("Exchange") <= 2

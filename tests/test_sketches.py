@@ -220,3 +220,57 @@ def test_qdigest_matches_plain_python(spark):
             assert true_rank - rk <= QD_L * n / QD_K + 1, (lang, q)
             # exact column is the type-1 order statistic
             assert r["exact"] == svals[rk - 1], (lang, q)
+
+
+def test_qdigest_edge_cases_match_plain_python(spark, tmp_path):
+    """The digest equals the literal Python build on a seeded corpus
+    built to hit the edges: a language with n <= QD_K (thr == 1, no
+    pair ever merges), a single-value language, values clamped at 0 and
+    at 2^QD_L - 1, and one heavily skewed language."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from paddleocr_spark.functions.sketches import (QD_K, QD_L,
+                                                    qdigest_quantiles)
+
+    top = (1 << QD_L) - 1
+    rng = random.Random(20041103)
+    lengths = {
+        "tiny": [rng.randrange(0, top + 1) for _ in range(QD_K - 5)],
+        "one": [17] * 300,
+        "clamp": ([0] * 150 + [top + 1 + rng.randrange(0, 200)
+                              for _ in range(110)]
+                  + [rng.randrange(0, top + 1) for _ in range(40)]),
+        "skew": ([3] * 900 + [rng.randrange(0, top + 1)
+                              for _ in range(60)]),
+    }
+    langs, texts = [], []
+    for lang, ls in lengths.items():
+        for n_words in ls:
+            words = [f"w{rng.randrange(50)}" for _ in range(n_words)]
+            # doubled separators yield empty tokens, which are not words
+            texts.append(("  " if rng.random() < 0.2 else " ").join(words))
+            langs.append(lang)
+    pq.write_table(pa.table({"doc_id": list(range(len(texts))),
+                             "lang": langs, "text": texts}),
+                   str(tmp_path / "documents.parquet"))
+
+    got = {(r["lang"], r["q"]): r
+           for r in qdigest_quantiles(spark, str(tmp_path)).collect()}
+    assert {lg for lg, _ in got} == set(lengths)
+    for lang, ls in lengths.items():
+        vs = [min(x, top) for x in ls]
+        n, svals = len(vs), sorted(vs)
+        for q, est in py_qdigest(vs, QD_K).items():
+            r = got[(lang, q)]
+            exact = svals[math.ceil(q * n) - 1]
+            assert (r["n"], r["qd_est"], r["exact"], r["err"]) == (
+                n, est, exact, est - exact), (lang, q)
+    # thr == 1 keeps every leaf, and a single-valued group is one leaf:
+    # both digests are exact
+    for lang in ("tiny", "one"):
+        assert all(got[(lang, q)]["err"] == 0 for q in (0.5, 0.9, 0.99))
+    assert got[("clamp", 0.5)]["exact"] == 0
+    assert got[("clamp", 0.99)]["exact"] == top
