@@ -29,9 +29,9 @@ SQL-restatable, but their outputs on the FIXED sf0.01 gate input are just
 tables: tools/make_fixtures.py computes them single-node (DuckDB input
 synthesis + pandas/NumPy computation, never Spark) into committed parquet
 under fixtures/, and their oracle SQL is a plain ``read_parquet`` of the
-fixture. Those five oracles are therefore valid ONLY at the driver's
-correctness scale factor (sf0.01) — running tools/parity_check.py at
-another sf fails exactly those five, by construction.
+fixture (``_fixture_sql``). Those oracles are therefore valid ONLY at the
+driver's correctness scale factor (sf0.01) — running tools/parity_check.py
+at another sf fails exactly the fixture-backed entries, by construction.
 """
 
 from __future__ import annotations
@@ -47,14 +47,22 @@ from . import geometry as G
 from . import synth as S
 from .functions import clustering as CL
 from .functions import content as MC
+from .functions import grapheme as GR
 from .functions import pq as PQ
 from .functions import curation as CU
 from .functions import dedup as D
+from .functions import repetition as REP
 from .functions import retrieval as R
 from .functions import similarity as SIM
+from .functions import sketches as SK
 from .functions import textfns as T
 from .functions import tokenizer as TK
 from .operators import kie as KIE
+from .operators.recognize import (abinet_decode, attn_decode, can_decode,
+                                  nrtr_decode, orient4, pren_decode,
+                                  rfl_decode, sar_decode, satrn_decode,
+                                  seed_decode, spin_decode, srn_decode,
+                                  vitstr_decode, vl_decode)
 from .operators import table as TBL
 from .pipeline import (det_filter, drop_score_filter, explode_spans, extract,
                        strip_styles, with_geometry)
@@ -1086,11 +1094,6 @@ def q_det_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(2 * p * r / (p + r), 4).alias("hmean"))
 
 
-def q_strq2b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P14 full-width→half-width fold via translate()."""
-    return T.strq2b(spark, sf_dir)
-
-
 def q_ctc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R1+R2+R3: CTC encode (JVM) → sort-to-batch mapInPandas decode →
     conditional 180° flip. Round-trip invariant: decoded text == input text
@@ -1439,124 +1442,6 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_resize(feats)
 
 
-def q_attn_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 AttnLabelDecode (dead break-at-eos quirk preserved): the tail
-    appended after the eos id still decodes."""
-    from .operators.recognize import attn_decode
-    return attn_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_sar_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 second decoder: SARLabelDecode — live break-at-eos, eos-at-0
-    skipped only because text_prob is None, PAD ignored, '<UKN>' decodes
-    as a literal dictionary entry (all unlike Attn)."""
-    from .operators.recognize import sar_decode
-    return sar_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_nrtr_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 fourth decoder family: NRTRLabelDecode — no ignored tokens
-    (blank/'<unk>'/'<s>' decode as literal dict strings), eos breaks at
-    ANY position (live), and the bare-except lookup skips out-of-range
-    ids while wrapping small negative ones Python-style."""
-    from .operators.recognize import nrtr_decode
-    return nrtr_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_vitstr_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 fifth decoder family (a): ViTSTRLabelDecode — NRTR's walk over
-    the 2-special dict ['<s>', '</s>'] + charset, with __call__'s
-    time-step-0 column drop (the stream's leading real-char id must
-    vanish) and eos at id 1 breaking anywhere."""
-    from .operators.recognize import vitstr_decode
-    return vitstr_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_srn_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 fifth decoder family (b): SRNLabelDecode — specials appended
-    at the dict END, both ignored ANYWHERE, and no break statement at
-    all: text after a mid-stream eos still decodes (unlike every other
-    family), and id -1 wraps to the literal '<EOS>' marker."""
-    from .operators.recognize import srn_decode
-    return srn_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_rfl_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 seventh decoder family: RFLLabelDecode — Attn's walk over the
-    ['sos']+cs+['eos'] dict PLUS the counting branch: per-sample length
-    = Python round(sum(cnt)) with BANKER'S rounding on .5 ties
-    (rec_postprocess.py:601-607)."""
-    from .operators.recognize import rfl_decode
-    return rfl_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_seed_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 eighth decoder family: SEEDLabelDecode — live break-at-eos
-    with NO ignored-token skip at all: 'padding' and 'unknown' decode as
-    literal dictionary strings (rec_postprocess.py:660-684)."""
-    from .operators.recognize import seed_decode
-    return seed_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_satrn_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 ninth decoder family: SATRNLabelDecode with rm_symbol=True —
-    SAR's walk plus the lowercase+strip pass whose regex class keeps
-    literal '^' characters (rec_postprocess.py:915-918)."""
-    from .operators.recognize import satrn_decode
-    return satrn_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_pren_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 tenth decoder family: PRENLabelDecode — the only family that
-    PREPENDS all three specials (pad=0/eos=1/unk=2); eos breaks, pad/unk
-    skip, unknowns drop silently (rec_postprocess.py:996-1023)."""
-    from .operators.recognize import pren_decode
-    return pren_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_abinet_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 eleventh decoder family: ABINetLabelDecode — NRTR's bare-
-    except walk over the 1-special dict ['</s>'] + cs: eos is id ZERO
-    (rec_postprocess.py:1128-1164)."""
-    from .operators.recognize import abinet_decode
-    return abinet_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_spin_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 twelfth decoder family: SPINLabelDecode — Attn's decode over
-    the FRONT-loaded dict ['sos','eos'] + cs, so -1 wraps to the last
-    charset char instead of Attn's literal 'eos'
-    (rec_postprocess.py:1405-1418)."""
-    from .operators.recognize import spin_decode
-    return spin_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_vl_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 thirteenth decoder family: VLLabelDecode eval path — fixed
-    nsteps with length = index of the first 0 INCLUSIVE (the eos step
-    counts), out-of-range ids decoding to '' while still occupying a
-    counted step (rec_postprocess.py:1458-1516)."""
-    from .operators.recognize import vl_decode
-    return vl_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_can_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 fourteenth decoder family: CANLabelDecode — seq_end = argmin
-    (first occurrence of the SMALLEST id, not an eos search; live on
-    ordinary text containing the charset's first char) and SPACE-joined
-    latex symbols (rec_postprocess.py:1529-1541)."""
-    from .operators.recognize import can_decode
-    return can_decode(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_grapheme_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fork grapheme layer: decompose synthesized Korean text into
-    initial/medial/final representative-syllable streams
-    (korean_grapheme_label.py:11-32, incl. the <=55199 bound quirk)."""
-    from .functions.grapheme import grapheme_decompose
-    return grapheme_decompose(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
 def q_grapheme_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fork grapheme layer: decompose→compose roundtrip with the
     prob-carrying dialect (korean_grapheme_label.py:35-104): >=2 unknown
@@ -1574,24 +1459,6 @@ def q_grapheme_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "composed",
         F.expr("concat_ws(',', transform(conf, x -> "
                "cast(cast(x as decimal(6,4)) as string)))").alias("conf"))
-
-
-def q_grapheme_compose_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fork grapheme layer, label dialect (korean_compose.py:28-44):
-    unknown initial OR medial passes the initial through verbatim;
-    missing final defaults to index 0."""
-    from .functions.grapheme import grapheme_compose_label
-    return grapheme_compose_label(
-        _docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_grapheme_ned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fork RecMetric.eval_full report (rec_metric.py:147-200): acc +
-    c_ned + g_ned over (n + 1e-5), ignore_space=True — with
-    grapheme_edit_dis transcribed INCLUDING its dict-keys bug (every
-    non-empty pair scores 0; only the empty-side quirk moves the sum)."""
-    from .functions.grapheme import grapheme_ned
-    return grapheme_ned(_docs(spark, sf_dir).select("doc_id", "text"))
 
 
 def q_rec_metric_grapheme(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1642,15 +1509,6 @@ def q_rec_metric_grapheme(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("channel"))
 
 
-def q_utf8_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fork utf8string dialect: flatten synthesized Korean text to a
-    compatibility-jamo stream (korean_compose_by_utf8.py:16-31; '@' for
-    an absent final; FULL-block Hangul test, unlike the other dialect's
-    55199)."""
-    from .functions.grapheme import utf8_decompose
-    return utf8_decompose(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
 def q_utf8_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fork utf8string dialect: greedy jamo re-composition with probs
     (korean_compose_by_utf8.py:60-94) — cho+jung starts a syllable and
@@ -1667,17 +1525,6 @@ def q_utf8_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "composed",
         F.expr("concat_ws(',', transform(ps, x -> "
                "cast(cast(x as decimal(6,4)) as string)))").alias("ps"))
-
-
-def q_rec_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fork ensemble layer (korean_compose_by_utf8.py:96-198, used at
-    inference by rec_postprocess.py:340-357): char-level max-prob pick,
-    char-level threshold pick, word-level product-of-probs pick (long
-    docs underflow both products to 0 and the tie rule decides), and the
-    log-avg threshold pick whose default threshold 0.5 is unreachable on
-    the log scale (always pred2 — pinned quirk)."""
-    from .functions.grapheme import rec_ensemble
-    return rec_ensemble(_docs(spark, sf_dir).select("doc_id", "text"))
 
 
 def q_e2e_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2195,14 +2042,6 @@ def q_can_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("exp_rate"),
         F.count("*").cast("long").alias("n_batches"),
         F.sum("batch_size").cast("long").alias("n_lines"))
-
-
-def q_orientation4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-way orientation stage (ppstructure/predict_system.py:94-108): the
-    deterministic scanner-rotation is undone by the classifier-driven
-    inverse rotation; the oracle hash pins corrected == original."""
-    from .operators.recognize import orient4
-    return orient4(_docs(spark, sf_dir).select("doc_id", "text"))
 
 
 def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3509,156 +3348,48 @@ def q_lmdb_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "img_len long, sum_gray long, min_gray long, max_gray long")
 
 
-# ---------------------------------------------------------------------------
-# Gate-coverage ledger (VERDICT r3 item 2): rounds 2 and 3 both saw the
-# driver's correctness gate silently truncate the registry tail (2 then 6
-# entries) under a time budget. Every queries() callable now records its
-# own invocation into GATE_COVERAGE.json at the repo root — one coverage
-# session per PROCESS, so the file left behind by a gate run lists exactly
-# which registry entries that run touched and which it dropped. Best-effort:
-# a ledger write can never fail the query.
-# ---------------------------------------------------------------------------
-
-_COVERAGE_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "GATE_COVERAGE.json")
-_coverage_state: dict | None = None
-
-
-_coverage_floor: int | None = None  # on-disk invoked count at session start
-
-
-def _record_coverage(name: str, sf_dir: str, registry: list[str]) -> None:
-    global _coverage_state, _coverage_floor
-    try:
-        import json
-        import time
-        if _coverage_state is None:
-            _coverage_state = {
-                "session_started_at": time.time(),
-                "registry": registry,
-                "invoked": {},
-            }
-            # A complete gate run (all 64 entries) must not be clobbered
-            # by a later few-query smoke session — exactly what happened
-            # in round 4, when the entry() smoke at sf0.001 overwrote the
-            # 64/64 ledger minutes after it was recorded. A session only
-            # takes over the file once it has invoked at least as many
-            # entries as the session that wrote it.
-            try:
-                with open(_COVERAGE_PATH) as fh:
-                    prev = json.load(fh)
-                _coverage_floor = (len(prev.get("invoked", {}))
-                                   if prev.get("registry") == registry
-                                   else 0)
-            except Exception:
-                _coverage_floor = 0
-        _coverage_state["invoked"][name] = {
-            "sf_dir": sf_dir, "ts": time.time()}
-        _coverage_state["not_invoked"] = [
-            q for q in registry if q not in _coverage_state["invoked"]]
-        if len(_coverage_state["invoked"]) < (_coverage_floor or 0):
-            return
-        tmp = _COVERAGE_PATH + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(_coverage_state, fh, indent=1)
-        os.replace(tmp, _COVERAGE_PATH)
-    except Exception:
-        pass
-
-
-def _with_coverage(name: str, fn: Callable,
-                   registry: list[str]) -> Callable:
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _record_coverage(name, sf_dir, registry)
-        return fn(spark, sf_dir)
-
-    wrapped.__name__ = getattr(fn, "__name__", name)
-    wrapped.__doc__ = fn.__doc__
-    wrapped.__wrapped__ = fn
-    return wrapped
-
-
-def _gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.repetition import gopher_repetition
-    return gopher_repetition(spark, sf_dir)
-
-
-def _hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.sketches import hll_cardinality
-    return hll_cardinality(spark, sf_dir)
-
-
-def _cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.sketches import cms_heavy_hitters
-    return cms_heavy_hitters(spark, sf_dir)
-
-
-def _qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.sketches import qdigest_quantiles
-    return qdigest_quantiles(spark, sf_dir)
-
-
-def _wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.tokenizer import wordpiece_encode
-    return wordpiece_encode(spark, sf_dir)
+def _over_texts(op: Callable[[DataFrame], DataFrame]) \
+        -> Callable[[SparkSession, str], DataFrame]:
+    """Gate query applying ``op`` to the documents' ``(doc_id, text)``."""
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return op(_docs(spark, sf_dir).select("doc_id", "text"))
+    return run
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    reg = _registry()
-    names = list(reg)
-    return {n: _with_coverage(n, fn, names) for n, fn in reg.items()}
-
-
-def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE on ordering: the round-2/round-3 driver gates recorded exactly
-    # the TRAILING dict entries missing from CORRECTNESS_r0{2,3}.json (a
-    # time/entry budget cutoff), so dict order is risk policy. Round-4
-    # order, three groups:
-    #   1. the flagship pipeline stages (headline queries — must be
-    #      driver-green every round);
-    #   2. every entry added since CORRECTNESS_r03 (45 entries that have
-    #      never had a driver-verified row), expensive-first so a cutoff
-    #      inside the group costs only cheap, locally-re-verifiable ones;
-    #   3. the 43 remaining entries already driver-green in round 3,
-    #      expensive-first, sub-second scalars last.
-    # A cutoff therefore eats previously-verified cheap queries before it
-    # can touch anything new. GATE_COVERAGE.json records the delta loud.
+    # Dict order is the gate order; keep it stable.
     return {
-        # -- group 1: flagship pipeline stages -------------------------
         "explode_spans": q_explode_spans,
         "span_geometry": q_span_geometry,
         "det_drop_filters": q_det_drop_filters,
         "style_strip": q_style_strip,
         "flagship_span_counts": q_flagship_span_counts,
         "flagship_kind_counts": q_flagship_kind_counts,
-        "flagship_extract": q_flagship_extract,        # fixture oracle
-        # -- group 2: new since CORRECTNESS_r03, expensive-first -------
-        # round-5 A9 closure family (never driver-sampled — keep first):
+        "flagship_extract": q_flagship_extract,
         "ser_token_metric": q_ser_token_metric,
-        "sr_metric": q_sr_metric,                 # fixture oracle
-        "det_fce_metric": q_det_fce_metric,       # fixture oracle
-        "table_metric": q_table_metric,           # fixture oracle
+        "sr_metric": q_sr_metric,
+        "det_fce_metric": q_det_fce_metric,
+        "table_metric": q_table_metric,
         "rec_metric_grapheme": q_rec_metric_grapheme,
-        "ct_metric": q_ct_metric,                 # fixture oracle
-        "e2e_deteval": q_e2e_deteval,             # fixture oracle
-        "config_transforms": q_config_transforms,  # fixture oracle
+        "ct_metric": q_ct_metric,
+        "e2e_deteval": q_e2e_deteval,
+        "config_transforms": q_config_transforms,
         "re_metric": q_re_metric,
         "kie_f1_metric": q_kie_f1_metric,
-        "can_metric": q_can_metric,               # fixture oracle
+        "can_metric": q_can_metric,
         "cnt_metric": q_cnt_metric,
-        "east_crop": q_east_crop,                      # fixture oracle
-        "copy_paste": q_copy_paste,                    # fixture oracle
+        "east_crop": q_east_crop,
+        "copy_paste": q_copy_paste,
         "pse_gt": q_pse_gt,
-        "east_gt": q_east_gt,                          # fixture oracle
-        "sast_gt": q_sast_gt,                          # fixture oracle
-        "fce_gt": q_fce_gt,                            # fixture oracle
-        "pse_crop": q_pse_crop,                        # fixture oracle
+        "east_gt": q_east_gt,
+        "sast_gt": q_sast_gt,
+        "fce_gt": q_fce_gt,
+        "pse_crop": q_pse_crop,
         "docx_recovery": q_docx_recovery,
         "main_content": MC.main_content,
         "readability_extract": MC.readability_extract,
         "boilerpipe_extract": MC.boilerpipe_extract,
-        "gopher_repetition": _gopher_repetition,
+        "gopher_repetition": REP.gopher_repetition,
         "interleaved_pack": CU.interleaved_pack,
         "pq_codes": PQ.pq_codes,
         "pq_adc_topk": PQ.pq_adc_topk,
@@ -3671,11 +3402,11 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "inverted_index": R.inverted_index,
         "lm_score": R.lm_score,
         "kn_lm_score": R.kn_lm_score,
-        "hll_cardinality": _hll_cardinality,
-        "cms_heavy_hitters": _cms_heavy_hitters,
+        "hll_cardinality": SK.hll_cardinality,
+        "cms_heavy_hitters": SK.cms_heavy_hitters,
         "weighted_sample": R.weighted_sample,
-        "qdigest_quantiles": _qdigest_quantiles,
-        "wordpiece_encode": _wordpiece_encode,
+        "qdigest_quantiles": SK.qdigest_quantiles,
+        "wordpiece_encode": TK.wordpiece_encode,
         "sample_stratified": R.sample_stratified,
         "decontaminate": CU.decontaminate,
         "dsir_weights": CU.dsir_weights,
@@ -3698,15 +3429,15 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pii_redact": CU.pii_redact,
         "sampling_temperature": CU.sampling_temperature,
         "ccnet_buckets": CU.ccnet_buckets,
-        "layout_preprocess": q_layout_preprocess,      # fixture oracle
-        "grapheme_compose_label": q_grapheme_compose_label,
+        "layout_preprocess": q_layout_preprocess,
+        "grapheme_compose_label": _over_texts(GR.grapheme_compose_label),
         "grapheme_compose": q_grapheme_compose,
         "cell_match_bucketed": q_cell_match_bucketed,
-        "table_xlsx": q_table_xlsx,                    # fixture oracle
+        "table_xlsx": q_table_xlsx,
         "utf8_compose": q_utf8_compose,
         "det_label_encode": q_det_label_encode,
         "lmdb_scan": q_lmdb_scan,
-        "rotate_crop": q_rotate_crop,                  # fixture oracle
+        "rotate_crop": q_rotate_crop,
         "e2e_label_encode": q_e2e_label_encode,
         "gif_frames": q_gif_frames,
         "tensor_ops": q_tensor_ops,
@@ -3719,59 +3450,58 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "randaug": q_randaug,
         "pg_gt": q_pg_gt,
         "media_decode_real": q_media_decode_real,
-        "utf8_decompose": q_utf8_decompose,
-        "grapheme_decompose": q_grapheme_decompose,
+        "utf8_decompose": _over_texts(GR.utf8_decompose),
+        "grapheme_decompose": _over_texts(GR.grapheme_decompose),
         "media_decode": q_media_decode,
         "gopher_rules": T.gopher_rules,
         "shrink_map": q_shrink_map,
-        "grapheme_ned": q_grapheme_ned,
-        "fce_detect": q_fce_detect,                    # fixture oracle
+        "grapheme_ned": _over_texts(GR.grapheme_ned),
+        "fce_detect": q_fce_detect,
         "rec_label_roster": q_rec_label_roster,
-        "rec_ensemble": q_rec_ensemble,
+        "rec_ensemble": _over_texts(GR.rec_ensemble),
         "det_clip_filter": q_det_clip_filter,
         "rec_label_encode": q_rec_label_encode,
-        "border_map": q_border_map,                    # fixture oracle
+        "border_map": q_border_map,
         "quality_score": T.quality_score,
         "table_label_encode": q_table_label_encode,
         "lang_id": T.lang_id,
         "table_label_encode_master": q_table_label_encode_master,
-        "satrn_decode": q_satrn_decode,
-        "rfl_decode": q_rfl_decode,
-        "sast_detect": q_sast_detect,                  # fixture oracle
-        "pren_decode": q_pren_decode,
-        "drrg_detect": q_drrg_detect,                  # fixture oracle
-        "vitstr_decode": q_vitstr_decode,
-        "srn_decode": q_srn_decode,
-        "seed_decode": q_seed_decode,
-        "nrtr_decode": q_nrtr_decode,
+        "satrn_decode": _over_texts(satrn_decode),
+        "rfl_decode": _over_texts(rfl_decode),
+        "sast_detect": q_sast_detect,
+        "pren_decode": _over_texts(pren_decode),
+        "drrg_detect": q_drrg_detect,
+        "vitstr_decode": _over_texts(vitstr_decode),
+        "srn_decode": _over_texts(srn_decode),
+        "seed_decode": _over_texts(seed_decode),
+        "nrtr_decode": _over_texts(nrtr_decode),
         "fingerprint": T.fingerprint,
-        "ct_detect": q_ct_detect,                      # fixture oracle
-        "abinet_decode": q_abinet_decode,
-        "vl_decode": q_vl_decode,
+        "ct_detect": q_ct_detect,
+        "abinet_decode": _over_texts(abinet_decode),
+        "vl_decode": _over_texts(vl_decode),
         "token_count": T.token_count,
-        "spin_decode": q_spin_decode,
-        "can_decode": q_can_decode,
+        "spin_decode": _over_texts(spin_decode),
+        "can_decode": _over_texts(can_decode),
         "neardup_survivors": SIM.neardup_survivors,
         "pdf_pages": q_pdf_pages,
         "ann_ivf2_assign": SIM.ivf2_assign,
         "ngram_topk": T.ngram_topk,
-        # -- group 3: driver-green in round 3, expensive-first ---------
         "neardup_components": SIM.neardup_components,
         "e2e_metric": q_e2e_metric,
         "embedding_neardup": SIM.neardup_pairs_cached,
         "simhash_pairs": D.simhash_pairs,
-        "teds_metric": q_teds,                         # fixture oracle
+        "teds_metric": q_teds,
         "table_html": TBL.table_html,
-        "det_eval_greedy": q_det_eval,                 # fixture oracle
+        "det_eval_greedy": q_det_eval,
         "e2e_eval": q_e2e_eval,
         "dedup_minhash_pairs": D.dedup_minhash_pairs,
         "preprocess_image": q_preprocess_image,
         "cell_match": q_cell_match,
-        "table_html_master": TBL.table_html_master,   # fixture oracle
+        "table_html_master": TBL.table_html_master,
         "cell_texts": q_cell_texts,
-        "char_prf_metric": q_char_prf,                 # fixture oracle
-        "pse_detect": q_pse_detect,                    # fixture oracle
-        "east_nms": q_east_nms,                        # fixture oracle
+        "char_prf_metric": q_char_prf,
+        "pse_detect": q_pse_detect,
+        "east_nms": q_east_nms,
         "dedup_ngram_jaccard": D.dedup_ngram_jaccard,
         "ann_ivf_topk": SIM.ann_ivf_topk,
         "rec_metric": q_rec_metric,
@@ -3781,23 +3511,23 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_resize": q_media_resize,
         "ctc_roundtrip": q_ctc_roundtrip,
         "page_limit": q_page_limit,
-        "nms_per_class": q_nms,                        # fixture oracle
+        "nms_per_class": q_nms,
         "ann_ivf_assign": SIM.ivf_assign,
         "ann_cosine_topk": SIM.ann_cosine_topk,
-        "east_detect": q_east_detect,                  # fixture oracle
-        "db_detect": q_db_detect,                      # fixture oracle
+        "east_detect": q_east_detect,
+        "db_detect": q_db_detect,
         "topk_window": q_topk_window,
         "table_token_acc": TBL.table_token_acc,
         "table_structure": TBL.table_structure,
-        "sar_decode": q_sar_decode,
+        "sar_decode": _over_texts(sar_decode),
         "kie_pairs": KIE.kie_pairs,
         "dim_join_broadcast": q_dim_join_broadcast,
         "det_metric": q_det_metric,
         "dedup_exact": D.dedup_exact,
-        "attn_decode": q_attn_decode,
+        "attn_decode": _over_texts(attn_decode),
         "union_sample": q_union_sample,
-        "strq2b": q_strq2b,
-        "orientation4": q_orientation4,
+        "strq2b": T.strq2b,
+        "orientation4": _over_texts(orient4),
         "cls_metric": q_cls_metric,
         "embed_stats": q_embed_stats,
     }
@@ -5074,7 +4804,6 @@ FROM bpw"""
     # gopher_repetition twin: decoration formulas + every signal mirrored
     # from functions/repetition.py (word-granular chars, first-occurrence
     # exemption, overlap-aware position union). Keep in lockstep.
-    from .functions import repetition as REP
     _rp_w = CU.LINE_WIDTH_WORDS                    # line width (8)
     _rp_p = REP.PARA_LINES * _rp_w                 # paragraph width (32)
     _rp_tops = " ".join(
@@ -6430,7 +6159,9 @@ FROM kt"""
     # (3 Hangul / 1 other) of the chars before it — a window sum over an
     # unnested position table (linear; the naive per-k list_sum re-scan
     # was O(n^2) per doc and cost ~40 s of DuckDB time at sf0.01).
-    u_p = "(CAST((doc_id + 5 * (j)) % 8 + 1 AS DOUBLE) / 8)"
+    def u_p(j: str) -> str:
+        return f"(CAST((doc_id + 5 * {j}) % 8 + 1 AS DOUBLE) / 8)"
+
     sqls["utf8_compose"] = f"""{g_base},
 pos AS (
     SELECT doc_id, ktext,
@@ -6450,10 +6181,10 @@ off AS (
 per AS (
     SELECT doc_id, ktext, k,
            round(CASE WHEN hang
-                 THEN ({u_p.replace('(j)', 'o')} +
-                       {u_p.replace('(j)', '(o + 1)')} +
-                       {u_p.replace('(j)', '(o + 2)')}) / 3
-                 ELSE {u_p.replace('(j)', 'o')} END, 4) AS pk
+                 THEN ({u_p('o')} +
+                       {u_p('(o + 1)')} +
+                       {u_p('(o + 2)')}) / 3
+                 ELSE {u_p('o')} END, 4) AS pk
     FROM off
 )
 SELECT kt.doc_id, kt.ktext AS composed,
@@ -7452,7 +7183,6 @@ FROM d LEFT JOIN pd USING (doc_id)"""
     # hll_cardinality twin: identical register construction (md5-derived
     # 60-bit hash, integer bit-length ladder, integer register fold) —
     # the estimate itself is hash-gated. Constants from functions/sketches.
-    from .functions import sketches as SK
     _hl_low = SK.HLL_HASH_BITS - SK.HLL_P
     _hl_top = _hl_low + 1
     _hl_h = " + ".join(
@@ -7501,10 +7231,12 @@ FROM hz"""
 
     # cms_heavy_hitters twin: identical row-salted md5 fold, bucket =
     # low bits, min over D counters. Constants from functions/sketches.
-    _cm_h = " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5(CAST(j AS VARCHAR)"
-        f" || '|' || g), {i + 1}, 1)) - 1) * {16 ** (14 - i)}"
-        for i in range(15))
+    def _cm_h(g: str) -> str:
+        return " + ".join(
+            f"(strpos('0123456789abcdef', substr(md5(CAST(j AS VARCHAR)"
+            f" || '|' || {g}), {i + 1}, 1)) - 1) * {16 ** (14 - i)}"
+            for i in range(15))
+
     sqls["cms_heavy_hitters"] = f"""
 WITH cd AS (
     SELECT {_WORDS} AS w FROM documents
@@ -7517,7 +7249,7 @@ WITH cd AS (
 ), cj AS (
     SELECT unnest([0, 1, 2, 3]) AS j
 ), csk AS (
-    SELECT j, CAST(CAST({_cm_h} AS BIGINT) % {SK.CMS_W} AS INT) AS b,
+    SELECT j, CAST(CAST({_cm_h('g')} AS BIGINT) % {SK.CMS_W} AS INT) AS b,
            count(*) AS c
     FROM cs, cj GROUP BY j, b
 ), cc AS (
@@ -7525,7 +7257,7 @@ WITH cd AS (
 ), ce AS (
     SELECT g, exact, min(c) AS cms_est
     FROM (SELECT cc.g, cc.exact, cj.j,
-                 CAST(CAST({_cm_h.replace('|| g)', '|| cc.g)')} AS BIGINT)
+                 CAST(CAST({_cm_h('cc.g')} AS BIGINT)
                       % {SK.CMS_W} AS INT) AS b
           FROM cc, cj) q
     JOIN csk USING (j, b)

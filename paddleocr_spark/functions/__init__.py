@@ -25,168 +25,36 @@ from .textfns import (fingerprint, gopher_rules, lang_id,
                       quality_score, strq2b, token_count)
 
 
+#: Headline secondary queries timed by bench.py and perfbench, in a fixed
+#: order for run-over-run comparison.
+_BENCH_NAMES = (
+    "dedup_minhash", "dedup_simhash", "ann_cosine_topk", "token_count",
+    "quality_score", "embedding_neardup", "table_html", "kie_pairs",
+    "neardup_components", "db_detect", "east_detect", "sar_decode",
+    "table_html_master", "nrtr_decode", "media_decode_real", "gif_frames",
+    "tensor_ops", "rotate_crop", "layout_preprocess", "grapheme_compose",
+    "utf8_compose", "pdf_pages", "neardup_survivors", "bm25_topk",
+    "dup_span_docs", "kmeans_assign", "east_crop", "lm_score", "decontaminate",
+    "dedup_trim", "line_dedup", "bloom_dedup", "ccnet_buckets", "semdedup",
+    "quality_classifier", "bpe_merges", "sessionize", "asof_join",
+    "main_content", "pq_adc_topk", "ivfpq_topk", "docx_recovery",
+    "ser_token_metric", "sr_metric", "can_metric", "rec_aug", "cvaug",
+    "c4_clean", "readability_extract", "boilerpipe_extract",
+    "gopher_repetition", "interleaved_pack", "kn_lm_score", "hll_cardinality",
+    "cms_heavy_hitters", "weighted_sample", "qdigest_quantiles",
+    "wordpiece_encode",
+)
+
+
 def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Headline secondary queries timed by bench.py (round-1 names kept
-    stable for round-over-round comparison; round-2 ops appended)."""
-    from ..operators.kie import kie_pairs
-    from ..operators.table import table_html
-    return {
-        "dedup_minhash": dedup_minhash_pairs,
-        "dedup_simhash": dedup_simhash,
-        "ann_cosine_topk": ann_cosine_topk,
-        "token_count": token_count,
-        "quality_score": quality_score,
-        # round-2 additions
-        "embedding_neardup": embedding_neardup,
-        "table_html": table_html,
-        "kie_pairs": kie_pairs,
-        # round-3 additions
-        "neardup_components": neardup_components,
-        "db_detect": _entry("q_db_detect"),
-        "east_detect": _entry("q_east_detect"),
-        "sar_decode": _entry("q_sar_decode"),
-        "table_html_master": _table_html_master,
-        # round-4 additions
-        "nrtr_decode": _entry("q_nrtr_decode"),
-        "media_decode_real": _entry("q_media_decode_real"),
-        "gif_frames": _entry("q_gif_frames"),
-        "tensor_ops": _entry("q_tensor_ops"),
-        "rotate_crop": _entry("q_rotate_crop"),
-        "layout_preprocess": _entry("q_layout_preprocess"),
-        # round-4 tail: grapheme layer representatives
-        "grapheme_compose": _entry("q_grapheme_compose"),
-        "utf8_compose": _entry("q_utf8_compose"),
-        # round-4 closing: PDF container parse + applied dedup action
-        "pdf_pages": _entry("q_pdf_pages"),
-        "neardup_survivors": neardup_survivors,
-        # round-4 continuation: retrieval / clustering / seeded augment
-        "bm25_topk": _retrieval("bm25_topk"),
-        "dup_span_docs": _retrieval("dup_span_docs"),
-        "kmeans_assign": _clustering_kmeans,
-        "east_crop": _entry("q_east_crop"),
-        # round-4 curation wave: LM scoring + decontamination
-        "lm_score": _retrieval("lm_score"),
-        "decontaminate": _curation("decontaminate"),
-        # round-4 web-curation wave: substring trim, line dedup, bloom
-        "dedup_trim": _dedup("dedup_trim"),
-        "line_dedup": _curation("line_dedup"),
-        "bloom_dedup": _dedup("bloom_dedup"),
-        "ccnet_buckets": _curation("ccnet_buckets"),
-        "semdedup": _clustering("semdedup"),
-        "quality_classifier": _curation("quality_classifier"),
-        "bpe_merges": _tokenizer("bpe_merges"),
-        "sessionize": _entry("q_sessionize"),
-        "asof_join": _entry("q_asof_join"),
-        # round-4 seventh continuation: jusText DOM heuristics + PQ ANN
-        "main_content": _content("main_content"),
-        "pq_adc_topk": _pq("pq_adc_topk"),
-        "ivfpq_topk": _pq("ivfpq_topk"),
-        # round-4 closing: the literal S11 docx container sink
-        "docx_recovery": _entry("q_docx_recovery"),
-        # round-5 additions: A9 metric closure representatives
-        "ser_token_metric": _entry("q_ser_token_metric"),
-        "sr_metric": _entry("q_sr_metric"),
-        "can_metric": _entry("q_can_metric"),
-        # round-5 closing: the seeded train-augment chains
-        "rec_aug": _entry("q_rec_aug"),
-        "cvaug": _entry("q_cvaug"),
-        # round-5 final: C4 line-retention cleaning
-        "c4_clean": _curation("c4_clean"),
-        # round-5 continuation: DOM-heuristic trio closure, Gopher
-        # repetition block, interleaved sequence packing
-        "readability_extract": _content("readability_extract"),
-        "boilerpipe_extract": _content("boilerpipe_extract"),
-        "gopher_repetition": _repetition("gopher_repetition"),
-        "interleaved_pack": _curation("interleaved_pack"),
-        # round-5 continuation 2: KN smoothing, sketches, A-ES sampling
-        "kn_lm_score": _retrieval("kn_lm_score"),
-        "hll_cardinality": _sketches("hll_cardinality"),
-        "cms_heavy_hitters": _sketches("cms_heavy_hitters"),
-        "weighted_sample": _retrieval("weighted_sample"),
-        "qdigest_quantiles": _sketches("qdigest_quantiles"),
-        "wordpiece_encode": _tokenizer("wordpiece_encode"),
-    }
-
-
-def _content(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from . import content
-        return getattr(content, name)(spark, sf_dir)
-    return run
-
-
-def _repetition(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from . import repetition
-        return getattr(repetition, name)(spark, sf_dir)
-    return run
-
-
-def _sketches(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from . import sketches
-        return getattr(sketches, name)(spark, sf_dir)
-    return run
-
-
-def _pq(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from . import pq
-        return getattr(pq, name)(spark, sf_dir)
-    return run
-
-
-def _curation(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from . import curation
-        return getattr(curation, name)(spark, sf_dir)
-    return run
-
-
-def _dedup(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from . import dedup
-        return getattr(dedup, name)(spark, sf_dir)
-    return run
-
-
-def _retrieval(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from . import retrieval
-        return getattr(retrieval, name)(spark, sf_dir)
-    return run
-
-
-def _tokenizer(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from . import tokenizer
-        return getattr(tokenizer, name)(spark, sf_dir)
-    return run
-
-
-def _clustering(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from . import clustering
-        return getattr(clustering, name)(spark, sf_dir)
-    return run
-
-
-def _clustering_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .clustering import kmeans_assign
-    return kmeans_assign(spark, sf_dir)
-
-
-def _entry(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import paddleocr_spark.entry_queries as EQ
-        return getattr(EQ, name)(spark, sf_dir)
-    run.__name__ = name
-    return run
-
-
-def _table_html_master(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.table import table_html_master
-    return table_html_master(spark, sf_dir)
+    """The ``_BENCH_NAMES`` entries of the gate registry, except that
+    ``dedup_minhash`` names ``dedup_minhash_pairs`` and
+    ``embedding_neardup`` is the uncached operator (the registry's entry
+    of that name is ``neardup_pairs_cached``)."""
+    from ..entry_queries import queries
+    q = {**queries(), "dedup_minhash": dedup_minhash_pairs,
+         "embedding_neardup": embedding_neardup}
+    return {n: q[n] for n in _BENCH_NAMES}
 
 
 __all__ = [

@@ -317,7 +317,7 @@ def order_and_assemble(spans: DataFrame,
     """Reading-order resolution + document re-assembly (the one shuffle).
 
     Physical strategy (deliberate, see BENCH notes): an EXPLICIT
-    ``repartition(n, doc_id)`` + ``sortWithinPartitions`` + ``mapInPandas``
+    ``repartition(n, doc_id)`` + ``sortWithinPartitions`` + ``mapInArrow``
     instead of ``groupBy(doc_id).applyInPandas``, because
 
     * per-group applyInPandas pays Arrow slicing + pandas construction per

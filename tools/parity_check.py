@@ -59,7 +59,7 @@ def main() -> int:
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     spark = get_spark("parity", cores=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "8")))
+        "SPARK_GRAFT_CPUS", os.cpu_count())))
     qs = entry.queries()
     oracles = entry.oracle_sql()
     n_pass = n_fail = n_rowsonly = 0
