@@ -29,7 +29,7 @@ Quirks preserved from the reference:
 The pixel side of ``__call__`` (cv2.resize + zero-pad) carries no
 extraction semantics — the output polys depend only on the crop rect and
 scale — so the operator emits geometry: crop rect, scale, and each
-surviving span's transformed box. Scale shape: one ``grouped_map_arrow``
+surviving span's transformed box. Scale shape: one ``grouped_map_rows``
 pass keyed by doc_id (hash partition + within-partition sort, whole-batch
 Arrow slicing — no per-group pandas), the same plan as the detector
 family; the kernel is O(canvas + tries·polys) per doc.
@@ -528,10 +528,11 @@ def copy_paste_doc(seed: int,
     return src_polys, src_texts, np.array(src_ignores), pasted_src
 
 
-COPY_PASTE_SCHEMA = ("doc_id string, pos long, pasted boolean, "
-                     "src_span long, text string, ignored boolean, "
-                     "x1 double, y1 double, x2 double, y2 double, "
-                     "x3 double, y3 double, x4 double, y4 double")
+def rect_quads(b: np.ndarray) -> np.ndarray:
+    """(n, 4) x1/y1/x2/y2 rects → (n, 4, 2) float32 clockwise quads
+    from the top-left corner."""
+    return np.stack([b[:, [0, 1]], b[:, [2, 1]], b[:, [2, 3]],
+                     b[:, [0, 3]]], axis=1).astype(np.float32)
 
 
 def copy_paste(spans_geom: DataFrame) -> DataFrame:
@@ -548,9 +549,9 @@ def copy_paste(spans_geom: DataFrame) -> DataFrame:
 
     Input columns: doc_id ('doc_<n>'), span_idx, text, ignored,
     x1 y1 x2 y2. Scale shape: identical to east_random_crop — one
-    grouped_map_arrow pass, kernel O(polys + tries·polys) per doc.
+    grouped_map_rows pass, kernel O(polys + tries·polys) per doc.
     """
-    from .operators.grouped import group_starts, grouped_map_arrow
+    from .operators.grouped import grouped_map_rows
 
     did = F.substring("doc_id", 5, 18).cast("int")
     partner = F.format_string("doc_%07d", did.bitwiseXOR(F.lit(1)))
@@ -567,69 +568,32 @@ def copy_paste(spans_geom: DataFrame) -> DataFrame:
     ).select("pr.pair", "pr.role",
              "span_idx", "text", "ignored", "x1", "y1", "x2", "y2")
 
-    def emit(tbl):
-        import pyarrow as pa
+    def per_pair(g):
+        is_src = g["role"] == 0
+        if not is_src.any():
+            return  # partner-only group: no training sample here
+        xs = np.stack([g[c] for c in ("x1", "y1", "x2", "y2")], axis=1)
+        sx, ex = xs[is_src], xs[~is_src]
+        polys, texts, ignores, pasted_src = copy_paste_doc(
+            int(str(g["pair"][0])[4:]), rect_quads(sx),
+            g["text"][is_src], g["ignored"][is_src],
+            int(sx[:, 3].max()) + EAST_CROP_CANVAS_MARGIN, G.PAGE_WIDTH,
+            rect_quads(ex), g["text"][~is_src], g["ignored"][~is_src])
+        n_src = int(is_src.sum())
+        src_spans = g["span_idx"][is_src]
+        ext_spans = g["span_idx"][~is_src]
+        for pos, (p, t) in enumerate(zip(polys, texts)):
+            sp = (src_spans[pos] if pos < n_src
+                  else ext_spans[pasted_src[pos - n_src]])
+            yield (str(g["pair"][0]), pos, pos >= n_src, int(sp),
+                   None if t is None else str(t), bool(ignores[pos]),
+                   *(float(v) for v in p.reshape(-1)))
 
-        pair = tbl.column("pair").to_numpy(zero_copy_only=False)
-        role = tbl.column("role").to_numpy(zero_copy_only=False)
-        span = tbl.column("span_idx").to_numpy(zero_copy_only=False)
-        text = tbl.column("text").to_numpy(zero_copy_only=False)
-        ign = tbl.column("ignored").to_numpy(zero_copy_only=False)
-        xs = np.stack([tbl.column(c).to_numpy(zero_copy_only=False)
-                       for c in ("x1", "y1", "x2", "y2")], axis=1)
-        starts = group_starts(np.unique(pair, return_inverse=True)[1])
-        bounds = list(starts) + [len(pair)]
-        rows = []
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            is_src = role[s:e] == 0
-            if not is_src.any():
-                continue  # partner-only group: no training sample here
-            did_i = int(str(pair[s])[4:])
-            sx = xs[s:e][is_src]
-            quads = np.stack(
-                [sx[:, [0, 1]], sx[:, [2, 1]], sx[:, [2, 3]],
-                 sx[:, [0, 3]]], axis=1).astype(np.float32)
-            ex = xs[s:e][~is_src]
-            equads = np.stack(
-                [ex[:, [0, 1]], ex[:, [2, 1]], ex[:, [2, 3]],
-                 ex[:, [0, 3]]], axis=1).astype(np.float32) \
-                if len(ex) else np.zeros((0, 4, 2), np.float32)
-            src_h = (int(sx[:, 3].max()) if len(sx) else 0) \
-                + EAST_CROP_CANVAS_MARGIN
-            polys, texts, ignores, pasted_src = copy_paste_doc(
-                did_i, quads, text[s:e][is_src], ign[s:e][is_src],
-                src_h, G.PAGE_WIDTH,
-                equads, text[s:e][~is_src], ign[s:e][~is_src])
-            n_src = int(is_src.sum())
-            src_spans = span[s:e][is_src]
-            ext_spans = span[s:e][~is_src]
-            for pos in range(len(polys)):
-                p = polys[pos]
-                sp = (int(src_spans[pos]) if pos < n_src
-                      else int(ext_spans[pasted_src[pos - n_src]]))
-                t = texts[pos]
-                rows.append((str(pair[s]), pos, pos >= n_src, sp,
-                             None if t is None else str(t),
-                             bool(ignores[pos]),
-                             float(p[0, 0]), float(p[0, 1]),
-                             float(p[1, 0]), float(p[1, 1]),
-                             float(p[2, 0]), float(p[2, 1]),
-                             float(p[3, 0]), float(p[3, 1])))
-        if not rows:
-            return None
-        cols = list(zip(*rows))
-        names = ["doc_id", "pos", "pasted", "src_span", "text", "ignored",
-                 "x1", "y1", "x2", "y2", "x3", "y3", "x4", "y4"]
-        return pa.record_batch([pa.array(c) for c in cols], names=names)
-
-    return grouped_map_arrow(
-        both, ["pair"], ["role", "span_idx"], emit, COPY_PASTE_SCHEMA)
-
-
-EAST_CROP_SCHEMA = ("doc_id string, span_idx long, ignored boolean, "
-                    "crop_x long, crop_y long, crop_w long, crop_h long, "
-                    "scale double, nx1 double, ny1 double, "
-                    "nx2 double, ny2 double")
+    return grouped_map_rows(
+        both, ["pair"], ["role", "span_idx"], per_pair,
+        "doc_id string, pos long, pasted boolean, src_span long, "
+        "text string, ignored boolean, x1 double, y1 double, x2 double, "
+        "y2 double, x3 double, y3 double, x4 double, y4 double")
 
 
 def east_random_crop(spans_geom: DataFrame) -> DataFrame:
@@ -638,39 +602,24 @@ def east_random_crop(spans_geom: DataFrame) -> DataFrame:
     Input columns: doc_id (string 'doc_<n>'), span_idx, x1 y1 x2 y2,
     ignored. One output row per span surviving its document's crop.
     """
-    from .operators.grouped import group_starts, grouped_map_arrow
+    from .operators.grouped import grouped_map_rows
 
-    def emit(tbl):
-        import pyarrow as pa
+    def per_doc(g):
+        doc_id, ign = str(g["doc_id"][0]), g["ignored"]
+        xs = np.stack([g[c] for c in ("x1", "y1", "x2", "y2")], axis=1)
+        cx, cy, cw, ch, sc, kept = east_crop_doc(
+            int(doc_id[4:]), xs.astype(np.float64), ign)
+        for pos, nx1, ny1, nx2, ny2 in kept:
+            yield (doc_id, int(g["span_idx"][pos]), bool(ign[pos]), cx, cy,
+                   cw, ch, sc, nx1, ny1, nx2, ny2)
 
-        doc = tbl.column("doc_id").to_numpy(zero_copy_only=False)
-        span = tbl.column("span_idx").to_numpy(zero_copy_only=False)
-        ign = tbl.column("ignored").to_numpy(zero_copy_only=False)
-        xs = np.stack([tbl.column(c).to_numpy(zero_copy_only=False)
-                       for c in ("x1", "y1", "x2", "y2")], axis=1)
-        starts = group_starts(np.unique(doc, return_inverse=True)[1])
-        bounds = list(starts) + [len(doc)]
-        rows = []
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            did = int(str(doc[s])[4:])
-            cx, cy, cw, ch, sc, kept = east_crop_doc(
-                did, xs[s:e].astype(np.float64), ign[s:e])
-            for pos, nx1, ny1, nx2, ny2 in kept:
-                rows.append((str(doc[s]), int(span[s + pos]),
-                             bool(ign[s + pos]), cx, cy, cw, ch,
-                             sc, nx1, ny1, nx2, ny2))
-        if not rows:
-            return None
-        cols = list(zip(*rows))
-        names = ["doc_id", "span_idx", "ignored", "crop_x", "crop_y",
-                 "crop_w", "crop_h", "scale", "nx1", "ny1", "nx2", "ny2"]
-        return pa.record_batch(
-            [pa.array(c) for c in cols], names=names)
-
-    return grouped_map_arrow(
+    return grouped_map_rows(
         spans_geom.select("doc_id", "span_idx", "x1", "y1", "x2", "y2",
                           "ignored"),
-        ["doc_id"], ["span_idx"], emit, EAST_CROP_SCHEMA)
+        ["doc_id"], ["span_idx"], per_doc,
+        "doc_id string, span_idx long, ignored boolean, crop_x long, "
+        "crop_y long, crop_w long, crop_h long, scale double, "
+        "nx1 double, ny1 double, nx2 double, ny2 double")
 
 
 # ---------------------------------------------------------------------------

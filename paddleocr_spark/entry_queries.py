@@ -39,12 +39,14 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import geometry as G
 from . import synth as S
+from .augments import EAST_CROP_CANVAS_MARGIN
 from .functions import clustering as CL
 from .functions import content as MC
 from .functions import grapheme as GR
@@ -64,7 +66,8 @@ from .operators.recognize import (abinet_decode, attn_decode, can_decode,
                                   seed_decode, spin_decode, srn_decode,
                                   vitstr_decode, vl_decode)
 from .operators import table as TBL
-from .pipeline import (det_filter, drop_score_filter, explode_spans, extract,
+from .pipeline import (det_filter, det_keep_predicate, drop_score_filter,
+                       explode_spans, extract, score_keep_predicate,
                        strip_styles, with_geometry)
 from .synth import synth_spans
 
@@ -209,6 +212,42 @@ def _spans_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drop_score_filter(det_filter(s))
 
 
+def _span_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every span with its geometry; the P9/P10 drop decision becomes the
+    ``ignored`` tag the augments and target generators consume."""
+    return with_geometry(_spans_exploded(spark, sf_dir)).withColumn(
+        "ignored", ~(det_keep_predicate() & score_keep_predicate()))
+
+
+def _gt_rows(spark: SparkSession, sf_dir: str, per_doc: Callable,
+             schema: str, *extra: str) -> DataFrame:
+    """``per_doc`` over each doc's spans of :func:`_span_boxes` (doc_id,
+    span_idx, x1..y2, ignored and the ``extra`` columns), in span
+    order."""
+    from .operators.grouped import grouped_map_rows
+    return grouped_map_rows(
+        _span_boxes(spark, sf_dir).select(
+            "doc_id", "span_idx", *extra, "x1", "y1", "x2", "y2",
+            "ignored"),
+        ["doc_id"], ["span_idx"], per_doc, schema)
+
+
+def _doc_canvas(g: dict, y_scale: int = 1, y_cap: int | None = None):
+    """One doc's (n, 4) x1/y1/x2/y2 span boxes with y spread by
+    ``y_scale`` (clipped to [0, y_cap]), and its canvas height: the
+    lowest box edge plus the crop margin."""
+    b = np.stack([g[c] for c in ("x1", "y1", "x2", "y2")], axis=1)
+    b[:, [1, 3]] *= y_scale
+    if y_cap is not None:
+        b[:, [1, 3]] = np.clip(b[:, [1, 3]], 0, y_cap)
+    return b, int(b[:, 3].max()) + EAST_CROP_CANVAS_MARGIN
+
+
+def _doc_rects(g: dict) -> np.ndarray:
+    """One doc's (n, 4) x0/y0/x1/y1 rects of _shrink_boxes/_border_boxes."""
+    return np.stack([g[c] for c in ("x0", "y0", "x1", "y1")], axis=1)
+
+
 # ---------------------------------------------------------------------------
 # Flagship pipeline stage queries (S/P-ops over the synth corpus)
 # ---------------------------------------------------------------------------
@@ -238,10 +277,7 @@ def q_east_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's global np.random stream; ignore tags are the P9/P10
     drop flags. Committed-fixture oracle (the RNG walk is iterative)."""
     from .augments import east_random_crop
-    from .pipeline import det_keep_predicate, score_keep_predicate
-    s = with_geometry(_spans_exploded(spark, sf_dir)).withColumn(
-        "ignored", ~(det_keep_predicate() & score_keep_predicate()))
-    return east_random_crop(s)
+    return east_random_crop(_span_boxes(spark, sf_dir))
 
 
 def q_copy_paste(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,10 +287,7 @@ def q_copy_paste(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams (exec-ref differential #43). Committed-fixture oracle (the
     RNG walk is iterative)."""
     from .augments import copy_paste
-    from .pipeline import det_keep_predicate, score_keep_predicate
-    s = with_geometry(_spans_exploded(spark, sf_dir)).withColumn(
-        "ignored", ~(det_keep_predicate() & score_keep_predicate()))
-    return copy_paste(s)
+    return copy_paste(_span_boxes(spark, sf_dir))
 
 
 def q_east_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,65 +299,24 @@ def q_east_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact sums of the float32 maps). RandomState(doc) replays the
     reference's global stream (exec-ref differential #45). Committed-
     fixture oracle (the RNG + raster walk is iterative)."""
-    import numpy as np
-    import pyarrow as pa
+    from .augments import east_process_doc, rect_quads
 
-    from .augments import east_process_doc
-    from .operators.grouped import grouped_map_arrow
+    def per_doc(g):
+        b, h = _doc_canvas(g)
+        doc_id = g["doc_id"][0]
+        o = east_process_doc(int(doc_id[4:]), rect_quads(b),
+                             g["ignored"].astype(bool), h, G.PAGE_WIDTH)
+        yield (doc_id, o["status"], o["rot_cnt"], o["rd_scale"],
+               *(o["crop"] or [None] * 4), o["n_out"], o["new_h"],
+               o["new_w"], o["score_px"], o["mask_px"],
+               *(o["geo_sums"] or [None] * 9))
 
-    from .pipeline import det_keep_predicate, score_keep_predicate
-    s = with_geometry(_spans_exploded(spark, sf_dir)).withColumn(
-        "ignored", ~(det_keep_predicate() & score_keep_predicate()))
-    out_schema = ("doc_id string, status string, rot_cnt long, "
-                  "rd_scale double, cx0 long, cy0 long, cx1 long, "
-                  "cy1 long, n_out long, new_h long, new_w long, "
-                  "score_px long, mask_px long, "
-                  + ", ".join(f"g{c} double" for c in range(9)))
-
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .augments import EAST_CROP_CANVAS_MARGIN
-        from .operators.grouped import group_starts, string_codes
-
-        doc = string_codes(tbl.column("doc_id"))
-        xs = np.stack([tbl.column(c).to_numpy(zero_copy_only=False)
-                       for c in ("x1", "y1", "x2", "y2")], axis=1)
-        ign = tbl.column("ignored").to_numpy(zero_copy_only=False)
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = []
-        for s0, e in zip(starts, ends):
-            b = xs[s0:e]
-            quads = np.stack([b[:, [0, 1]], b[:, [2, 1]], b[:, [2, 3]],
-                              b[:, [0, 3]]], axis=1).astype(np.float32)
-            h = int(b[:, 3].max()) + EAST_CROP_CANVAS_MARGIN
-            did = int(docs_str[s0][4:])
-            o = east_process_doc(did, quads, ign[s0:e].astype(bool),
-                                 h, G.PAGE_WIDTH)
-            crop = o["crop"] or (None, None, None, None)
-            g = o["geo_sums"] or [None] * 9
-            rows.append((docs_str[s0], o["status"], o["rot_cnt"],
-                         o["rd_scale"], crop[0], crop[1], crop[2],
-                         crop[3], o["n_out"], o["new_h"], o["new_w"],
-                         o["score_px"], o["mask_px"], *g))
-        if not rows:
-            return None
-        types = {"doc_id": pa.string(), "status": pa.string(),
-                 "rot_cnt": pa.int64(), "rd_scale": pa.float64(),
-                 "cx0": pa.int64(), "cy0": pa.int64(),
-                 "cx1": pa.int64(), "cy1": pa.int64(),
-                 "n_out": pa.int64(), "new_h": pa.int64(),
-                 "new_w": pa.int64(), "score_px": pa.int64(),
-                 "mask_px": pa.int64(),
-                 **{f"g{c}": pa.float64() for c in range(9)}}
-        return pa.RecordBatch.from_arrays(
-            [pa.array(col, type=t)
-             for col, t in zip(zip(*rows), types.values())],
-            names=list(types))
-
-    return grouped_map_arrow(
-        s.select("doc_id", "span_idx", "x1", "y1", "x2", "y2", "ignored"),
-        ["doc_id"], ["span_idx"], emit, out_schema)
+    return _gt_rows(spark, sf_dir, per_doc,
+                    "doc_id string, status string, rot_cnt long, "
+                    "rd_scale double, cx0 long, cy0 long, cx1 long, "
+                    "cy1 long, n_out long, new_h long, new_w long, "
+                    "score_px long, mask_px long, "
+                    + ", ".join(f"g{c} double" for c in range(9)))
 
 
 def q_fce_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,54 +330,21 @@ def q_fce_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels (143/49/143-ish docs at x2; nearly all spans exceed
     proportion 1.0 at x1 on short docs). Committed-fixture oracle (the
     fft is not SQL-expressible)."""
-    import numpy as np
-    import pyarrow as pa
-
+    from .augments import rect_quads
     from .fce_gt import fce_targets_doc
-    from .operators.grouped import grouped_map_arrow
-    from .pipeline import det_keep_predicate, score_keep_predicate
-    s = with_geometry(_spans_exploded(spark, sf_dir)).withColumn(
-        "ignored", ~(det_keep_predicate() & score_keep_predicate()))
-    out_schema = ("doc_id string, level long, text_px long, "
-                  "center_px long, eff_px long, "
-                  + ", ".join(f"r{c} double" for c in range(11)) + ", "
-                  + ", ".join(f"i{c} double" for c in range(11)))
 
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .augments import EAST_CROP_CANVAS_MARGIN
-        from .operators.grouped import group_starts, string_codes
+    def per_doc(g):
+        b, h = _doc_canvas(g, y_scale=2)
+        tags = [bool(v) for v in g["ignored"]]   # `is True` quirk
+        out = fce_targets_doc(rect_quads(b), tags, h, G.PAGE_WIDTH)
+        for lv, (t_px, c_px, e_px, reals, imags) in enumerate(out):
+            yield (g["doc_id"][0], lv, t_px, c_px, e_px, *reals, *imags)
 
-        doc = string_codes(tbl.column("doc_id"))
-        xs = np.stack([tbl.column(c).to_numpy(zero_copy_only=False)
-                       for c in ("x1", "y1", "x2", "y2")], axis=1)
-        ign = tbl.column("ignored").to_numpy(zero_copy_only=False)
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = []
-        for s0, e in zip(starts, ends):
-            b = xs[s0:e].copy()
-            b[:, 1] *= 2
-            b[:, 3] *= 2
-            quads = np.stack([b[:, [0, 1]], b[:, [2, 1]], b[:, [2, 3]],
-                              b[:, [0, 3]]], axis=1).astype(np.float32)
-            h = int(b[:, 3].max()) + EAST_CROP_CANVAS_MARGIN
-            tags = [bool(v) for v in ign[s0:e]]   # `is True` quirk
-            out = fce_targets_doc(quads, tags, h, G.PAGE_WIDTH)
-            for lv, (t_px, c_px, e_px, reals, imags) in enumerate(out):
-                rows.append((docs_str[s0], lv, t_px, c_px, e_px,
-                             *reals, *imags))
-        if not rows:
-            return None
-        names = (["doc_id", "level", "text_px", "center_px", "eff_px"]
-                 + [f"r{c}" for c in range(11)]
-                 + [f"i{c}" for c in range(11)])
-        return pa.record_batch([pa.array(c) for c in zip(*rows)],
-                               names=names)
-
-    return grouped_map_arrow(
-        s.select("doc_id", "span_idx", "x1", "y1", "x2", "y2", "ignored"),
-        ["doc_id"], ["span_idx"], emit, out_schema)
+    return _gt_rows(spark, sf_dir, per_doc,
+                    "doc_id string, level long, text_px long, "
+                    "center_px long, eff_px long, "
+                    + ", ".join(f"r{c} double" for c in range(11)) + ", "
+                    + ", ".join(f"i{c} double" for c in range(11)))
 
 
 def q_sast_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,71 +361,29 @@ def q_sast_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     crops (min side >= input_size/2 after the 1/max resize) — at x1
     only 2/500 docs reach the label pass; at x4, ~82 do, so the
     ok / pad_small / all_ignored arms are all distribution-exercised."""
-    import numpy as np
-    import pyarrow as pa
-
-    from .operators.grouped import grouped_map_arrow
-    from .pipeline import det_keep_predicate, score_keep_predicate
+    from .augments import rect_quads
     from .sast_gt import sast_process_doc
-    s = with_geometry(_spans_exploded(spark, sf_dir)).withColumn(
-        "ignored", ~(det_keep_predicate() & score_keep_predicate()))
-    gcols = ([f"b{c} double" for c in range(5)]
-             + [f"v{c} double" for c in range(9)]
-             + [f"c{c} double" for c in range(3)])
-    out_schema = ("doc_id string, status string, asp_scale double, "
-                  "cx0 long, cy0 long, cx1 long, cy1 long, "
-                  "rz_scale double, sh long, sw long, n_out long, "
-                  "score_px long, mask_sum double, " + ", ".join(gcols))
 
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .augments import EAST_CROP_CANVAS_MARGIN
-        from .operators.grouped import group_starts, string_codes
+    def per_doc(g):
+        b, h = _doc_canvas(g, y_scale=4)
+        doc_id = g["doc_id"][0]
+        o = sast_process_doc(int(doc_id[4:]), rect_quads(b),
+                             g["ignored"].astype(bool), h, G.PAGE_WIDTH)
+        yield (doc_id, o["status"], o["asp_scale"],
+               *(o["crop"] or [None] * 4), o["rz_scale"], o["sh"],
+               o["sw"], o["n_out"], o["score_px"], o["mask_sum"],
+               *(o["tbo_sums"] or [None] * 5),
+               *(o["tvo_sums"] or [None] * 9),
+               *(o["tco_sums"] or [None] * 3))
 
-        doc = string_codes(tbl.column("doc_id"))
-        xs = np.stack([tbl.column(c).to_numpy(zero_copy_only=False)
-                       for c in ("x1", "y1", "x2", "y2")], axis=1)
-        ign = tbl.column("ignored").to_numpy(zero_copy_only=False)
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = []
-        for s0, e in zip(starts, ends):
-            b = xs[s0:e].copy()
-            b[:, 1] *= 4
-            b[:, 3] *= 4
-            quads = np.stack([b[:, [0, 1]], b[:, [2, 1]], b[:, [2, 3]],
-                              b[:, [0, 3]]], axis=1).astype(np.float32)
-            h = int(b[:, 3].max()) + EAST_CROP_CANVAS_MARGIN
-            did = int(docs_str[s0][4:])
-            o = sast_process_doc(did, quads, ign[s0:e].astype(bool),
-                                 h, G.PAGE_WIDTH)
-            crop = o["crop"] or (None, None, None, None)
-            bs = o["tbo_sums"] or [None] * 5
-            vs = o["tvo_sums"] or [None] * 9
-            cs = o["tco_sums"] or [None] * 3
-            rows.append((docs_str[s0], o["status"], o["asp_scale"],
-                         crop[0], crop[1], crop[2], crop[3],
-                         o["rz_scale"], o["sh"], o["sw"], o["n_out"],
-                         o["score_px"], o["mask_sum"], *bs, *vs, *cs))
-        if not rows:
-            return None
-        types = {"doc_id": pa.string(), "status": pa.string(),
-                 "asp_scale": pa.float64(), "cx0": pa.int64(),
-                 "cy0": pa.int64(), "cx1": pa.int64(), "cy1": pa.int64(),
-                 "rz_scale": pa.float64(), "sh": pa.int64(),
-                 "sw": pa.int64(), "n_out": pa.int64(),
-                 "score_px": pa.int64(), "mask_sum": pa.float64(),
-                 **{f"b{c}": pa.float64() for c in range(5)},
-                 **{f"v{c}": pa.float64() for c in range(9)},
-                 **{f"c{c}": pa.float64() for c in range(3)}}
-        return pa.RecordBatch.from_arrays(
-            [pa.array(col, type=t)
-             for col, t in zip(zip(*rows), types.values())],
-            names=list(types))
-
-    return grouped_map_arrow(
-        s.select("doc_id", "span_idx", "x1", "y1", "x2", "y2", "ignored"),
-        ["doc_id"], ["span_idx"], emit, out_schema)
+    return _gt_rows(spark, sf_dir, per_doc,
+                    "doc_id string, status string, asp_scale double, "
+                    "cx0 long, cy0 long, cx1 long, cy1 long, "
+                    "rz_scale double, sh long, sw long, n_out long, "
+                    "score_px long, mask_sum double, "
+                    + ", ".join([f"b{c} double" for c in range(5)]
+                                + [f"v{c} double" for c in range(9)]
+                                + [f"c{c} double" for c in range(3)]))
 
 
 def q_det_drop_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2404,49 +2321,19 @@ def q_ct_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_ctgt.py). Ignored spans carry the '###' transcription
     MakeShrink keys on. Committed-fixture oracle (the seeded raster
     walk is iterative)."""
-    import numpy as np
-    import pyarrow as pa
-
     from .ctgt import ct_gt_rows_for_doc
-    from .operators.grouped import grouped_map_arrow
-    from .pipeline import det_keep_predicate, score_keep_predicate
-    s = with_geometry(_spans_exploded(spark, sf_dir)).withColumn(
-        "ignored", ~(det_keep_predicate() & score_keep_predicate()))
-    out_schema = ("doc_id string, gi_sum long, tm_sum long, "
-                  "gki_sum long, gk_sum long, tmd_sum long, "
-                  "dist_px long, dist_x double, dist_y double, "
-                  "img_crc long")
-    names = ["doc_id", "gi_sum", "tm_sum", "gki_sum", "gk_sum",
-             "tmd_sum", "dist_px", "dist_x", "dist_y", "img_crc"]
 
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .augments import EAST_CROP_CANVAS_MARGIN
-        from .operators.grouped import group_starts, string_codes
+    def per_doc(g):
+        b, h = _doc_canvas(g, y_scale=2)
+        yield ct_gt_rows_for_doc(g["doc_id"][0], b,
+                                 g["ignored"].astype(bool), h,
+                                 G.PAGE_WIDTH)
 
-        doc = string_codes(tbl.column("doc_id"))
-        xs = np.stack([tbl.column(c).to_numpy(zero_copy_only=False)
-                       for c in ("x1", "y1", "x2", "y2")], axis=1)
-        ign = tbl.column("ignored").to_numpy(zero_copy_only=False)
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = []
-        for s0, e in zip(starts, ends):
-            b = xs[s0:e].copy()
-            b[:, 1] *= 2
-            b[:, 3] *= 2
-            h = int(b[:, 3].max()) + EAST_CROP_CANVAS_MARGIN
-            rows.append(ct_gt_rows_for_doc(
-                docs_str[s0], b, ign[s0:e].astype(bool), h,
-                G.PAGE_WIDTH))
-        if not rows:
-            return None
-        return pa.record_batch([pa.array(c) for c in zip(*rows)],
-                               names=names)
-
-    return grouped_map_arrow(
-        s.select("doc_id", "span_idx", "x1", "y1", "x2", "y2", "ignored"),
-        ["doc_id"], ["span_idx"], emit, out_schema)
+    return _gt_rows(spark, sf_dir, per_doc,
+                    "doc_id string, gi_sum long, tm_sum long, "
+                    "gki_sum long, gk_sum long, tmd_sum long, "
+                    "dist_px long, dist_x double, dist_y double, "
+                    "img_crc long")
 
 
 def q_pg_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2465,56 +2352,22 @@ def q_pg_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     healthy live fraction while the drop arms stay exercised; per-span
     texts are derived deterministically from (kind, span_idx).
     Committed-fixture oracle (the seeded raster walk is iterative)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from .operators.grouped import grouped_map_arrow
     from .pg_gt import pg_gt_rows_for_doc
-    from .pipeline import det_keep_predicate, score_keep_predicate
-    s = with_geometry(_spans_exploded(spark, sf_dir)).withColumn(
-        "ignored", ~(det_keep_predicate() & score_keep_predicate()))
-    names = ["doc_id", "live", "img_sum", "tcl_sum", "tcl_label_sum",
-             "border_sum", "direction_sum", "mask_sum", "pos_px",
-             "pos_sum", "label_sum"]
-    out_schema = ("doc_id string, live long, img_sum double, "
-                  "tcl_sum double, tcl_label_sum double, "
-                  "border_sum double, direction_sum double, "
-                  "mask_sum double, pos_px long, pos_sum double, "
-                  "label_sum double")
 
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .augments import EAST_CROP_CANVAS_MARGIN
-        from .operators.grouped import group_starts, string_codes
+    def per_doc(g):
+        b, h = _doc_canvas(g, y_scale=6, y_cap=940)
+        texts = [f"{k.upper()}#{int(i)}"
+                 for k, i in zip(g["kind"], g["span_idx"])]
+        yield pg_gt_rows_for_doc(g["doc_id"][0], b,
+                                 g["ignored"].astype(bool), texts, h,
+                                 G.PAGE_WIDTH)
 
-        doc = string_codes(tbl.column("doc_id"))
-        xs = np.stack([tbl.column(c).to_numpy(zero_copy_only=False)
-                       for c in ("x1", "y1", "x2", "y2")], axis=1)
-        ign = tbl.column("ignored").to_numpy(zero_copy_only=False)
-        kinds = tbl.column("kind").to_pylist()
-        sidx = tbl.column("span_idx").to_numpy(zero_copy_only=False)
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = []
-        for s0, e in zip(starts, ends):
-            b = xs[s0:e].copy()
-            b[:, 1] = np.clip(b[:, 1] * 6, 0, 940)
-            b[:, 3] = np.clip(b[:, 3] * 6, 0, 940)
-            h = int(b[:, 3].max()) + EAST_CROP_CANVAS_MARGIN
-            texts = [f"{kinds[s0 + j].upper()}#{int(sidx[s0 + j])}"
-                     for j in range(e - s0)]
-            rows.append(pg_gt_rows_for_doc(
-                docs_str[s0], b, ign[s0:e].astype(bool), texts, h,
-                G.PAGE_WIDTH))
-        if not rows:
-            return None
-        return pa.record_batch([pa.array(c) for c in zip(*rows)],
-                               names=names)
-
-    return grouped_map_arrow(
-        s.select("doc_id", "span_idx", "kind", "x1", "y1", "x2", "y2",
-                 "ignored"),
-        ["doc_id"], ["span_idx"], emit, out_schema)
+    return _gt_rows(spark, sf_dir, per_doc,
+                    "doc_id string, live long, img_sum double, "
+                    "tcl_sum double, tcl_label_sum double, "
+                    "border_sum double, direction_sum double, "
+                    "mask_sum double, pos_px long, pos_sum double, "
+                    "label_sum double", "kind")
 
 
 def q_randaug(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2556,53 +2409,22 @@ def q_drrg_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential runs the reference source verbatim
     (tests/test_drrg_gt.py). Committed-fixture oracle (seeded raster +
     NMS walk is iterative)."""
-    import numpy as np
-    import pyarrow as pa
-
     from .drrg_gt import drrg_gt_rows_for_doc
-    from .operators.grouped import grouped_map_arrow
-    from .pipeline import det_keep_predicate, score_keep_predicate
-    s = with_geometry(_spans_exploded(spark, sf_dir)).withColumn(
-        "ignored", ~(det_keep_predicate() & score_keep_predicate()))
-    names = ["doc_id", "text_px", "eff_px", "center_px", "top_sum",
-             "bot_sum", "sin_sum", "cos_sum", "n_comps", "ax_sum",
-             "ay_sum", "ah_sum", "aw_sum", "acos_sum", "asin_sum",
-             "albl_sum"]
-    out_schema = ("doc_id string, text_px long, eff_px long, "
-                  "center_px long, top_sum double, bot_sum double, "
-                  "sin_sum double, cos_sum double, n_comps long, "
-                  "ax_sum double, ay_sum double, ah_sum double, "
-                  "aw_sum double, acos_sum double, asin_sum double, "
-                  "albl_sum double")
 
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .augments import EAST_CROP_CANVAS_MARGIN
-        from .operators.grouped import group_starts, string_codes
+    def per_doc(g):
+        # cap the canvas: long docs would blow up the 7 maps
+        b, h = _doc_canvas(g, y_scale=2, y_cap=940)
+        yield drrg_gt_rows_for_doc(g["doc_id"][0], b,
+                                   g["ignored"].astype(bool), h,
+                                   G.PAGE_WIDTH)
 
-        doc = string_codes(tbl.column("doc_id"))
-        xs = np.stack([tbl.column(c).to_numpy(zero_copy_only=False)
-                       for c in ("x1", "y1", "x2", "y2")], axis=1)
-        ign = tbl.column("ignored").to_numpy(zero_copy_only=False)
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = []
-        for s0, e in zip(starts, ends):
-            b = xs[s0:e].copy()
-            b[:, 1] = np.clip(b[:, 1] * 2, 0, 940)   # cap the canvas:
-            b[:, 3] = np.clip(b[:, 3] * 2, 0, 940)   # long docs would
-            h = int(b[:, 3].max()) + EAST_CROP_CANVAS_MARGIN  # blow up
-            rows.append(drrg_gt_rows_for_doc(           # the 7 maps
-                docs_str[s0], b, ign[s0:e].astype(bool), h,
-                G.PAGE_WIDTH))
-        if not rows:
-            return None
-        return pa.record_batch([pa.array(c) for c in zip(*rows)],
-                               names=names)
-
-    return grouped_map_arrow(
-        s.select("doc_id", "span_idx", "x1", "y1", "x2", "y2", "ignored"),
-        ["doc_id"], ["span_idx"], emit, out_schema)
+    return _gt_rows(spark, sf_dir, per_doc,
+                    "doc_id string, text_px long, eff_px long, "
+                    "center_px long, top_sum double, bot_sum double, "
+                    "sin_sum double, cos_sum double, n_comps long, "
+                    "ax_sum double, ay_sum double, ah_sum double, "
+                    "aw_sum double, acos_sum double, asin_sum double, "
+                    "albl_sum double")
 
 
 def q_cvaug(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2999,48 +2821,28 @@ def q_pse_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 32×56 with main_key gt. Emits the crop origin, branch flag, and
     cropped-raster pixel counts; committed-fixture oracle (RNG + raster
     fills are iterative)."""
-    import numpy as np
-    import pyarrow as pa
-
     from .augments import PSE_CROP_SIZE, random_crop_img_mask
     from .kernels import make_shrink_map
-    from .operators.grouped import grouped_map_arrow
+    from .operators.grouped import grouped_map_rows
 
-    boxes = _shrink_boxes(spark, sf_dir)
     h, w = _SHRINK_H, _SHRINK_W
-    out_schema = ("doc_id string, crop_i long, crop_j long, "
-                  "forced boolean, gt_sum long, mask_sum long")
 
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .operators.grouped import group_starts, string_codes
+    def per_doc(g):
+        _, gt, mask = make_shrink_map(_doc_rects(g), g["tag"].astype(bool),
+                                      h, w)
+        data = {"image": np.zeros((h, w, 3), np.uint8),
+                "gt_text": gt, "mask": mask}
+        doc_id = g["doc_id"][0]
+        i, j, forced, out = random_crop_img_mask(
+            int(doc_id[4:]), data, "gt_text",
+            {"image", "gt_text", "mask"}, PSE_CROP_SIZE)
+        yield (doc_id, int(i), int(j), forced, int(out["gt_text"].sum()),
+               int(out["mask"].sum()))
 
-        doc = string_codes(tbl.column("doc_id"))
-        cols = {c: tbl.column(c).to_numpy(zero_copy_only=False)
-                for c in ("x0", "y0", "x1", "y1", "tag")}
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = []
-        for s, e in zip(starts, ends):
-            rect = np.stack([cols["x0"][s:e], cols["y0"][s:e],
-                             cols["x1"][s:e], cols["y1"][s:e]], axis=1)
-            _, gt, mask = make_shrink_map(
-                rect, cols["tag"][s:e].astype(bool), h, w)
-            data = {"image": np.zeros((h, w, 3), np.uint8),
-                    "gt_text": gt, "mask": mask}
-            i, j, forced, out = random_crop_img_mask(
-                int(docs_str[s][4:]), data, "gt_text",
-                {"image", "gt_text", "mask"}, PSE_CROP_SIZE)
-            rows.append((docs_str[s], int(i), int(j), forced,
-                         int(out["gt_text"].sum()),
-                         int(out["mask"].sum())))
-        names = ["doc_id", "crop_i", "crop_j", "forced",
-                 "gt_sum", "mask_sum"]
-        return pa.record_batch([pa.array(c) for c in zip(*rows)],
-                               names=names)
-
-    return grouped_map_arrow(boxes, ["doc_id"], ["box_id"], emit,
-                             out_schema)
+    return grouped_map_rows(
+        _shrink_boxes(spark, sf_dir), ["doc_id"], ["box_id"], per_doc,
+        "doc_id string, crop_i long, crop_j long, forced boolean, "
+        "gt_sum long, mask_sum long")
 
 
 #: q_pse_gt's MakePseGt size parameter: small enough to keep demo rasters
@@ -3064,48 +2866,24 @@ def q_pse_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweeps). Tag escalation is monotone in scale (distance grows as rate
     falls), which the twin exploits; the escalation arm itself is pinned
     by exec-ref differential #44."""
-    import numpy as np
-    import pyarrow as pa
-
     from .kernels import make_pse_gt
-    from .operators.grouped import grouped_map_arrow
+    from .operators.grouped import grouped_map_rows
 
-    boxes = _shrink_boxes(spark, sf_dir)
-    out_schema = ("doc_id string, k long, rate double, n_painted long, "
-                  "kernel_px long, scaled boolean, new_h long, "
-                  "new_w long, n_ignored long, mask_px long")
+    def per_doc(g):
+        doc_id = g["doc_id"][0]
+        scaled, nh, nw, per_scale, ftags, mask_px = make_pse_gt(
+            _doc_rects(g), g["tag"].astype(bool), 60 + int(doc_id[4:]) % 40,
+            _SHRINK_W, size=_PSE_GT_SIZE)
+        n_ign = int(sum(ftags))
+        for k, (rate, painted, px) in enumerate(per_scale, start=1):
+            yield (doc_id, k, float(rate), painted, px, bool(scaled), nh,
+                   nw, n_ign, mask_px)
 
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .operators.grouped import group_starts, string_codes
-
-        doc = string_codes(tbl.column("doc_id"))
-        cols = {c: tbl.column(c).to_numpy(zero_copy_only=False)
-                for c in ("x0", "y0", "x1", "y1", "tag")}
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = []
-        for s, e in zip(starts, ends):
-            rect = np.stack([cols["x0"][s:e], cols["y0"][s:e],
-                             cols["x1"][s:e], cols["y1"][s:e]], axis=1)
-            dn = int(docs_str[s][4:])
-            h = 60 + dn % 40
-            scaled, nh, nw, per_scale, ftags, mask_px = make_pse_gt(
-                rect, cols["tag"][s:e].astype(bool), h, _SHRINK_W,
-                size=_PSE_GT_SIZE)
-            n_ign = int(sum(ftags))
-            for k, (rate, painted, px) in enumerate(per_scale, start=1):
-                rows.append((docs_str[s], k, float(rate), painted, px,
-                             bool(scaled), nh, nw, n_ign, mask_px))
-        if not rows:
-            return None
-        names = ["doc_id", "k", "rate", "n_painted", "kernel_px",
-                 "scaled", "new_h", "new_w", "n_ignored", "mask_px"]
-        return pa.record_batch([pa.array(c) for c in zip(*rows)],
-                               names=names)
-
-    return grouped_map_arrow(boxes, ["doc_id"], ["box_id"], emit,
-                             out_schema)
+    return grouped_map_rows(
+        _shrink_boxes(spark, sf_dir), ["doc_id"], ["box_id"], per_doc,
+        "doc_id string, k long, rate double, n_painted long, "
+        "kernel_px long, scaled boolean, new_h long, new_w long, "
+        "n_ignored long, mask_px long")
 
 
 def q_shrink_map(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3119,59 +2897,22 @@ def q_shrink_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rect inset never escalates the shrink ratio (proof in
     kernels.make_shrink_map); the escalation branch is pinned by the
     exec-reference differential instead."""
-    import numpy as np
-    import pyarrow as pa
-
     from .kernels import make_shrink_map
-    from .operators.grouped import grouped_map_arrow
+    from .operators.grouped import grouped_map_rows
 
-    boxes = _shrink_boxes(spark, sf_dir)
-    h, w = _SHRINK_H, _SHRINK_W
-    out_schema = ("doc_id string, box_id long, status string, "
-                  "ratio double, sx0 int, sy0 int, sx1 int, sy1 int, "
-                  "gt_count long, mask_count long")
+    def per_doc(g):
+        recs, gt, mask = make_shrink_map(
+            _doc_rects(g), g["tag"].astype(bool), _SHRINK_H, _SHRINK_W)
+        gt_n, mask_n = int(gt.sum()), int(mask.sum())
+        for box_id, (status, ratio, *shrunk) in zip(g["box_id"], recs):
+            yield (g["doc_id"][0], int(box_id), status, float(ratio),
+                   *shrunk, gt_n, mask_n)
 
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .operators.grouped import group_starts, string_codes
-
-        doc = string_codes(tbl.column("doc_id"))
-        cols = {c: tbl.column(c).to_numpy(zero_copy_only=False)
-                for c in ("box_id", "x0", "y0", "x1", "y1", "tag")}
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = {k: [] for k in ("doc_id", "box_id", "status", "ratio",
-                                "sx0", "sy0", "sx1", "sy1",
-                                "gt_count", "mask_count")}
-        for s, e in zip(starts, ends):
-            rect = np.stack([cols["x0"][s:e], cols["y0"][s:e],
-                             cols["x1"][s:e], cols["y1"][s:e]], axis=1)
-            recs, gt, mask = make_shrink_map(
-                rect, cols["tag"][s:e].astype(bool), h, w)
-            gt_n = int(gt.sum())
-            mask_n = int(mask.sum())
-            for j, (status, ratio, sx0, sy0, sx1, sy1) in enumerate(recs):
-                rows["doc_id"].append(docs_str[s])
-                rows["box_id"].append(int(cols["box_id"][s + j]))
-                rows["status"].append(status)
-                rows["ratio"].append(float(ratio))
-                rows["sx0"].append(sx0)
-                rows["sy0"].append(sy0)
-                rows["sx1"].append(sx1)
-                rows["sy1"].append(sy1)
-                rows["gt_count"].append(gt_n)
-                rows["mask_count"].append(mask_n)
-        types = {"doc_id": pa.string(), "box_id": pa.int64(),
-                 "status": pa.string(), "ratio": pa.float64(),
-                 "sx0": pa.int32(), "sy0": pa.int32(),
-                 "sx1": pa.int32(), "sy1": pa.int32(),
-                 "gt_count": pa.int64(), "mask_count": pa.int64()}
-        return pa.RecordBatch.from_arrays(
-            [pa.array(rows[k], type=t) for k, t in types.items()],
-            names=list(types))
-
-    return grouped_map_arrow(boxes, ["doc_id"], ["box_id"], emit,
-                             out_schema)
+    return grouped_map_rows(
+        _shrink_boxes(spark, sf_dir), ["doc_id"], ["box_id"], per_doc,
+        "doc_id string, box_id long, status string, ratio double, "
+        "sx0 int, sy0 int, sx1 int, sy1 int, gt_count long, "
+        "mask_count long")
 
 
 def _border_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3203,49 +2944,23 @@ def q_border_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     at hash precision).  Emits exact float32-raster aggregates per doc;
     the exec-reference differential pins the kernel to the reference
     source."""
-    import numpy as np
-    import pyarrow as pa
-
     from .kernels import BORDER_THRESH_MIN, make_border_map
-    from .operators.grouped import grouped_map_arrow
+    from .operators.grouped import grouped_map_rows
 
-    h, w = _SHRINK_H, _SHRINK_W
+    def per_doc(g):
+        canvas, mask = make_border_map(
+            _doc_rects(g), g["tag"].astype(bool), _SHRINK_H, _SHRINK_W)
+        yield (g["doc_id"][0], float(canvas.sum(dtype=np.float64)),
+               float(canvas.max()), int((canvas > BORDER_THRESH_MIN).sum()),
+               int(mask.sum()))
 
-    def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-        from .operators.grouped import group_starts, string_codes
-
-        doc = string_codes(tbl.column("doc_id"))
-        cols = {c: tbl.column(c).to_numpy(zero_copy_only=False)
-                for c in ("x0", "y0", "x1", "y1", "tag")}
-        docs_str = tbl.column("doc_id").to_pylist()
-        starts = group_starts(doc)
-        ends = np.r_[starts[1:], len(doc)]
-        rows = {k: [] for k in ("doc_id", "thr_sum", "thr_max", "thr_px",
-                                "mask_px")}
-        for s, e in zip(starts, ends):
-            rect = np.stack([cols["x0"][s:e], cols["y0"][s:e],
-                             cols["x1"][s:e], cols["y1"][s:e]], axis=1)
-            canvas, mask = make_border_map(
-                rect, cols["tag"][s:e].astype(bool), h, w)
-            rows["doc_id"].append(docs_str[s])
-            rows["thr_sum"].append(float(canvas.sum(dtype=np.float64)))
-            rows["thr_max"].append(float(canvas.max()))
-            rows["thr_px"].append(int((canvas > BORDER_THRESH_MIN).sum()))
-            rows["mask_px"].append(int(mask.sum()))
-        types = {"doc_id": pa.string(), "thr_sum": pa.float64(),
-                 "thr_max": pa.float64(), "thr_px": pa.int64(),
-                 "mask_px": pa.int64()}
-        return pa.RecordBatch.from_arrays(
-            [pa.array(rows[k], type=t) for k, t in types.items()],
-            names=list(types))
-
-    out_schema = ("doc_id string, thr_sum double, thr_max double, "
-                  "thr_px long, mask_px long")
     # thr_sum/thr_max stay UNROUNDED: the fixture runs the identical
     # kernel single-node, so the doubles are bit-equal by construction
     # and the gate's 4dp canon formats them identically.
-    return grouped_map_arrow(_border_boxes(spark, sf_dir), ["doc_id"],
-                             ["box_id"], emit, out_schema)
+    return grouped_map_rows(
+        _border_boxes(spark, sf_dir), ["doc_id"], ["box_id"], per_doc,
+        "doc_id string, thr_sum double, thr_max double, thr_px long, "
+        "mask_px long")
 
 
 _LMDB_FIXTURE_ROOT = "/tmp/paddleocr_spark_lmdb"

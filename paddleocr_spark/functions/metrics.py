@@ -218,6 +218,28 @@ def det_match_counts(gt: np.ndarray, ignore: np.ndarray,
     return (int(n_gt - ignore.sum()), int(n_det - det_dc.sum()), matched)
 
 
+def _per_doc_rows(gt: DataFrame, det: DataFrame, gt_extra, det_extra,
+                  per_image, schema: str) -> DataFrame:
+    """``per_image`` over each doc's gt and det boxes: one frame of (doc_id,
+    oid, x1..y2, the ``*_extra`` column, side 'gt'|'det'), grouped by
+    doc_id with gts first, each side in id order (operators.grouped)."""
+    from ..operators.grouped import grouped_map_rows
+    g = gt.select("doc_id", F.col("gt_id").alias("oid"),
+                  "x1", "y1", "x2", "y2", gt_extra,
+                  F.lit("gt").alias("side"))
+    d = det.select("doc_id", F.col("det_id").alias("oid"),
+                   "x1", "y1", "x2", "y2", det_extra,
+                   F.lit("det").alias("side"))
+    return grouped_map_rows(g.unionByName(d), ["doc_id"], ["side", "oid"],
+                            per_image, schema)
+
+
+def _doc_boxes(g: dict) -> np.ndarray:
+    """One doc's (n, 4) float x1/y1/x2/y2 boxes."""
+    return np.stack([g[c] for c in ("x1", "y1", "x2", "y2")],
+                    axis=1).astype(float)
+
+
 DET_EVAL_SCHEMA = "doc_id string, gt_care long, det_care long, matched long"
 
 
@@ -228,49 +250,14 @@ def det_eval_per_doc(gt: DataFrame, det: DataFrame) -> DataFrame:
     the quantities combine_results sums (eval_det_iou.py:188-210).
     Exposed separately so threshold-sweep metrics (DetFCEMetric) can
     evaluate pseudo-docs and aggregate per threshold."""
-    g = gt.select("doc_id", F.col("gt_id").alias("oid"),
-                  "x1", "y1", "x2", "y2",
-                  F.col("ignore").cast("boolean").alias("ignore"),
-                  F.lit("gt").alias("side"))
-    d = det.select("doc_id", F.col("det_id").alias("oid"),
-                   "x1", "y1", "x2", "y2",
-                   F.lit(False).alias("ignore"), F.lit("det").alias("side"))
-    both = g.unionByName(d)
+    def per_image(g):
+        is_gt, pts = g["side"] == "gt", _doc_boxes(g)
+        yield (g["doc_id"][0], *det_match_counts(
+            pts[is_gt], g["ignore"][is_gt].astype(bool), pts[~is_gt]))
 
-    def emit(tbl):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from ..operators.grouped import group_starts, string_codes
-        doc_codes = string_codes(tbl.column("doc_id"))
-        is_gt = pc.equal(tbl.column("side"), "gt").combine_chunks().to_numpy(
-            zero_copy_only=False)
-        pts = np.stack([tbl.column(c).to_numpy() for c in
-                        ("x1", "y1", "x2", "y2")], axis=1).astype(float)
-        ignore = tbl.column("ignore").combine_chunks().to_numpy(
-            zero_copy_only=False).astype(bool)
-        starts = group_starts(doc_codes)
-        ends = np.append(starts[1:], len(doc_codes))
-        gcs, dcs, ms = [], [], []
-        for s, e in zip(starts, ends):
-            mask = is_gt[s:e]
-            block = pts[s:e]
-            gc, dc, m = det_match_counts(
-                block[mask], ignore[s:e][mask], block[~mask])
-            gcs.append(gc)
-            dcs.append(dc)
-            ms.append(m)
-        doc_ids = pc.take(tbl.column("doc_id").combine_chunks(),
-                          pa.array(starts.astype(np.int64)))
-        return pa.RecordBatch.from_arrays(
-            [doc_ids, pa.array(np.asarray(gcs, dtype=np.int64)),
-             pa.array(np.asarray(dcs, dtype=np.int64)),
-             pa.array(np.asarray(ms, dtype=np.int64))],
-            names=["doc_id", "gt_care", "det_care", "matched"])
-
-    from ..operators.grouped import grouped_map_arrow
-    return grouped_map_arrow(both, ["doc_id"], ["side", "oid"],
-                              emit, DET_EVAL_SCHEMA)
+    return _per_doc_rows(
+        gt, det, F.col("ignore").cast("boolean").alias("ignore"),
+        F.lit(False).alias("ignore"), per_image, DET_EVAL_SCHEMA)
 
 
 def det_eval(gt: DataFrame, det: DataFrame) -> DataFrame:
@@ -509,50 +496,15 @@ def ct_eval(gt: DataFrame, det: DataFrame) -> DataFrame:
     det: (doc_id, det_id, x1, y1, x2, y2).
     Returns one row (precision, recall, f_score, total_num_gt,
     total_num_det)."""
-    g = gt.select("doc_id", F.col("gt_id").alias("oid"),
-                  "x1", "y1", "x2", "y2",
-                  F.col("dc").cast("boolean").alias("dc"),
-                  F.lit("gt").alias("side"))
-    d = det.select("doc_id", F.col("det_id").alias("oid"),
-                   "x1", "y1", "x2", "y2",
-                   F.lit(False).alias("dc"), F.lit("det").alias("side"))
-    both = g.unionByName(d)
+    def per_image(g):
+        is_gt, pts = g["side"] == "gt", _doc_boxes(g)
+        sigma, tau = ct_sigma_tau(pts[is_gt], g["dc"][is_gt].astype(bool),
+                                  pts[~is_gt])
+        yield (g["doc_id"][0], *ct_match_counts(sigma, tau)[:4])
 
-    def emit(tbl):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..operators.grouped import group_starts, string_codes
-        doc_codes = string_codes(tbl.column("doc_id"))
-        is_gt = pc.equal(tbl.column("side"), "gt").combine_chunks(
-        ).to_numpy(zero_copy_only=False)
-        pts = np.stack([tbl.column(c).to_numpy() for c in
-                        ("x1", "y1", "x2", "y2")], axis=1).astype(float)
-        dc = tbl.column("dc").combine_chunks().to_numpy(
-            zero_copy_only=False).astype(bool)
-        starts = group_starts(doc_codes)
-        ends = np.append(starts[1:], len(doc_codes))
-        ngs, nds, rs, ps = [], [], [], []
-        for s, e in zip(starts, ends):
-            mask = is_gt[s:e]
-            sigma, tau = ct_sigma_tau(pts[s:e][mask], dc[s:e][mask],
-                                      pts[s:e][~mask])
-            ng, nd, r, p, _ = ct_match_counts(sigma, tau)
-            ngs.append(ng)
-            nds.append(nd)
-            rs.append(r)
-            ps.append(p)
-        doc_ids = pc.take(tbl.column("doc_id").combine_chunks(),
-                          pa.array(starts.astype(np.int64)))
-        return pa.RecordBatch.from_arrays(
-            [doc_ids, pa.array(np.asarray(ngs, dtype=np.int64)),
-             pa.array(np.asarray(nds, dtype=np.int64)),
-             pa.array(np.asarray(rs)), pa.array(np.asarray(ps))],
-            names=["doc_id", "num_gt", "num_det", "rec_acc", "prec_acc"])
-
-    from ..operators.grouped import grouped_map_arrow
-    per_doc = grouped_map_arrow(both, ["doc_id"], ["side", "oid"],
-                                emit, CT_EVAL_SCHEMA)
+    per_doc = _per_doc_rows(
+        gt, det, F.col("dc").cast("boolean").alias("dc"),
+        F.lit(False).alias("dc"), per_image, CT_EVAL_SCHEMA)
     # NOTE (faithful accounting): total_num_gt counts gts AFTER the
     # '###' removal and total_num_det counts dets AFTER the don't-care
     # filtering — get_score_C returns the filtered tables and
@@ -627,56 +579,18 @@ def e2e_deteval(gt: DataFrame, det: DataFrame) -> DataFrame:
 
     gt: (doc_id, gt_id, x1, y1, x2, y2, txt — '' marks don't-care);
     det: (doc_id, det_id, x1, y1, x2, y2, txt)."""
-    g = gt.select("doc_id", F.col("gt_id").alias("oid"),
-                  "x1", "y1", "x2", "y2", "txt",
-                  F.lit("gt").alias("side"))
-    d = det.select("doc_id", F.col("det_id").alias("oid"),
-                   "x1", "y1", "x2", "y2", "txt",
-                   F.lit("det").alias("side"))
-    both = g.unionByName(d)
+    def per_image(g):
+        is_gt, pts = g["side"] == "gt", _doc_boxes(g)
+        gtt = [t or "" for t in g["txt"][is_gt]]
+        dtt = [t or "" for t in g["txt"][~is_gt]]
+        care = np.array([t != "" for t in gtt], dtype=bool)
+        sigma, tau, keep = e2e_sigma_tau(pts[is_gt], care, pts[~is_gt])
+        yield (g["doc_id"][0], *ct_match_counts(
+            sigma, tau, [t for t, c in zip(gtt, care) if c],
+            [t for t, kp in zip(dtt, keep) if kp]))
 
-    def emit(tbl):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..operators.grouped import group_starts, string_codes
-        doc_codes = string_codes(tbl.column("doc_id"))
-        is_gt = pc.equal(tbl.column("side"), "gt").combine_chunks(
-        ).to_numpy(zero_copy_only=False)
-        pts = np.stack([tbl.column(c).to_numpy() for c in
-                        ("x1", "y1", "x2", "y2")], axis=1).astype(float)
-        txts = tbl.column("txt").to_pylist()
-        starts = group_starts(doc_codes)
-        ends = np.append(starts[1:], len(doc_codes))
-        rows = []
-        for s, e in zip(starts, ends):
-            mask = is_gt[s:e]
-            gtt = [txts[s + i] or "" for i in np.flatnonzero(mask)]
-            dtt = [txts[s + i] or "" for i in np.flatnonzero(~mask)]
-            care = np.array([t != "" for t in gtt], dtype=bool)
-            sigma, tau, keep = e2e_sigma_tau(
-                pts[s:e][mask], care, pts[s:e][~mask])
-            gt_strs = [t for t, c in zip(gtt, care) if c]
-            det_strs = [t for t, kp in zip(dtt, keep) if kp]
-            ng, nd, r, p, h = ct_match_counts(sigma, tau,
-                                              gt_strs, det_strs)
-            rows.append((ng, nd, r, p, h))
-        doc_ids = pc.take(tbl.column("doc_id").combine_chunks(),
-                          pa.array(starts.astype(np.int64)))
-        cols = list(zip(*rows)) if rows else [[]] * 5
-        return pa.RecordBatch.from_arrays(
-            [doc_ids,
-             pa.array(np.asarray(cols[0], dtype=np.int64)),
-             pa.array(np.asarray(cols[1], dtype=np.int64)),
-             pa.array(np.asarray(cols[2], dtype=np.float64)),
-             pa.array(np.asarray(cols[3], dtype=np.float64)),
-             pa.array(np.asarray(cols[4], dtype=np.int64))],
-            names=["doc_id", "num_gt", "num_det", "rec_acc", "prec_acc",
-                   "hits"])
-
-    from ..operators.grouped import grouped_map_arrow
-    per_doc = grouped_map_arrow(both, ["doc_id"], ["side", "oid"],
-                                emit, E2E_DETEVAL_SCHEMA)
+    per_doc = _per_doc_rows(gt, det, "txt", "txt", per_image,
+                            E2E_DETEVAL_SCHEMA)
     agg = per_doc.agg(F.sum("rec_acc").alias("r"),
                       F.sum("prec_acc").alias("p"),
                       F.sum("hits").cast("double").alias("h"),

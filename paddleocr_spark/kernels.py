@@ -46,15 +46,6 @@ STYLE_TOKENS = [
     "<i>", "</i>",
 ]
 
-#: Same token set as a single-pass regex alternation (for JVM-side
-#: ``regexp_replace``). Single-pass == the reference's sequential loop as long
-#: as removing one token never *creates* another (true for any text that does
-#: not embed split token fragments; our corpus never does — asserted in tests).
-STYLE_TOKEN_REGEX = (
-    "<strike>|<sup>|</sub>|<b>|</b>|<sub>|</sup>|<overline>|</overline>"
-    "|<underline>|</underline>|<i>|</i>"
-)
-
 
 def strip_style_tokens(text: str) -> str:
     """Sequential replace loop, semantics of ppstructure/predict_system.py:157-162."""

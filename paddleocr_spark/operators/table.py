@@ -364,7 +364,7 @@ def table_html_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     The master walk (whole-token replacement, deal_eb_token, deal_bb's
     thead regex surgery) is iterative string rewriting with backreference
     replaces — not relational like the plain dialect — so it runs as a
-    per-table Arrow kernel (grouped.grouped_map_arrow keyed by t_id).
+    per-table Arrow kernel (grouped.grouped_map_rows keyed by t_id).
     Round 4: the per-cell content loop is separable from the walk (pure
     function of one cell's ordered contents — kernels.assemble_cell_txt),
     so it is pre-aggregated relationally by _cell_contents and the kernel
@@ -376,7 +376,7 @@ def table_html_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     a differential between the two formulations.
     """
     from ..entry_queries import q_cell_match
-    from .grouped import grouped_map_arrow
+    from .grouped import grouped_map_rows
     toks = table_structure(spark, sf_dir)
     cells = _cell_contents(q_cell_match(spark, sf_dir))
     t = toks.select("t_id", F.lit("t").alias("side"),
@@ -385,33 +385,13 @@ def table_html_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = cells.select("t_id", F.lit("c").alias("side"),
                      F.col("cell_id").alias("a"),
                      F.col("cell_content").alias("s"))
-    both = t.unionByName(c)
 
-    def emit(tbl):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from .grouped import group_starts
-        t_ids = tbl.column("t_id").to_numpy()
-        is_tok = pc.equal(tbl.column("side"), "t").combine_chunks(
-        ).to_numpy(zero_copy_only=False)
-        a = tbl.column("a").to_numpy()
-        s = tbl.column("s").combine_chunks().to_pylist()
-        starts = group_starts(t_ids)
-        ends = np.append(starts[1:], len(t_ids))
-        out_ids, out_html = [], []
-        for st, en in zip(starts, ends):
-            # sorted by (side, a): side 'c' rows precede 't' rows
-            toks_g = [s[i] for i in range(st, en) if is_tok[i]]
-            txts_g = {int(a[i]): s[i]
-                      for i in range(st, en) if not is_tok[i]}
-            out_ids.append(int(t_ids[st]))
-            out_html.append(html_master_one_txt(int(t_ids[st]), toks_g,
-                                                txts_g))
-        return pa.RecordBatch.from_arrays(
-            [pa.array(np.asarray(out_ids, dtype=np.int64)),
-             pa.array(out_html, type=pa.string())],
-            names=["t_id", "html"])
+    def per_table(g):
+        # sorted by (side, a): side 'c' rows precede 't' rows
+        is_tok = g["side"] == "t"
+        t_id = int(g["t_id"][0])
+        txts = {int(a): s for a, s in zip(g["a"][~is_tok], g["s"][~is_tok])}
+        yield t_id, html_master_one_txt(t_id, list(g["s"][is_tok]), txts)
 
-    return grouped_map_arrow(both, ["t_id"], ["side", "a"], emit,
-                             "t_id long, html string")
+    return grouped_map_rows(t.unionByName(c), ["t_id"], ["side", "a"],
+                            per_table, "t_id long, html string")

@@ -15,7 +15,10 @@ whole-stage-codegen; the kernel emits fully assembled documents so no
 re-aggregation shuffle follows. The kernel is ``mapInArrow`` (not
 per-group ``applyInPandas``, not pandas) for two measured reasons — see
 ``order_and_assemble`` — and string columns are only ever moved by
-vectorized Arrow ``take``, never through per-span Python objects.
+vectorized Arrow ``take``, never through per-span Python objects. The
+clustering and the batch-boundary carry are operators/grouped.py's, shared
+with every other per-group operator; this module owns only the kernel
+body (``_order_ranks`` + ``_emit_arrow``).
 Reference parity citations live in paddleocr_spark/kernels.py.
 """
 
@@ -288,37 +291,22 @@ def _emit_arrow(tbl: "pa.Table"):
 
 def _assemble_arrow(it):
     """mapInArrow body: batches of one hash-partition arrive sorted by
-    (doc_id, span_idx); the last (possibly incomplete) document of each
-    batch is carried into the next before assembly."""
-    import pyarrow as pa
+    (doc_id, span_idx); grouped.carry_groups carries the last (possibly
+    incomplete) document of each batch into the next before
+    ``_emit_arrow`` assembles a run of complete documents."""
+    from .operators.grouped import carry_groups
 
-    carry: pa.Table | None = None
-    for rb in it:
-        tbl = pa.Table.from_batches([rb])
-        if carry is not None:
-            tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-        n = tbl.num_rows
-        if n == 0:
-            continue
-        doc = tbl.column("doc_id")
-        last = doc[n - 1]
-        cut = n - 1
-        while cut > 0 and doc[cut - 1] == last:
-            cut -= 1
-        carry = tbl.slice(cut)
-        if cut > 0:
-            yield _emit_arrow(tbl.slice(0, cut))
-    if carry is not None and carry.num_rows:
-        yield _emit_arrow(carry)
+    yield from carry_groups(it, ["doc_id"], _emit_arrow)
 
 
-def order_and_assemble(spans: DataFrame,
-                       num_partitions: int | None = None) -> DataFrame:
+def order_and_assemble(spans: DataFrame) -> DataFrame:
     """Reading-order resolution + document re-assembly (the one shuffle).
 
-    Physical strategy (deliberate, see BENCH notes): an EXPLICIT
-    ``repartition(n, doc_id)`` + ``sortWithinPartitions`` + ``mapInArrow``
-    instead of ``groupBy(doc_id).applyInPandas``, because
+    Physical strategy (deliberate, see BENCH notes): grouped.cluster's
+    EXPLICIT ``repartition(2 × defaultParallelism, doc_id)`` +
+    ``sortWithinPartitions(doc_id, span_idx)``, then ``mapInArrow`` over
+    ``_assemble_arrow``, instead of ``groupBy(doc_id).applyInPandas``,
+    because
 
     * per-group applyInPandas pays Arrow slicing + pandas construction per
       document — ruinous for web-scale corpora of small docs (40k docs/task
@@ -330,33 +318,31 @@ def order_and_assemble(spans: DataFrame,
 
     Hash partitioning on doc_id guarantees each document lands whole in one
     partition; the within-partition sort makes output independent of both
-    partition count and input row order.
+    partition count and input row order. This is the same shape as every
+    other per-group operator (operators/grouped.py); only the kernel body
+    differs.
     """
-    if num_partitions is None:
-        sc = spans.sparkSession.sparkContext
-        num_partitions = sc.defaultParallelism * 2
-    df = (spans.select("doc_id", "span_idx", "kind", "text", "media_ref",
-                       "x1", "y1", "x2", "y2")
-          .repartition(num_partitions, "doc_id")
-          .sortWithinPartitions("doc_id", "span_idx"))
-    return df.mapInArrow(_assemble_arrow, schema=EXTRACTED_SCHEMA)
+    from .operators.grouped import cluster
+
+    df = spans.select("doc_id", "span_idx", "kind", "text", "media_ref",
+                      "x1", "y1", "x2", "y2")
+    return cluster(df, ["doc_id"], ["span_idx"]).mapInArrow(
+        _assemble_arrow, schema=EXTRACTED_SCHEMA)
 
 
-def ensure_input_parallelism(documents: DataFrame,
-                             min_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition when the scan is under-partitioned.
+def ensure_input_parallelism(documents: DataFrame) -> DataFrame:
+    """Round-robin repartition to defaultParallelism when the scan is
+    under-partitioned.
 
     A single small parquet file (or a handful of Iceberg manifests) arrives
     as 1 task, serializing every narrow stage before the first shuffle. At
     production scale the Iceberg scan is already wide and this is a no-op
-    check; in the sandbox it is the difference between 1 core and 32 doing
-    the synth/explode/filter work.
+    check; in the sandbox it is the difference between 1 core and all of
+    them doing the synth/explode/filter work.
     """
-    sc = documents.sparkSession.sparkContext
-    if min_partitions is None:
-        min_partitions = sc.defaultParallelism
-    if documents.rdd.getNumPartitions() < min_partitions:
-        return documents.repartition(min_partitions)
+    n = documents.sparkSession.sparkContext.defaultParallelism
+    if documents.rdd.getNumPartitions() < n:
+        return documents.repartition(n)
     return documents
 
 

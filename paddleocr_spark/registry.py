@@ -55,45 +55,8 @@ def _strip(**_):
 
 
 @register("OrderAssemble")
-def _order(num_partitions: int | None = None, **_):
-    return lambda df: P.order_and_assemble(df, num_partitions)
-
-
-@register("EnsureParallelism")
-def _ensure(min_partitions: int | None = None, **_):
-    return lambda df: P.ensure_input_parallelism(df, min_partitions)
-
-
-@register("Recognize")
-def _recognize(**_):
-    from .operators.recognize import recognize
-    return recognize
-
-
-@register("ClassifyRotate")
-def _cls(cls_thresh: float = 0.9, **_):
-    from .operators.recognize import classify_rotate
-    return lambda df: classify_rotate(df, cls_thresh)
-
-
-@register("NMSPerClass")
-def _nms(iou_threshold: float = 0.5, nms_top_k: int = 1000,
-         keep_top_k: int = 100, **_):
-    from .operators.spatial import nms_per_class
-    return lambda df: nms_per_class(df, iou_threshold, nms_top_k, keep_top_k)
-
-
-@register("SaltedRepartition")
-def _salt(num_partitions: int = 32, key: str = "doc_id",
-          salt_buckets: int = 16, **_):
-    from .operators.spatial import salted_repartition
-    return lambda df: salted_repartition(df, num_partitions, key, salt_buckets)
-
-
-@register("DecodeMedia")
-def _media(**_):
-    from .multimodal import decode_media
-    return decode_media
+def _order(**_):
+    return P.order_and_assemble
 
 
 DEFAULT_CONFIG: list[dict] = [

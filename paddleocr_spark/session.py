@@ -13,19 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app: str = "paddleocr-spark", cores: int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app: str = "paddleocr-spark",
+              cores: int | None = None) -> SparkSession:
+    """A ``local[cores]`` session; ``cores`` defaults to
+    ``$SPARK_GRAFT_CPUS``, else this host's CPU count. Shuffles default to
+    2× cores partitions: enough slots for AQE to coalesce down, few enough
+    that sf-scale partitions stay >memory-trivial. At cluster scale this
+    is sized to data volume instead (see README scale notes)."""
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        # 2× cores: enough slots for AQE to coalesce down, few enough that
-        # sf-scale partitions stay >memory-trivial. At cluster scale this is
-        # sized to data volume instead (see README scale notes).
-        shuffle_partitions = 2 * cores
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(2 * cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -1,0 +1,112 @@
+"""The shared batch-boundary carry (operators.grouped.carry_groups, which
+pipeline._assemble_arrow runs the flagship kernel through) and the row
+driver's batch building, checked without a Spark session: hand-built
+Arrow batches stand in for one sorted hash partition."""
+
+from __future__ import annotations
+
+import numpy as np
+import pyarrow as pa
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from paddleocr_spark import geometry as G
+from paddleocr_spark import pipeline
+from paddleocr_spark.operators.grouped import _rows_emitter, carry_groups
+
+KINDS = ["text", "title", "table", "media"]
+
+
+def _kernel_rows(sizes: list[int], seed: int = 0) -> pa.Table:
+    """Kernel input sorted by (doc_id, span_idx): one doc per entry of
+    ``sizes``, with scattered boxes so both the fast and the exact path
+    of _order_ranks are taken."""
+    rng = np.random.default_rng(seed)
+    n = sum(sizes)
+    kind = rng.choice(KINDS, n)
+    x1 = rng.integers(0, G.PAGE_WIDTH - 50, n)
+    y1 = rng.integers(0, 400, n)
+    return pa.table({
+        "doc_id": np.repeat([f"doc_{d:05d}" for d in range(len(sizes))],
+                            sizes),
+        "span_idx": np.concatenate([np.arange(k) for k in sizes]),
+        "kind": kind,
+        "text": [f"t{i}" for i in range(n)],
+        "media_ref": [None if k != "media" else f"m{i}"
+                      for i, k in enumerate(kind)],
+        "x1": x1.astype(np.int32), "y1": y1.astype(np.int32),
+        "x2": (x1 + rng.integers(4, 300, n)).astype(np.int32),
+        "y2": (y1 + rng.integers(4, 40, n)).astype(np.int32),
+    })
+
+
+def _batches(tbl: pa.Table, cuts: list[int]) -> list[pa.RecordBatch]:
+    """``tbl`` sliced at the sorted ``cuts``; a repeated cut is an empty
+    batch."""
+    bounds = [0, *sorted(cuts), tbl.num_rows]
+    return [tbl.slice(s, e - s).combine_chunks().to_batches()[0]
+            if e > s else pa.RecordBatch.from_pylist([], schema=tbl.schema)
+            for s, e in zip(bounds[:-1], bounds[1:])]
+
+
+def _assembled(batches) -> pa.Table:
+    out = list(pipeline._assemble_arrow(iter(batches)))
+    return pa.Table.from_batches(out, schema=out[0].schema)
+
+
+ONE_DOC_THREE_BATCHES = ([2, 25, 3], [5, 15])
+WITH_EMPTY_BATCHES = ([3, 4, 1, 6], [0, 0, 5, 5, 8, 14, 14])
+ONE_ROW_BATCHES = ([3, 1, 4, 2], list(range(1, 10)))
+
+
+@pytest.mark.parametrize("sizes,cuts", [
+    ONE_DOC_THREE_BATCHES, WITH_EMPTY_BATCHES, ONE_ROW_BATCHES,
+], ids=["one_doc_three_batches", "empty_batches", "one_row_batches"])
+def test_carry_equals_one_pass_over_the_whole_table(sizes, cuts):
+    tbl = _kernel_rows(sizes)
+    want = pa.Table.from_batches([pipeline._emit_arrow(tbl)])
+    assert _assembled(_batches(tbl, cuts)).equals(want)
+
+    seen = []
+
+    def emit(t):
+        seen.append(t.column("doc_id").to_pylist())
+        return pipeline._emit_arrow(t)
+    out = list(carry_groups(iter(_batches(tbl, cuts)), ["doc_id"], emit))
+    assert pa.Table.from_batches(out).equals(want)
+    # every emit call saw whole documents: no doc is split across calls
+    docs = [set(ids) for ids in seen]
+    assert sum(len(d) for d in docs) == len(sizes)
+
+
+@settings(max_examples=60, deadline=None)
+@given(sizes=st.lists(st.integers(1, 12), min_size=1, max_size=6),
+       cuts=st.lists(st.integers(0, 80), max_size=10),
+       seed=st.integers(0, 2**16))
+def test_carry_is_invariant_to_batch_cuts(sizes, cuts, seed):
+    tbl = _kernel_rows(sizes, seed)
+    cuts = [c % (tbl.num_rows + 1) for c in cuts]
+    want = pa.Table.from_batches([pipeline._emit_arrow(tbl)])
+    assert _assembled(_batches(tbl, cuts)).equals(want)
+
+
+def test_row_driver_casts_to_schema_and_skips_empty_groups():
+    # the Arrow form of the DDL "doc_id string, n long, total double"
+    schema = pa.schema([("doc_id", pa.string()), ("n", pa.int64()),
+                        ("total", pa.float64())])
+
+    def per_doc(g):
+        if g["doc_id"][0] == "b":
+            return []
+        return [(g["doc_id"][0], len(g["v"]), int(g["v"].sum()))]
+
+    emit = _rows_emitter(["doc_id"], per_doc, schema)
+    tbl = pa.table({"doc_id": ["a", "a", "b", "c"], "v": [1, 2, 3, 4]})
+    out = emit(tbl)
+    assert out.schema.equals(schema)
+    assert out.to_pylist() == [{"doc_id": "a", "n": 2, "total": 3.0},
+                               {"doc_id": "c", "n": 1, "total": 4.0}]
+    only_b = tbl.slice(2, 1).to_batches()
+    assert emit(pa.Table.from_batches(only_b)) is None
+    assert list(carry_groups(iter(only_b), ["doc_id"], emit)) == []

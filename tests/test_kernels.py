@@ -219,16 +219,6 @@ def test_strip_tokens_and_strike_survivor():
     assert strip_style_tokens("<overline>y</overline><underline>z</underline>") == "yz"
 
 
-def test_strip_tokens_regex_matches_loop():
-    import re
-
-    from paddleocr_spark.kernels import STYLE_TOKEN_REGEX
-    samples = ["<b>x</b>", "a</strike>", "<strike>q<strike>", "<sup>8</sup>",
-               "plain", "<i><b>nested</b></i>"]
-    for s in samples:
-        assert re.sub(STYLE_TOKEN_REGEX, "", s) == strip_style_tokens(s)
-
-
 # ------------------------------------------------------------- order_document
 
 @settings(max_examples=150, deadline=None)

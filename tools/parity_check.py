@@ -58,8 +58,7 @@ def main() -> int:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    spark = get_spark("parity", cores=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", os.cpu_count())))
+    spark = get_spark("parity")
     qs = entry.queries()
     oracles = entry.oracle_sql()
     n_pass = n_fail = n_rowsonly = 0
