@@ -18,9 +18,9 @@ repo's kernels —
   mode raises naming them; ``strict=False`` returns a per-op report so a
   migrating user sees exactly which config lines map where.
 
-``spark_transform`` runs a compiled chain distributed: one
-``mapInPandas`` over (ref, image-bytes) rows, Arrow-batched — the same
-physical shape as every other decode-family stage in this repo.
+``spark_transform`` runs a compiled chain distributed: one per-row
+Arrow stage (``operators.grouped.map_rows``) over the media refs — the
+same physical shape as every other decode-family stage in this repo.
 """
 
 from __future__ import annotations
@@ -293,34 +293,24 @@ def transform_sample(data: dict | Any, ops: list[SampleOp]):
     return data
 
 
-def spark_transform(refs, ops: list[SampleOp], stats: bool = True):
+def spark_transform(refs, ops: list[SampleOp]):
     """Run a compiled chain distributed over a (media_ref) DataFrame:
     render + decode happens inside the chain's DecodeImage (fed the
-    deterministic blob bytes), Arrow-batched via mapInPandas — the same
-    physical stage shape as the other decode-family queries. With
-    ``stats`` (default) each output sample is reduced to (ref, ndim,
-    dim0, dim1, numel, mean4) so results stay atomic-typed."""
-    import pandas as pd
-
+    deterministic blob bytes), one per-row Arrow stage
+    (operators.grouped.map_rows) — the same physical stage shape as the
+    other decode-family queries. Each output sample is reduced to (ref,
+    ndim, dim0, dim1, numel, mean4) so results stay atomic-typed."""
     from .imagecodecs import render_ref_image
+    from .operators.grouped import map_rows
 
-    def go(it):
-        for pdf in it:
-            rows = []
-            for ref in pdf["media_ref"]:
-                _, buf = render_ref_image(ref)
-                out = transform_sample({"image": buf}, ops)
-                if out is None:
-                    continue
-                img = out[0] if isinstance(out, list) else out["image"]
-                arr = np.asarray(img)
-                rows.append((ref, arr.ndim, int(arr.shape[0]),
-                             int(arr.shape[1]) if arr.ndim > 1 else 0,
-                             int(arr.size),
-                             round(float(arr.mean(dtype=np.float64)), 4)))
-            yield pd.DataFrame(rows, columns=[
-                "media_ref", "ndim", "dim0", "dim1", "numel", "mean"])
+    def go(ref):
+        out = transform_sample({"image": render_ref_image(ref)[1]}, ops)
+        if out is None:
+            return []
+        arr = np.asarray(out[0] if isinstance(out, list) else out["image"])
+        return [(ref, arr.ndim, int(arr.shape[0]),
+                 int(arr.shape[1]) if arr.ndim > 1 else 0, int(arr.size),
+                 round(float(arr.mean(dtype=np.float64)), 4))]
 
-    schema = ("media_ref string, ndim long, dim0 long, dim1 long, "
-              "numel long, mean double")
-    return refs.mapInPandas(go, schema=schema)
+    return map_rows(refs.select("media_ref"), go, "media_ref string, "
+                    "ndim long, dim0 long, dim1 long, numel long, mean double")

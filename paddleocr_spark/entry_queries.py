@@ -60,6 +60,7 @@ from .functions import sketches as SK
 from .functions import textfns as T
 from .functions import tokenizer as TK
 from .operators import kie as KIE
+from .operators.grouped import grouped_map_rows, map_rows
 from .operators.recognize import (abinet_decode, attn_decode, can_decode,
                                   nrtr_decode, orient4, pren_decode,
                                   rfl_decode, sar_decode, satrn_decode,
@@ -224,7 +225,6 @@ def _gt_rows(spark: SparkSession, sf_dir: str, per_doc: Callable,
     """``per_doc`` over each doc's spans of :func:`_span_boxes` (doc_id,
     span_idx, x1..y2, ignored and the ``extra`` columns), in span
     order."""
-    from .operators.grouped import grouped_map_rows
     return grouped_map_rows(
         _span_boxes(spark, sf_dir).select(
             "doc_id", "span_idx", *extra, "x1", "y1", "x2", "y2",
@@ -1012,7 +1012,7 @@ def q_det_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ctc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1+R2+R3: CTC encode (JVM) → sort-to-batch mapInPandas decode →
+    """R1+R2+R3: CTC encode (JVM) → sort-to-batch Arrow decode →
     conditional 180° flip. Round-trip invariant: decoded text == input text
     filtered to the charset; score 1.0 (0.0 for empty)."""
     from .operators.recognize import classify_rotate, recognize
@@ -1923,8 +1923,6 @@ def q_can_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     hex1(md5(doc '@' i)) = 0 (~1/16 of tokens). Oracle: committed
     fixture (tools/make_fixtures.fx_can_metric imports the same scorer
     — the kernels-imported-twice rule)."""
-    import pandas as pd
-
     from .functions.metrics import can_batch_stats
 
     d = (_docs(spark, sf_dir)
@@ -1938,20 +1936,14 @@ def q_can_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
              "1, 1) = '0', concat(w, '~'), w))"))
          .withColumn("batch_id", F.expr(f"doc_id DIV {CAN_BATCH}")))
 
-    out_schema = ("batch_id long, word_rate double, line_right long, "
-                  "word_length long, batch_size long")
+    def per_batch(g):  # rows in doc_id order: a deterministic np.mean
+        return [(g["batch_id"][0], *can_batch_stats(
+            [list(x) for x in g["label"]], [list(x) for x in g["pred"]]))]
 
-    def per_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")  # deterministic np.mean order
-        wr, lr, wl, bs = can_batch_stats(
-            [list(x) for x in pdf["label"]],
-            [list(x) for x in pdf["pred"]])
-        return pd.DataFrame(
-            [(int(pdf["batch_id"].iloc[0]), wr, lr, wl, bs)],
-            columns=["batch_id", "word_rate", "line_right",
-                     "word_length", "batch_size"])
-
-    per = d.groupBy("batch_id").applyInPandas(per_batch, out_schema)
+    per = grouped_map_rows(d, ["batch_id"], ["doc_id"], per_batch,
+                           "batch_id long, word_rate double, "
+                           "line_right long, word_length long, "
+                           "batch_size long")
     return per.agg(
         F.round(F.sum(F.col("word_rate") * F.col("word_length"))
                 / F.sum("word_length"), 4).alias("word_rate"),
@@ -1965,7 +1957,7 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: media spans → distinct refs → Arrow-batched
     (stubbed) decode → exploded per-dim features. The decode itself is a
     deterministic md5-derived fake (container lacks cv2), but the schema,
-    dedup-by-ref, mapInPandas batch shape, and feature explode are the real
+    dedup-by-ref, Arrow batch shape, and feature explode are the real
     production plumbing (paddleocr_spark/multimodal.py)."""
     from .multimodal import media_features
     feats = media_features(synth_spans(_docs(spark, sf_dir)))
@@ -2002,7 +1994,7 @@ def _media_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1) instead of once per query. The production analog is the
     content-addressed media table materialized once per corpus snapshot.
     The persisted table keeps its 2x-parallelism hash partitioning, so
-    downstream mapInPandas stages stay wide."""
+    downstream per-row Python stages stay wide."""
     from .functions.dedup import _cached
 
     def build() -> DataFrame:
@@ -2029,33 +2021,20 @@ def q_media_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     single wrong byte anywhere in the encode→decode path hash-fails the
     gate. All sums are exact in float64 (uint8 pixels, ≤289 per image) —
     no float tolerance anywhere."""
-    import pandas as pd
-
     from .imagecodecs import RENDER_FORMATS, decode_image, render_ref_image
     from .multimodal import pixel_stats
-
-    refs = _media_refs(spark, sf_dir)
 
     schema = ("media_ref string, width long, height long, channels long, "
               "mean_r double, mean_g double, mean_b double, "
               "mean_gray double, min_gray long, max_gray long, "
               "frac_bright double")
 
-    def render_decode(it):
-        for pdf in it:
-            rows = []
-            for ref in pdf["media_ref"]:
-                _, buf = render_ref_image(ref)
-                arr = decode_image(buf)
-                s = pixel_stats(arr)
-                rows.append((ref, s["width"], s["height"], arr.shape[2],
-                             s["mean_r"], s["mean_g"], s["mean_b"],
-                             s["mean_gray"], s["min_gray"], s["max_gray"],
-                             s["frac_bright"]))
-            yield pd.DataFrame(rows, columns=[
-                "media_ref", "width", "height", "channels", "mean_r",
-                "mean_g", "mean_b", "mean_gray", "min_gray", "max_gray",
-                "frac_bright"])
+    def render_decode(ref):
+        arr = decode_image(render_ref_image(ref)[1])
+        s = pixel_stats(arr)
+        return [(ref, s["width"], s["height"], arr.shape[2], s["mean_r"],
+                 s["mean_g"], s["mean_b"], s["mean_gray"], s["min_gray"],
+                 s["max_gray"], s["frac_bright"])]
 
     fmts = ", ".join(f"'{f}'" for f in RENDER_FORMATS)
     fmt = F.expr(
@@ -2063,7 +2042,7 @@ def q_media_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         "substring(md5(media_ref), 13, 1)) - 1) * 16 + "
         "instr('0123456789abcdef', substring(md5(media_ref), 14, 1)) - 1) "
         "% 4 + 1 AS INT))".format(fmts))
-    return (refs.mapInPandas(render_decode, schema=schema)
+    return (map_rows(_media_refs(spark, sf_dir), render_decode, schema)
             .select("media_ref", fmt.alias("fmt"), "width", "height",
                     "channels",
                     F.round("mean_r", 4).alias("mean_r"),
@@ -2086,32 +2065,20 @@ def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula ((md5_byte[0] + 7x + 13y + 17k) % 256) WITHOUT touching GIF
     bytes, so one wrong bit anywhere in the LZW encode→decode path
     hash-fails the gate."""
-    import pandas as pd
-
     from .imagecodecs import decode_frames, render_ref_gif
     from .multimodal import pixel_stats
 
-    refs = _media_refs(spark, sf_dir)
+    def render_decode(ref):
+        frames = decode_frames(render_ref_gif(ref))
+        for k, arr in enumerate(frames):
+            s = pixel_stats(arr)
+            yield (ref, len(frames), k, s["width"], s["height"],
+                   s["mean_gray"], s["min_gray"], s["max_gray"])
 
-    schema = ("media_ref string, n_frames long, frame_idx long, "
-              "width long, height long, mean_gray double, "
-              "min_gray long, max_gray long")
-
-    def render_decode(it):
-        for pdf in it:
-            rows = []
-            for ref in pdf["media_ref"]:
-                frames = decode_frames(render_ref_gif(ref))
-                for k, arr in enumerate(frames):
-                    s = pixel_stats(arr)
-                    rows.append((ref, len(frames), k, s["width"],
-                                 s["height"], s["mean_gray"],
-                                 s["min_gray"], s["max_gray"]))
-            yield pd.DataFrame(rows, columns=[
-                "media_ref", "n_frames", "frame_idx", "width", "height",
-                "mean_gray", "min_gray", "max_gray"])
-
-    return (refs.mapInPandas(render_decode, schema=schema)
+    return (map_rows(_media_refs(spark, sf_dir), render_decode,
+                     "media_ref string, n_frames long, frame_idx long, "
+                     "width long, height long, mean_gray double, "
+                     "min_gray long, max_gray long")
             .filter(F.col("frame_idx") % 2 == 0)  # frame_sample stride 2
             .select("media_ref", "n_frames", "frame_idx", "width",
                     "height",
@@ -2126,23 +2093,13 @@ def q_tensor_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     NormalizeImage float32 ImageNet chain → Pad /32 → ToCHW; per-channel
     plane stats. Fixture oracle (float32 chain is not SQL-restatable;
     tools/make_fixtures.py re-assembles it single-node, sf0.01 only)."""
-    import pandas as pd
-
     from .pixelops import tensor_ops_for_ref
 
-    cols = ["media_ref", "channel", "res_h", "res_w", "pad_h", "pad_w",
-            "mean", "vmin", "vmax", "ratio_h", "ratio_w"]
-    schema = ("media_ref string, channel long, res_h long, res_w long, "
-              "pad_h long, pad_w long, mean double, vmin double, "
-              "vmax double, ratio_h double, ratio_w double")
-
-    def go(it):
-        for pdf in it:
-            rows = [r for ref in pdf["media_ref"]
-                    for r in tensor_ops_for_ref(ref)]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _media_refs(spark, sf_dir).mapInPandas(go, schema=schema)
+    return map_rows(_media_refs(spark, sf_dir), tensor_ops_for_ref,
+                    "media_ref string, channel long, res_h long, "
+                    "res_w long, pad_h long, pad_w long, mean double, "
+                    "vmin double, vmax double, ratio_h double, "
+                    "ratio_w double")
 
 
 def q_table_xlsx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2173,22 +2130,11 @@ def q_layout_preprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
     ImageNet) → ToCHW op list the reference wires for PicoDet layout
     inference (ppstructure/layout/predict_layout.py:38-57), over real
     decoded pixels. Fixture oracle (float32 chain), sf0.01 only."""
-    import pandas as pd
-
     from .pixelops import layout_preprocess_for_ref
 
-    cols = ["media_ref", "channel", "out_h", "out_w", "mean", "vmin",
-            "vmax"]
-    schema = ("media_ref string, channel long, out_h long, out_w long, "
-              "mean double, vmin double, vmax double")
-
-    def go(it):
-        for pdf in it:
-            rows = [r for ref in pdf["media_ref"]
-                    for r in layout_preprocess_for_ref(ref)]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _media_refs(spark, sf_dir).mapInPandas(go, schema=schema)
+    return map_rows(_media_refs(spark, sf_dir), layout_preprocess_for_ref,
+                    "media_ref string, channel long, out_h long, "
+                    "out_w long, mean double, vmin double, vmax double")
 
 
 def q_sr_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2201,20 +2147,11 @@ def q_sr_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     forward is the only nondeterministic reference piece). Per-ref rows
     pin every pair; SRMetric.get_metric's 6dp rounding is applied
     per-pair. Fixture oracle, sf0.01 only."""
-    import pandas as pd
-
     from .pixelops import sr_pair_for_ref
 
-    cols = ["media_ref", "psnr", "ssim"]
-
-    def go(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                [sr_pair_for_ref(ref) for ref in pdf["media_ref"]],
-                columns=cols)
-
-    return _media_refs(spark, sf_dir).mapInPandas(
-        go, schema="media_ref string, psnr double, ssim double")
+    return map_rows(_media_refs(spark, sf_dir),
+                    lambda ref: [sr_pair_for_ref(ref)],
+                    "media_ref string, psnr double, ssim double")
 
 
 #: The det eval transform list of a REAL reference config
@@ -2238,7 +2175,7 @@ def q_config_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference-config bridge end-to-end (round 5): a REAL det
     config's Eval transform list (det_r50_vd_pse.yml) compiled by
     config.build_transforms onto this repo's kernels and run
-    distributed (config.spark_transform, one Arrow-batched mapInPandas
+    distributed (config.spark_transform, one per-row Arrow stage
     over the shared media-refs table) — pinning that a user's YAML
     wires to the same pixels the direct kernels produce. Fixture
     oracle: tools/make_fixtures.fx_config_transforms replays the same
@@ -2260,23 +2197,17 @@ def q_rec_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     over real decoded pixels (paddleocr_spark/recresize.py). Fixture
     oracle (float32 chains are not SQL-restatable; tools/
     make_fixtures.py re-assembles them single-node, sf0.01 only)."""
-    import pandas as pd
-
     from .recresize import rec_resize_for_ref
 
-    cols = ["media_ref", "variant", "out_c", "out_h", "out_w",
-            "valid_ratio", "resize_w", "mean", "vmin", "vmax"]
-    schema = ("media_ref string, variant string, out_c long, out_h long, "
-              "out_w long, valid_ratio double, resize_w long, "
-              "mean double, vmin double, vmax double")
+    return map_rows(_media_refs(spark, sf_dir), rec_resize_for_ref,
+                    "media_ref string, variant string, out_c long, "
+                    "out_h long, out_w long, valid_ratio double, "
+                    "resize_w long, mean double, vmin double, vmax double")
 
-    def go(it):
-        for pdf in it:
-            rows = [r for ref in pdf["media_ref"]
-                    for r in rec_resize_for_ref(ref)]
-            yield pd.DataFrame(rows, columns=cols)
 
-    return _media_refs(spark, sf_dir).mapInPandas(go, schema=schema)
+#: One row per (blob, augment variant): rec_aug and cvaug.
+_AUG_SCHEMA = ("media_ref string, variant string, seed long, out_h long, "
+               "out_w long, mean double, vmin long, vmax long, crc long")
 
 
 def q_rec_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2291,22 +2222,10 @@ def q_rec_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
     blob (tia-only, bda-only, full chain), seeds crc32(ref:variant).
     Fixture oracle (float32 MLS warps are not SQL-restatable;
     tools/make_fixtures.py re-assembles single-node, sf0.01 only)."""
-    import pandas as pd
-
     from .recaug import rec_aug_for_ref
 
-    cols = ["media_ref", "variant", "seed", "out_h", "out_w",
-            "mean", "vmin", "vmax", "crc"]
-    schema = ("media_ref string, variant string, seed long, out_h long, "
-              "out_w long, mean double, vmin long, vmax long, crc long")
-
-    def go(it):
-        for pdf in it:
-            rows = [r for ref in pdf["media_ref"]
-                    for r in rec_aug_for_ref(ref)]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _media_refs(spark, sf_dir).mapInPandas(go, schema=schema)
+    return map_rows(_media_refs(spark, sf_dir), rec_aug_for_ref,
+                    _AUG_SCHEMA)
 
 
 def q_ct_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2380,22 +2299,11 @@ def q_randaug(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference module verbatim (tests/test_randaug.py). Four seeds per
     blob so the prob gate and an op spread are live. Fixture oracle
     (the raster chains are not SQL-restatable)."""
-    import pandas as pd
-
     from .randaug import randaug_for_ref
 
-    cols = ["media_ref", "seed", "out_h", "out_w", "mean", "vmin",
-            "vmax", "crc"]
-    schema = ("media_ref string, seed long, out_h long, out_w long, "
-              "mean double, vmin long, vmax long, crc long")
-
-    def go(it):
-        for pdf in it:
-            rows = [r for ref in pdf["media_ref"]
-                    for r in randaug_for_ref(ref)]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _media_refs(spark, sf_dir).mapInPandas(go, schema=schema)
+    return map_rows(_media_refs(spark, sf_dir), randaug_for_ref,
+                    "media_ref string, seed long, out_h long, out_w long, "
+                    "mean double, vmin long, vmax long, crc long")
 
 
 def q_drrg_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2439,22 +2347,9 @@ def q_cvaug(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's own ABINetRecAug/SVTRRecAug (tests/test_cvaug.py).
     Fixture oracle (random-warp raster chains are not SQL-restatable;
     tools/make_fixtures.py re-assembles single-node, sf0.01 only)."""
-    import pandas as pd
-
     from .cvaug import cvaug_for_ref
 
-    cols = ["media_ref", "variant", "seed", "out_h", "out_w",
-            "mean", "vmin", "vmax", "crc"]
-    schema = ("media_ref string, variant string, seed long, out_h long, "
-              "out_w long, mean double, vmin long, vmax long, crc long")
-
-    def go(it):
-        for pdf in it:
-            rows = [r for ref in pdf["media_ref"]
-                    for r in cvaug_for_ref(ref)]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _media_refs(spark, sf_dir).mapInPandas(go, schema=schema)
+    return map_rows(_media_refs(spark, sf_dir), cvaug_for_ref, _AUG_SCHEMA)
 
 
 def q_pdf_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2469,24 +2364,16 @@ def q_pdf_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     codecs, the DuckDB twin predicts every span from the closed-form
     plan WITHOUT touching PDF bytes, so the encode→inflate→parse
     roundtrip is what the gate hashes."""
-    import pandas as pd
-
     from .pdfcodec import decode_pdf, render_ref_pdf
 
-    cols = ["media_ref", "page_idx", "span_idx", "x", "y", "text"]
-    schema = ("media_ref string, page_idx long, span_idx long, "
-              "x double, y double, text string")
+    def spans_of(ref):
+        return [(ref, k, j, x, y, t)
+                for k, spans in enumerate(decode_pdf(render_ref_pdf(ref)))
+                for j, (x, y, t) in enumerate(spans)]
 
-    def go(it):
-        for pdf in it:
-            rows = []
-            for ref in pdf["media_ref"]:
-                for k, spans in enumerate(decode_pdf(render_ref_pdf(ref))):
-                    rows.extend((ref, k, j, x, y, t)
-                                for j, (x, y, t) in enumerate(spans))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _media_refs(spark, sf_dir).mapInPandas(go, schema=schema)
+    return map_rows(_media_refs(spark, sf_dir), spans_of,
+                    "media_ref string, page_idx long, span_idx long, "
+                    "x double, y double, text string")
 
 
 def q_rotate_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2495,22 +2382,11 @@ def q_rotate_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicate-border bicubic warp (+ the ≥1.5 rot90 quirk), and scatter
     points → rotating-calipers minAreaRect → reorder → C1. Fixture
     oracle (tools/make_fixtures.py, sf0.01 only)."""
-    import pandas as pd
-
     from .pixelops import crops_for_ref
 
-    cols = ["media_ref", "crop_id", "out_h", "out_w", "pix_sum",
-            "first_val"]
-    schema = ("media_ref string, crop_id string, out_h long, out_w long, "
-              "pix_sum long, first_val long")
-
-    def go(it):
-        for pdf in it:
-            rows = [r for ref in pdf["media_ref"]
-                    for r in crops_for_ref(ref)]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _media_refs(spark, sf_dir).mapInPandas(go, schema=schema)
+    return map_rows(_media_refs(spark, sf_dir), crops_for_ref,
+                    "media_ref string, crop_id string, out_h long, "
+                    "out_w long, pix_sum long, first_val long")
 
 
 # ---------------------------------------------------------------------------
@@ -2582,32 +2458,20 @@ def q_vl_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, full/remaining/occluded encodes, +1 shift, 0-pad, None drop.
     Fixture oracle (the draw is not SQL-restatable); arrays serialized
     csv (driver-canonicalizer rule)."""
-    import pandas as pd
-
     from .functions.labelenc import vl_encode_py
 
-    base = _encode_sample_texts(spark, sf_dir)
-    cols = ["doc_id", "change_id", "length", "length_res", "length_sub",
-            "label", "label_res", "label_sub"]
-    schema = ("doc_id long, change_id long, length long, "
-              "length_res long, length_sub long, label string, "
-              "label_res string, label_sub string")
+    def encode(did, text):
+        r = vl_encode_py(text, int(did))
+        if r is None:
+            return []
+        *lengths, lab, res, sub = r
+        return [(int(did), *lengths, *(",".join(map(str, a))
+                                       for a in (lab, res, sub)))]
 
-    def go(it):
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                r = vl_encode_py(text, int(did))
-                if r is None:
-                    continue
-                cid, ln, lr, ls, lab, res, sub = r
-                rows.append((int(did), cid, ln, lr, ls,
-                             ",".join(map(str, lab)),
-                             ",".join(map(str, res)),
-                             ",".join(map(str, sub))))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return base.mapInPandas(go, schema=schema)
+    return map_rows(_encode_sample_texts(spark, sf_dir), encode,
+                    "doc_id long, change_id long, length long, "
+                    "length_res long, length_sub long, label string, "
+                    "label_res string, label_sub string")
 
 
 def q_table_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2787,31 +2651,18 @@ def q_docx_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     or corrupts any span breaks hash parity; the XML-escape adversarial
     arm (payloads full of <b>/&/quotes) is pinned in tests/test_docx.py.
     One wide Arrow pass, one container per doc, no shuffle."""
-    import pandas as pd
-
     from .docxcodec import build_docx, parse_docx
     from .pipeline import ensure_input_parallelism
 
-    docs = synth_spans(ensure_input_parallelism(_docs(spark, sf_dir)))
+    def roundtrip(doc_id, spans):
+        stream = [(s["kind"], s["media_ref"] if s["kind"] == "media"
+                   else (s["text"] or "")) for s in spans]
+        return [(doc_id, i, k, p) for i, (k, p)
+                in enumerate(parse_docx(build_docx(stream)))]
 
-    def go(it):
-        for pdf in it:
-            ids, ords, kinds, payloads = [], [], [], []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                stream = [(s["kind"],
-                           s["media_ref"] if s["kind"] == "media"
-                           else (s["text"] or ""))
-                          for s in spans]
-                for i, (k, p) in enumerate(parse_docx(build_docx(stream))):
-                    ids.append(doc_id)
-                    ords.append(i)
-                    kinds.append(k)
-                    payloads.append(p)
-            yield pd.DataFrame({"doc_id": ids, "ord": ords,
-                                "kind": kinds, "payload": payloads})
-
-    return docs.mapInPandas(
-        go, schema="doc_id string, ord long, kind string, payload string")
+    return map_rows(
+        synth_spans(ensure_input_parallelism(_docs(spark, sf_dir))),
+        roundtrip, "doc_id string, ord long, kind string, payload string")
 
 
 def q_pse_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2823,7 +2674,6 @@ def q_pse_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
     fills are iterative)."""
     from .augments import PSE_CROP_SIZE, random_crop_img_mask
     from .kernels import make_shrink_map
-    from .operators.grouped import grouped_map_rows
 
     h, w = _SHRINK_H, _SHRINK_W
 
@@ -2867,7 +2717,6 @@ def q_pse_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
     falls), which the twin exploits; the escalation arm itself is pinned
     by exec-ref differential #44."""
     from .kernels import make_pse_gt
-    from .operators.grouped import grouped_map_rows
 
     def per_doc(g):
         doc_id = g["doc_id"][0]
@@ -2898,7 +2747,6 @@ def q_shrink_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernels.make_shrink_map); the escalation branch is pinned by the
     exec-reference differential instead."""
     from .kernels import make_shrink_map
-    from .operators.grouped import grouped_map_rows
 
     def per_doc(g):
         recs, gt, mask = make_shrink_map(
@@ -2945,7 +2793,6 @@ def q_border_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exec-reference differential pins the kernel to the reference
     source."""
     from .kernels import BORDER_THRESH_MIN, make_border_map
-    from .operators.grouped import grouped_map_rows
 
     def per_doc(g):
         canvas, mask = make_border_map(
@@ -3035,32 +2882,18 @@ def q_lmdb_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     and per-image integer gray statistics — closed-form from the
     documents parquet WITHOUT touching LMDB or PPM bytes, so one wrong
     bit anywhere in mdb write→B+tree read→PPM decode hash-fails."""
-    import pandas as pd
-
     from .imagecodecs import decode_pnm
     from .sources.lmdbfile import read_lmdb_dataset
 
-    data_dir = _lmdb_fixture_dir(spark, sf_dir)
-    df = read_lmdb_dataset(spark, data_dir)
+    def stats(lmdb_idx, file_idx, label, img):
+        gray = decode_pnm(bytes(img))[:, :, 0].astype("int64")
+        return [(int(lmdb_idx), int(file_idx), label, len(img),
+                 int(gray.sum()), int(gray.min()), int(gray.max()))]
 
-    def stats(batches):
-        for pdf in batches:
-            out = []
-            for lmdb_idx, file_idx, label, img in zip(
-                    pdf["lmdb_idx"], pdf["file_idx"], pdf["label"],
-                    pdf["image"]):
-                arr = decode_pnm(bytes(img))
-                gray = arr[:, :, 0].astype("int64")
-                out.append((int(lmdb_idx), int(file_idx), label,
-                            len(img), int(gray.sum()), int(gray.min()),
-                            int(gray.max())))
-            yield pd.DataFrame(out, columns=[
-                "lmdb_idx", "file_idx", "label", "img_len", "sum_gray",
-                "min_gray", "max_gray"])
-
-    return df.mapInPandas(
-        stats, schema="lmdb_idx int, file_idx int, label string, "
-        "img_len long, sum_gray long, min_gray long, max_gray long")
+    return map_rows(
+        read_lmdb_dataset(spark, _lmdb_fixture_dir(spark, sf_dir)), stats,
+        "lmdb_idx int, file_idx int, label string, img_len long, "
+        "sum_gray long, min_gray long, max_gray long")
 
 
 def _over_texts(op: Callable[[DataFrame], DataFrame]) \

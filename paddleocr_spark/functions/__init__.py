@@ -25,8 +25,8 @@ from .textfns import (fingerprint, gopher_rules, lang_id,
                       quality_score, strq2b, token_count)
 
 
-#: Headline secondary queries timed by bench.py and perfbench, in a fixed
-#: order for run-over-run comparison.
+#: Headline secondary queries timed by perfbench, in a fixed order for
+#: run-over-run comparison.
 _BENCH_NAMES = (
     "dedup_minhash", "dedup_simhash", "ann_cosine_topk", "token_count",
     "quality_score", "embedding_neardup", "table_html", "kie_pairs",

@@ -285,33 +285,24 @@ def utf8_compose(docs: DataFrame) -> DataFrame:
     O(n²): HOFs are interpreted, and each step's array-append copies
     the whole accumulator (58 s for 500 × ~7.5k-jamo docs at sf0.01).
     This is the textbook 'built-ins can't express it efficiently' case,
-    so the scan runs as an Arrow-batched mapInPandas over (doc_id,
-    jamo) rows — O(n) per doc, ~100× faster, and general over
-    adversarial jamo streams (not just roundtrip ones).
+    so the scan runs as one per-row Arrow stage over (doc_id, jamo)
+    rows (operators.grouped.map_rows) — O(n) per doc, ~100× faster, and
+    general over adversarial jamo streams (not just roundtrip ones).
 
     Output: (doc_id, composed, ps array<double> rounded 4dp)."""
-    d = utf8_decompose(docs)  # arrives wide (decompose widens its input)
-    schema = "doc_id long, composed string, ps array<double>"
+    from ..kernels import compose_string_by_utf8
+    from ..operators.grouped import map_rows
 
-    def batches(it):
-        import pandas as pd
+    def compose(d_id, jamo):
+        d_id, jamo = int(d_id), jamo or ""
+        text, pc = compose_string_by_utf8(
+            jamo, [((d_id + 5 * k) % 8 + 1) / 8
+                   for k in range(1, len(jamo) + 1)])
+        return [(d_id, text, [round(x, 4) for x in pc])]
 
-        from ..kernels import compose_string_by_utf8
-        for pdf in it:
-            ids, texts, pss = [], [], []
-            for d_id, jamo in zip(pdf["doc_id"], pdf["jamo"]):
-                d_id = int(d_id)
-                jamo = jamo or ""
-                probs = [((d_id + 5 * k) % 8 + 1) / 8
-                         for k in range(1, len(jamo) + 1)]
-                text, pc = compose_string_by_utf8(jamo, probs)
-                ids.append(d_id)
-                texts.append(text)
-                pss.append([round(x, 4) for x in pc])
-            yield pd.DataFrame(
-                {"doc_id": ids, "composed": texts, "ps": pss})
-
-    return d.mapInPandas(batches, schema=schema)
+    # arrives wide (decompose widens its input)
+    return map_rows(utf8_decompose(docs), compose,
+                    "doc_id long, composed string, ps array<double>")
 
 
 def rec_ensemble(docs: DataFrame) -> DataFrame:

@@ -14,12 +14,13 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections import Counter
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.grouped import grouped_map_rows, map_rows
 
 EPS = 1e-5  # rec_metric.py:71
 
@@ -74,31 +75,14 @@ def lcs_string(x: str, y: str) -> str:
     return lcs_string(x[:mid], y[:split]) + lcs_string(x[mid:], y[split:])
 
 
-CHAR_COUNT_SCHEMA = "char string, n_label long, n_pred long, n_answer long"
-
-
-def _char_counts(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-batch partial char counts over (pred, target) pairs."""
-    for pdf in it:
-        label: dict[str, int] = {}
-        pred_c: dict[str, int] = {}
-        answer: dict[str, int] = {}
-        for pred, target in zip(pdf["pred"], pdf["target"]):
-            pred = (pred or "").replace(" ", "")      # ignore_space default
-            target = (target or "").replace(" ", "")
-            for c in pred:
-                pred_c[c] = pred_c.get(c, 0) + 1
-            for c in target:
-                label[c] = label.get(c, 0) + 1
-            for c in lcs_string(pred, target):
-                answer[c] = answer.get(c, 0) + 1
-        chars = sorted(set(label) | set(pred_c) | set(answer))
-        yield pd.DataFrame({
-            "char": chars,
-            "n_label": [label.get(c, 0) for c in chars],
-            "n_pred": [pred_c.get(c, 0) for c in chars],
-            "n_answer": [answer.get(c, 0) for c in chars],
-        })
+def _char_counts(pred: str | None, target: str | None) -> list:
+    """One (pred, target) pair's (char, n_label, n_pred, n_answer) rows."""
+    pred = (pred or "").replace(" ", "")      # ignore_space default
+    target = (target or "").replace(" ", "")
+    label, pred_c, answer = (Counter(target), Counter(pred),
+                             Counter(lcs_string(pred, target)))
+    return [(c, label[c], pred_c[c], answer[c])
+            for c in label.keys() | pred_c.keys()]
 
 
 def char_prf(pairs: DataFrame) -> DataFrame:
@@ -116,7 +100,8 @@ def char_prf(pairs: DataFrame) -> DataFrame:
     # partition-invariant: partials sum per char.
     sc = pairs.sparkSession.sparkContext
     wide = pairs.select("pred", "target").repartition(sc.defaultParallelism)
-    partial = wide.mapInPandas(_char_counts, schema=CHAR_COUNT_SCHEMA)
+    partial = map_rows(wide, _char_counts, "char string, n_label long, "
+                       "n_pred long, n_answer long")
     per_char = (partial.groupBy("char")
                 .agg(F.sum("n_label").alias("n_label"),
                      F.sum("n_pred").alias("n_pred"),
@@ -223,7 +208,6 @@ def _per_doc_rows(gt: DataFrame, det: DataFrame, gt_extra, det_extra,
     """``per_image`` over each doc's gt and det boxes: one frame of (doc_id,
     oid, x1..y2, the ``*_extra`` column, side 'gt'|'det'), grouped by
     doc_id with gts first, each side in id order (operators.grouped)."""
-    from ..operators.grouped import grouped_map_rows
     g = gt.select("doc_id", F.col("gt_id").alias("oid"),
                   "x1", "y1", "x2", "y2", gt_extra,
                   F.lit("gt").alias("side"))

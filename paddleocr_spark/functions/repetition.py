@@ -18,23 +18,27 @@ Gopher", Appendix A1.1, Table A1), per document:
 * ``repetition_pass`` — every signal under its threshold.
 
 Conventions (each documented because the published text under-specifies
-them; the widely used open reimplementation — HF datatrove's
-GopherRepetitionFilter — makes the same calls):
+them). They are inspired by HF datatrove's GopherRepetitionFilter but
+differ from it in four ways, noted on each bullet: singleton handling,
+the denominator, the tie-break and overlap accounting.
 
 * The corpus text carries no newlines, so a "line" is a non-overlapping
   ``LINE_WIDTH_WORDS``-word chunk (the ``line_dedup`` convention) and a
   "paragraph" is four lines' worth of words.
 * Character counts are word-granular (sum of word lengths, joining
-  spaces excluded) — the same base ``gopher_rules`` uses.
+  spaces excluded) — the same base ``gopher_rules`` uses. (datatrove
+  divides by ``len(text)``, spaces included.)
 * A duplicate line/paragraph/n-gram occurrence is any occurrence AFTER
   the first (by position) of a chunk/gram seen >= 2 times in the doc.
 * ``top{n}_char_frac`` counts the top gram's word chars times its full
-  occurrence count (0 when the top gram occurs once); ties resolve to
-  the lexicographically first gram so both engines agree.
+  occurrence count (0 when the top gram occurs once; datatrove charges
+  a singleton too); ties resolve to the lexicographically first gram so
+  both engines agree (datatrove takes the first by occurrence).
 * ``dup{n}_char_frac`` is overlap-aware: duplicate occurrences mark the
   word POSITIONS they cover, positions are unioned, and the fraction is
   the covered positions' chars over all word chars (so overlapping
-  duplicated grams never double-count — the datatrove semantics).
+  duplicated grams never double-count; datatrove instead scans
+  greedily, skipping ahead past each duplicate it counts).
 
 Because within-document repetition is rare in the synthetic corpus, the
 signals run over :func:`repetition_corpus` — documents plus two

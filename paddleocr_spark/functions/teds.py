@@ -26,10 +26,8 @@ parallel) and returns per-pair scores; average with a plain agg.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -254,17 +252,11 @@ TEDS_SCHEMA = "pair_id long, teds double"
 
 def teds(pairs: DataFrame) -> DataFrame:
     """(pair_id, pred_html, true_html) → (pair_id, teds) via Arrow batches."""
+    from ..operators.grouped import map_rows
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame({
-                "pair_id": pdf["pair_id"].astype("int64"),
-                "teds": [round(teds_score(p, t), 4) for p, t in
-                         zip(pdf["pred_html"], pdf["true_html"])],
-            })
-
-    return (pairs.select("pair_id", "pred_html", "true_html")
-            .mapInPandas(run, schema=TEDS_SCHEMA))
+    return map_rows(pairs.select("pair_id", "pred_html", "true_html"),
+                    lambda i, p, t: [(i, round(teds_score(p, t), 4))],
+                    TEDS_SCHEMA)
 
 
 def teds_batch_avg(pairs: DataFrame) -> DataFrame:

@@ -28,9 +28,9 @@ alone. The PNG encoder deliberately cycles the filter type per row
 (row % 5) so every decoder filter path is exercised by ordinary data.
 
 Scale note: decode is inherently per-blob CPU work; the Spark side calls
-these inside Arrow-batched ``mapInPandas`` over content-addressed
-DISTINCT refs (multimodal.media_features), so each blob decodes once
-regardless of how many documents reference it.
+these inside Arrow-batched per-row stages (``operators.grouped.map_rows``)
+over content-addressed DISTINCT refs (multimodal.media_features), so
+each blob decodes once regardless of how many documents reference it.
 """
 
 from __future__ import annotations

@@ -6,7 +6,8 @@ store and only flow through executors inside Arrow batches. This module
 implements the Spark-side plumbing — schema, partitioning, Arrow batch
 shape — for decode / feature-extract / resize / frame-sample stages:
 
-* :func:`decode_media` — ``mapInPandas`` over (media_ref, content) rows.
+* :func:`decode_media` — one per-row Arrow stage
+  (``operators.grouped.map_rows``) over (media_ref, content) rows.
   With ``fake=True`` (default, the blob-less synthetic corpus) metadata +
   features derive deterministically from the ref's md5; ``fake=False`` is
   the REAL path (round 4): it decodes the ``content`` bytes with the
@@ -24,12 +25,12 @@ shape — for decode / feature-extract / resize / frame-sample stages:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .operators.grouped import map_rows
 
 MEDIA_SCHEMA = ("media_ref string, width long, height long, n_frames long, "
                 "feature array<float>")
@@ -82,36 +83,22 @@ def decode_media(media: DataFrame, fake: bool = True) -> DataFrame:
     """
 
     if fake:
-        def decode_one(ref: str, _content=None):
-            return _fake_decode(ref)
-        cols = ["media_ref"]
-    else:
-        from .imagecodecs import decode_frames
+        return map_rows(media.select("media_ref"),
+                        lambda ref: [(ref, *_fake_decode(ref))],
+                        MEDIA_SCHEMA)
+    from .imagecodecs import decode_frames
 
-        def decode_one(ref: str, content: bytes):
-            frames = decode_frames(bytes(content))
-            arr = frames[0]  # stats on frame 0: check_and_read's GIF
-            s = pixel_stats(arr)  # branch feeds exactly this frame
-            feat = [s["mean_r"], s["mean_g"], s["mean_b"], s["mean_gray"],
-                    float(s["min_gray"]), float(s["max_gray"]),
-                    s["frac_bright"], float(arr.shape[2])]
-            return s["width"], s["height"], len(frames), feat
-        cols = ["media_ref", "content"]
+    def decode_one(ref: str, content: bytes):
+        frames = decode_frames(bytes(content))
+        arr = frames[0]  # stats on frame 0: check_and_read's GIF
+        s = pixel_stats(arr)  # branch feeds exactly this frame
+        feat = [s["mean_r"], s["mean_g"], s["mean_b"], s["mean_gray"],
+                float(s["min_gray"]), float(s["max_gray"]),
+                s["frac_bright"], float(arr.shape[2])]
+        return [(ref, s["width"], s["height"], len(frames), feat)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            args = (pdf["media_ref"], pdf["content"]) if len(cols) == 2 \
-                else (pdf["media_ref"], [None] * len(pdf))
-            decoded = [decode_one(r, c) for r, c in zip(*args)]
-            yield pd.DataFrame({
-                "media_ref": pdf["media_ref"],
-                "width": [d[0] for d in decoded],
-                "height": [d[1] for d in decoded],
-                "n_frames": [d[2] for d in decoded],
-                "feature": [d[3] for d in decoded],
-            })
-
-    return media.select(*cols).mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return map_rows(media.select("media_ref", "content"), decode_one,
+                    MEDIA_SCHEMA)
 
 
 def media_features(documents: DataFrame) -> DataFrame:

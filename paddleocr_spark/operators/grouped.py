@@ -1,26 +1,29 @@
-"""The one grouped Arrow driver: repartition + sortWithinPartitions +
-``mapInArrow`` with batch-boundary carry.
+"""The one Python-stage driver: every per-row and per-group Python kernel
+of the dataflow runs as ``mapInArrow`` through this module.
 
-``groupBy().applyInPandas`` pays a per-GROUP toll twice — the JVM slices one
-Arrow batch per group, and Python constructs one pandas DataFrame per group
-(~300-500 µs/group measured in PERF.md's flagship history). Fine at gate SF;
-ruinous when 10^12 docs mean millions of tiny (doc, class) groups. Every
-per-group operator (the flagship reading order, per-image NMS, Deteval
-matching, the *_gt target generators) therefore takes the same shape:
-hash-partition by the group key (explicit repartition — exempt from AQE
-byte-based coalescing), sort within partitions so groups arrive contiguous,
-then stream WHOLE Arrow batches into Python, carrying each batch's trailing
-group into the next (:func:`carry_groups`) — zero per-group Arrow
-round-trips, zero per-group pandas frames.
+Two entry points, one contract — the kernel returns (or yields) row
+tuples in the column order of the output DDL ``schema``, which is the
+only place the output columns are declared:
 
-Two entry points sit on that shape:
-
-* :func:`grouped_map_arrow` — ``emit(pa.Table) -> pa.RecordBatch`` over
-  complete groups, for kernels that return Arrow ``take`` results
-  (nms_per_class, east_nms_locality);
+* :func:`map_rows` — ``per_row(*values)`` on every input row (values in
+  the input's column order), in the input's own partitioning: no
+  exchange, so per-row kernels (decoders, detectors, scorers) fan out
+  with the scan;
 * :func:`grouped_map_rows` — ``per_group(g)`` over one group's numpy
-  slices, returning row tuples; the driver finds group boundaries and
-  builds each batch against the Arrow form of the output DDL.
+  slices. ``groupBy().applyInPandas`` pays a per-GROUP toll twice (the
+  JVM slices one Arrow batch per group, Python builds one pandas frame
+  per group), so groups instead take one shape: hash-partition by the
+  key (explicit repartition, exempt from AQE byte-based coalescing),
+  sort within partitions so groups arrive contiguous, then stream WHOLE
+  Arrow batches into Python, carrying each batch's trailing group into
+  the next (:func:`carry_groups`).
+
+Both read each input batch as numpy columns (:func:`_numpy_columns`) and
+build each output batch with :func:`_batch`, which casts every Python
+value into its column's Arrow type: ints into ``double`` and floats into
+``long`` columns (truncating) are cast, but a float NaN stays NaN (it is
+not NULL) and a Python ``bool`` is not an integer, so kernels emit
+``None`` and ``int`` for those.
 
 The flagship (pipeline.order_and_assemble) clusters with :func:`cluster`
 and runs its own ``mapInArrow`` body over :func:`carry_groups`.
@@ -111,36 +114,68 @@ def cluster(df: DataFrame, keys: list[str],
     return df.repartition(n, *keys).sortWithinPartitions(*keys, *sort_cols)
 
 
-def grouped_map_arrow(df: DataFrame, keys: list[str], sort_cols: list[str],
-                      emit: Callable, schema: str) -> DataFrame:
-    """Run ``emit(pa.Table) -> pa.RecordBatch`` over tables of complete
-    groups (:func:`cluster` + :func:`carry_groups`)."""
-    def run(it: Iterator) -> Iterator:
-        return carry_groups(it, keys, emit)
+def _numpy_columns(data) -> dict:
+    """``{column: numpy array}`` of an Arrow table or record batch
+    (strings, lists and binaries as object arrays, a nullable integer
+    column as float with NaN)."""
+    return {c: data.column(c).to_numpy(zero_copy_only=False)
+            for c in data.schema.names}
 
-    return cluster(df, keys, sort_cols).mapInArrow(run, schema=schema)
+
+def _batch(rows: list, schema):
+    """One record batch of ``rows`` (tuples in the column order of the
+    Arrow ``schema``), each value cast to its column's type; ``None``
+    for no rows."""
+    import pyarrow as pa
+
+    if not rows:
+        return None
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(zip(*rows), schema)],
+        schema=schema)
+
+
+def _arrow_schema(ddl: str):
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+    return to_arrow_schema(DataType.fromDDL(ddl))
+
+
+def _rows_mapper(per_row: Callable[..., Iterable], schema) -> Callable:
+    """The ``mapInArrow`` function of :func:`map_rows` for an Arrow
+    ``schema``: one output batch per input batch that yields rows."""
+    def run(batches: Iterator) -> Iterator:
+        for rb in batches:
+            out = _batch([row for values in zip(*_numpy_columns(rb).values())
+                          for row in per_row(*values)], schema)
+            if out is not None:
+                yield out
+    return run
+
+
+def map_rows(df: DataFrame, per_row: Callable[..., Iterable],
+             schema: str) -> DataFrame:
+    """Run ``per_row(*values)`` on every row of ``df`` (values in ``df``'s
+    column order) in one ``mapInArrow`` stage; ``per_row`` returns (or
+    yields) row tuples in the column order of the DDL ``schema``."""
+    return df.mapInArrow(_rows_mapper(per_row, _arrow_schema(schema)),
+                         schema=schema)
 
 
 def _rows_emitter(keys: list[str], per_group: Callable[[dict], Iterable],
                   schema) -> Callable:
     """The ``emit`` of :func:`grouped_map_rows` for an Arrow ``schema``:
     slices a table of complete groups into ``{column: numpy slice}``
-    dicts, calls ``per_group`` on each and builds one batch of the rows
-    (Python values cast to the schema's types); ``None`` when no group
-    returned a row."""
-    import pyarrow as pa
-
+    dicts and calls ``per_group`` on each; one batch of all their rows,
+    ``None`` when no group returned a row."""
     def emit(tbl):
-        cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names}
+        cols = _numpy_columns(tbl)
         starts = group_starts(*(string_codes(tbl.column(k)) for k in keys))
         ends = np.append(starts[1:], tbl.num_rows)
-        rows = [row for s, e in zip(starts, ends)
-                for row in per_group({c: a[s:e] for c, a in cols.items()})]
-        if not rows:
-            return None
-        return pa.RecordBatch.from_arrays(
-            [pa.array(col, type=f.type)
-             for col, f in zip(zip(*rows), schema)], schema=schema)
+        return _batch([row for s, e in zip(starts, ends)
+                       for row in per_group({c: a[s:e]
+                                             for c, a in cols.items()})],
+                      schema)
     return emit
 
 
@@ -151,14 +186,13 @@ def grouped_map_rows(df: DataFrame, keys: list[str], sort_cols: list[str],
 
     ``g`` maps each column to its numpy slice for one group (rows in
     ``sort_cols`` order); ``per_group`` returns (or yields) row tuples in
-    the column order of the DDL ``schema``, which is the only place the
-    output columns are declared."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
+    the column order of the DDL ``schema``."""
+    emit = _rows_emitter(keys, per_group, _arrow_schema(schema))
 
-    emit = _rows_emitter(keys, per_group,
-                         to_arrow_schema(DataType.fromDDL(schema)))
-    return grouped_map_arrow(df, keys, sort_cols, emit, schema)
+    def run(batches: Iterator) -> Iterator:
+        return carry_groups(batches, keys, emit)
+
+    return cluster(df, keys, sort_cols).mapInArrow(run, schema=schema)
 
 
 def string_codes(col) -> np.ndarray:

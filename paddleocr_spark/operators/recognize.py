@@ -15,9 +15,10 @@ Spark restatement:
 * ``sortWithinPartitions(aspect)`` is the sort-to-batch trick — NO shuffle,
   it only reorders rows inside each partition so Arrow batches handed to the
   Python worker have uniform width (padding-minimization at scale);
-* ``mapInPandas`` decodes whole Arrow batches through the shared
-  :func:`paddleocr_spark.kernels.ctc_decode` kernel (vectorized; never
-  per-row Python UDFs);
+* one per-row Arrow stage (``operators.grouped.map_rows``) decodes
+  whole Arrow batches through the shared
+  :func:`paddleocr_spark.kernels.ctc_decode` kernel (never per-row
+  Python UDFs);
 * results carry their ``(doc_id, span_idx)`` keys — order is restored by
   key, never by row position (SURVEY.md J3: we do not rely on zip order).
 
@@ -28,13 +29,11 @@ the stage oracle-checkable end to end.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import ctc_decode
+from .grouped import map_rows
 
 #: Recognition charset (id 0 is the CTC blank; charset[i] maps id i+1 —
 #: ppocr/postprocess/rec_postprocess.py:42-62 plus use_space_char ' ').
@@ -63,20 +62,8 @@ def ctc_encode_expr(text_col: str = "text"):
         f"c -> array(instr('{cs}', c), instr('{cs}', c), 0)))")
 
 
-def _decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    charset = list(CHARSET)
-    for pdf in it:
-        texts, scores = [], []
-        for ids in pdf["ids"]:
-            t, s = ctc_decode(ids, None, charset)
-            texts.append(t)
-            scores.append(s)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "span_idx": pdf["span_idx"].astype("int64"),
-            "rec_text": texts,
-            "rec_score": scores,
-        })
+def _decode_row(doc_id, span_idx, ids, _aspect) -> list:
+    return [(doc_id, span_idx, *ctc_decode(ids, None, list(CHARSET)))]
 
 
 def recognize(spans: DataFrame) -> DataFrame:
@@ -90,8 +77,8 @@ def recognize(spans: DataFrame) -> DataFrame:
         ctc_encode_expr("text").alias("ids"),
         ((F.col("x2") - F.col("x1"))
          / F.greatest(F.col("y2") - F.col("y1"), F.lit(1))).alias("aspect"))
-    batched = enc.sortWithinPartitions("aspect")
-    return batched.mapInPandas(_decode_batches, schema=REC_SCHEMA)
+    return map_rows(enc.sortWithinPartitions("aspect"), _decode_row,
+                    REC_SCHEMA)
 
 
 def classify_rotate(rec: DataFrame, cls_thresh: float = 0.9) -> DataFrame:

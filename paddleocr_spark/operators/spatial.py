@@ -1,27 +1,35 @@
-"""Spatial grouped operators: per-class NMS (D5) and skew-defusing salting.
+"""Spatial operators: per-class NMS (D5), EAST locality NMS, the per-doc
+text detectors (D1-D3) and skew-defusing salting.
 
 ``hard_nms`` (kernels.py) is greedy and order-dependent — inherently
 iterative, so it runs as a grouped Arrow kernel per (doc, class), exactly
 the reference's per-image-per-class loop
 (ppocr/postprocess/picodet_postprocess.py:161-190) made distributed. The
 pre-NMS top-k cap (nms_top_k) is a JVM window rank so the expensive Python
-kernel only ever sees bounded groups.
+kernel only ever sees bounded groups. The detectors are per-row kernels
+(operators.grouped.map_rows): each document is independent.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..kernels import hard_nms
+from .grouped import grouped_map_rows, map_rows
 
 NMS_SCHEMA = ("doc_id string, label string, box_id long, "
               "x1 double, y1 double, x2 double, y2 double, "
               "score double, keep_order long")
+_NMS_IN = ("doc_id", "label", "box_id", "x1", "y1", "x2", "y2", "score")
+
+
+def _corners(g) -> np.ndarray:
+    """A group's (n, 4) float (x1, y1, x2, y2) box array."""
+    return np.stack([g[c] for c in ("x1", "y1", "x2", "y2")],
+                    axis=1).astype(float)
 
 
 def nms_per_class(boxes: DataFrame, iou_threshold: float = 0.5,
@@ -41,38 +49,15 @@ def nms_per_class(boxes: DataFrame, iou_threshold: float = 0.5,
     capped = (boxes.withColumn("rk", F.row_number().over(w))
               .filter(F.col("rk") <= nms_top_k).drop("rk"))
 
-    def emit(tbl):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from .grouped import group_starts, string_codes
-        doc_codes = string_codes(tbl.column("doc_id"))
-        lab_codes = string_codes(tbl.column("label"))
-        pts = np.stack([tbl.column(c).to_numpy() for c in
-                        ("x1", "y1", "x2", "y2")], axis=1).astype(float)
-        scores = tbl.column("score").to_numpy().astype(float)
-        starts = group_starts(doc_codes, lab_codes)
-        ends = np.append(starts[1:], len(doc_codes))
-        take: list[int] = []
-        keep: list[int] = []
-        for s, e in zip(starts, ends):
-            picked = hard_nms(pts[s:e], scores[s:e],
-                              iou_threshold=iou_threshold, top_k=keep_top_k,
-                              candidate_size=candidate_size)
-            take.extend(int(s) + int(p) for p in picked)
-            keep.extend(range(len(picked)))
-        idx = pa.array(np.asarray(take, dtype=np.int64))
-        cols = [pc.take(tbl.column(c).combine_chunks(), idx)
-                for c in ("doc_id", "label", "box_id",
-                          "x1", "y1", "x2", "y2", "score")]
-        cols.append(pa.array(np.asarray(keep, dtype=np.int64)))
-        return pa.RecordBatch.from_arrays(cols, names=[
-            "doc_id", "label", "box_id", "x1", "y1", "x2", "y2",
-            "score", "keep_order"])
+    def per_group(g):
+        picked = hard_nms(_corners(g), g["score"].astype(float),
+                          iou_threshold=iou_threshold, top_k=keep_top_k,
+                          candidate_size=candidate_size)
+        return [tuple(g[c][p] for c in _NMS_IN) + (k,)
+                for k, p in enumerate(picked)]
 
-    from .grouped import grouped_map_arrow
-    return grouped_map_arrow(capped, ["doc_id", "label"], ["box_id"],
-                             emit, NMS_SCHEMA)
+    return grouped_map_rows(capped, ["doc_id", "label"], ["box_id"],
+                            per_group, NMS_SCHEMA)
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, key: str,
@@ -107,41 +92,15 @@ def east_nms_locality(boxes: DataFrame, thres: float = 0.3) -> DataFrame:
     """
     from ..kernels import nms_locality
 
-    def emit(tbl):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from .grouped import group_starts, string_codes
-        doc_codes = string_codes(tbl.column("doc_id"))
-        pts = np.stack([tbl.column(c).to_numpy() for c in
-                        ("x1", "y1", "x2", "y2")], axis=1).astype(float)
-        scores = tbl.column("score").to_numpy().astype(float)
-        starts = group_starts(doc_codes)
-        ends = np.append(starts[1:], len(doc_codes))
-        doc_at: list[int] = []
-        keep: list[int] = []
-        kept_blocks = []
-        score_out: list[float] = []
-        for s, e in zip(starts, ends):
-            kept, ksc = nms_locality(pts[s:e], scores[s:e], thres=thres)
-            doc_at.extend([int(s)] * len(ksc))
-            keep.extend(range(len(ksc)))
-            kept_blocks.append(np.asarray(kept, dtype=float).reshape(-1, 4))
-            score_out.extend(float(v) for v in ksc)
-        geo = (np.concatenate(kept_blocks, axis=0) if kept_blocks
-               else np.zeros((0, 4)))
-        doc_ids = pc.take(tbl.column("doc_id").combine_chunks(),
-                          pa.array(np.asarray(doc_at, dtype=np.int64)))
-        return pa.RecordBatch.from_arrays(
-            [doc_ids, pa.array(np.asarray(keep, dtype=np.int64)),
-             pa.array(geo[:, 0]), pa.array(geo[:, 1]),
-             pa.array(geo[:, 2]), pa.array(geo[:, 3]),
-             pa.array(np.asarray(score_out, dtype=float))],
-            names=["doc_id", "keep_order", "x1", "y1", "x2", "y2", "score"])
+    def per_doc(g):
+        kept, scores = nms_locality(_corners(g), g["score"].astype(float),
+                                    thres=thres)
+        geo = np.asarray(kept, dtype=float).reshape(-1, 4)
+        return [(g["doc_id"][0], k, *box, float(sc))
+                for k, (box, sc) in enumerate(zip(geo, scores))]
 
-    from .grouped import grouped_map_arrow
-    return grouped_map_arrow(boxes, ["doc_id"], ["box_id"],
-                             emit, EAST_NMS_SCHEMA)
+    return grouped_map_rows(boxes, ["doc_id"], ["box_id"], per_doc,
+                            EAST_NMS_SCHEMA)
 
 
 #: PSE demo geometry: K shrinking kernel maps on a GRID² map scaled back
@@ -177,33 +136,46 @@ def pse_doc_maps(d: int):
     return score, kernels
 
 
-PSE_SCHEMA = ("doc_id long, box_idx long, x1 long, y1 long, "
+#: The box detectors' output (pse, db, ct, east): one row per kept box.
+BOX_SCHEMA = ("doc_id long, box_idx long, x1 long, y1 long, "
               "x2 long, y2 long, score double")
+
+
+def _detect(docs: DataFrame, boxes_for) -> DataFrame:
+    """Per-doc box detector over ``docs.doc_id``: each document is
+    independent, so the kernel fans out with the scan (no exchange);
+    ``boxes_for(d)`` lists doc ``d``'s kept (x1, y1, x2, y2, score)
+    boxes, emitted in that order."""
+    def per_doc(d):
+        d = int(d)
+        return [(d, i, *box) for i, box in enumerate(boxes_for(d))]
+    return map_rows(docs.select("doc_id"), per_doc, BOX_SCHEMA)
+
+
+def _detect_polys(docs: DataFrame, polys_for, schema: str) -> DataFrame:
+    """Per-doc polygon detector, as :func:`_detect`: ``polys_for(d)``
+    lists ``(points, *extra)`` per polygon, emitted as one
+    ``(d, poly_idx, pt_idx, x, y, *extra)`` row per point."""
+    def per_doc(d):
+        d = int(d)
+        return [(d, pi, qi, float(x), float(y), *extra)
+                for pi, (pts, *extra) in enumerate(polys_for(d))
+                for qi, (x, y) in enumerate(pts)]
+    return map_rows(docs.select("doc_id"), per_doc, schema)
 
 
 def pse_detect(docs: DataFrame) -> DataFrame:
     """D3 PSE detector distributed: per-doc map synthesis + progressive
     scale expansion (kernels.pse_expand / pse_boxes) in Arrow batches.
 
-    Each document is independent (no grouping needed): ``mapInPandas``
-    loops the batch, the iterative BFS runs per doc, boxes emit in label
-    order. Input (doc_id bigint); output one row per kept box.
+    Each document is independent (:func:`_detect`); the iterative BFS
+    runs per doc, boxes emit in label order. Input (doc_id bigint);
+    output one row per kept box.
     """
     from ..kernels import pse_boxes
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                score, kernels = pse_doc_maps(int(d))
-                boxes = pse_boxes(score, kernels,
-                                  (PSE_SRC, PSE_SRC, PSE_RATIO, PSE_RATIO))
-                for bi, (x1, y1, x2, y2, s) in enumerate(boxes):
-                    rows.append((int(d), bi, x1, y1, x2, y2, s))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "box_idx", "x1", "y1", "x2", "y2", "score"])
-
-    return docs.select("doc_id").mapInPandas(run, schema=PSE_SCHEMA)
+    return _detect(docs, lambda d: pse_boxes(
+        *pse_doc_maps(d), (PSE_SRC, PSE_SRC, PSE_RATIO, PSE_RATIO)))
 
 
 #: DB demo geometry: a GRID² probability map scaled back to SRC² source
@@ -242,34 +214,19 @@ def db_doc_maps(d: int):
     return pred
 
 
-DB_SCHEMA = ("doc_id long, box_idx long, x1 long, y1 long, "
-             "x2 long, y2 long, score double")
-
-
 def db_detect(docs: DataFrame) -> DataFrame:
     """D1 DBPostProcess detector distributed: per-doc prob-map synthesis +
     the full boxes_from_bitmap pipeline (kernels.db_boxes) in Arrow
     batches.
 
-    Like pse_detect, each document is independent — ``mapInPandas`` loops
-    the batch and the CC+score+unclip kernel runs per doc; boxes emit in
-    candidate (discovery) order. Input (doc_id bigint); output one row
-    per kept box.
+    Like pse_detect, each document is independent; the CC+score+unclip
+    kernel runs per doc, boxes emit in candidate (discovery) order.
+    Input (doc_id bigint); output one row per kept box.
     """
     from ..kernels import db_boxes
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                pred = db_doc_maps(int(d))
-                boxes = db_boxes(pred, (DB_SRC, DB_SRC, DB_RATIO, DB_RATIO))
-                for bi, (x1, y1, x2, y2, s) in enumerate(boxes):
-                    rows.append((int(d), bi, x1, y1, x2, y2, s))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "box_idx", "x1", "y1", "x2", "y2", "score"])
-
-    return docs.select("doc_id").mapInPandas(run, schema=DB_SCHEMA)
+    return _detect(docs, lambda d: db_boxes(
+        db_doc_maps(d), (DB_SRC, DB_SRC, DB_RATIO, DB_RATIO)))
 
 
 #: CT demo geometry: GRID² maps scaled up to ORG² source pixels
@@ -334,18 +291,8 @@ def ct_detect(docs: DataFrame) -> DataFrame:
     """
     from ..kernels import ct_boxes
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                out, score = ct_doc_maps(int(d))
-                boxes = ct_boxes(out, score, (CT_ORG, CT_ORG))
-                for bi, (x1, y1, x2, y2, s) in enumerate(boxes):
-                    rows.append((int(d), bi, x1, y1, x2, y2, s))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "box_idx", "x1", "y1", "x2", "y2", "score"])
-
-    return docs.select("doc_id").mapInPandas(run, schema=PSE_SCHEMA)
+    return _detect(docs, lambda d: ct_boxes(*ct_doc_maps(d),
+                                            (CT_ORG, CT_ORG)))
 
 
 #: DRRG demo geometry: the GCN head's (edges, scores, text_comps)
@@ -415,21 +362,11 @@ def drrg_detect(docs: DataFrame) -> DataFrame:
     """
     from ..kernels import drrg_boundaries
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                edges, scores, comps = drrg_doc_graph(int(d))
-                boxes, bscores = drrg_boundaries(edges, scores, comps,
-                                                 DRRG_RATIO)
-                for pi, (poly, s) in enumerate(zip(boxes, bscores)):
-                    for qi, (x, y) in enumerate(poly):
-                        rows.append((int(d), pi, qi, float(x), float(y),
-                                     float(s)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "boundary_idx", "pt_idx", "x", "y", "score"])
+    def polys_for(d):
+        boxes, scores = drrg_boundaries(*drrg_doc_graph(d), DRRG_RATIO)
+        return [(poly, float(s)) for poly, s in zip(boxes, scores)]
 
-    return docs.select("doc_id").mapInPandas(run, schema=DRRG_SCHEMA)
+    return _detect_polys(docs, polys_for, DRRG_SCHEMA)
 
 
 #: FCE demo geometry: GRID² cls/reg maps at downsample scale 4
@@ -498,20 +435,11 @@ def fce_detect(docs: DataFrame) -> DataFrame:
     """
     from ..kernels import fce_boundaries
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                cls, reg = fce_doc_maps(int(d))
-                boxes, scores = fce_boundaries(cls, reg, FCE_RATIO)
-                for pi, (poly, s) in enumerate(zip(boxes, scores)):
-                    for qi, (x, y) in enumerate(poly):
-                        rows.append((int(d), pi, qi, float(x), float(y),
-                                     float(s)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "poly_idx", "pt_idx", "x", "y", "score"])
+    def polys_for(d):
+        boxes, scores = fce_boundaries(*fce_doc_maps(d), FCE_RATIO)
+        return [(poly, float(s)) for poly, s in zip(boxes, scores)]
 
-    return docs.select("doc_id").mapInPandas(run, schema=FCE_SCHEMA)
+    return _detect_polys(docs, polys_for, FCE_SCHEMA)
 
 
 #: SAST demo geometry: GRID² TCL/TVO/TBO/TCO maps at the reference's 4×
@@ -585,22 +513,9 @@ def sast_detect(docs: DataFrame) -> DataFrame:
     """
     from ..kernels import sast_polys
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                tcl, tvo, tbo, tco = sast_doc_maps(int(d))
-                polys = sast_polys(tcl, tvo, tbo, tco,
-                                   SAST_RATIO, SAST_RATIO,
-                                   SAST_SRC, SAST_SRC)
-                for pi, poly in enumerate(polys):
-                    for qi, (x, y) in enumerate(poly):
-                        rows.append((int(d), pi, qi,
-                                     float(x), float(y)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "poly_idx", "pt_idx", "x", "y"])
-
-    return docs.select("doc_id").mapInPandas(run, schema=SAST_SCHEMA)
+    return _detect_polys(docs, lambda d: [(poly,) for poly in sast_polys(
+        *sast_doc_maps(d), SAST_RATIO, SAST_RATIO, SAST_SRC, SAST_SRC)],
+        SAST_SCHEMA)
 
 
 #: EAST demo geometry: GRID² score/geo maps at the reference's 4× pixel
@@ -651,27 +566,12 @@ def east_doc_maps(d: int):
     return score, geo
 
 
-EAST_DETECT_SCHEMA = ("doc_id long, box_idx long, x1 long, y1 long, "
-                      "x2 long, y2 long, score double")
-
-
 def east_detect(docs: DataFrame) -> DataFrame:
     """D2 full EAST path distributed: per-doc score/geo synthesis + quad
     restore + locality-aware NMS + cover re-score
-    (kernels.east_detect_boxes) in Arrow batches — same per-doc
-    mapInPandas shape as db_detect/pse_detect."""
+    (kernels.east_detect_boxes) — the same per-doc shape as
+    db_detect/pse_detect."""
     from ..kernels import east_detect_boxes
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                score, geo = east_doc_maps(int(d))
-                boxes = east_detect_boxes(
-                    score, geo, (EAST_SRC, EAST_SRC, EAST_RATIO, EAST_RATIO))
-                for bi, (x1, y1, x2, y2, s) in enumerate(boxes):
-                    rows.append((int(d), bi, x1, y1, x2, y2, s))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "box_idx", "x1", "y1", "x2", "y2", "score"])
-
-    return docs.select("doc_id").mapInPandas(run, schema=EAST_DETECT_SCHEMA)
+    return _detect(docs, lambda d: east_detect_boxes(
+        *east_doc_maps(d), (EAST_SRC, EAST_SRC, EAST_RATIO, EAST_RATIO)))

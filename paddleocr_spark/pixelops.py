@@ -3,8 +3,9 @@
 Rounds 1–3 scoped these enumerate-only ("no pixel buffers in the span
 model"); round 4's pure-numpy codecs (:mod:`paddleocr_spark.imagecodecs`)
 provide real (H, W, C) uint8 arrays, so the reference's tensor-side
-preprocessing becomes implementable as batch kernels under
-``mapInPandas``. Transcribed semantics, with cited sources:
+preprocessing becomes implementable as per-blob kernels under
+``operators.grouped.map_rows``. Transcribed semantics, with cited
+sources:
 
 * P1 ``DecodeImage`` — ppocr/data/imaug/operators.py:30-74: cv2.imdecode
   IMREAD_COLOR (3-ch BGR; gray replicated, alpha dropped), 'RGB' mode
@@ -53,17 +54,22 @@ IMAGENET_STD = (0.229, 0.224, 0.225)
 #: tasks, so a module-level cache is race-free; reusing the two ~12 MB
 #: float64 matmul outputs avoids a fresh mmap + kernel zero-fill per
 #: image — measured to matter at 32 concurrent workers, where the
-#: big-upscale path is DRAM-bandwidth-bound.
+#: big-upscale path is DRAM-bandwidth-bound. The cache is bounded in
+#: bytes as well as in shapes: a shape-varying upscale (DetResizeForTest
+#: ``limit_type: min`` over 8-16 px blobs, one output width per blob)
+#: kept up to 64 pairs of buffers of up to 26 MB, over 1 GB per worker.
 _SCRATCH: dict[tuple, np.ndarray] = {}
+_SCRATCH_BYTES = 64 << 20
 
 
 def _scratch(tag: str, shape: tuple, dtype=np.float64) -> np.ndarray:
     key = (tag, shape, np.dtype(dtype).str)
     buf = _SCRATCH.get(key)
     if buf is None:
-        if len(_SCRATCH) > 64:     # distinct-shape churn guard
-            _SCRATCH.clear()
         buf = np.empty(shape, dtype)
+        if (len(_SCRATCH) > 64 or buf.nbytes + sum(
+                b.nbytes for b in _SCRATCH.values()) > _SCRATCH_BYTES):
+            _SCRATCH.clear()       # distinct-shape churn guard
         _SCRATCH[key] = buf
     return buf
 

@@ -16,10 +16,11 @@ that sink without openpyxl/lxml (absent here by design):
   one inline-string worksheet + mergeCells), ZIP_STORED with a fixed
   timestamp so the bytes are DETERMINISTIC — byte-stable output is what
   lets the correctness gate hash the sink.
-* :func:`xlsx_tables` — the Spark operator: Arrow-batched mapInPandas
-  over (id, html) rows emitting grid stats + the xlsx blob as a binary
-  column; callers persist blobs wherever blobs live (at 10^12 scale an
-  object store keyed by content hash, exactly like media_ref blobs).
+* :func:`xlsx_tables` — the Spark operator: one per-row Arrow stage
+  (``operators.grouped.map_rows``) over (id, html) rows emitting grid
+  stats + the xlsx blob as a binary column; callers persist blobs
+  wherever blobs live (at 10^12 scale an object store keyed by content
+  hash, exactly like media_ref blobs).
 * :func:`write_xlsx_files` — the small-scale file sink: one .xlsx per
   table written executor-side (foreachPartition; no driver collect).
 """
@@ -175,18 +176,10 @@ def xlsx_rows_for(t_id: int, html: str) -> tuple:
 def xlsx_tables(tables: DataFrame, id_col: str = "t_id",
                 html_col: str = "html") -> DataFrame:
     """Arrow-batched sink transform: (id, html) → grid stats + blob."""
-    import pandas as pd
+    from .operators.grouped import map_rows
 
-    def go(it):
-        for pdf in it:
-            rows = [xlsx_rows_for(i, h)
-                    for i, h in zip(pdf[id_col], pdf[html_col])]
-            yield pd.DataFrame(rows, columns=[
-                "t_id", "n_rows", "n_cols", "n_merges", "xlsx_size",
-                "xlsx_md5", "xlsx"])
-
-    return tables.select(id_col, html_col).mapInPandas(
-        go, schema=XLSX_SCHEMA)
+    return map_rows(tables.select(id_col, html_col),
+                    lambda i, h: [xlsx_rows_for(i, h)], XLSX_SCHEMA)
 
 
 def write_xlsx_files(tables: DataFrame, out_dir: str,

@@ -106,7 +106,7 @@ def test_sar_config_roster_entry():
 
 
 def test_spark_transform_runs_distributed(spark):
-    """The compiled chain over the media-refs table: one mapInPandas,
+    """The compiled chain over the media-refs table: one per-row stage,
     atomic stat rows, deterministic across runs."""
     from paddleocr_spark.config import spark_transform
     from paddleocr_spark.entry_queries import _media_refs

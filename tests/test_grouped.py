@@ -1,7 +1,8 @@
 """The shared batch-boundary carry (operators.grouped.carry_groups, which
-pipeline._assemble_arrow runs the flagship kernel through) and the row
-driver's batch building, checked without a Spark session: hand-built
-Arrow batches stand in for one sorted hash partition."""
+pipeline._assemble_arrow runs the flagship kernel through) and the batch
+building of both row drivers (grouped_map_rows and map_rows), checked
+without a Spark session: hand-built Arrow batches stand in for one
+sorted hash partition."""
 
 from __future__ import annotations
 
@@ -13,7 +14,8 @@ from hypothesis import strategies as st
 
 from paddleocr_spark import geometry as G
 from paddleocr_spark import pipeline
-from paddleocr_spark.operators.grouped import _rows_emitter, carry_groups
+from paddleocr_spark.operators.grouped import (_rows_emitter, _rows_mapper,
+                                               carry_groups)
 
 KINDS = ["text", "title", "table", "media"]
 
@@ -110,3 +112,66 @@ def test_row_driver_casts_to_schema_and_skips_empty_groups():
     only_b = tbl.slice(2, 1).to_batches()
     assert emit(pa.Table.from_batches(only_b)) is None
     assert list(carry_groups(iter(only_b), ["doc_id"], emit)) == []
+
+
+def _mapped(per_row, schema, batches) -> list:
+    return list(_rows_mapper(per_row, schema)(iter(batches)))
+
+
+def test_map_rows_empty_batch_and_no_rows_emit_nothing():
+    schema = pa.schema([("ref", pa.string()), ("n", pa.int64())])
+    tbl = pa.table({"ref": ["a", "b"]})
+    empty = pa.RecordBatch.from_pylist([], schema=tbl.schema)
+    assert _mapped(lambda ref: [(ref, 1)], schema, [empty]) == []
+    assert _mapped(lambda ref: [], schema, tbl.to_batches()) == []
+    # a batch whose rows yield nothing is dropped, the next one is kept
+    out = _mapped(lambda ref: [(ref, 1)] if ref == "b" else [], schema,
+                  [tbl.slice(0, 1).to_batches()[0],
+                   tbl.slice(1, 1).to_batches()[0]])
+    assert [b.to_pylist() for b in out] == [[{"ref": "b", "n": 1}]]
+
+
+def test_map_rows_fans_out_and_passes_row_values_in_column_order():
+    schema = pa.schema([("doc_id", pa.int64()), ("k", pa.int64()),
+                        ("tag", pa.string())])
+    tbl = pa.table({"doc_id": [7, 8], "tag": ["x", "y"]})
+
+    def per_row(doc_id, tag):
+        for k in range(doc_id - 5):
+            yield (doc_id, k, tag)
+
+    (out,) = _mapped(per_row, schema, tbl.to_batches())
+    assert out.schema.equals(schema)
+    assert out.to_pylist() == [
+        {"doc_id": 7, "k": 0, "tag": "x"}, {"doc_id": 7, "k": 1, "tag": "x"},
+        {"doc_id": 8, "k": 0, "tag": "y"}, {"doc_id": 8, "k": 1, "tag": "y"},
+        {"doc_id": 8, "k": 2, "tag": "y"}]
+
+
+def test_map_rows_casts_python_values_to_the_schema():
+    schema = pa.schema([("total", pa.float64()), ("n", pa.int64()),
+                        ("blob", pa.binary()), ("ps", pa.list_(pa.float64()))])
+    tbl = pa.table({"v": [3]})
+    (out,) = _mapped(
+        lambda v: [(v, 2.9, bytearray(b"PK\x03"), [1, 0.25])], schema,
+        tbl.to_batches())
+    assert out.schema.equals(schema)
+    # int -> double; float -> long truncates (Spark's unsafe Arrow cast)
+    assert out.to_pylist() == [{"total": 3.0, "n": 2, "blob": b"PK\x03",
+                                "ps": [1.0, 0.25]}]
+
+
+def test_map_rows_keeps_nan_apart_from_null_and_rejects_bool():
+    """The builder is plain ``pa.array(values, type=)``: a float NaN stays
+    NaN and only ``None`` is NULL, and a Python ``bool`` is not an integer
+    — kernels that mean NULL or 0/1 emit ``None`` or ``int`` themselves."""
+    schema = pa.schema([("x", pa.float64()), ("n", pa.int64())])
+    tbl = pa.table({"v": [0, 1]})
+    (out,) = _mapped(lambda v: [(float("nan") if v else None, None)],
+                     schema, tbl.to_batches())
+    x = out.column(0)
+    assert x.null_count == 1 and x.is_null().to_pylist() == [True, False]
+    assert np.isnan(x.to_pylist()[1])
+    assert out.column(1).null_count == 2
+    with pytest.raises(pa.ArrowTypeError):
+        _mapped(lambda v: [(0.0, bool(v))], schema, tbl.to_batches())

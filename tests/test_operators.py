@@ -444,7 +444,7 @@ def test_sar_decode_distributed_matches_kernel(spark):
 
 
 def test_grouped_arrow_output_partition_invariant(spark):
-    """grouped_map_arrow results must not depend on partition count or
+    """grouped_map_rows results must not depend on partition count or
     input row order (the carry + within-partition sort contract)."""
     import pyspark.sql.functions as F
     from paddleocr_spark.operators.spatial import east_nms_locality

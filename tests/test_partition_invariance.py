@@ -25,7 +25,7 @@ REPRESENTATIVE = [
     "neardup_components",      # iterative large/small-star CC
     "neardup_survivors",       # broadcast label anti-join form
     "dedup_minhash_pairs",     # persisted band self-join
-    "lmdb_scan",               # mapInPandas per-env fan-out
+    "lmdb_scan",               # per-env fan-out + per-row decode
     "shrink_map",              # grouped raster kernel
     "rec_ensemble",            # window + struct max aggregation
     "pack_shards",             # running-sum window shard cut
@@ -48,9 +48,9 @@ REPRESENTATIVE = [
     "ct_metric",               # Deteval matching walk per doc
     "e2e_deteval",             # same walk + string hits
     "det_fce_metric",          # pseudo-doc threshold sweep + AP window
-    "can_metric",              # applyInPandas batch scorer (sorted)
+    "can_metric",              # grouped-Arrow batch scorer (sorted)
     "rec_metric_grapheme",     # stack + per-channel agg
-    "config_transforms",       # compiled-chain mapInPandas
+    "config_transforms",       # compiled-chain per-row Arrow stage
     # round-5 continuation: the shapes where layout could leak —
     # register folds, top-k windows, running sums, iterative tree builds
     "readability_extract",     # widening repartition + per-block scores

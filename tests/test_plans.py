@@ -26,7 +26,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_per_doc_detectors_have_no_shuffle_and_pushed_filter(spark):
-    """db/east/pse detect: Scan → Filter → MapInPandas, pushdown reaches
+    """db/east/pse detect: Scan → Filter → MapInArrow, pushdown reaches
     the scan, zero exchanges — the per-doc kernels fan out with the
     scan."""
     import paddleocr_spark.entry_queries as EQ
@@ -36,7 +36,7 @@ def test_per_doc_detectors_have_no_shuffle_and_pushed_filter(spark):
         assert "Exchange" not in plan, name
         assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,200)]" \
             in plan, name
-        assert "MapInPandas" in plan, name
+        assert "MapInArrow" in plan, name
 
 
 def test_sar_decode_is_pure_projection(spark):
@@ -44,7 +44,8 @@ def test_sar_decode_is_pure_projection(spark):
     import paddleocr_spark.entry_queries as EQ
     plan = _formatted(EQ.queries()["sar_decode"](spark, SF))
     assert "Exchange" not in plan
-    for py_node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+    for py_node in ("MapInPandas", "MapInArrow", "ArrowEvalPython",
+                    "BatchEvalPython"):
         assert py_node not in plan
     # (the HOF lambdas keep the projection outside WholeStageCodegen but
     # still JVM-side — Scan → Project only)
@@ -59,7 +60,7 @@ def test_flagship_has_exactly_one_payload_shuffle(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     corpus = synth_spans(docs)
     # materialize the synth to parquet so the plan under test is the
-    # extraction side only (as in bench.py)
+    # extraction side only
     import tempfile
     path = tempfile.mkdtemp() + "/c"
     corpus.write.mode("overwrite").parquet(path)
@@ -71,7 +72,7 @@ def test_flagship_has_exactly_one_payload_shuffle(spark):
 
 
 def test_grouped_arrow_family_has_single_hash_exchange(spark):
-    """grouped_map_arrow operators: one hash exchange on the group key
+    """grouped_map_rows operators: one hash exchange on the group key
     feeding sort + mapInArrow (no groupBy aggregate machinery)."""
     import paddleocr_spark.entry_queries as EQ
     df = EQ.queries()["east_nms"](spark, SF)
@@ -135,7 +136,7 @@ def test_round5_continuation_operator_plan_shapes(spark):
     for fn in (readability_extract, boilerpipe_extract,
                interleaved_pack, kn_lm_score):
         plan = _formatted(fn(spark, SF))
-        for py_node in ("MapInPandas", "ArrowEvalPython",
+        for py_node in ("MapInPandas", "MapInArrow", "ArrowEvalPython",
                         "BatchEvalPython", "FlatMapGroupsInPandas"):
             assert py_node not in plan, fn.__name__
 
@@ -159,7 +160,7 @@ def test_sketch_family_plan_shapes(spark):
                                                     qdigest_quantiles)
     for fn in (hll_cardinality, cms_heavy_hitters, qdigest_quantiles):
         plan = _formatted(fn(spark, SF))
-        for py_node in ("MapInPandas", "ArrowEvalPython",
+        for py_node in ("MapInPandas", "MapInArrow", "ArrowEvalPython",
                         "BatchEvalPython", "FlatMapGroupsInPandas"):
             assert py_node not in plan, fn.__name__
     # partial aggregation marker: Spark prints partial_max/partial_count

@@ -1,13 +1,16 @@
 """Gate registry contract, checked without a Spark session.
 
 ``queries()`` holds the operators themselves (no recording or forwarding
-layer), every entry has a DuckDB twin, and ``bench_queries()`` keeps the
-names and order that bench.py and perfbench time.
+layer), every entry has a DuckDB twin, ``bench_queries()`` keeps the
+names and order that perfbench times, and every Python stage of the
+package runs through the one driver in ``operators/grouped.py``.
 """
 
 from __future__ import annotations
 
+import ast
 import hashlib
+from pathlib import Path
 
 import __spark_entry__ as entry
 from paddleocr_spark.functions import bench_queries, sketches
@@ -35,3 +38,25 @@ def test_bench_names_and_order_are_pinned():
 
 def test_bench_times_the_registry_operator():
     assert bench_queries()["qdigest_quantiles"] is sketches.qdigest_quantiles
+
+
+def test_python_stages_run_through_the_grouped_driver():
+    """``.mapInPandas(``/``.applyInPandas(`` appear only in
+    ``read_lmdb_dataset``'s fetch, which keeps its environments open
+    across batches and closes them in ``finally``
+    (``applyInPandasWithState`` is a different call)."""
+    pkg = Path(__file__).resolve().parent.parent / "paddleocr_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in ("mapInPandas",
+                                               "applyInPandas")):
+                    found.append((path.relative_to(pkg).as_posix(),
+                                  getattr(top, "name", None),
+                                  node.func.attr))
+    assert found == [("sources/lmdbfile.py", "read_lmdb_dataset",
+                      "mapInPandas")]

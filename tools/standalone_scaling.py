@@ -1,9 +1,9 @@
 """Standalone-cluster scaling probe — REAL multi-executor evidence.
 
-The north rule's scaling criterion is N vs 4N EXECUTORS. bench.py's
-recorded pair uses local[N] (threads inside one JVM) because that is
-what the sandbox can sustain quietly; this script runs the identical
-flagship measurement against a Spark STANDALONE master
+The north rule's scaling criterion is N vs 4N EXECUTORS. The recorded
+local pairs (BENCH_local.json) use local[N] (threads inside one JVM)
+because that is what a single host can sustain quietly; this script runs
+the identical flagship measurement against a Spark STANDALONE master
 (`spark://127.0.0.1:7077`: separate master, worker, and executor JVMs,
 Netty shuffle between executors, Arrow socket per executor python
 worker pool), so the N vs 4N pair is counted in actual executors.
