@@ -46,7 +46,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from paddleocr_spark.lineage import run_extract
-    from paddleocr_spark.registry import DEFAULT_CONFIG, create_operators, transform
+    from paddleocr_spark.pipeline import extract
     from paddleocr_spark.session import get_spark
     from paddleocr_spark.synth import synth_spans
 
@@ -84,8 +84,7 @@ def main(argv: list[str] | None = None) -> int:
                                                      args.output).count()}
     else:
         docs = spark.read.parquet(args.input)
-        spans = synth_spans(docs)
-        extracted = transform(spans, create_operators(DEFAULT_CONFIG))
+        extracted = extract(synth_spans(docs))
         summary = run_extract(spark, extracted, args.output, args.run_id,
                               n_buckets=args.buckets,
                               max_parts=args.max_parts)

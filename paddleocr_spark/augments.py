@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import geometry as G
+from .kernels import fill_bboxes
+from .sast_gt import _cv_round, quad_area
 
 #: EastRandomCropData defaults (random_crop_data.py:128-132).
 EAST_CROP_SIZE = (640, 640)
@@ -644,27 +646,15 @@ def east_random_crop(spans_geom: DataFrame) -> DataFrame:
 # the int32-truncated quad is filled as its corner bbox — the same bbox
 # axiom the MakeShrinkMap/MakePseGt differentials document. cv2's exact
 # scanline walk is out of scope for these inputs.
+#
+# polygon_area (:95-105) is sast_process.py's quad_area verbatim, and
+# this module's cvRound is SAST's too: both come from sast_gt.
 
 EAST_PROC_INPUT_SIZE = 512          #: east_process.py:30 image_shape
 EAST_PROC_BG_RATIO = 0.125          #: :31 background_ratio
 EAST_PROC_MIN_CROP_RATIO = 0.1      #: :32 min_crop_side_ratio
 EAST_PROC_MIN_TEXT = 10             #: :33 min_text_size
 EAST_PROC_SCALES = (0.5, 1, 2.0, 3.0)   #: :36 random_scale
-
-
-def _cv_round(x: float) -> int:
-    """cvRound: round half to even (== Python 3 round)."""
-    return round(x)
-
-
-def east_polygon_area(poly) -> float:
-    """east_process.py:95-105 verbatim signed shoelace (half sum of the
-    four cross edges)."""
-    edge = [(poly[1][0] - poly[0][0]) * (poly[1][1] + poly[0][1]),
-            (poly[2][0] - poly[1][0]) * (poly[2][1] + poly[1][1]),
-            (poly[3][0] - poly[2][0]) * (poly[3][1] + poly[2][1]),
-            (poly[0][0] - poly[3][0]) * (poly[0][1] + poly[3][1])]
-    return np.sum(edge) / 2.
 
 
 def east_validate_polys(polys: np.ndarray, tags: np.ndarray,
@@ -680,7 +670,7 @@ def east_validate_polys(polys: np.ndarray, tags: np.ndarray,
     validated_polys = []
     validated_tags = []
     for poly, tag in zip(polys, tags):
-        p_area = east_polygon_area(poly)
+        p_area = quad_area(poly)
         if abs(p_area) < 1:
             continue
         if p_area > 0:
@@ -754,13 +744,6 @@ def east_shrink_poly(poly: np.ndarray, r) -> np.ndarray:
     return poly
 
 
-def _east_fill_quad(img: np.ndarray, quad_i32: np.ndarray, val) -> None:
-    """fillPoly bbox axiom for the int32 quad (see module note)."""
-    from .kernels import fill_rect
-    fill_rect(img, int(quad_i32[:, 0].min()), int(quad_i32[:, 1].min()),
-              int(quad_i32[:, 0].max()), int(quad_i32[:, 1].max()), val)
-
-
 def east_generate_quad(im_size, polys: np.ndarray, tags,
                        min_text_size: int = EAST_PROC_MIN_TEXT):
     """generate_quad (:232-287): score map from the shrunk polys, the
@@ -783,16 +766,16 @@ def east_generate_quad(im_size, polys: np.ndarray, tags,
             dist2 = np.linalg.norm(poly[i] - poly[(i - 1) % 4])
             r[i] = min(dist1, dist2)
         shrinked_poly = east_shrink_poly(poly.copy(), r).astype(np.int32)
-        _east_fill_quad(score_map, shrinked_poly, 1)
-        _east_fill_quad(poly_mask, shrinked_poly, poly_idx + 1)
+        fill_bboxes(score_map, shrinked_poly, 1)
+        fill_bboxes(poly_mask, shrinked_poly, poly_idx + 1)
         poly_h = min(np.linalg.norm(poly[0] - poly[3]),
                      np.linalg.norm(poly[1] - poly[2]))
         poly_w = min(np.linalg.norm(poly[0] - poly[1]),
                      np.linalg.norm(poly[2] - poly[3]))
         if min(poly_h, poly_w) < min_text_size:
-            _east_fill_quad(training_mask, poly.astype(np.int32), 0)
+            fill_bboxes(training_mask, poly.astype(np.int32), 0)
         if tag:
-            _east_fill_quad(training_mask, poly.astype(np.int32), 0)
+            fill_bboxes(training_mask, poly.astype(np.int32), 0)
         xy_in_poly = np.argwhere(poly_mask == (poly_idx + 1))
         y_in_poly = xy_in_poly[:, 0]
         x_in_poly = xy_in_poly[:, 1]

@@ -43,6 +43,8 @@ import random as _random
 
 import numpy as np
 
+from .kernels import fill_bboxes
+
 __all__ = [
     "ct_label_encode", "erode3_u8", "scale_aligned", "ct_targets_doc",
     "ct_gt_rows_for_doc",
@@ -96,16 +98,6 @@ def scale_aligned(img: np.ndarray, scale: float):
     return img, h / oh, w / ow
 
 
-def _rect_fill_poly(img: np.ndarray, poly_i32: np.ndarray, val) -> None:
-    """cv2.drawContours(..., -1, val, thickness=-1) for an axis-aligned
-    int32 rectangle polygon: inclusive bbox fill (the same axiom
-    kernels.fill_rect documents for fillPoly)."""
-    from .kernels import fill_rect
-
-    fill_rect(img, int(poly_i32[:, 0].min()), int(poly_i32[:, 1].min()),
-              int(poly_i32[:, 0].max()), int(poly_i32[:, 1].max()), val)
-
-
 def _perimeter(bbox: np.ndarray) -> float:
     peri = 0.0
     for i in range(bbox.shape[0]):
@@ -157,18 +149,19 @@ def _make_shrink(img, flat_polys, words, scale_factor, kernel_scale=0.7):
     gt_instance = np.zeros(img.shape[0:2], dtype="uint8")
     training_mask = np.ones(img.shape[0:2], dtype="uint8")
     training_mask_distance = np.ones(img.shape[0:2], dtype="uint8")
+    # cv2.drawContours(thickness=-1) on axis-aligned rects: bbox fills
     for i in range(len(bboxes)):
-        _rect_fill_poly(gt_instance, bboxes[i], i + 1)
-        _rect_fill_poly(training_mask, bboxes[i], 0)
+        fill_bboxes(gt_instance, bboxes[i], i + 1)
+        fill_bboxes(training_mask, bboxes[i], 0)
         if words[i] == "###" or words[i] == "???":
-            _rect_fill_poly(training_mask_distance, bboxes[i], 0)
+            fill_bboxes(training_mask_distance, bboxes[i], 0)
 
     gt_kernel_instance = np.zeros(img.shape[0:2], dtype="uint8")
     kernel_bboxes = _shrink(bboxes, kernel_scale)
     for i in range(len(bboxes)):
-        _rect_fill_poly(gt_kernel_instance, kernel_bboxes[i], i + 1)
+        fill_bboxes(gt_kernel_instance, kernel_bboxes[i], i + 1)
         if words[i] != "###" and words[i] != "???":
-            _rect_fill_poly(training_mask, kernel_bboxes[i], 1)
+            fill_bboxes(training_mask, kernel_bboxes[i], 1)
 
     gt_kernel = gt_kernel_instance.copy()
     gt_kernel[gt_kernel > 0] = 1

@@ -27,9 +27,15 @@ documented determinism deviation: standard_nms' score argsort is made
 STABLE (the reference's default argsort is not; DRRG scores are merge
 counts with heavy ties).
 
+Shared helpers: the reference copies vector_slope, find_head_tail and
+reorder_poly_edge verbatim from fce_targets.py (plus a 1e-8 on the
+>4-point arm's edge-distance normaliser), so this module imports them
+from ``fce_gt`` and passes ``dist_eps=_EPS``.  The text-region mask
+stays local: DRRG fills even-odd polygons where FCE fills bboxes.
+
 Reference: hoonisone/PaddleOCR ``ppocr/data/imaug/drrg_targets.py``
-  vector helpers :58-81        find_head_tail :83-169
-  reorder_poly_edge :170-194   resample* :195-250
+  vector helpers :58-81        find_head_tail :83-169 (= fce_gt)
+  reorder_poly_edge :170-194 (= fce_gt)   resample* :195-250
   dist_point2line :251-257     draw_center_region_maps :259-311
   generate_center_mask_attrib_maps :312-368
   generate_rand_comp_attribs :369-436   jitter_comp_attribs :437-484
@@ -43,6 +49,8 @@ import math
 
 import numpy as np
 from numpy.linalg import norm
+
+from .fce_gt import reorder_poly_edge, vector_slope
 
 __all__ = [
     "fill_poly", "polyline8", "connected_components8", "erode_min",
@@ -370,124 +378,12 @@ def la_nms_quads(polys: np.ndarray, thres: float) -> np.ndarray:
 # transcribed with module params threaded explicitly
 # ---------------------------------------------------------------------------
 
-def _vector_angle(vec1, vec2):
-    if vec1.ndim > 1:
-        unit_vec1 = vec1 / (norm(vec1, axis=-1) + _EPS).reshape((-1, 1))
-    else:
-        unit_vec1 = vec1 / (norm(vec1, axis=-1) + _EPS)
-    if vec2.ndim > 1:
-        unit_vec2 = vec2 / (norm(vec2, axis=-1) + _EPS).reshape((-1, 1))
-    else:
-        unit_vec2 = vec2 / (norm(vec2, axis=-1) + _EPS)
-    return np.arccos(np.clip(np.sum(unit_vec1 * unit_vec2, axis=-1),
-                             -1.0, 1.0))
-
-
-def _vector_slope(vec):
-    return abs(vec[1] / (vec[0] + _EPS))
-
-
 def _vector_sin(vec):
     return vec[1] / (norm(vec) + _EPS)
 
 
 def _vector_cos(vec):
     return vec[0] / (norm(vec) + _EPS)
-
-
-def _find_head_tail(points, orientation_thr):
-    """drrg_targets.py:83-169 — >4-point gaussian-scored head/tail pick,
-    4-point slope-sum arm with the vertical-override threshold."""
-    if len(points) > 4:
-        pad_points = np.vstack([points, points[0]])
-        edge_vec = pad_points[1:] - pad_points[:-1]
-        theta_sum = []
-        adjacent_vec_theta = []
-        for i, edge_vec1 in enumerate(edge_vec):
-            adjacent_ind = [x % len(edge_vec) for x in [i - 1, i + 1]]
-            adjacent_edge_vec = edge_vec[adjacent_ind]
-            theta_sum.append(np.sum(_vector_angle(edge_vec1,
-                                                  adjacent_edge_vec)))
-            adjacent_vec_theta.append(_vector_angle(
-                adjacent_edge_vec[0], adjacent_edge_vec[1]))
-        theta_sum_score = np.array(theta_sum) / np.pi
-        adjacent_theta_score = np.array(adjacent_vec_theta) / np.pi
-        poly_center = np.mean(points, axis=0)
-        edge_dist = np.maximum(
-            norm(pad_points[1:] - poly_center, axis=-1),
-            norm(pad_points[:-1] - poly_center, axis=-1))
-        dist_score = edge_dist / (np.max(edge_dist) + _EPS)
-        position_score = np.zeros(len(edge_vec))
-        score = 0.5 * theta_sum_score + 0.15 * adjacent_theta_score
-        score += 0.35 * dist_score
-        if len(points) % 2 == 0:
-            position_score[(len(score) // 2 - 1)] += 1
-            position_score[-1] += 1
-        score += 0.1 * position_score
-        pad_score = np.concatenate([score, score])
-        score_matrix = np.zeros((len(score), len(score) - 3))
-        x = np.arange(len(score) - 3) / float(len(score) - 4)
-        gaussian = 1. / (np.sqrt(2. * np.pi) * 0.5) * np.exp(
-            -np.power((x - 0.5) / 0.5, 2.) / 2)
-        gaussian = gaussian / np.max(gaussian)
-        for i in range(len(score)):
-            score_matrix[i, :] = score[i] + pad_score[
-                (i + 2):(i + len(score) - 1)] * gaussian * 0.3
-        head_start, tail_increment = np.unravel_index(
-            score_matrix.argmax(), score_matrix.shape)
-        tail_start = (head_start + tail_increment + 2) % len(points)
-        head_end = (head_start + 1) % len(points)
-        tail_end = (tail_start + 1) % len(points)
-        if head_end > tail_end:
-            head_start, tail_start = tail_start, head_start
-            head_end, tail_end = tail_end, head_end
-        head_inds = [head_start, head_end]
-        tail_inds = [tail_start, tail_end]
-    else:
-        if _vector_slope(points[1] - points[0]) + _vector_slope(
-                points[3] - points[2]) < _vector_slope(
-                    points[2] - points[1]) + _vector_slope(
-                        points[0] - points[3]):
-            horizontal_edge_inds = [[0, 1], [2, 3]]
-            vertical_edge_inds = [[3, 0], [1, 2]]
-        else:
-            horizontal_edge_inds = [[3, 0], [1, 2]]
-            vertical_edge_inds = [[0, 1], [2, 3]]
-        vertical_len_sum = norm(
-            points[vertical_edge_inds[0][0]]
-            - points[vertical_edge_inds[0][1]]) + norm(
-                points[vertical_edge_inds[1][0]]
-                - points[vertical_edge_inds[1][1]])
-        horizontal_len_sum = norm(
-            points[horizontal_edge_inds[0][0]]
-            - points[horizontal_edge_inds[0][1]]) + norm(
-                points[horizontal_edge_inds[1][0]]
-                - points[horizontal_edge_inds[1][1]])
-        if vertical_len_sum > horizontal_len_sum * orientation_thr:
-            head_inds = horizontal_edge_inds[0]
-            tail_inds = horizontal_edge_inds[1]
-        else:
-            head_inds = vertical_edge_inds[0]
-            tail_inds = vertical_edge_inds[1]
-    return head_inds, tail_inds
-
-
-def _reorder_poly_edge(points, orientation_thr):
-    """drrg_targets.py:170-194."""
-    head_inds, tail_inds = _find_head_tail(points, orientation_thr)
-    head_edge, tail_edge = points[head_inds], points[tail_inds]
-    pad_points = np.vstack([points, points])
-    if tail_inds[1] < 1:
-        tail_inds[1] = len(points)
-    sideline1 = pad_points[head_inds[1]:tail_inds[1]]
-    sideline2 = pad_points[tail_inds[1]:(head_inds[1] + len(points))]
-    sideline_mean_shift = np.mean(sideline1, axis=0) - np.mean(
-        sideline2, axis=0)
-    if sideline_mean_shift[1] > 0:
-        top_sideline, bot_sideline = sideline2, sideline1
-    else:
-        top_sideline, bot_sideline = sideline1, sideline2
-    return head_edge, tail_edge, top_sideline, bot_sideline
 
 
 def _cal_curve_length(line):
@@ -591,14 +487,14 @@ def _generate_center_mask_attrib_maps(img_size, text_polys, P):
     cos_map = np.zeros((h, w), dtype=np.float32)
 
     for poly in text_polys:
-        _, _, top_line, bot_line = _reorder_poly_edge(
-            poly, P["orientation_thr"])
+        _, _, top_line, bot_line = reorder_poly_edge(
+            poly, P["orientation_thr"], _EPS)
         resampled_top_line, resampled_bot_line = _resample_sidelines(
             top_line, bot_line, P["resample_step"])
         resampled_bot_line = resampled_bot_line[::-1]
         center_line = (resampled_top_line + resampled_bot_line) / 2
 
-        if _vector_slope(center_line[-1] - center_line[0]) > 2:
+        if vector_slope(center_line[-1] - center_line[0]) > 2:
             if (center_line[-1] - center_line[0])[1] < 0:
                 center_line = center_line[::-1]
                 resampled_top_line = resampled_top_line[::-1]

@@ -175,12 +175,6 @@ synth_final AS (
        OR score_milli >= {int(round(G.DROP_SCORE * G.SCORE_MOD))}
 )"""
 
-# The exact reference token set — note '</strike>' is ABSENT (the reference
-# quirk, ppstructure/predict_system.py:151-156): closing strike tags survive.
-STYLE_RE = ("<strike>|<sup>|</sub>|<b>|</b>|<sub>|</sup>|<overline>"
-            "|</overline>|<underline>|</underline>|<i>|</i>")
-
-
 #: Committed expected-output fixtures for the non-SQL-expressible queries
 #: (generated by tools/make_fixtures.py at sf0.01 — the driver's gate SF).
 FIXTURE_DIR = os.path.join(
@@ -2474,6 +2468,32 @@ def q_vl_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "label_res string, label_sub string")
 
 
+def _table_grammar(spark: SparkSession, sf_dir: str, mod: int) -> DataFrame:
+    """(t_id, structure, cells) for the 50 tables ``t_id < 50``: table
+    ``t_id`` has ``2 + t_id % mod`` cells drawn from the five td token
+    variants, and per-cell bbox/ntokens flags (the grammar both
+    TableLabelEncode gate queries and their DuckDB twins share)."""
+    t = _docs(spark, sf_dir).select(
+        F.col("doc_id").alias("t_id")).filter("t_id < 50")
+    cellv = (f"""transform(sequence(0, 1 + cast(t_id % {mod} as int)), c ->
+        CASE cast((t_id + c) % 5 as int)
+          WHEN 0 THEN array('<td></td>')
+          WHEN 1 THEN array('<td>', '</td>')
+          WHEN 2 THEN array('<td', ' colspan="2"', '>', '</td>')
+          WHEN 3 THEN array('<td', 'colspan="2"', '>', '</td>')
+          ELSE array('', '<td></td>') END)""")
+    structure = (f"concat(array('<thead>', '<tr>'), flatten({cellv}), "
+                 f"array('</tr>', '</thead>', '<tbody>', '</tbody>'))")
+    cells = (f"""transform(sequence(0, 1 + cast(t_id % {mod} as int)), c ->
+        named_struct(
+          'has_bbox', (t_id * 7 + c) % 4 != 0,
+          'ntokens', IF((t_id + c) % 6 = 0, 0, 1),
+          'x1', cast(c * 10 as int), 'y1', cast(t_id as int),
+          'x2', cast(c * 10 + 8 as int), 'y2', cast(t_id + 6 as int)))""")
+    return t.select("t_id", F.expr(structure).alias("structure"),
+                    F.expr(cells).alias("cells"))
+
+
 def q_table_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R5: TableLabelEncode (label_ops.py:674-788) over deterministic
     per-table structure grammars exercising the merge_no_span skip, the
@@ -2485,26 +2505,7 @@ def q_table_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never-set use_unkown — labelenc.table_label_encode_py pins it)."""
     from .functions.labelenc import table_label_encode
 
-    t = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("t_id")).filter("t_id < 50")
-    cellv = ("""transform(sequence(0, 1 + cast(t_id % 4 as int)), c ->
-        CASE cast((t_id + c) % 5 as int)
-          WHEN 0 THEN array('<td></td>')
-          WHEN 1 THEN array('<td>', '</td>')
-          WHEN 2 THEN array('<td', ' colspan="2"', '>', '</td>')
-          WHEN 3 THEN array('<td', 'colspan="2"', '>', '</td>')
-          ELSE array('', '<td></td>') END)""")
-    structure = (f"concat(array('<thead>', '<tr>'), flatten({cellv}), "
-                 f"array('</tr>', '</thead>', '<tbody>', '</tbody>'))")
-    cells = ("""transform(sequence(0, 1 + cast(t_id % 4 as int)), c ->
-        named_struct(
-          'has_bbox', (t_id * 7 + c) % 4 != 0,
-          'ntokens', IF((t_id + c) % 6 = 0, 0, 1),
-          'x1', cast(c * 10 as int), 'y1', cast(t_id as int),
-          'x2', cast(c * 10 + 8 as int), 'y2', cast(t_id + 6 as int)))""")
-    df = t.select("t_id", F.expr(structure).alias("structure"),
-                  F.expr(cells).alias("cells"))
-    return table_label_encode(df)
+    return table_label_encode(_table_grammar(spark, sf_dir, 4))
 
 
 def q_table_label_encode_master(spark: SparkSession, sf_dir: str) \
@@ -2515,26 +2516,7 @@ def q_table_label_encode_master(spark: SparkSession, sf_dir: str) \
     tables exceed 38 ids and must drop, hash-verified by the twin."""
     from .functions.labelenc import table_master_label_encode
 
-    t = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("t_id")).filter("t_id < 50")
-    cellv = ("""transform(sequence(0, 1 + cast(t_id % 8 as int)), c ->
-        CASE cast((t_id + c) % 5 as int)
-          WHEN 0 THEN array('<td></td>')
-          WHEN 1 THEN array('<td>', '</td>')
-          WHEN 2 THEN array('<td', ' colspan="2"', '>', '</td>')
-          WHEN 3 THEN array('<td', 'colspan="2"', '>', '</td>')
-          ELSE array('', '<td></td>') END)""")
-    structure = (f"concat(array('<thead>', '<tr>'), flatten({cellv}), "
-                 f"array('</tr>', '</thead>', '<tbody>', '</tbody>'))")
-    cells = ("""transform(sequence(0, 1 + cast(t_id % 8 as int)), c ->
-        named_struct(
-          'has_bbox', (t_id * 7 + c) % 4 != 0,
-          'ntokens', IF((t_id + c) % 6 = 0, 0, 1),
-          'x1', cast(c * 10 as int), 'y1', cast(t_id as int),
-          'x2', cast(c * 10 + 8 as int), 'y2', cast(t_id + 6 as int)))""")
-    df = t.select("t_id", F.expr(structure).alias("structure"),
-                  F.expr(cells).alias("cells"))
-    return table_master_label_encode(df)
+    return table_master_label_encode(_table_grammar(spark, sf_dir, 8))
 
 
 def q_e2e_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4210,7 +4192,7 @@ FROM mcs10"""
     # readability_extract twin: same closed-form discipline as main_content
     # (never parses the serialized page); the comma-decoration formula and
     # the arc90 weight tables MUST stay in lockstep with
-    # content.synth_html_readability_expr / content.readability_extract.
+    # content.synth_html_expr(comma=True) / content.readability_extract.
     _rd_comma = "(role = 'p' AND (did * 11 + b * 7 + k * 5) % 13 = 4)"
     sqls["readability_extract"] = f"""
 WITH rd0 AS (
@@ -4279,7 +4261,7 @@ FROM rdw"""
     # boilerpipe_extract twin: closed-form features (word counts are the
     # generator's nw; linked-word counts replay the _LINKED_BP rule), then
     # the published NumWordsRulesClassifier tree over lag/lead. Keep in
-    # lockstep with content.synth_html_boilerpipe_expr /
+    # lockstep with content.synth_html_expr(_LINKED_BP) /
     # content.boilerpipe_extract.
     _bp_linked = """
       CASE WHEN role IN ('nav', 'footer') THEN k % 2 = 0

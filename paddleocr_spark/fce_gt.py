@@ -32,6 +32,13 @@ Quirks preserved:
 * generate_fourier_maps' k=0 channel stores coeff - pixel coordinate
   (argwhere order), other channels blend by mask;
 * normalize_polygon's argmin over the 8 most-x-central points.
+
+Shared helpers: the reference's drrg_targets.py copies vector_slope,
+the vector-angle helper, find_head_tail and reorder_poly_edge verbatim
+from fce_targets.py, adding only a 1e-8 to the >4-point arm's edge-distance normaliser, so
+``drrg_gt`` imports them from here and passes that epsilon as
+``dist_eps``. The text-region masks stay apart: FCE fills bboxes
+(``kernels.fill_bboxes``), DRRG fills even-odd polygons.
 """
 
 from __future__ import annotations
@@ -39,6 +46,8 @@ from __future__ import annotations
 import numpy as np
 from numpy.fft import fft
 from numpy.linalg import norm
+
+from .kernels import fill_bboxes
 
 FCE_FOURIER_DEGREE = 5                 #: fce_targets.py:48
 FCE_RESAMPLE_STEP = 4.0                #: :49
@@ -52,15 +61,6 @@ def vector_slope(vec):
     """:25-27 verbatim."""
     assert len(vec) == 2
     return abs(vec[1] / (vec[0] + 1e-8))
-
-
-def _fill_polys(img: np.ndarray, polys, val) -> None:
-    """cv2.fillPoly bbox axiom (axis-aligned int32 polys only here)."""
-    from .kernels import fill_rect
-    for p in polys:
-        p = np.asarray(p).reshape(-1, 2)
-        fill_rect(img, int(p[:, 0].min()), int(p[:, 1].min()),
-                  int(p[:, 0].max()), int(p[:, 1].max()), val)
 
 
 def _bounding_rect(poly_i32: np.ndarray):
@@ -119,8 +119,12 @@ def resample_line(line: np.ndarray, n: int) -> np.ndarray:
     return np.array(resampled_line)
 
 
-def find_head_tail(points: np.ndarray, orientation_thr: float):
-    """:174-271 verbatim (both arms)."""
+def find_head_tail(points: np.ndarray, orientation_thr: float,
+                   dist_eps: float = 0.0):
+    """:174-271 verbatim (both arms). ``dist_eps`` guards the >4-point
+    arm's edge-distance normaliser: DRRG's copy of this walk
+    (drrg_targets.py:83-169) divides by ``max + 1e-8``, FCE's by the
+    bare max (``max + 0.0`` is the same float)."""
     assert points.ndim == 2
     assert points.shape[0] >= 4
     assert points.shape[1] == 2
@@ -145,7 +149,7 @@ def find_head_tail(points: np.ndarray, orientation_thr: float):
         edge_dist = np.maximum(
             norm(pad_points[1:] - poly_center, axis=-1),
             norm(pad_points[:-1] - poly_center, axis=-1))
-        dist_score = edge_dist / np.max(edge_dist)
+        dist_score = edge_dist / (np.max(edge_dist) + dist_eps)
         position_score = np.zeros(len(edge_vec))
         score = 0.5 * theta_sum_score + 0.15 * adjacent_theta_score
         score += 0.35 * dist_score
@@ -200,12 +204,14 @@ def find_head_tail(points: np.ndarray, orientation_thr: float):
 
 
 def reorder_poly_edge(points: np.ndarray,
-                      orientation_thr: float = FCE_ORIENT_THR):
-    """:133-172 verbatim."""
+                      orientation_thr: float = FCE_ORIENT_THR,
+                      dist_eps: float = 0.0):
+    """:133-172 verbatim (DRRG's drrg_targets.py:170-194 is the same
+    walk; ``dist_eps`` as in :func:`find_head_tail`)."""
     assert points.ndim == 2
     assert points.shape[0] >= 4
     assert points.shape[1] == 2
-    head_inds, tail_inds = find_head_tail(points, orientation_thr)
+    head_inds, tail_inds = find_head_tail(points, orientation_thr, dist_eps)
     head_edge, tail_edge = points[head_inds], points[tail_inds]
     pad_points = np.vstack([points, points])
     if tail_inds[1] < 1:
@@ -286,7 +292,7 @@ def generate_center_region_mask(img_size, text_polys,
             current_center_box = np.vstack([tl, tr, br,
                                             bl]).astype(np.int32)
             center_region_boxes.append(current_center_box)
-    _fill_polys(center_region_mask, center_region_boxes, 1)
+    fill_bboxes(center_region_mask, center_region_boxes, 1)
     return center_region_mask
 
 
@@ -377,7 +383,7 @@ def generate_fourier_maps(img_size, text_polys,
     for poly in text_polys:
         mask = np.zeros((h, w), dtype=np.uint8)
         polygon = np.array(poly).reshape((1, -1, 2))
-        _fill_polys(mask, polygon.astype(np.int32), 1)
+        fill_bboxes(mask, polygon.astype(np.int32), 1)
         fourier_coeff = cal_fourier_signature(polygon[0], k)
         # The reference blends FULL maps per channel:
         #   map = mask * c + (1 - mask) * map
@@ -406,7 +412,7 @@ def generate_text_region_mask(img_size, text_polys):
     text_region_mask = np.zeros((h, w), dtype=np.uint8)
     for poly in text_polys:
         polygon = np.array(poly, dtype=np.int32).reshape((1, -1, 2))
-        _fill_polys(text_region_mask, polygon, 1)
+        fill_bboxes(text_region_mask, polygon, 1)
     return text_region_mask
 
 
@@ -415,7 +421,7 @@ def generate_effective_mask(mask_size: tuple, polygons_ignore):
     mask = np.ones(mask_size, dtype=np.uint8)
     for poly in polygons_ignore:
         instance = poly.reshape(-1, 2).astype(np.int32).reshape(1, -1, 2)
-        _fill_polys(mask, instance, 0)
+        fill_bboxes(mask, instance, 0)
     return mask
 
 

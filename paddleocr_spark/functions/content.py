@@ -129,7 +129,7 @@ _CLOSE = ("CASE {role} WHEN 'nav' THEN '</div>' WHEN 'aside' THEN '</div>' "
           "ELSE '</p>' END")
 
 
-def synth_html_expr() -> str:
+def synth_html_expr(linked: str = _LINKED, comma: bool = False) -> str:
     """SQL expression building the page HTML from (did, wl, W, nb).
 
     NOTE: the word-array column is ``wl``, not ``w`` — Spark resolves
@@ -137,14 +137,24 @@ def synth_html_expr() -> str:
     size column would collide (withColumn("W") silently replaces ``w``).
 
     Nested HOFs: transform over blocks, transform over token positions;
-    linked tokens wrap in ``<a href="#{b}_{k}">``; tokens join with a
-    single space, blocks concatenate back-to-back.
+    tokens for which the ``linked`` rule (a ``{role}/{b}/{k}`` template,
+    :data:`_LINKED` by default) holds wrap in ``<a href="#{b}_{k}">``;
+    tokens join with a single space, blocks concatenate back-to-back.
+    ``comma`` appends a ',' to 'p'-block tokens where
+    ``(did*11 + b*7 + k*5) % 13 == 4``, OUTSIDE the anchor wrapper, so
+    arc90's comma-count feature is non-degenerate. The readability
+    (``comma=True``) and boilerpipe (``_LINKED_BP``) pages stay in
+    lockstep with their DuckDB twins in entry_queries.
     """
     role = _ROLE.format(b="b")
     tok = _TOK.format(role=role, b="b", k="k", stop=_sql_stop_array())
-    linked = _LINKED.format(role=role, b="b", k="k")
+    linked = linked.format(role=role, b="b", k="k")
     tok_html = (f"CASE WHEN {linked} THEN concat('<a href=\"#', b, '_', k, "
                 f"'\">', {tok}, '</a>') ELSE {tok} END")
+    if comma:
+        cond = f"({role} = 'p' AND (did * 11 + b * 7 + k * 5) % 13 = 4)"
+        tok_html = (f"concat({tok_html}, "
+                    f"CASE WHEN {cond} THEN ',' ELSE '' END)")
     wn = _WN.format(role=role, b="b")
     block = (f"concat({_OPEN.format(role=role, b='b')}, "
              f"array_join(transform(sequence(0, {wn} - 1), "
@@ -325,28 +335,6 @@ READ_MIN_SCORE = 3.0
 READ_NEG_CLASSES = ("nav", "aside", "footer", "sidebar", "comment")
 
 
-def synth_html_readability_expr() -> str:
-    """Same deterministic page as :func:`synth_html_expr`, plus a comma
-    decoration on 'p'-block tokens (``(did*11 + b*7 + k*5) % 13 == 4``,
-    appended OUTSIDE the anchor wrapper) so arc90's comma-count feature is
-    non-degenerate. Keep the comma formula in lockstep with the DuckDB
-    twin (entry_queries ``readability_extract``)."""
-    role = _ROLE.format(b="b")
-    tok = _TOK.format(role=role, b="b", k="k", stop=_sql_stop_array())
-    linked = _LINKED.format(role=role, b="b", k="k")
-    comma = f"({role} = 'p' AND (did * 11 + b * 7 + k * 5) % 13 = 4)"
-    tok_html = (f"CASE WHEN {linked} THEN concat('<a href=\"#', b, '_', k, "
-                f"'\">', {tok}, '</a>') ELSE {tok} END")
-    tok_html = (f"concat({tok_html}, "
-                f"CASE WHEN {comma} THEN ',' ELSE '' END)")
-    wn = _WN.format(role=role, b="b")
-    block = (f"concat({_OPEN.format(role=role, b='b')}, "
-             f"array_join(transform(sequence(0, {wn} - 1), "
-             f"k -> {tok_html}), ' '), "
-             f"{_CLOSE.format(role=role, b='b')})")
-    return (f"array_join(transform(sequence(0, nb - 1), b -> {block}), '')")
-
-
 def _read_blocks(spark: SparkSession, sf_dir: str,
                  synth_expr: str) -> DataFrame:
     """Synthesize pages with ``synth_expr`` and regex-parse them back to
@@ -409,7 +397,7 @@ def readability_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-op on an already-wide production scan. Plan-audited: 1 exchange,
     0 Python nodes.
     """
-    feat = (_read_blocks(spark, sf_dir, synth_html_readability_expr())
+    feat = (_read_blocks(spark, sf_dir, synth_html_expr(comma=True))
             .withColumn("len_text", F.length("text"))
             .withColumn("commas",
                         F.size(F.split(F.col("text"), ",")) - 1)
@@ -465,23 +453,6 @@ _LINKED_BP = ("CASE WHEN {role} IN ('nav', 'footer') THEN {k} % 2 = 0 "
               "ELSE false END")
 
 
-def synth_html_boilerpipe_expr() -> str:
-    """Same deterministic page as :func:`synth_html_expr` with the
-    denser aside link rule (``_LINKED_BP``). Keep in lockstep with the
-    DuckDB twin (entry_queries ``boilerpipe_extract``)."""
-    role = _ROLE.format(b="b")
-    tok = _TOK.format(role=role, b="b", k="k", stop=_sql_stop_array())
-    linked = _LINKED_BP.format(role=role, b="b", k="k")
-    tok_html = (f"CASE WHEN {linked} THEN concat('<a href=\"#', b, '_', k, "
-                f"'\">', {tok}, '</a>') ELSE {tok} END")
-    wn = _WN.format(role=role, b="b")
-    block = (f"concat({_OPEN.format(role=role, b='b')}, "
-             f"array_join(transform(sequence(0, {wn} - 1), "
-             f"k -> {tok_html}), ' '), "
-             f"{_CLOSE.format(role=role, b='b')})")
-    return (f"array_join(transform(sequence(0, nb - 1), b -> {block}), '')")
-
-
 def boilerpipe_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boilerpipe main-content classification (NumWordsRulesClassifier).
 
@@ -510,7 +481,7 @@ def boilerpipe_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as the siblings; the classifier itself is lag/lead over
     ONE doc_id exchange (the whole query has exactly one shuffle).
     """
-    feat = (_read_blocks(spark, sf_dir, synth_html_boilerpipe_expr())
+    feat = (_read_blocks(spark, sf_dir, synth_html_expr(_LINKED_BP))
             .withColumn("wlist", F.expr(
                 "filter(split(text, ' '), x -> x != '')"))
             .withColumn("n_words", F.size("wlist"))

@@ -44,8 +44,6 @@ are part of the contract.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -537,7 +535,7 @@ def sampling_temperature(spark: SparkSession, sf_dir: str,
 
 
 def ccnet_buckets(spark: SparkSession, sf_dir: str,
-                  approx: bool | None = None) -> DataFrame:
+                  approx: bool = False) -> DataFrame:
     """CCNet-style perplexity bucketing of the bigram LM score.
 
     CCNet splits each language's corpus into head / middle / tail
@@ -553,10 +551,9 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str,
     only the two threshold VALUES need a rank. The default (oracle)
     path computes them with one global row_number — exact, engine-
     portable, but a single-partition sort at the limit. Passing
-    ``approx=True`` (or setting ``SPARK_GRAFT_CCNET_APPROX=1``) swaps
-    the two cutpoints for Spark's mergeable Greenwald-Khanna sketch
-    (``percentile_approx``, map-side partial agg, NO global sort or
-    window anywhere in the plan — pinned by
+    ``approx=True`` swaps the two cutpoints for Spark's mergeable
+    Greenwald-Khanna sketch (``percentile_approx``, map-side partial
+    agg, NO global sort or window anywhere in the plan — pinned by
     tests/test_curation.py::test_ccnet_buckets_approx_plan) and keeps
     everything else identical; the bucketing join is a 1-row broadcast.
     That is the 10^12-doc shape: rank error ≤ n/accuracy docs around
@@ -565,8 +562,6 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str,
     """
     from .retrieval import lm_score
 
-    if approx is None:
-        approx = os.environ.get("SPARK_GRAFT_CCNET_APPROX", "0") == "1"
     if approx:
         scores = lm_score(spark, sf_dir)
         # scores feeds BOTH the sketch agg and the bucketing select; an

@@ -2605,6 +2605,20 @@ def fill_rect(img: "np.ndarray", x0: int, y0: int, x1: int, y1: int,
     img[max(y0, 0):min(y1, h - 1) + 1, max(x0, 0):min(x1, w - 1) + 1] = val
 
 
+def fill_bboxes(img: "np.ndarray", polys, val: float) -> None:
+    """cv2.fillPoly under the bbox axiom: each integer polygon fills its
+    inclusive corner bounding box via :func:`fill_rect`. ``polys`` is one
+    (n, 2) array or a sequence of polygons (any shape that reshapes to
+    (-1, 2)) — the axis-aligned target generators (EAST, SAST, FCE, CT)
+    share this one fill."""
+    if isinstance(polys, np.ndarray) and polys.ndim == 2:
+        polys = [polys]
+    for p in polys:
+        p = np.asarray(p).reshape(-1, 2)
+        fill_rect(img, int(p[:, 0].min()), int(p[:, 1].min()),
+                  int(p[:, 0].max()), int(p[:, 1].max()), val)
+
+
 def make_shrink_map(boxes: "np.ndarray", tags: "np.ndarray",
                     h: int, w: int,
                     min_text_size: int = SHRINK_MIN_TEXT_SIZE,

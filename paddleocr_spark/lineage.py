@@ -9,11 +9,14 @@ lineage row; a rerun anti-joins the lineage table and processes only
 uncommitted buckets.
 
 Write-ordering gives crash safety without a transaction log: bucket data is
-written with dynamic partition overwrite FIRST, lineage rows appended AFTER —
-a crash in between leaves an uncommitted bucket that the rerun simply
-overwrites (idempotent, no duplicates). On Iceberg the same layout upgrades
-to snapshot-isolated `overwrite ... where part_id in (...)` commits; parquet
-is the sandbox stand-in.
+written with dynamic partition overwrite FIRST, the snapshot manifest that
+lists the new files is published NEXT (snapshots.py), and the lineage rows
+are appended LAST. Lineage is what resume trusts, so it must only ever
+mark buckets the snapshot already lists: a crash before the lineage append
+leaves buckets that the rerun simply redoes — it overwrites their data and
+publishes a newer snapshot (idempotent, no duplicates). On Iceberg the same
+layout upgrades to snapshot-isolated `overwrite ... where part_id in (...)`
+commits; parquet is the sandbox stand-in.
 """
 
 from __future__ import annotations
@@ -98,19 +101,22 @@ def run_extract(spark: SparkSession, extracted: DataFrame, out_dir: str,
     # them forever.
     rows = [(run_id, p, int(got[f"docs_{p}"] or 0),
              int(got[f"spans_{p}"] or 0), "committed", now) for p in todo]
-    lineage = spark.createDataFrame(rows, schema=LINEAGE_SCHEMA)
-    lineage.coalesce(1).write.mode("append").parquet(lineage_dir)
 
     # Iceberg-shaped snapshot commit (snapshots.py): pin the exact data
     # files of the buckets just written as a new atomic table version —
     # snapshot-isolated readers and time travel over the same parquet
-    # layout the real Iceberg writer would replace.
+    # layout the real Iceberg writer would replace. It is published
+    # BEFORE the lineage append: a bucket marked committed is skipped by
+    # every later run, so it must already be readable.
     from . import snapshots as S
     version = S.commit_snapshot(
         out_dir,
         {p: S.list_bucket_files(data_dir, p) for p in todo},
         {str(p): {"docs": r[2], "spans": r[3]}
          for p, r in zip(todo, rows)})
+
+    lineage = spark.createDataFrame(rows, schema=LINEAGE_SCHEMA)
+    lineage.coalesce(1).write.mode("append").parquet(lineage_dir)
 
     return {"run_id": run_id, "parts_done": len(todo),
             "parts_skipped": len(done),

@@ -45,6 +45,24 @@ CHARSET = (
 REC_SCHEMA = ("doc_id string, span_idx long, rec_text string, "
               "rec_score double")
 
+#: CHARSET escaped for a SQL single-quoted literal.
+_CS = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
+
+
+def _text_ids(unknown, offset: str = "") -> tuple[str, str]:
+    """The decoder demos' shared encode, as SQL: the id arrays of
+    ``text`` and of its first 2 chars. A charset char maps to its
+    1-based CHARSET position followed by ``offset`` (SQL text such as
+    ``" - 1"``), an out-of-dict char to ``unknown``. ``filter(c != '')``
+    guards the empty-text edge: split('', '') yields [''] and Spark's
+    instr(s, '') is 1, which would fabricate a char id."""
+    def enc(src: str) -> str:
+        return (f"transform(filter(split({src}, ''), c -> c != ''), "
+                f"c -> CASE WHEN instr('{_CS}', c) = 0 THEN {unknown} "
+                f"ELSE instr('{_CS}', c){offset} END)")
+    return (enc("coalesce(text, '')"),
+            enc("substring(coalesce(text, ''), 1, 2)"))
+
 
 def ctc_encode_expr(text_col: str = "text"):
     """CTC id sequence for a text column, as a pure JVM expression.
@@ -56,10 +74,9 @@ def ctc_encode_expr(text_col: str = "text"):
     blank and vanish on decode (the reference drops out-of-dict chars,
     rec_postprocess.py:58-61 'unsupport type' path).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     return F.expr(
         f"flatten(transform(split(coalesce({text_col}, ''), ''), "
-        f"c -> array(instr('{cs}', c), instr('{cs}', c), 0)))")
+        f"c -> array(instr('{_CS}', c), instr('{_CS}', c), 0)))")
 
 
 def _decode_row(doc_id, span_idx, ids, _aspect) -> list:
@@ -157,17 +174,16 @@ def attn_decode(docs: DataFrame) -> DataFrame:
     to id 0 (= sos) and vanish. Output: (doc_id, attn_text) =
     charset-filtered text followed by its charset-filtered first 2 chars.
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     eos = len(CHARSET) + 1
     # filter(c != '') guards the empty-text edge: split('', '') yields ['']
     # and Spark's instr(s, '') is 1, which would fabricate a char id.
     ids = (f"concat(array(0), transform(filter(split(coalesce(text, ''), "
-           f"''), c -> c != ''), c -> instr('{cs}', c)), array({eos}), "
+           f"''), c -> c != ''), c -> instr('{_CS}', c)), array({eos}), "
            f"transform(filter(split(substring(coalesce(text, ''), 1, 2), "
-           f"''), c -> c != ''), c -> instr('{cs}', c)))")
+           f"''), c -> c != ''), c -> instr('{_CS}', c)))")
     decoded = (f"concat_ws('', transform(filter({ids}, "
                f"i -> i != 0 AND i != {eos}), "
-               f"i -> substring('{cs}', CAST(i AS INT), 1)))")
+               f"i -> substring('{_CS}', CAST(i AS INT), 1)))")
     return docs.select("doc_id", F.expr(decoded).alias("attn_text"))
 
 
@@ -184,14 +200,9 @@ def sar_decode(docs: DataFrame) -> DataFrame:
     '<UKN>' marker (a real dictionary entry in SAR).
     Output: (doc_id, sar_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
     ukn, eos, pad = n, n + 1, n + 2
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN {ukn} "
-           f"ELSE instr('{cs}', c) - 1 END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(ukn, " - 1")
     ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array({eos}) "
            f"ELSE array() END, {body}, array({pad}, {eos}), {head2})")
     # first eos at a 1-based position >= 2 breaks; pad and a position-1
@@ -203,7 +214,7 @@ def sar_decode(docs: DataFrame) -> DataFrame:
             f"v -> v != {pad} AND v != {eos})")
     decoded = (f"concat_ws('', transform({kept}, "
                f"v -> CASE WHEN v = {ukn} THEN '<UKN>' "
-               f"ELSE substring('{cs}', CAST(v + 1 AS INT), 1) END))")
+               f"ELSE substring('{_CS}', CAST(v + 1 AS INT), 1) END))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("sar_text")))
 
@@ -226,13 +237,8 @@ def nrtr_decode(docs: DataFrame) -> DataFrame:
     skipped (the bare-except quirk); then eos + encode(first 2 chars),
     which must NOT decode. Output: (doc_id, nrtr_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     big = len(CHARSET) + 4          # dict size: one past the last index
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN 1 "
-           f"ELSE instr('{cs}', c) + 3 END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(1, " + 3")
     ids = (f"concat(CASE WHEN doc_id % 4 = 0 THEN array(2) "
            f"ELSE array() END, {body}, "
            f"CASE WHEN doc_id % 2 = 0 THEN array(0) ELSE array() END, "
@@ -248,7 +254,7 @@ def nrtr_decode(docs: DataFrame) -> DataFrame:
     decoded = (f"concat_ws('', transform({kept}, "
                f"v -> CASE WHEN v = 0 THEN 'blank' WHEN v = 1 THEN '<unk>' "
                f"WHEN v = 2 THEN '<s>' "
-               f"ELSE substring('{cs}', CAST(v - 3 AS INT), 1) END))")
+               f"ELSE substring('{_CS}', CAST(v - 3 AS INT), 1) END))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("nrtr_text")))
 
@@ -271,13 +277,8 @@ def vitstr_decode(docs: DataFrame) -> DataFrame:
     eos + encode(first 2 chars), which must NOT decode (live break).
     Output: (doc_id, vitstr_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     big = len(CHARSET) + 2          # dict size: one past the last index
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN {big + 20} "
-           f"ELSE instr('{cs}', c) + 1 END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(big + 20, " + 1")
     ids = (f"concat(array(2), CASE WHEN doc_id % 4 = 0 THEN array(0) "
            f"ELSE array() END, {body}, "
            f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
@@ -291,7 +292,7 @@ def vitstr_decode(docs: DataFrame) -> DataFrame:
             f"v -> v >= 0 AND v < {big})")
     decoded = (f"concat_ws('', transform({kept}, "
                f"v -> CASE WHEN v = 0 THEN '<s>' "
-               f"ELSE substring('{cs}', CAST(v - 1 AS INT), 1) END))")
+               f"ELSE substring('{_CS}', CAST(v - 1 AS INT), 1) END))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("vitstr_text")))
 
@@ -314,14 +315,9 @@ def srn_decode(docs: DataFrame) -> DataFrame:
     LITERAL '<EOS>' marker string joining the text.
     Output: (doc_id, srn_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
     beg, end = n, n + 1
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN {beg} "
-           f"ELSE instr('{cs}', c) - 1 END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(beg, " - 1")
     ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array({end}) "
            f"ELSE array() END, {body}, "
            f"CASE WHEN doc_id % 3 = 0 THEN array({beg}) ELSE array() END, "
@@ -330,7 +326,7 @@ def srn_decode(docs: DataFrame) -> DataFrame:
     decoded = (f"concat_ws('', transform(filter(_ids, "
                f"v -> v != {beg} AND v != {end}), "
                f"v -> CASE WHEN v = -1 THEN '<EOS>' "
-               f"ELSE substring('{cs}', CAST(v + 1 AS INT), 1) END))")
+               f"ELSE substring('{_CS}', CAST(v + 1 AS INT), 1) END))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("srn_text")))
 
@@ -356,14 +352,9 @@ def rfl_decode(docs: DataFrame) -> DataFrame:
     length(text) contributes ((doc_id + k) % 5) * 0.25.
     Output: (doc_id, rfl_text, rfl_cnt_len).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
     end = n + 1
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN 0 "
-           f"ELSE instr('{cs}', c) END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(0)
     ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array({end}) "
            f"ELSE array() END, {body}, "
            f"CASE WHEN doc_id % 3 = 0 THEN array(0) ELSE array() END, "
@@ -372,7 +363,7 @@ def rfl_decode(docs: DataFrame) -> DataFrame:
     decoded = (f"concat_ws('', transform(filter(_ids, "
                f"v -> v != 0 AND v != {end}), "
                f"v -> CASE WHEN v = -1 THEN 'eos' "
-               f"ELSE substring('{cs}', CAST(v AS INT), 1) END))")
+               f"ELSE substring('{_CS}', CAST(v AS INT), 1) END))")
     # banker's round of an exact multiple of 0.25 — spelled out as CASE
     # so Spark and DuckDB share one rounding definition (kernel twin:
     # rfl_cnt_length)
@@ -407,14 +398,9 @@ def seed_decode(docs: DataFrame) -> DataFrame:
     doc appends -1 ('unknown' joins); then eos + encode(first 2 chars),
     which must NOT decode (live break). Output: (doc_id, seed_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
     eos, pad, unk = n, n + 1, n + 2
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN {unk} "
-           f"ELSE instr('{cs}', c) - 1 END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(unk, " - 1")
     ids = (f"concat({body}, "
            f"CASE WHEN doc_id % 3 = 0 THEN array({pad}) ELSE array() END, "
            f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
@@ -424,7 +410,7 @@ def seed_decode(docs: DataFrame) -> DataFrame:
     decoded = (f"concat_ws('', transform(slice(_ids, 1, CAST({cut} AS "
                f"INT)), v -> CASE WHEN v = {pad} THEN 'padding' "
                f"WHEN v = {unk} OR v = -1 THEN 'unknown' "
-               f"ELSE substring('{cs}', CAST(v + 1 AS INT), 1) END))")
+               f"ELSE substring('{_CS}', CAST(v + 1 AS INT), 1) END))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("seed_text")))
 
@@ -447,14 +433,9 @@ def satrn_decode(docs: DataFrame) -> DataFrame:
     appends -1; then eos + encode(first 2 chars), which must NOT decode.
     Output: (doc_id, satrn_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
     unk, end = n, n + 1
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN {unk} "
-           f"ELSE instr('{cs}', c) - 1 END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(unk, " - 1")
     ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array({end}) "
            f"ELSE array() END, {body}, "
            f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
@@ -469,7 +450,7 @@ def satrn_decode(docs: DataFrame) -> DataFrame:
            f"AS INT)), v -> v != {n + 2}), "
            f"v -> CASE WHEN v = -1 THEN '<PAD>' "
            f"WHEN v = {unk} THEN '<UKN>' "
-           f"ELSE substring('{cs}', CAST(v + 1 AS INT), 1) END))")
+           f"ELSE substring('{_CS}', CAST(v + 1 AS INT), 1) END))")
     # pattern passed as a Python string (not through SQL-literal escape
     # parsing); '^' is literal inside the class per the reference quirk
     cleaned = F.regexp_replace(F.lower(F.expr(raw)),
@@ -493,13 +474,8 @@ def pren_decode(docs: DataFrame) -> DataFrame:
     char — a space — joins); then eos + encode(first 2 chars), which
     must NOT decode. Output: (doc_id, pren_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN 2 "
-           f"ELSE instr('{cs}', c) + 2 END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(2, " + 2")
     ids = (f"concat(CASE WHEN doc_id % 3 = 0 THEN array(0) "
            f"ELSE array() END, {body}, "
            f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
@@ -508,8 +484,8 @@ def pren_decode(docs: DataFrame) -> DataFrame:
     cut = f"(CASE WHEN {p} > 0 THEN {p} - 1 ELSE size(_ids) END)"
     decoded = (f"concat_ws('', transform(filter(slice(_ids, 1, CAST({cut} "
                f"AS INT)), v -> v != 0 AND v != 2), "
-               f"v -> CASE WHEN v = -1 THEN substring('{cs}', {n}, 1) "
-               f"ELSE substring('{cs}', CAST(v - 2 AS INT), 1) END))")
+               f"v -> CASE WHEN v = -1 THEN substring('{_CS}', {n}, 1) "
+               f"ELSE substring('{_CS}', CAST(v - 2 AS INT), 1) END))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("pren_text")))
 
@@ -529,14 +505,9 @@ def abinet_decode(docs: DataFrame) -> DataFrame:
     chars), which must NOT decode (live break at id 0).
     Output: (doc_id, abinet_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
     big = n + 1                        # dict size
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN {big + 20} "
-           f"ELSE instr('{cs}', c) END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(big + 20)
     ids = (f"concat({body}, "
            f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
            f"array(0), {head2})")
@@ -545,7 +516,7 @@ def abinet_decode(docs: DataFrame) -> DataFrame:
     p = f"array_position({kept}, 0)"
     cut = f"(CASE WHEN {p} > 0 THEN {p} - 1 ELSE size({kept}) END)"
     decoded = (f"concat_ws('', transform(slice({kept}, 1, CAST({cut} AS "
-               f"INT)), v -> substring('{cs}', CAST(v AS INT), 1)))")
+               f"INT)), v -> substring('{_CS}', CAST(v AS INT), 1)))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("abinet_text")))
 
@@ -565,13 +536,8 @@ def spin_decode(docs: DataFrame) -> DataFrame:
     encode(first 2 chars) — which DOES decode; every 7th doc appends -1
     (the last charset char joins). Output: (doc_id, spin_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN 0 "
-           f"ELSE instr('{cs}', c) + 1 END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(0, " + 1")
     ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array(1) "
            f"ELSE array() END, {body}, "
            f"CASE WHEN doc_id % 3 = 0 THEN array(0) ELSE array() END, "
@@ -579,8 +545,8 @@ def spin_decode(docs: DataFrame) -> DataFrame:
            f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END)")
     decoded = (f"concat_ws('', transform(filter(_ids, "
                f"v -> v != 0 AND v != 1), "
-               f"v -> CASE WHEN v = -1 THEN substring('{cs}', {n}, 1) "
-               f"ELSE substring('{cs}', CAST(v - 1 AS INT), 1) END))")
+               f"v -> CASE WHEN v = -1 THEN substring('{_CS}', {n}, 1) "
+               f"ELSE substring('{_CS}', CAST(v - 1 AS INT), 1) END))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("spin_text")))
 
@@ -603,21 +569,16 @@ def vl_decode(docs: DataFrame, nsteps: int = 25) -> DataFrame:
     out-of-range padding up to nsteps; texts ≥ nsteps chars never reach
     their eos (length pins at nsteps). Output: (doc_id, vl_text, vl_len).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
     pad = n + 30
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN {pad} "
-           f"ELSE instr('{cs}', c) END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(pad)
     ids = (f"slice(concat({body}, array(0), {head2}, "
            f"array_repeat({pad}, {nsteps})), 1, {nsteps})")
     p = "array_position(_ids, 0)"
     ln = f"(CASE WHEN {p} > 0 THEN {p} ELSE {nsteps} END)"
     decoded = (f"concat_ws('', transform(slice(_ids, 1, CAST({ln} AS "
                f"INT)), v -> CASE WHEN v >= 1 AND v <= {n} "
-               f"THEN substring('{cs}', CAST(v AS INT), 1) ELSE '' END))")
+               f"THEN substring('{_CS}', CAST(v AS INT), 1) ELSE '' END))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("vl_text"),
                     F.expr(f"CAST({ln} AS BIGINT)").alias("vl_len")))
@@ -639,16 +600,11 @@ def can_decode(docs: DataFrame) -> DataFrame:
     2 chars) (never decodes — 0 is the global minimum whenever no 'a'
     precedes it). Output: (doc_id, can_text).
     """
-    cs = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
     n = len(CHARSET)
-    enc = (lambda src: f"transform(filter(split({src}, ''), c -> c != ''), "
-           f"c -> CASE WHEN instr('{cs}', c) = 0 THEN {n - 1} "
-           f"ELSE instr('{cs}', c) - 1 END)")
-    body = enc("coalesce(text, '')")
-    head2 = enc("substring(coalesce(text, ''), 1, 2)")
+    body, head2 = _text_ids(n - 1, " - 1")
     ids = f"concat({body}, array(0), {head2})"
     p = "array_position(_ids, array_min(_ids))"
     decoded = (f"concat_ws(' ', transform(slice(_ids, 1, CAST({p} - 1 AS "
-               f"INT)), v -> substring('{cs}', CAST(v + 1 AS INT), 1)))")
+               f"INT)), v -> substring('{_CS}', CAST(v + 1 AS INT), 1)))")
     return (docs.withColumn("_ids", F.expr(ids))
             .select("doc_id", F.expr(decoded).alias("can_text")))

@@ -33,12 +33,19 @@ two-subiteration conditions rather than copied LUT constants.
 Dead code documented, not transcribed: ``rotate_im_poly``
 (pg_process.py:832-861) is never called by ``__call__``.
 
+Shared helpers: pg_process.py copies its geometry helpers verbatim from
+sast_process.py (quad_area, gen_quad_from_poly, check_and_validate_polys,
+gen_min_area_quad_from_poly, shrink_quad/poly_along_width, the vector and
+line-cross helpers, poly2tcl, gen_quad_tbo, poly2quads), so this module
+imports them from ``sast_gt`` instead of defining them again, as it
+imports its raster axioms from ``drrg_gt``.
+
 Reference: hoonisone/PaddleOCR ``ppocr/data/imaug/pg_process.py``
   get_dict/quad_area/gen_quad_from_poly :53-98
   check_and_validate_polys :100-144     crop_area :146-225
   fit_and_gather_tcl_points_v2 :227-292 / _v3 :294-381
   generate_direction_map :383-421       generate_tcl_ctc_label :423-572
-  geometry helpers :574-831             __call__ :863-1034
+  geometry helpers :574-831 (= sast_gt)  __call__ :863-1034
   ``ppocr/utils/e2e_utils/extract_textpoint_fast.py:157-296``
 """
 from __future__ import annotations
@@ -54,6 +61,9 @@ __all__ = [
 ]
 
 from .functions.labelenc import ENC_CHARSET as PG_LEXICON
+from .sast_gt import (gen_min_area_quad_from_poly, gen_quad_tbo,
+                      poly2quads, poly2tcl, sast_validate_polys,
+                      shrink_poly_along_width)
 
 _INPUT_SIZE = 512
 _MAX_TEXT_LENGTH = 50
@@ -266,279 +276,6 @@ def sort_and_expand_with_direction_v2(pos_list, f_direction,
 
 
 # ---------------------------------------------------------------------------
-# geometry transcription (pg_process.py:53-831)
-# ---------------------------------------------------------------------------
-
-def _quad_area(poly):
-    edge = [(poly[1][0] - poly[0][0]) * (poly[1][1] + poly[0][1]),
-            (poly[2][0] - poly[1][0]) * (poly[2][1] + poly[1][1]),
-            (poly[3][0] - poly[2][0]) * (poly[3][1] + poly[2][1]),
-            (poly[0][0] - poly[3][0]) * (poly[0][1] + poly[3][1])]
-    return np.sum(edge) / 2.
-
-
-def _box_points(poly_i32: np.ndarray) -> np.ndarray:
-    from .pixelops import min_area_box
-
-    return np.array(min_area_box(poly_i32))
-
-
-def _quad_from_poly(poly):
-    """gen_quad_from_poly / the >4-point arm of
-    gen_min_area_quad_from_poly: the corner rotation minimizing the
-    distance to the poly's four anchor points."""
-    point_num = poly.shape[0]
-    box = _box_points(poly.astype(np.int32))
-    first = 0
-    min_dist = 1e4
-    for i in range(4):
-        dist = np.linalg.norm(box[(i + 0) % 4] - poly[0]) + \
-            np.linalg.norm(box[(i + 1) % 4] - poly[point_num // 2 - 1]) + \
-            np.linalg.norm(box[(i + 2) % 4] - poly[point_num // 2]) + \
-            np.linalg.norm(box[(i + 3) % 4] - poly[-1])
-        if dist < min_dist:
-            min_dist = dist
-            first = i
-    quad = np.zeros((4, 2), dtype=np.float32)
-    for i in range(4):
-        quad[i] = box[(first + i) % 4]
-    return quad
-
-
-def _check_and_validate_polys(polys, tags, im_size):
-    """pg_process.py:100-144 — 16-point polys only (the reversal tuple
-    is hardcoded to 16); positive-area polys are flagged ignore and
-    reversed, tall quads get hv_tag 0."""
-    (h, w) = im_size
-    if polys.shape[0] == 0:
-        return polys, np.array([]), np.array([])
-    polys[:, :, 0] = np.clip(polys[:, :, 0], 0, w - 1)
-    polys[:, :, 1] = np.clip(polys[:, :, 1], 0, h - 1)
-
-    validated_polys, validated_tags, hv_tags = [], [], []
-    for poly, tag in zip(polys, tags):
-        quad = _quad_from_poly(poly)
-        p_area = _quad_area(quad)
-        if abs(p_area) < 1:
-            continue
-        if p_area > 0:
-            if tag == False:                       # noqa: E712 (ref op)
-                tag = True
-            poly = poly[(0, 15, 14, 13, 12, 11, 10, 9, 8, 7, 6, 5, 4, 3,
-                         2, 1), :]
-            quad = quad[(0, 3, 2, 1), :]
-        len_w = np.linalg.norm(quad[0] - quad[1]) + np.linalg.norm(
-            quad[3] - quad[2])
-        len_h = np.linalg.norm(quad[0] - quad[3]) + np.linalg.norm(
-            quad[1] - quad[2])
-        hv_tags.append(0 if len_w * 2.0 < len_h else 1)
-        validated_polys.append(poly)
-        validated_tags.append(tag)
-    return (np.array(validated_polys), np.array(validated_tags),
-            np.array(hv_tags))
-
-
-def _adjust_point(poly):
-    """pg_process.py:574-598 (used by neither default path but part of
-    the public surface; kept for parity tests)."""
-    point_num = poly.shape[0]
-    if point_num == 4:
-        len_1 = np.linalg.norm(poly[0] - poly[1])
-        len_2 = np.linalg.norm(poly[1] - poly[2])
-        len_3 = np.linalg.norm(poly[2] - poly[3])
-        len_4 = np.linalg.norm(poly[3] - poly[0])
-        if (len_1 + len_3) * 1.5 < (len_2 + len_4):
-            poly = poly[[1, 2, 3, 0], :]
-    elif point_num > 4:
-        v1 = poly[0] - poly[1]
-        v2 = poly[1] - poly[2]
-        cos_theta = np.dot(v1, v2) / (
-            np.linalg.norm(v1) * np.linalg.norm(v2) + 1e-6)
-        theta = np.arccos(np.round(cos_theta, decimals=4))
-        if abs(theta) > (70 / 180 * math.pi):
-            index = list(range(1, point_num)) + [0]
-            poly = poly[np.array(index), :]
-    return poly
-
-
-def _gen_min_area_quad_from_poly(poly):
-    point_num = poly.shape[0]
-    if point_num == 4:
-        return poly, np.sum(poly, axis=0) / 4
-    box = _box_points(poly.astype(np.int32))
-    center = (box[:, 0].min() + box[:, 0].max()) / 2.0, \
-        (box[:, 1].min() + box[:, 1].max()) / 2.0
-    quad = _quad_from_poly(poly)
-    return quad, np.array(center, dtype=np.float64)
-
-
-def _shrink_quad_along_width(quad, begin_width_ratio=0.,
-                             end_width_ratio=1.):
-    ratio_pair = np.array([[begin_width_ratio], [end_width_ratio]],
-                          dtype=np.float32)
-    p0_1 = quad[0] + (quad[1] - quad[0]) * ratio_pair
-    p3_2 = quad[3] + (quad[2] - quad[3]) * ratio_pair
-    return np.array([p0_1[0], p0_1[1], p3_2[1], p3_2[0]])
-
-
-def _shrink_poly_along_width(quads, shrink_ratio_of_width,
-                             expand_height_ratio=1.0):
-    """pg_process.py:644-693: clip a total shrink length off both ends
-    of the quad chain, measured along the upper edges."""
-    def get_cut_info(edge_len_list, cut_len):
-        for idx, edge_len in enumerate(edge_len_list):
-            cut_len -= edge_len
-            if cut_len <= 0.000001:
-                ratio = (cut_len + edge_len_list[idx]) / edge_len_list[idx]
-                return idx, ratio
-
-    upper_edge_list = [np.linalg.norm(q[0] - q[1]) for q in quads]
-    left_length = np.linalg.norm(quads[0][0] - quads[0][3]) \
-        * expand_height_ratio
-    right_length = np.linalg.norm(quads[-1][1] - quads[-1][2]) \
-        * expand_height_ratio
-    shrink_length = min(left_length, right_length,
-                        sum(upper_edge_list)) * shrink_ratio_of_width
-    upper_len_left = shrink_length
-    upper_len_right = sum(upper_edge_list) - shrink_length
-
-    left_idx, left_ratio = get_cut_info(upper_edge_list, upper_len_left)
-    left_quad = _shrink_quad_along_width(quads[left_idx], left_ratio, 1)
-    right_idx, right_ratio = get_cut_info(upper_edge_list,
-                                          upper_len_right)
-    right_quad = _shrink_quad_along_width(quads[right_idx], 0,
-                                          right_ratio)
-    out = []
-    if left_idx == right_idx:
-        out.append([left_quad[0], right_quad[1], right_quad[2],
-                    left_quad[3]])
-    else:
-        out.append(left_quad)
-        for idx in range(left_idx + 1, right_idx):
-            out.append(quads[idx])
-        out.append(right_quad)
-    return np.array(out), list(range(left_idx, right_idx + 1))
-
-
-def _prepare_text_label(label_str, lexicon):
-    return label_str.lower() if len(lexicon) == 36 else label_str
-
-
-def _vector_angle(A, B):
-    AB = np.array([B[1] - A[1], B[0] - A[0]])
-    return np.arctan2(*AB)
-
-
-def _theta_line_cross_point(theta, point):
-    x, y = point
-    cos = np.cos(theta)
-    sin = np.sin(theta)
-    return [sin, -cos, cos * y - sin * x]
-
-
-def _line_cross_two_point(A, B):
-    return _theta_line_cross_point(_vector_angle(A, B), A)
-
-
-def _average_angle(poly):
-    p0, p1, p2, p3 = poly
-    return (_vector_angle(p3, p0) + _vector_angle(p2, p1)) / 2
-
-
-def _line_cross_point(line1, line2):
-    a1, b1, c1 = line1
-    a2, b2, c2 = line2
-    d = a1 * b2 - a2 * b1
-    if d == 0:
-        return np.array([0, 0], dtype=np.float32)
-    x = (b1 * c2 - b2 * c1) / d
-    y = (a2 * c1 - a1 * c2) / d
-    return np.array([x, y], dtype=np.float32)
-
-
-def _quad2tcl(poly, ratio):
-    ratio_pair = np.array([[0.5 - ratio / 2], [0.5 + ratio / 2]],
-                          dtype=np.float32)
-    p0_3 = poly[0] + (poly[3] - poly[0]) * ratio_pair
-    p1_2 = poly[1] + (poly[2] - poly[1]) * ratio_pair
-    return np.array([p0_3[0], p1_2[0], p1_2[1], p0_3[1]])
-
-
-def _poly2tcl(poly, ratio):
-    ratio_pair = np.array([[0.5 - ratio / 2], [0.5 + ratio / 2]],
-                          dtype=np.float32)
-    tcl_poly = np.zeros_like(poly)
-    point_num = poly.shape[0]
-    for idx in range(point_num // 2):
-        point_pair = poly[idx] + (poly[point_num - 1 - idx] - poly[idx]
-                                  ) * ratio_pair
-        tcl_poly[idx] = point_pair[0]
-        tcl_poly[point_num - 1 - idx] = point_pair[1]
-    return tcl_poly
-
-
-def _gen_quad_tbo(quad, tcl_mask, tbo_map):
-    """pg_process.py:779-809: per-TCL-pixel offsets to the quad's
-    upper/lower border along the average side angle + a width norm.
-    Vectorized over the TCL pixels — every per-pixel quantity below is
-    the same elementary IEEE op sequence as the reference's scalar
-    loop (the pixel line is [sin, -cos, cos*y - sin*x] with shared
-    sin/cos, the cross-point divides by the shared scalar d), so the
-    float32 stores are bit-identical."""
-    up_line = _line_cross_two_point(quad[0], quad[1])
-    lower_line = _line_cross_two_point(quad[3], quad[2])
-    quad_h = 0.5 * (np.linalg.norm(quad[0] - quad[3])
-                    + np.linalg.norm(quad[1] - quad[2]))
-    quad_w = 0.5 * (np.linalg.norm(quad[0] - quad[1])
-                    + np.linalg.norm(quad[2] - quad[3]))
-    angle = _average_angle(quad)
-    xy_in_poly = np.argwhere(tcl_mask == 1)
-    if len(xy_in_poly) == 0:
-        return tbo_map
-    y = xy_in_poly[:, 0]
-    x = xy_in_poly[:, 1]
-    sin = np.sin(angle)
-    cos = np.cos(angle)
-    c3 = cos * y - sin * x                 # the pixel line's c term
-    a2, b2 = sin, -cos
-
-    def cross(line):
-        a1, b1, c1 = line
-        d = a1 * b2 - a2 * b1              # scalar, as the reference's
-        if d == 0:                         # per-pixel check collapses
-            z = np.zeros(len(c3), dtype=np.float32)
-            return z, z
-        cx = (b1 * c3 - b2 * c1) / d
-        cy = (a2 * c1 - a1 * c3) / d
-        # the reference's line_cross_point returns float32 BEFORE the
-        # pixel subtraction — round here, subtract in float32
-        return cx.astype(np.float32), cy.astype(np.float32)
-
-    ux, uy = cross(up_line)
-    lx, ly = cross(lower_line)
-    yf = y.astype(np.float32)              # coords <= 512: exact
-    xf = x.astype(np.float32)
-    tbo_map[y, x, 0] = uy - yf
-    tbo_map[y, x, 1] = ux - xf
-    tbo_map[y, x, 2] = ly - yf
-    tbo_map[y, x, 3] = lx - xf
-    tbo_map[y, x, 4] = 1.0 / max(min(quad_h, quad_w), 1.0) * 2
-    return tbo_map
-
-
-def _poly2quads(poly):
-    quad_list = []
-    point_num = poly.shape[0]
-    point_pair_list = []
-    for idx in range(point_num // 2):
-        point_pair_list.append([poly[idx], poly[point_num - 1 - idx]])
-    for idx in range(point_num // 2 - 1):
-        quad_list.append((np.array(point_pair_list)[[idx, idx + 1]]
-                          ).reshape(4, 2)[[0, 2, 3, 1]])
-    return np.array(quad_list)
-
-
-# ---------------------------------------------------------------------------
 # TCL point gathering (the RNG consumers inside label generation)
 # ---------------------------------------------------------------------------
 
@@ -699,6 +436,10 @@ def _calculate_average_height(poly_quads):
     return max(sum(height_list) / len(height_list), 1.0)
 
 
+def _prepare_text_label(label_str, lexicon):
+    return label_str.lower() if len(lexicon) == 36 else label_str
+
+
 def _generate_tcl_ctc_label(rng_np, h, w, polys, tags, text_strs,
                             ds_ratio, point_gather_mode, img_id,
                             tcl_len, min_text_size=4, max_text_size=512,
@@ -719,7 +460,7 @@ def _generate_tcl_ctc_label(rng_np, h, w, polys, tags, text_strs,
     score_label_map_text_label_list = []
     pos_list, pos_mask, label_list = [], [], []
     for poly_idx, (poly, tag) in enumerate(zip(polys, tags)):
-        min_area_quad, _ = _gen_min_area_quad_from_poly(poly)
+        min_area_quad, _ = gen_min_area_quad_from_poly(poly)
         quad_h = 0.5 * (np.linalg.norm(min_area_quad[0] - min_area_quad[3])
                         + np.linalg.norm(min_area_quad[1]
                                          - min_area_quad[2]))
@@ -742,10 +483,10 @@ def _generate_tcl_ctc_label(rng_np, h, w, polys, tags, text_strs,
         if len(text_label_index_list) < 1:
             continue
 
-        tcl_poly = _poly2tcl(poly, tcl_ratio)
-        tcl_quads = _poly2quads(tcl_poly)
-        poly_quads = _poly2quads(poly)
-        stcl_quads, quad_index = _shrink_poly_along_width(
+        tcl_poly = poly2tcl(poly, tcl_ratio)
+        tcl_quads = poly2quads(tcl_poly)
+        poly_quads = poly2quads(poly)
+        stcl_quads, quad_index = shrink_poly_along_width(
             tcl_quads, shrink_ratio_of_width=shrink_ratio_of_width,
             expand_height_ratio=1.0 / tcl_ratio)
 
@@ -759,7 +500,7 @@ def _generate_tcl_ctc_label(rng_np, h, w, polys, tags, text_strs,
             _fill_polys(quad_mask,
                         np.round(quad[np.newaxis, :, :]).astype(np.int32),
                         1.0)
-            tbo_map = _gen_quad_tbo(poly_quads[quad_index[idx]],
+            tbo_map = gen_quad_tbo(poly_quads[quad_index[idx]],
                                     quad_mask, tbo_map)
 
         if label_idx == 0:
@@ -823,8 +564,8 @@ def pg_process_doc(im, polys16, tags, texts, seed: int,
     text_tags = np.array(tags, dtype=bool)
     text_strs = list(texts)
     h, w, _ = im.shape
-    text_polys, text_tags, hv_tags = _check_and_validate_polys(
-        text_polys, text_tags, (h, w))
+    text_polys, text_tags, hv_tags = sast_validate_polys(
+        text_polys, text_tags, h, w)
     del hv_tags                                  # unused on this arm
     if text_polys.shape[0] <= 0:
         return None

@@ -14,6 +14,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 
+from . import geometry as G
 from . import pipeline as P
 
 StageFn = Callable[[DataFrame], DataFrame]
@@ -45,7 +46,7 @@ def _detf(**_):
 
 
 @register("DropScore")
-def _drop(drop_score: float = 0.5, **_):
+def _drop(drop_score: float = G.DROP_SCORE, **_):
     return lambda df: P.drop_score_filter(df, drop_score)
 
 
@@ -63,7 +64,7 @@ DEFAULT_CONFIG: list[dict] = [
     {"ExplodeSpans": None},
     {"WithGeometry": None},
     {"DetFilter": None},
-    {"DropScore": {"drop_score": 0.5}},
+    {"DropScore": {"drop_score": G.DROP_SCORE}},
     {"StripStyles": None},
     {"OrderAssemble": None},
 ]

@@ -41,6 +41,13 @@ Quirks preserved:
   canvas is 1/1 everywhere before poly_mask zeroes it.
 
 Reference: hv_tag = 0 marks vertical polys (len_w*2 < len_h).
+
+Shared helpers: the reference copies these geometry helpers verbatim
+into pg_process.py (and the shoelace into east_process.py as
+polygon_area), so ``pg_gt`` and the EAST path in ``augments`` import
+them from here. gen_quad_tbo is vectorised over the TCL pixels and
+bit-identical to the reference's per-pixel loop; the bbox fills go
+through ``kernels.fill_bboxes``.
 """
 
 from __future__ import annotations
@@ -49,24 +56,13 @@ import math
 
 import numpy as np
 
+from .kernels import fill_bboxes
+
 SAST_INPUT_SIZE = 512        #: sast_process.py:30 image_shape
 SAST_MIN_CROP_SIZE = 24      #: :31
 SAST_MIN_CROP_SIDE = 0.3     #: :32 (unused by the shipped crop arm)
 SAST_MIN_TEXT = 10           #: :33
 SAST_MAX_TEXT = 512          #: :34
-
-
-def _fill_quads(img: np.ndarray, quads_i32: np.ndarray, val) -> np.ndarray:
-    """cv2.fillPoly bbox axiom for one or more int32 axis-aligned quads;
-    returns img (one call site uses the return value)."""
-    from .kernels import fill_rect
-    q = np.asarray(quads_i32)
-    if q.ndim == 2:
-        q = q[None]
-    for quad in q:
-        fill_rect(img, int(quad[:, 0].min()), int(quad[:, 1].min()),
-                  int(quad[:, 0].max()), int(quad[:, 1].max()), val)
-    return img
 
 
 def quad_area(poly) -> float:
@@ -106,30 +102,13 @@ def gen_quad_from_poly(poly: np.ndarray) -> np.ndarray:
 
 def gen_min_area_quad_from_poly(poly: np.ndarray):
     """:427-456: identity + centroid for 4-point polys (the span-model
-    case); the >4-point minAreaRect anchor walk is reached only through
-    poly2quads outputs, which are always 4-point here."""
-    point_num = poly.shape[0]
-    if point_num == 4:
-        min_area_quad = poly
-        center_point = np.sum(poly, axis=0) / 4
-        return min_area_quad, center_point
+    case); >4-point polys take :func:`gen_quad_from_poly`'s anchored
+    minAreaRect quad, centred on the box's corner mean."""
+    if poly.shape[0] == 4:
+        return poly, np.sum(poly, axis=0) / 4
     from .pixelops import min_area_box
     box = np.array(min_area_box(poly.astype(np.int32)), dtype=np.float64)
-    center_point = box.mean(axis=0)
-    min_area_quad = np.zeros((4, 2), dtype=np.float32)
-    first_point_idx = 0
-    min_dist = 1e4
-    for i in range(4):
-        dist = np.linalg.norm(box[(i + 0) % 4] - poly[0]) + \
-            np.linalg.norm(box[(i + 1) % 4] - poly[point_num // 2 - 1]) + \
-            np.linalg.norm(box[(i + 2) % 4] - poly[point_num // 2]) + \
-            np.linalg.norm(box[(i + 3) % 4] - poly[-1])
-        if dist < min_dist:
-            min_dist = dist
-            first_point_idx = i
-    for i in range(4):
-        min_area_quad[i] = box[(first_point_idx + i) % 4]
-    return min_area_quad, center_point
+    return gen_quad_from_poly(poly), box.mean(axis=0)
 
 
 def sast_validate_polys(polys: np.ndarray, tags: np.ndarray, h: int,
@@ -338,18 +317,6 @@ def average_angle(poly):
     return (angle30 + angle21) / 2
 
 
-def line_cross_point(line1, line2):
-    """:554-571 verbatim (parallel lines -> (0, 0) fallback)."""
-    a1, b1, c1 = line1
-    a2, b2, c2 = line2
-    d = a1 * b2 - a2 * b1
-    if d == 0:
-        return np.array([0, 0], dtype=np.float32)
-    x = (b1 * c2 - b2 * c1) / d
-    y = (a2 * c1 - a1 * c2) / d
-    return np.array([x, y], dtype=np.float32)
-
-
 def poly2tcl(poly, ratio):
     """:585-599 verbatim center-strip interpolation."""
     ratio_pair = np.array(
@@ -365,7 +332,14 @@ def poly2tcl(poly, ratio):
 
 
 def gen_quad_tbo(quad, tcl_mask, tbo_map):
-    """:601-631 verbatim per-pixel border-offset walk."""
+    """:601-631: per-TCL-pixel offsets to the quad's upper/lower border
+    along the average side angle + a width norm. Vectorised over the
+    TCL pixels — every per-pixel quantity below is the same elementary
+    IEEE op sequence as the reference's scalar loop (the pixel line is
+    [sin, -cos, cos*y - sin*x] with shared sin/cos; the reference's
+    line_cross_point divides by one scalar d and rounds to float32
+    before the pixel subtraction), so the float32 stores are
+    bit-identical."""
     up_line = line_cross_two_point(quad[0], quad[1])
     lower_line = line_cross_two_point(quad[3], quad[2])
     quad_h = 0.5 * (np.linalg.norm(quad[0] - quad[3]) +
@@ -374,18 +348,34 @@ def gen_quad_tbo(quad, tcl_mask, tbo_map):
                     np.linalg.norm(quad[2] - quad[3]))
     angle = average_angle(quad)
     xy_in_poly = np.argwhere(tcl_mask == 1)
-    for y, x in xy_in_poly:
-        point = (x, y)
-        line = theta_line_cross_point(angle, point)
-        cross_point_upper = line_cross_point(up_line, line)
-        cross_point_lower = line_cross_point(lower_line, line)
-        upper_offset_x, upper_offset_y = cross_point_upper - point
-        lower_offset_x, lower_offset_y = cross_point_lower - point
-        tbo_map[y, x, 0] = upper_offset_y
-        tbo_map[y, x, 1] = upper_offset_x
-        tbo_map[y, x, 2] = lower_offset_y
-        tbo_map[y, x, 3] = lower_offset_x
-        tbo_map[y, x, 4] = 1.0 / max(min(quad_h, quad_w), 1.0) * 2
+    if len(xy_in_poly) == 0:
+        return tbo_map
+    y = xy_in_poly[:, 0]
+    x = xy_in_poly[:, 1]
+    sin = np.sin(angle)
+    cos = np.cos(angle)
+    c3 = cos * y - sin * x                 # the pixel line's c term
+    a2, b2 = sin, -cos
+
+    def cross(line):
+        a1, b1, c1 = line
+        d = a1 * b2 - a2 * b1              # one scalar for every pixel
+        if d == 0:                         # parallel: (0, 0) fallback
+            z = np.zeros(len(c3), dtype=np.float32)
+            return z, z
+        cx = (b1 * c3 - b2 * c1) / d
+        cy = (a2 * c1 - a1 * c3) / d
+        return cx.astype(np.float32), cy.astype(np.float32)
+
+    ux, uy = cross(up_line)
+    lx, ly = cross(lower_line)
+    yf = y.astype(np.float32)              # coords <= 512: exact
+    xf = x.astype(np.float32)
+    tbo_map[y, x, 0] = uy - yf
+    tbo_map[y, x, 1] = ux - xf
+    tbo_map[y, x, 2] = ly - yf
+    tbo_map[y, x, 3] = lx - xf
+    tbo_map[y, x, 4] = 1.0 / max(min(quad_h, quad_w), 1.0) * 2
     return tbo_map
 
 
@@ -432,7 +422,7 @@ def generate_tcl_label(hw, polys, tags, ds_ratio, tcl_ratio=0.3,
                        min_area_quad_w) > max_text_size * ds_ratio:
             continue
         if tag:
-            _fill_quads(training_mask, poly.astype(np.int32), 0.15)
+            fill_bboxes(training_mask, poly.astype(np.int32), 0.15)
         else:
             tcl_poly = poly2tcl(poly, tcl_ratio)
             tcl_quads = poly2quads(tcl_poly)
@@ -440,13 +430,13 @@ def generate_tcl_label(hw, polys, tags, ds_ratio, tcl_ratio=0.3,
             stcl_quads, quad_index = shrink_poly_along_width(
                 tcl_quads, shrink_ratio_of_width=shrink_ratio_of_width,
                 expand_height_ratio=1.0 / tcl_ratio)
-            _fill_quads(score_map, np.round(stcl_quads).astype(np.int32),
+            fill_bboxes(score_map, np.round(stcl_quads).astype(np.int32),
                         1.0)
             for idx, quad in enumerate(stcl_quads):
                 quad_mask = np.zeros((h, w), dtype=np.float32)
-                quad_mask = _fill_quads(
-                    quad_mask,
-                    np.round(quad[np.newaxis, :, :]).astype(np.int32), 1.0)
+                fill_bboxes(quad_mask,
+                            np.round(quad[np.newaxis, :, :]).astype(np.int32),
+                            1.0)
                 tbo_map = gen_quad_tbo(poly_quads[quad_index[idx]],
                                        quad_mask, tbo_map)
     return score_map, tbo_map, training_mask
@@ -482,24 +472,24 @@ def generate_tvo_and_tco(hw, polys, tags, tcl_ratio=0.3, ds_ratio=0.25):
             np.linalg.norm(min_area_quad[2] - min_area_quad[3]))
         tcl_poly = poly2tcl(poly, tcl_ratio)
         for idx in range(4):
-            _fill_quads(
+            fill_bboxes(
                 poly_tv_xy_map[2 * idx],
                 np.round(tcl_poly[np.newaxis, :, :]).astype(np.int32),
                 float(min(max(min_area_quad[idx, 0], 0), w)))
-            _fill_quads(
+            fill_bboxes(
                 poly_tv_xy_map[2 * idx + 1],
                 np.round(tcl_poly[np.newaxis, :, :]).astype(np.int32),
                 float(min(max(min_area_quad[idx, 1], 0), h)))
         for idx in range(2):
-            _fill_quads(
+            fill_bboxes(
                 poly_tc_xy_map[idx],
                 np.round(tcl_poly[np.newaxis, :, :]).astype(np.int32),
                 float(center_point[idx]))
-        _fill_quads(
+        fill_bboxes(
             poly_short_edge_map,
             np.round(tcl_poly[np.newaxis, :, :]).astype(np.int32),
             float(max(min(min_area_quad_h, min_area_quad_w), 1.0)))
-        _fill_quads(poly_mask,
+        fill_bboxes(poly_mask,
                     np.round(tcl_poly[np.newaxis, :, :]).astype(np.int32),
                     1)
     tvo_map *= poly_mask
@@ -514,6 +504,7 @@ def generate_tvo_and_tco(hw, polys, tags, tcl_ratio=0.3, ds_ratio=0.25):
 
 
 def _cv_round(x: float) -> int:
+    """cvRound: round half to even (== Python 3 round)."""
     return round(x)
 
 

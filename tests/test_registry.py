@@ -2,8 +2,9 @@
 
 ``queries()`` holds the operators themselves (no recording or forwarding
 layer), every entry has a DuckDB twin, ``bench_queries()`` keeps the
-names and order that perfbench times, and every Python stage of the
-package runs through the one driver in ``operators/grouped.py``.
+names and order that perfbench times, every Python stage of the
+package runs through the one driver in ``operators/grouped.py``, and no
+function body is written twice.
 """
 
 from __future__ import annotations
@@ -60,3 +61,27 @@ def test_python_stages_run_through_the_grouped_driver():
                                   node.func.attr))
     assert found == [("sources/lmdbfile.py", "read_lmdb_dataset",
                       "mapInPandas")]
+
+
+def test_no_duplicate_function_bodies():
+    """No two functions (nested ones included) under ``paddleocr_spark/``
+    share a body of two or more statements, compared as ``ast.unparse``
+    text with the docstring stripped: a helper the reference repeats
+    verbatim across its ops is kept once and imported where reused."""
+    pkg = Path(__file__).resolve().parent.parent / "paddleocr_spark"
+    seen: dict[str, list[str]] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            body = node.body
+            if (isinstance(body[0], ast.Expr)
+                    and isinstance(body[0].value, ast.Constant)
+                    and isinstance(body[0].value.value, str)):
+                body = body[1:]
+            if len(body) < 2:
+                continue
+            key = "\n".join(ast.unparse(s) for s in body)
+            seen.setdefault(key, []).append(
+                f"{path.relative_to(pkg).as_posix()}:{node.name}")
+    assert [v for v in seen.values() if len(v) > 1] == []

@@ -141,3 +141,34 @@ def test_snapshot_isolation_and_time_travel(spark, extracted, tmp_path):
     empty = S.read_snapshot(spark, str(tmp_path / "nonexistent"))
     assert "part_id" in empty.columns and "spans" in empty.columns
     assert empty.count() == 0
+
+
+def test_crash_before_snapshot_is_redone(spark, extracted, tmp_path,
+                                         monkeypatch):
+    """A crash after the bucket data is written but before the snapshot
+    is published must not leave those buckets marked committed: the
+    rerun redoes them, and the latest snapshot lists every document
+    exactly once."""
+    from paddleocr_spark import snapshots as S
+
+    out = str(tmp_path / "crash")
+    real = S.commit_snapshot
+    calls = []
+
+    def crash_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash before the snapshot commit")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "commit_snapshot", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_extract(spark, extracted, out, "run1", n_buckets=8)
+
+    s2 = run_extract(spark, extracted, out, "run2", n_buckets=8)
+    assert s2["parts_done"] == 8 and s2["parts_skipped"] == 0
+
+    full = {r["doc_id"] for r in extracted.select("doc_id").collect()}
+    ids = [r["doc_id"]
+           for r in S.read_snapshot(spark, out).select("doc_id").collect()]
+    assert len(ids) == len(set(ids)) and set(ids) == full
