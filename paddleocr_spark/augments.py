@@ -44,8 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import geometry as G
-from .kernels import fill_bboxes
-from .sast_gt import _cv_round, quad_area
+from .kernels import fill_bboxes, quad_area
+from .sast_gt import _cv_round, padded_crop_area
 
 #: EastRandomCropData defaults (random_crop_data.py:128-132).
 EAST_CROP_SIZE = (640, 640)
@@ -647,8 +647,10 @@ def east_random_crop(spans_geom: DataFrame) -> DataFrame:
 # axiom the MakeShrinkMap/MakePseGt differentials document. cv2's exact
 # scanline walk is out of scope for these inputs.
 #
-# polygon_area (:95-105) is sast_process.py's quad_area verbatim, and
-# this module's cvRound is SAST's too: both come from sast_gt.
+# polygon_area (:95-105) is sast_process.py's quad_area verbatim
+# (kernels.quad_area), crop_area (:288-358) is the walk sast_process.py
+# copies (sast_gt.padded_crop_area, here with EAST's 50 tries and 0.1
+# min-side ratio), and this module's cvRound is SAST's _cv_round.
 
 EAST_PROC_INPUT_SIZE = 512          #: east_process.py:30 image_shape
 EAST_PROC_BG_RATIO = 0.125          #: :31 background_ratio
@@ -792,76 +794,6 @@ def east_generate_quad(im_size, polys: np.ndarray, tags,
     return score_map, geo_map, training_mask
 
 
-def east_train_crop_area(rng: np.random.RandomState, h: int, w: int,
-                         polys: np.ndarray, tags: np.ndarray,
-                         crop_background: bool = False,
-                         max_tries: int = 50,
-                         min_crop_side_ratio: float =
-                         EAST_PROC_MIN_CROP_RATIO):
-    """crop_area (:288-358), image replaced by its (h, w): the padded
-    occupancy arrays (pad = dim//10, maxx EXCLUSIVE as in the inference
-    crop), per-try x-then-y choice pairs CLIPPED to the canvas after the
-    pad shift, the all-4-corners containment test, and the background /
-    foreground return arms. Returns (new_h, new_w, polys, tags, rect)
-    where rect is the accepted (xmin, ymin, xmax, ymax) or None when the
-    tries run out (canvas returned whole)."""
-    pad_h = h // 10
-    pad_w = w // 10
-    h_array = np.zeros((h + pad_h * 2), dtype=np.int32)
-    w_array = np.zeros((w + pad_w * 2), dtype=np.int32)
-    for poly in polys:
-        poly = np.round(poly, decimals=0).astype(np.int32)
-        minx = np.min(poly[:, 0])
-        maxx = np.max(poly[:, 0])
-        w_array[minx + pad_w:maxx + pad_w] = 1
-        miny = np.min(poly[:, 1])
-        maxy = np.max(poly[:, 1])
-        h_array[miny + pad_h:maxy + pad_h] = 1
-    h_axis = np.where(h_array == 0)[0]
-    w_axis = np.where(w_array == 0)[0]
-    if len(h_axis) == 0 or len(w_axis) == 0:
-        return h, w, polys, tags, None
-    for i in range(max_tries):
-        xx = rng.choice(w_axis, size=2)
-        xmin = np.min(xx) - pad_w
-        xmax = np.max(xx) - pad_w
-        xmin = np.clip(xmin, 0, w - 1)
-        xmax = np.clip(xmax, 0, w - 1)
-        yy = rng.choice(h_axis, size=2)
-        ymin = np.min(yy) - pad_h
-        ymax = np.max(yy) - pad_h
-        ymin = np.clip(ymin, 0, h - 1)
-        ymax = np.clip(ymax, 0, h - 1)
-        if xmax - xmin < min_crop_side_ratio * w or \
-           ymax - ymin < min_crop_side_ratio * h:
-            continue
-        if polys.shape[0] != 0:
-            poly_axis_in_area = (polys[:, :, 0] >= xmin) \
-                & (polys[:, :, 0] <= xmax) \
-                & (polys[:, :, 1] >= ymin) \
-                & (polys[:, :, 1] <= ymax)
-            selected_polys = np.where(
-                np.sum(poly_axis_in_area, axis=1) == 4)[0]
-        else:
-            selected_polys = []
-        if len(selected_polys) == 0:
-            if crop_background:
-                return (int(ymax) - int(ymin) + 1,
-                        int(xmax) - int(xmin) + 1,
-                        [], [], (int(xmin), int(ymin),
-                                 int(xmax), int(ymax)))
-            else:
-                continue
-        polys = polys[selected_polys]
-        tags = tags[selected_polys]
-        polys[:, :, 0] -= xmin
-        polys[:, :, 1] -= ymin
-        return (int(ymax) - int(ymin) + 1, int(xmax) - int(xmin) + 1,
-                polys, tags, (int(xmin), int(ymin),
-                              int(xmax), int(ymax)))
-    return h, w, polys, tags, None
-
-
 def east_preprocess_dims(h: int, w: int,
                          input_size: int = EAST_PROC_INPUT_SIZE):
     """preprocess (:41-59) shapes only: scale = input_size / max(h, w)
@@ -939,9 +871,13 @@ def east_process_doc(seed: int, quads: np.ndarray, tags: np.ndarray,
     out["rd_scale"] = float(rd_scale)
     sh, sw = _cv_round(h * rd_scale), _cv_round(w * rd_scale)
     text_polys *= rd_scale
+    # crop_area's EAST arguments (:288-358): 50 tries, min sides 0.1 x
+    crop_args = dict(max_tries=50, min_w=EAST_PROC_MIN_CROP_RATIO * sw,
+                     min_h=EAST_PROC_MIN_CROP_RATIO * sh)
     if rng.rand() < background_ratio:
-        ch, cw, polys2, tags2, rect = east_train_crop_area(
-            rng, sh, sw, text_polys, text_tags, crop_background=True)
+        ch, cw, polys2, _, rect = padded_crop_area(
+            rng, sh, sw, text_polys, (text_tags,), crop_background=True,
+            **crop_args)
         out["crop"] = rect
         if len(polys2) > 0:
             out["status"] = "none_bg_text"
@@ -953,8 +889,9 @@ def east_process_doc(seed: int, quads: np.ndarray, tags: np.ndarray,
                    if input_size % 4 else (input_size // 4) ** 2,
                    geo_sums=[0.0] * 9)
         return out
-    ch, cw, polys2, tags2, rect = east_train_crop_area(
-        rng, sh, sw, text_polys, text_tags, crop_background=False)
+    ch, cw, polys2, (tags2,), rect = padded_crop_area(
+        rng, sh, sw, text_polys, (text_tags,), crop_background=False,
+        **crop_args)
     out["crop"] = rect
     if polys2.shape[0] == 0:
         out["status"] = "none_no_polys"

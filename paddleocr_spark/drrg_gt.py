@@ -31,7 +31,11 @@ Shared helpers: the reference copies vector_slope, find_head_tail and
 reorder_poly_edge verbatim from fce_targets.py (plus a 1e-8 on the
 >4-point arm's edge-distance normaliser), so this module imports them
 from ``fce_gt`` and passes ``dist_eps=_EPS``.  The text-region mask
-stays local: DRRG fills even-odd polygons where FCE fills bboxes.
+stays local: DRRG fills even-odd polygons where FCE fills bboxes.  The
+locality-aware NMS walk and the Sutherland-Hodgman clip are
+``kernels.locality_aware_nms`` and ``kernels.convex_clip``, the ones
+the EAST, SAST and FCE post-processes use; only DRRG's IoU (the exact
+convex clip of two quads) is defined here.
 
 Reference: hoonisone/PaddleOCR ``ppocr/data/imaug/drrg_targets.py``
   vector helpers :58-81        find_head_tail :83-169 (= fce_gt)
@@ -51,10 +55,11 @@ import numpy as np
 from numpy.linalg import norm
 
 from .fce_gt import reorder_poly_edge, vector_slope
+from .kernels import convex_clip, locality_aware_nms, shoelace2
 
 __all__ = [
     "fill_poly", "polyline8", "connected_components8", "erode_min",
-    "convex_intersect_area", "la_nms_quads", "drrg_targets_doc",
+    "la_nms_quads", "drrg_targets_doc",
     "drrg_gt_rows_for_doc", "DRRG_DEFAULTS",
 ]
 
@@ -234,78 +239,11 @@ def erode_min(img: np.ndarray, ksize: int) -> np.ndarray:
     return out
 
 
-def _area2(pts) -> float:
-    """2x signed shoelace area of a list of (x, y) tuples."""
-    s = 0.0
-    n = len(pts)
-    for i in range(n):
-        x0, y0 = pts[i]
-        x1, y1 = pts[(i + 1) % n]
-        s += x0 * y1 - y0 * x1
-    return s
-
-
-def _clip_convex(a, b):
-    """Sutherland-Hodgman: clip CCW polygon ``a`` by CCW polygon ``b``
-    (lists of (x, y)); pure python — this is the NMS hot loop."""
-    out = a
-    nb = len(b)
-    for i in range(nb):
-        if not out:
-            return out
-        cx, cy = b[i]
-        dx, dy = b[(i + 1) % nb]
-        ex, ey = dx - cx, dy - cy
-        inp = out
-        out = []
-        sides = [ex * (py - cy) - ey * (px - cx) for px, py in inp]
-        m = len(inp)
-        for j in range(m):
-            k = j + 1 if j + 1 < m else 0
-            sp, sq = sides[j], sides[k]
-            if sp >= 0:
-                out.append(inp[j])
-            if (sp > 0 > sq) or (sp < 0 < sq):
-                t = sp / (sp - sq)
-                px, py = inp[j]
-                qx, qy = inp[k]
-                out.append((px + t * (qx - px), py + t * (qy - py)))
-    return out
-
-
-def poly_area(pts) -> float:
-    """Absolute shoelace area (shapely Polygon(...).area for simple
-    polys); accepts an (N, 2) array or a list of tuples."""
-    if isinstance(pts, np.ndarray):
-        pts = [(float(x), float(y)) for x, y in pts.reshape(-1, 2)]
-    return abs(_area2(pts)) / 2.0
-
-
-def convex_intersect_area(a, b) -> float:
-    """Intersection area of two CONVEX polygons: Sutherland-Hodgman
-    clip + shoelace (shapely's Polygon.intersection(...).area for the
-    convex quads DRRG emits)."""
-    a = [(float(x), float(y))
-         for x, y in np.asarray(a, dtype=np.float64).reshape(-1, 2)]
-    b = [(float(x), float(y))
-         for x, y in np.asarray(b, dtype=np.float64).reshape(-1, 2)]
-    if _area2(a) < 0:
-        a = a[::-1]
-    if _area2(b) < 0:
-        b = b[::-1]
-    out = _clip_convex(a, b)
-    if len(out) < 3:
-        return 0.0
-    return abs(_area2(out)) / 2.0
-
-
 def _quad_iou(g, p) -> float:
     """locality_aware_nms.intersection(g, p) over convex 9-col quads
     (pure-python hot path with an AABB quick-reject)."""
-    ga = [(float(g[0]), float(g[1])), (float(g[2]), float(g[3])),
-          (float(g[4]), float(g[5])), (float(g[6]), float(g[7]))]
-    pa = [(float(p[0]), float(p[1])), (float(p[2]), float(p[3])),
-          (float(p[4]), float(p[5])), (float(p[6]), float(p[7]))]
+    ga = g[:8].reshape(4, 2).tolist()
+    pa = p[:8].reshape(4, 2).tolist()
     gx = [q[0] for q in ga]
     gy = [q[1] for q in ga]
     px = [q[0] for q in pa]
@@ -313,13 +251,13 @@ def _quad_iou(g, p) -> float:
     if (max(gx) < min(px) or max(px) < min(gx)
             or max(gy) < min(py) or max(py) < min(gy)):
         return 0.0
-    if _area2(ga) < 0:
+    if shoelace2(ga) < 0:
         ga = ga[::-1]
-    if _area2(pa) < 0:
+    if shoelace2(pa) < 0:
         pa = pa[::-1]
-    out = _clip_convex(ga, pa)
-    inter = abs(_area2(out)) / 2.0 if len(out) >= 3 else 0.0
-    union = abs(_area2(ga)) / 2.0 + abs(_area2(pa)) / 2.0 - inter
+    out = convex_clip(ga, pa)
+    inter = abs(shoelace2(out)) / 2.0 if len(out) >= 3 else 0.0
+    union = abs(shoelace2(ga)) / 2.0 + abs(shoelace2(pa)) / 2.0 - inter
     if union == 0:
         return 0.0
     return inter / union
@@ -327,50 +265,12 @@ def _quad_iou(g, p) -> float:
 
 def la_nms_quads(polys: np.ndarray, thres: float) -> np.ndarray:
     """lanms.merge_quadrangle_n9 via the reference's own pure-python
-    equivalent (locality_aware_nms.py:173-193 nms_locality + :55-70
-    standard_nms + :46-52 weighted_merge) over N x 9 quads.
-    DELIBERATE DEVIATION (as in kernels.nms_locality): the score
-    argsort is stable — DRRG scores are merge counts, all ties."""
-    S = []
-    p = None
-    for row in np.asarray(polys, dtype=np.float64):
-        g = row.copy()
-        if p is not None and _quad_iou(g, p) > thres:
-            g[:8] = (g[8] * g[:8] + p[8] * p[:8]) / (g[8] + p[8])
-            g[8] = g[8] + p[8]
-            p = g
-        else:
-            if p is not None:
-                S.append(p)
-            p = g
-    if p is not None:
-        S.append(p)
-    if len(S) == 0:
-        return np.array([])
-    S = np.array(S)
-    # Vectorized AABB prefilter for the standard-NMS sweep: pairs whose
-    # bounding boxes are disjoint have _quad_iou == 0.0 exactly (the
-    # same quick-reject _quad_iou itself performs), so 0.0 <= thres
-    # keeps them without paying the per-call Python quad construction.
-    # Only AABB-overlapping pairs run the full clip walk — identical
-    # keep set, ~30x fewer _quad_iou calls on dense docs.
-    xlo = S[:, 0:8:2].min(axis=1)
-    xhi = S[:, 0:8:2].max(axis=1)
-    ylo = S[:, 1:8:2].min(axis=1)
-    yhi = S[:, 1:8:2].max(axis=1)
-    order = list(np.argsort(S[:, 8], kind="stable")[::-1])
-    keep = []
-    while order:
-        i = order.pop(0)
-        keep.append(i)
-        if not order:
-            break
-        rest = np.asarray(order)
-        disjoint = ((xhi[i] < xlo[rest]) | (xhi[rest] < xlo[i])
-                    | (yhi[i] < ylo[rest]) | (yhi[rest] < ylo[i]))
-        order = [t for t, d in zip(order, disjoint)
-                 if d or _quad_iou(S[i], S[t]) <= thres]
-    return S[keep]
+    equivalent: the shared ``kernels.locality_aware_nms`` walk over
+    N x 9 float64 quads with the exact convex-clip IoU. Its stable
+    score argsort matters here: DRRG scores are merge counts, all
+    ties."""
+    return locality_aware_nms(np.asarray(polys, dtype=np.float64), thres,
+                              _quad_iou)
 
 
 # ---------------------------------------------------------------------------

@@ -70,6 +70,7 @@ from .operators import table as TBL
 from .pipeline import (det_filter, det_keep_predicate, drop_score_filter,
                        explode_spans, extract, score_keep_predicate,
                        strip_styles, with_geometry)
+from .sources.readers import sf_table
 from .synth import synth_spans
 
 # ---------------------------------------------------------------------------
@@ -186,20 +187,8 @@ def _fixture_sql(name: str, select: str) -> str:
     return f"SELECT {select} FROM read_parquet('{path}')"
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-
-
-def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-
-
 def _spans_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return explode_spans(synth_spans(_docs(spark, sf_dir)))
+    return explode_spans(synth_spans(sf_table(spark, sf_dir, "documents")))
 
 
 def _spans_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -401,7 +390,7 @@ def q_det_clip_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-of-bounds / fractional coords and sub-4px slivers so every branch
     filters something."""
     h_img, w_img = DET_CLIP_SHAPE
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 4)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 4)
     x1 = ((F.col("l_partkey") % 50) * 20 - 60).cast("double") + 0.5
     y1 = ((F.col("l_suppkey") % 40) * 18 - 40).cast("double") + 0.25
     w = ((F.col("l_orderkey") % 15) * 3).cast("double")
@@ -437,14 +426,14 @@ def q_style_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_flagship_span_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end invariant: per-doc span count of the REAL pipeline output
     (kernels included) == SQL-derivable survivor count."""
-    out = extract(synth_spans(_docs(spark, sf_dir)))
+    out = extract(synth_spans(sf_table(spark, sf_dir, "documents")))
     return out.select(
         "doc_id", F.size("spans").cast("long").alias("n_spans"))
 
 
 def q_flagship_kind_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end invariant #2: per-doc kind histogram of the pipeline output."""
-    out = extract(synth_spans(_docs(spark, sf_dir)))
+    out = extract(synth_spans(sf_table(spark, sf_dir, "documents")))
     return (out.select("doc_id", F.explode("spans").alias("s"))
             .groupBy("doc_id", F.col("s.kind").alias("kind"))
             .agg(F.count("*").cast("long").alias("n")))
@@ -456,7 +445,7 @@ def q_flagship_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected-output fixture computed single-node by tools/make_fixtures.py;
     pytest additionally checks span-sequence equality vs the pandas oracle
     (tests/test_pipeline.py)."""
-    out = extract(synth_spans(_docs(spark, sf_dir)))
+    out = extract(synth_spans(sf_table(spark, sf_dir, "documents")))
     return out.select(
         "doc_id", F.posexplode("spans").alias("pos", "s")
     ).select(
@@ -472,7 +461,7 @@ def q_flagship_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_union_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 SimpleDataSet analog: multi-source union + deterministic
     ratio-sampling (mod-based stand-in for seeded sample)."""
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     a = (docs.filter(F.col("source") == "src0")
          .select("doc_id", "source", F.lit("fileA").alias("file_tag")))
     b = (docs.filter(F.col("doc_id") % 10 < 3)
@@ -484,7 +473,7 @@ def q_topk_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4 NMS top-k analog: per-class rank ≤ 5 by score (window rank)."""
     w = Window.partitionBy("event_type").orderBy(
         F.col("value").desc(), F.col("event_id"))
-    return (_events(spark, sf_dir)
+    return (sf_table(spark, sf_dir, "events")
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= 5)
             .select("event_type", F.col("rank").cast("long").alias("rank"),
@@ -515,7 +504,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition → in-partition sort → window → partial+final agg.
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    e = (_events(spark, sf_dir)
+    e = (sf_table(spark, sf_dir, "events")
          .select("user_id", "ts", "event_id", "value")
          .withColumn("prev_ts", F.lag("ts").over(w))
          .withColumn("ns", F.when(
@@ -552,7 +541,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     table has no (user_id, ts) duplicates at any SF, so tie-order
     between engines cannot differ.)
     """
-    e = (_events(spark, sf_dir)
+    e = (sf_table(spark, sf_dir, "events")
          .filter(F.col("event_type").isin("click", "purchase"))
          .select("event_id", "user_id", "ts", "value",
                  F.when(F.col("event_type") == "click", 0)
@@ -701,7 +690,7 @@ def _cm_argmin(j: DataFrame, extra_aggs=()) -> DataFrame:
 
 def _cm_boxes_cells(spark: SparkSession, sf_dir: str):
     """The shared synthetic box/cell universe for the J1 family."""
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 4)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 4)
     boxes = li.select(
         (F.col("l_orderkey") % 50).alias("t_id"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("box_id"),
@@ -837,7 +826,7 @@ def q_e2e_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     IoU>0.5 + per-pair edit distance. Gt/pred synthesized from lineitem;
     preds for l_linenumber ≤ 2 are the gt box jittered by 2px (match), the
     rest shifted far away (no match)."""
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 4)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 4)
     base = li.select(
         (F.col("l_orderkey") % 50).alias("t_id"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("gid"),
@@ -882,7 +871,7 @@ def q_e2e_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 mean-over-list analog via the aggregate() higher-order fn: ordered
     fold over the embedding array (predict_system.py:202's np.mean)."""
-    vecs = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    vecs = sf_table(spark, sf_dir, "embeddings")
     return vecs.select(
         "vec_id",
         F.size("embedding").cast("long").alias("dim"),
@@ -913,8 +902,8 @@ def q_dim_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan). revenue is rounded to 2dp, not the module's usual 4dp:
     at ~1e8 sums a 4dp boundary would sit inside double-summation-order
     noise and make the parity compare flaky."""
-    li = _lineitem(spark, sf_dir)
-    part = spark.read.parquet(os.path.join(sf_dir, "part.parquet")).select(
+    li = sf_table(spark, sf_dir, "lineitem")
+    part = sf_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand")
     j = li.join(F.broadcast(part),
                 li.l_partkey == part.p_partkey)
@@ -928,7 +917,7 @@ def q_dim_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rec_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 RecMetric: exact-match acc (space-stripped) + avg normalized edit
     distance (rec_metric.py:61-160) over deterministic pred/target pairs."""
-    d = _docs(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("tgt"),
         F.when(F.col("doc_id") % 3 == 0, F.col("text"))
         .otherwise(F.translate("text", "ae", "ea")).alias("pred"))
@@ -954,7 +943,7 @@ def q_distillation_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged long-format (metric, value) table, one grouped agg per key
     (a union of two map-side-combinable aggregations — no extra
     exchange vs running the metrics separately at 100 TB)."""
-    docs = _docs(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
 
     def _pairs(key: str):
         if key == "Student":
@@ -989,7 +978,7 @@ def q_distillation_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_det_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 DetMetric.combine_results: global precision/recall/hmean from
     per-image matched counts (det_metric.py:24-79)."""
-    d = _docs(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         (F.col("n_chars") % 7 + 1).alias("gt"),
         ((F.col("n_chars") * 3) % 8).alias("det"),
     ).select("gt", "det",
@@ -1010,7 +999,7 @@ def q_ctc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional 180° flip. Round-trip invariant: decoded text == input text
     filtered to the charset; score 1.0 (0.0 for empty)."""
     from .operators.recognize import classify_rotate, recognize
-    spans = _docs(spark, sf_dir).select(
+    spans = sf_table(spark, sf_dir, "documents").select(
         F.format_string("doc_%07d", F.col("doc_id")).alias("doc_id"),
         F.lit(0).cast("long").alias("span_idx"),
         "text",
@@ -1028,7 +1017,7 @@ def q_char_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is a committed fixture (tools/make_fixtures.py); pytest verifies
     the distributed counts against a single-node run (tests/test_metrics.py)."""
     from .functions.metrics import char_prf
-    pairs = _docs(spark, sf_dir).select(
+    pairs = sf_table(spark, sf_dir, "documents").select(
         F.when(F.col("doc_id") % 4 == 0, F.col("text"))
         .otherwise(F.translate("text", "aeo", "eoa")).alias("pred"),
         F.col("text").alias("target"))
@@ -1041,7 +1030,7 @@ def q_det_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative: the oracle is a committed fixture (tools/make_fixtures.py);
     pytest covers the kernel on hand-built cases."""
     from .functions.metrics import det_eval
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 4)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 4)
     base = li.select(
         F.format_string("doc_%04d", F.col("l_orderkey") % 200)
         .alias("doc_id"),
@@ -1084,7 +1073,7 @@ def q_det_fce_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated per row so the hash pins the curve AND both folds."""
     from .functions.metrics import det_eval_per_doc
 
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 4)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 4)
     base = li.select(
         F.format_string("doc_%04d", F.col("l_orderkey") % 200)
         .alias("doc_id"),
@@ -1209,7 +1198,7 @@ def _ct_universe(spark: SparkSession, sf_dir: str):
     '###' don't-care for oid%3=0 (exercises detection_filtering). Sites
     are spread on a 300x200 grid; occasional collisions just make
     harder inputs — both engines see identical geometry."""
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 4)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 4)
     base = li.select(
         F.format_string("doc_%04d", F.col("l_orderkey") % 200)
         .alias("doc_id"),
@@ -1301,7 +1290,7 @@ def q_teds(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is a committed fixture (tools/make_fixtures.py); pytest pins
     hand-computed scores (tests/test_teds.py)."""
     from .functions.teds import teds
-    docs = _docs(spark, sf_dir).select(
+    docs = sf_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("pair_id"),
         F.expr("slice(filter(split(lower(text), ' '), x -> x != ''), 1, 6)")
         .alias("w"))
@@ -1331,7 +1320,7 @@ def q_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tools/make_fixtures.py); pytest verifies the distributed result equals
     the kernel run single-node (tests/test_operators.py)."""
     from .operators.spatial import nms_per_class
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 3)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 3)
     boxes = li.select(
         F.format_string("doc_%03d", F.col("l_orderkey") % 20).alias("doc_id"),
         F.when(F.col("l_partkey") % 2 == 0, "text").otherwise("table")
@@ -1349,7 +1338,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7 DetResizeForTest.resize_image_type0 over decoded media dims
     (limit_side_len=960, limit_type='max' — predict_det.py:66-74)."""
     from .multimodal import media_features, media_resize
-    feats = media_features(synth_spans(_docs(spark, sf_dir)))
+    feats = media_features(synth_spans(sf_table(spark, sf_dir, "documents")))
     return media_resize(feats)
 
 
@@ -1365,7 +1354,8 @@ def q_grapheme_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs must be atomic-typed (pinned by
     tests/test_plans.py::test_registry_outputs_are_atomic)."""
     from .functions.grapheme import grapheme_compose
-    d = grapheme_compose(_docs(spark, sf_dir).select("doc_id", "text"))
+    d = grapheme_compose(
+        sf_table(spark, sf_dir, "documents").select("doc_id", "text"))
     return d.select(
         "doc_id", "composed",
         F.expr("concat_ws(',', transform(conf, x -> "
@@ -1386,7 +1376,8 @@ def q_rec_metric_grapheme(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (channel, acc, norm_edit_dis, n) ordered by channel."""
     from .functions.grapheme import grapheme_decompose
 
-    dec = grapheme_decompose(_docs(spark, sf_dir).select("doc_id", "text"))
+    dec = grapheme_decompose(
+        sf_table(spark, sf_dir, "documents").select("doc_id", "text"))
     chan = dec.select("doc_id", F.expr(
         "stack(4, 'character', ktext, 'initial', initial, "
         "'medial', medial, 'final', final) AS (channel, raw)"))
@@ -1431,7 +1422,8 @@ def q_utf8_compose(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-decimal string — gate outputs must be atomic-typed for the
     driver's pandas canonicalizer (same trap as grapheme_compose)."""
     from .functions.grapheme import utf8_compose
-    d = utf8_compose(_docs(spark, sf_dir).select("doc_id", "text"))
+    d = utf8_compose(
+        sf_table(spark, sf_dir, "documents").select("doc_id", "text"))
     return d.select(
         "doc_id", "composed",
         F.expr("concat_ws(',', transform(ps, x -> "
@@ -1452,7 +1444,8 @@ def q_e2e_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.dedup import _cached
 
     def build_base() -> DataFrame:
-        li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 4)
+        li = sf_table(spark, sf_dir, "lineitem").filter(
+            F.col("l_linenumber") <= 4)
         b = li.select(
             (F.col("l_orderkey") % 50).alias("t_id"),
             (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("gid"),
@@ -1540,7 +1533,7 @@ def q_pse_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc kernel pyramids (first 200 docs); committed-fixture oracle
     (BFS expansion is iterative)."""
     from .operators.spatial import pse_detect
-    docs = _docs(spark, sf_dir).select("doc_id").filter(
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") < 200)
     return pse_detect(docs)
 
@@ -1553,7 +1546,7 @@ def q_drrg_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster order (the reference's own set-pop order is random —
     kernels.drrg_boundaries docstring)."""
     from .operators.spatial import drrg_detect
-    docs = _docs(spark, sf_dir).select("doc_id").filter(
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") < 200)
     return drrg_detect(docs)
 
@@ -1565,7 +1558,7 @@ def q_fce_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed-fixture oracle (hole fill, CC, and the three-level poly
     NMS are iterative)."""
     from .operators.spatial import fce_detect
-    docs = _docs(spark, sf_dir).select("doc_id").filter(
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") < 120)
     return fce_detect(docs)
 
@@ -1576,7 +1569,7 @@ def q_sast_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed-fixture oracle (quad NMS + TCO clustering are
     iterative)."""
     from .operators.spatial import sast_detect
-    docs = _docs(spark, sf_dir).select("doc_id").filter(
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") < 200)
     return sast_detect(docs)
 
@@ -1587,7 +1580,7 @@ def q_ct_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc kernel/offset/score maps (first 200 docs); committed-fixture
     oracle (4-CC + centripetal propagation are iterative)."""
     from .operators.spatial import ct_detect
-    docs = _docs(spark, sf_dir).select("doc_id").filter(
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") < 200)
     return ct_detect(docs)
 
@@ -1598,7 +1591,7 @@ def q_db_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc probability maps (first 200 docs); committed-fixture oracle
     (connected-component labeling is iterative)."""
     from .operators.spatial import db_detect
-    docs = _docs(spark, sf_dir).select("doc_id").filter(
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") < 200)
     return db_detect(docs)
 
@@ -1609,7 +1602,7 @@ def q_east_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     maps (first 200 docs); committed-fixture oracle (sequential merge
     scan is iterative)."""
     from .operators.spatial import east_detect
-    docs = _docs(spark, sf_dir).select("doc_id").filter(
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") < 200)
     return east_detect(docs)
 
@@ -1618,7 +1611,7 @@ def q_east_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2 EAST locality-aware NMS (sequential weighted-merge scan +
     standard NMS) per doc; committed-fixture oracle (iterative kernel)."""
     from .operators.spatial import east_nms_locality
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 3)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 3)
     boxes = li.select(
         F.format_string("doc_%03d", F.col("l_orderkey") % 25).alias("doc_id"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("box_id"),
@@ -1635,7 +1628,7 @@ def q_preprocess_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     real Otsu threshold (relational cumulative-window argmax) on
     deterministic fake pixels (multimodal.preprocess_image_stats)."""
     from .multimodal import preprocess_image_stats
-    refs = (synth_spans(_docs(spark, sf_dir))
+    refs = (synth_spans(sf_table(spark, sf_dir, "documents"))
             .select(F.explode("spans").alias("s"))
             .filter(F.col("s.kind") == "media")
             .select(F.col("s.media_ref").alias("media_ref")).distinct())
@@ -1658,7 +1651,7 @@ def q_cls_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     noisy = F.expr(
         "substring(md5(CAST(doc_id AS STRING)), 2, 1) = '0'")
     angle_pred = F.when(noisy, (angle_true + 1) % 4).otherwise(angle_true)
-    d = _docs(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         angle_true.alias("t"), angle_pred.alias("p"))
     return d.agg(
         F.round(F.sum(F.when(F.col("p") == F.col("t"), 1).otherwise(0))
@@ -1674,7 +1667,7 @@ def q_cnt_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     ClsMetric. Target = n_chars % 50 (the count label); the noisy
     counter stand-in over-counts by one when the THIRD md5 hex digit is
     '0' (~1/16 of docs)."""
-    d = _docs(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         (F.col("n_chars") % 50).alias("t"),
         ((F.col("n_chars") % 50) + F.when(F.expr(
             "substring(md5(CAST(doc_id AS STRING)), 3, 1) = '0'"),
@@ -1710,7 +1703,7 @@ def q_kie_f1_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~15/16 of the time and the confusion matrix is non-degenerate.
     Emits one row per scored class (cls, f1, hmean) with hmean repeated
     — the hash pins every per-class F1 AND the mean."""
-    d = _docs(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(
             "((instr('0123456789abcdef', substring(md5(CAST(doc_id AS "
@@ -1794,7 +1787,7 @@ def q_ser_token_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         return f"({hx('#g', pos, 2)}) >= 8"
 
     def entities(which: str):
-        base = _docs(spark, sf_dir).select(
+        base = sf_table(spark, sf_dir, "documents").select(
             "doc_id",
             F.least(F.greatest((F.col("n_chars") % SER_MAX_POS) + 2,
                                F.lit(3)),
@@ -1848,7 +1841,7 @@ def q_re_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"doc_id AS STRING), '{salt}', CAST({pos} AS STRING))), "
                 f"{idx}, 1)) - 1")
 
-    base = _docs(spark, sf_dir).select(
+    base = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.least(F.greatest((F.col("n_chars") % SER_MAX_POS) + 2, F.lit(3)),
                 F.lit(SER_MAX_POS)).alias("n_pos"))
@@ -1919,7 +1912,7 @@ def q_can_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the kernels-imported-twice rule)."""
     from .functions.metrics import can_batch_stats
 
-    d = (_docs(spark, sf_dir)
+    d = (sf_table(spark, sf_dir, "documents")
          .select("doc_id", F.expr(
              f"slice(filter(split(lower(coalesce(text, '')), ' '), "
              f"w -> w != ''), 1, {CAN_MAX_WORDS})").alias("label"))
@@ -1954,7 +1947,7 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-by-ref, Arrow batch shape, and feature explode are the real
     production plumbing (paddleocr_spark/multimodal.py)."""
     from .multimodal import media_features
-    feats = media_features(synth_spans(_docs(spark, sf_dir)))
+    feats = media_features(synth_spans(sf_table(spark, sf_dir, "documents")))
     return feats.select(
         "media_ref", F.col("width").cast("long").alias("width"),
         F.col("height").cast("long").alias("height"),
@@ -1992,7 +1985,7 @@ def _media_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.dedup import _cached
 
     def build() -> DataFrame:
-        return (synth_spans(_docs(spark, sf_dir))
+        return (synth_spans(sf_table(spark, sf_dir, "documents"))
                 .select(F.explode("spans").alias("s"))
                 .filter(F.col("s.kind") == "media")
                 .select(F.col("s.media_ref").alias("media_ref"))
@@ -2411,7 +2404,7 @@ def _encode_sample_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared deterministic sample texts for the encoder queries: raw
     lengths 0..29 (every reject branch), upper-cased every third doc
     (forced lower-fold)."""
-    return _docs(spark, sf_dir).select(
+    return sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.when(F.col("doc_id") % 3 == 0,
                F.upper(F.expr("substring(text, 1 + doc_id % 7, doc_id % 30)")))
@@ -2473,7 +2466,7 @@ def _table_grammar(spark: SparkSession, sf_dir: str, mod: int) -> DataFrame:
     ``t_id`` has ``2 + t_id % mod`` cells drawn from the five td token
     variants, and per-cell bbox/ntokens flags (the grammar both
     TableLabelEncode gate queries and their DuckDB twins share)."""
-    t = _docs(spark, sf_dir).select(
+    t = sf_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("t_id")).filter("t_id < 50")
     cellv = (f"""transform(sequence(0, 1 + cast(t_id % {mod} as int)), c ->
         CASE cast((t_id + c) % 5 as int)
@@ -2527,7 +2520,7 @@ def q_e2e_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     its doc.  Oracle computes everything closed-form from lineitem."""
     from .functions.labelenc import e2e_label_encode_test
 
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 4)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 4)
     px = ((F.col("l_partkey") % 50) * 20).cast("int")
     py = ((F.col("l_suppkey") % 40) * 15).cast("int")
     rect = F.array(F.array(px, py), F.array(px + 30, py),
@@ -2565,7 +2558,7 @@ def q_det_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .functions.labelenc import det_label_encode
 
-    li = _lineitem(spark, sf_dir).filter(F.col("l_linenumber") <= 5)
+    li = sf_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 5)
     px = ((F.col("l_partkey") % 50) * 20).cast("int")
     py = ((F.col("l_suppkey") % 40) * 15).cast("int")
     rect = F.array(F.array(px, py), F.array(px + 30, py),
@@ -2589,9 +2582,10 @@ def q_det_label_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(array_sort(collect_list(struct(ln, transcription, "
             "points))), b -> struct(b.transcription as transcription, "
             "b.points as points))")).alias("label"))
-    empties = _docs(spark, sf_dir).filter(F.col("doc_id") % 97 == 0).select(
-        F.format_string("empty_%07d", F.col("doc_id")).alias("doc_id"),
-        F.lit("[]").alias("label"))
+    empties = (sf_table(spark, sf_dir, "documents")
+               .filter(F.col("doc_id") % 97 == 0)
+               .select(F.format_string("empty_%07d", F.col("doc_id"))
+                       .alias("doc_id"), F.lit("[]").alias("label")))
     return det_label_encode(labels.unionByName(empties)).select(
         "doc_id", F.col("box_no").cast("long").alias("box_no"),
         "txt", "ignore_tag", "poly")
@@ -2604,7 +2598,7 @@ def _shrink_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-doc rect layouts shared by q_shrink_map and
     q_pse_crop (lineitem-derived; may underflow left/top by up to 5 px —
     exercises validate_polygons clipping)."""
-    li = _lineitem(spark, sf_dir).filter(
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_linenumber") <= 4) & (F.col("l_orderkey") % 11 == 0))
     return li.select(
         F.format_string("doc_%04d", F.col("l_orderkey") % 200)
@@ -2643,7 +2637,8 @@ def q_docx_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 in enumerate(parse_docx(build_docx(stream)))]
 
     return map_rows(
-        synth_spans(ensure_input_parallelism(_docs(spark, sf_dir))),
+        synth_spans(ensure_input_parallelism(
+            sf_table(spark, sf_dir, "documents"))),
         roundtrip, "doc_id string, ord long, kind string, payload string")
 
 
@@ -2750,7 +2745,7 @@ def _border_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-left, may overflow right/bottom (exercises the valid-window
     slicing) but never fully off-canvas (the reference CRASHES there —
     kernels.make_border_map docstring)."""
-    li = _lineitem(spark, sf_dir).filter(
+    li = sf_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_linenumber") <= 4) & (F.col("l_orderkey") % 11 == 0))
     return li.select(
         F.format_string("doc_%04d", F.col("l_orderkey") % 200)
@@ -2827,7 +2822,7 @@ def _lmdb_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
            for e in ("env_a", "env_b")):
         return dest
     w = Window.partitionBy(F.col("doc_id") % 2).orderBy("doc_id")
-    rows = (_docs(spark, sf_dir)
+    rows = (sf_table(spark, sf_dir, "documents")
             .select("doc_id", F.substring("text", 1, 20).alias("t"))
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= _LMDB_MAX_DOCS_PER_ENV)
@@ -2882,7 +2877,8 @@ def _over_texts(op: Callable[[DataFrame], DataFrame]) \
         -> Callable[[SparkSession, str], DataFrame]:
     """Gate query applying ``op`` to the documents' ``(doc_id, text)``."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return op(_docs(spark, sf_dir).select("doc_id", "text"))
+        return op(
+            sf_table(spark, sf_dir, "documents").select("doc_id", "text"))
     return run
 
 

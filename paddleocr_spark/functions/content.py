@@ -59,7 +59,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .textfns import QUALITY_STOPWORDS, docs_table, words_col
+from ..sources.readers import sf_table
+from .textfns import QUALITY_STOPWORDS, words_col
 
 #: jusText published defaults (justext/core.py, classify_paragraphs /
 #: revise_paragraph_classification keyword defaults).
@@ -186,7 +187,7 @@ def main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     # block regex-parse are per-char work attached to the scan stage,
     # and the sf corpus arrives as ONE file/task (the utf8-chain lesson,
     # PERF.md). At production scale the scan is already wide → no-op.
-    base = (ensure_input_parallelism(docs_table(spark, sf_dir))
+    base = (ensure_input_parallelism(sf_table(spark, sf_dir, "documents"))
             .select("doc_id",
                     F.col("doc_id").cast("int").alias("did"),
                     words_col().alias("wl"))
@@ -342,7 +343,7 @@ def _read_blocks(spark: SparkSession, sf_dir: str,
     readability/boilerpipe extractors)."""
     from ..pipeline import ensure_input_parallelism
 
-    base = (ensure_input_parallelism(docs_table(spark, sf_dir))
+    base = (ensure_input_parallelism(sf_table(spark, sf_dir, "documents"))
             .select("doc_id",
                     F.col("doc_id").cast("int").alias("did"),
                     words_col().alias("wl"))

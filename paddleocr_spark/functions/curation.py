@@ -47,8 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.readers import sf_table
 from .retrieval import _doc_words
-from .textfns import docs_table
 
 #: Decontamination shingle width (words), the deterministic eval-split
 #: rate (md5-threshold, '40000000'/2^32 = exactly 25%), and the overlap
@@ -147,7 +147,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every document is scored (target docs too — resampling draws from
     the whole corpus). Empty documents carry weight 0.0.
     """
-    d = docs_table(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "doc_id", "lang",
         F.expr("filter(split(lower(text), ' '), w -> w != '')").alias("w"))
     tok = d.select("doc_id", "lang", F.explode("w").alias("v"))
@@ -205,7 +205,7 @@ def adaptive_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textfns import quality_score
 
     qs = quality_score(spark, sf_dir).select("doc_id", "quality")
-    d = (docs_table(spark, sf_dir).select("doc_id", "lang")
+    d = (sf_table(spark, sf_dir, "documents").select("doc_id", "lang")
          .join(qs, "doc_id"))
     win = Window.partitionBy("lang").orderBy("quality", "doc_id")
     ranked = (d.withColumn("rk", F.row_number().over(win))
@@ -228,7 +228,7 @@ def pack_shards(spark: SparkSession, sf_dir: str,
     sequential-packing contract). Emits the shard id, the doc's starting
     offset within its shard, and its word count.
     """
-    d = docs_table(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "doc_id", "source",
         F.expr("size(filter(split(lower(text), ' '), w -> w != ''))")
         .cast("long").alias("n_words"))
@@ -279,7 +279,7 @@ def interleaved_pack(spark: SparkSession, sf_dir: str,
     """
     from ..synth import synth_spans
 
-    docs = docs_table(spark, sf_dir)
+    docs = sf_table(spark, sf_dir, "documents")
     inter = synth_spans(docs)
     per = inter.select(
         "doc_id",
@@ -440,7 +440,7 @@ def blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate or rides a broadcast.
     """
     pred = " OR ".join(f"x = '{b}'" for b in BLOCKLIST)
-    return (docs_table(spark, sf_dir)
+    return (sf_table(spark, sf_dir, "documents")
             .select("doc_id",
                     F.expr(
                         f"size(filter(filter(split(lower(text), ' '), "
@@ -475,7 +475,7 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "WHEN doc_id % 3 = 1 THEN concat(text, "
         "  ' mail doc', cast(doc_id AS string), '@example.com') "
         "ELSE text END")
-    d = docs_table(spark, sf_dir).select("doc_id",
+    d = sf_table(spark, sf_dir, "documents").select("doc_id",
                                          planted.alias("t0"))
     n = lambda c, p: F.size(F.regexp_extract_all(c, F.lit(p), F.lit(0))) \
         .cast("long")
@@ -509,7 +509,7 @@ def sampling_temperature(spark: SparkSession, sf_dir: str,
     1-row-broadcast aggregate over it — nothing here grows with the
     corpus except the first aggregate's input.
     """
-    per_lang = (docs_table(spark, sf_dir)
+    per_lang = (sf_table(spark, sf_dir, "documents")
                 .select("lang", F.expr(
                     "size(filter(split(lower(text), ' '), w -> w != ''))")
                     .cast("long").alias("nw"))
@@ -646,7 +646,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textfns import gopher_rules
 
     labels = gopher_rules(spark, sf_dir).select("doc_id", "gopher_pass")
-    d = docs_table(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr("filter(split(lower(text), ' '), w -> w != '')").alias("w"))
     tok = d.select("doc_id", F.explode("w").alias("v"))
@@ -699,7 +699,7 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (lang, source, n_docs, n_words, n_chars, avg_words 4dp),
     ordered by (lang, source) with NULLs first within each level.
     """
-    d = docs_table(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "lang", "source", "n_chars",
         F.size(F.expr("filter(split(lower(text), ' '), w -> w != '')"))
         .cast("long").alias("nw"))

@@ -22,10 +22,10 @@ synthetic corpus.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.readers import sf_table
 
 #: MinHash parameters: K hashes in B bands of R rows (K = B*R).
 MINHASH_K = 16
@@ -40,13 +40,9 @@ DUP_EVERY = 5
 NEAR_EVERY = 7
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
 def noisy_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents ∪ injected exact dups ∪ injected near dups (deterministic)."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id", "text")
     exact = (docs.filter(F.col("doc_id") % DUP_EVERY == 0)
              .select((F.col("doc_id") + DUP_OFFSET).alias("doc_id"), "text"))
     near = (docs.filter(F.col("doc_id") % NEAR_EVERY == 0)
@@ -379,7 +375,7 @@ def bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     bits = _bloom_bit_exprs("dg")
     arr = "array(" + ", ".join(bits) + ")"
-    seen = (_docs(spark, sf_dir)
+    seen = (sf_table(spark, sf_dir, "documents")
             .select(F.md5("text").alias("dg"))
             .select(F.explode(F.expr(arr)).alias("bit"))
             .distinct())

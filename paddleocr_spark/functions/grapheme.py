@@ -26,9 +26,7 @@ keeps the original ASCII char (the non-Hangul path).
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import HANGUL_FINALS, HANGUL_INITIALS, HANGUL_MEDIALS
@@ -217,10 +215,6 @@ def grapheme_ned(docs: DataFrame) -> DataFrame:
         F.round(1.0 - F.col("g_sum") / (F.col("n") + eps), 4)
         .alias("g_ned"),
         F.col("n").cast("long").alias("n"))
-
-
-def docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
 # ---------------------------------------------------------------------------

@@ -61,8 +61,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.readers import sf_table
 from .curation import LINE_WIDTH_WORDS
-from .textfns import docs_table, words_col
+from .textfns import words_col
 
 #: Rae et al. (2021) Table A1 thresholds.
 REP_MAX_DUP_LINE_FRAC = 0.30
@@ -91,7 +92,7 @@ def repetition_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (entry_queries ``gopher_repetition``).
     """
     pw = PARA_LINES * LINE_WIDTH_WORDS
-    docs = (docs_table(spark, sf_dir)
+    docs = (sf_table(spark, sf_dir, "documents")
             .select("doc_id",
                     F.col("doc_id").cast("int").alias("did"),
                     words_col().alias("w0"))

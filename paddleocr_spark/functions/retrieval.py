@@ -40,7 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .textfns import docs_table, words_col
+from ..sources.readers import sf_table
+from .textfns import words_col
 
 #: BM25 free parameters (Robertson/Sparck Jones defaults) + the fixed
 #: demo query. The terms are corpus-vocabulary words so the ranking is
@@ -67,7 +68,7 @@ INDEX_POSTINGS_CAP = 20
 
 
 def _doc_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return docs_table(spark, sf_dir).select(
+    return sf_table(spark, sf_dir, "documents").select(
         "doc_id", words_col().alias("w"))
 
 
@@ -280,7 +281,7 @@ def weighted_sample(spark: SparkSession, sf_dir: str,
         F.expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), "
                "16, 10) AS LONG)").alias("h"),
         F.size("w").cast("long").alias("weight"))
-    langs = docs_table(spark, sf_dir).select("doc_id", "lang")
+    langs = sf_table(spark, sf_dir, "documents").select("doc_id", "lang")
     keyed = (d.join(langs, "doc_id")
              .where(F.col("weight") > 0)
              .withColumn("u", (F.col("h") + 1.0) / float(1 << 60))
@@ -308,7 +309,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     (that's the contract — quota-exact sampling needs a global rank, which
     at 10^12 rows is a sort you don't want).
     """
-    d = docs_table(spark, sf_dir)
+    d = sf_table(spark, sf_dir, "documents")
     hkey = F.substring(
         F.md5(F.concat_ws(":", "lang", F.col("doc_id").cast("string"))),
         1, 8)

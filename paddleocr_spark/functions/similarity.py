@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.readers import sf_table
+
 #: Banded hyperplane LSH: B independent band tables (OR), R planes each (AND).
 LSH_BANDS = 4
 #: Target expected bucket occupancy — R = ceil(log2(n / target)).
@@ -58,7 +60,7 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors the scan is already wide → no-op check."""
     from ..pipeline import ensure_input_parallelism
     return ensure_input_parallelism(
-        spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+        sf_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding"))
 
 

@@ -37,7 +37,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .textfns import docs_table
+from ..sources.readers import sf_table
+
 
 #: Register-index bits: m = 2^p registers per group.
 HLL_P = 12
@@ -86,7 +87,7 @@ def hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces at 10^12 — at production scale you ship ONLY the register
     table.
     """
-    d = docs_table(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "doc_id", "lang",
         F.expr("filter(split(lower(text), ' '), w -> w != '')").alias("w"))
     sh = (d.where(F.expr("size(w) >= 3"))
@@ -173,7 +174,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship only the D*W counter table; the exact branch exists for the
     oracle's error columns.
     """
-    d = docs_table(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr("filter(split(lower(text), ' '), w -> w != '')").alias("w"))
     stream = (d.where(F.expr("size(w) >= 2"))
@@ -280,7 +281,7 @@ def qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves.
     """
     n_top = 1 << QD_L
-    d = docs_table(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "lang",
         F.least(F.expr(
             "CAST(size(filter(split(lower(text), ' '), w -> w != '')) "

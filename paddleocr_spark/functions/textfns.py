@@ -14,10 +14,10 @@ names and rounding are part of the contract.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.readers import sf_table
 
 #: Stopword sets for the n-gram/stopword lang-ID heuristic. Order is the
 #: tie-break precedence (en > de > fr > es).
@@ -43,10 +43,6 @@ FW = "　" + "".join(chr(c) for c in range(0xFF01, 0xFF5F))
 HW = " " + "".join(chr(c - 0xFEE0) for c in range(0xFF01, 0xFF5F))
 
 
-def docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
 def words_col(text_col: str = "text"):
     """Whitespace tokenization of lowercased text, empty tokens dropped."""
     return F.expr(
@@ -55,7 +51,7 @@ def words_col(text_col: str = "text"):
 
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts: whitespace words + BPE-ish regex tokens."""
-    return docs_table(spark, sf_dir).select(
+    return sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(words_col()).cast("long").alias("n_words"),
         F.size(F.expr(
@@ -85,7 +81,7 @@ def ngram_topk(spark: SparkSession, sf_dir: str,
     [1, 0] (the documented Spark trap — see grapheme_compose_label), so
     short docs are filtered before the transform.
     """
-    w = docs_table(spark, sf_dir).select(words_col().alias("w"))
+    w = sf_table(spark, sf_dir, "documents").select(words_col().alias("w"))
     bi = (w.filter(F.expr("size(w) >= 2"))
           .select(F.explode(F.expr(
               "transform(sequence(1, size(w) - 1), "
@@ -103,7 +99,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     set; predicted language = argmax with fixed precedence en>de>fr>es,
     'und' (undetermined) when all counts are zero.
     """
-    df = docs_table(spark, sf_dir).select(
+    df = sf_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", words_col().alias("w"))
     hits = {}
     for lg, sw in LANG_STOPWORDS.items():
@@ -132,7 +128,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle parity, mirroring how curation pipelines bin documents by score.
     """
     arr = ", ".join(f"'{s}'" for s in QUALITY_STOPWORDS)
-    df = docs_table(spark, sf_dir).select(
+    df = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.length("text").cast("double").alias("n_chars"),
         F.size(words_col()).cast("double").alias("n_words"),
@@ -169,7 +165,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: lexicographic-min MD5 over word 5-gram shingles
     (winnowing-lite); whole-text MD5 when the doc has fewer than 5 words."""
-    df = docs_table(spark, sf_dir).select(
+    df = sf_table(spark, sf_dir, "documents").select(
         "doc_id", "text", words_col().alias("w"))
     return df.select(
         "doc_id",
@@ -184,7 +180,7 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def strq2b(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-width → half-width unicode fold (strQ2B, P14 analog):
     deterministically prefix full-width chars, then fold with translate()."""
-    df = docs_table(spark, sf_dir).select(
+    df = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             F.expr("substring('ＡＢＣＤＥ', CAST(doc_id % 5 AS INT) + 1, 1)"),
@@ -225,7 +221,7 @@ def gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n²) HOF; everything else is codegen expressions. All ratios 4dp.
     """
     from pyspark.sql.window import Window
-    docs = docs_table(spark, sf_dir).select(
+    docs = sf_table(spark, sf_dir, "documents").select(
         "doc_id", words_col().alias("w"))
     base = docs.select(
         "doc_id", "w",

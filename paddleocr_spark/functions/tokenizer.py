@@ -40,7 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .textfns import docs_table
+from ..sources.readers import sf_table
+
 
 #: Number of BPE merge rounds the query trains.
 BPE_MERGES = 8
@@ -63,7 +64,7 @@ _MERGE_FOLD = (
 
 def word_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, n, t): distinct corpus words, frequencies, char tokens."""
-    w = docs_table(spark, sf_dir).select(F.explode(
+    w = sf_table(spark, sf_dir, "documents").select(F.explode(
         F.expr("filter(split(lower(text), ' '), x -> x != '')"))
         .alias("word"))
     return (w.groupBy("word")
@@ -149,7 +150,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str,
     """
     _, toks = _train(spark, sf_dir, k)
     vocab = toks.select("word", F.size("t").cast("long").alias("wt"))
-    d = docs_table(spark, sf_dir).select(
+    d = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr("filter(split(lower(text), ' '), x -> x != '')").alias("w"))
     per_doc = (d.select("doc_id", F.explode("w").alias("word"))

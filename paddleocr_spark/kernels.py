@@ -543,63 +543,92 @@ def otsu_threshold(hist) -> int:
     return best_t
 
 
-def nms_locality(boxes, scores, thres: float = 0.3):
-    """EAST locality-aware NMS over axis-aligned boxes, transcribing
-    ppocr/postprocess/locality_aware_nms.py:173-193 (``nms_locality``) +
-    :56-70 (``standard_nms``) + :45-52 (``weighted_merge``).
+def locality_aware_nms(rows: np.ndarray, thres: float, iou) -> np.ndarray:
+    """The reference's locality-aware NMS, written once for EAST
+    (:func:`nms_locality`), SAST (:func:`_sast_quad_nms`) and DRRG
+    (``drrg_gt.la_nms_quads``): ppocr/postprocess/locality_aware_nms.py
+    :173-193 (``nms_locality``) + :45-52 (``weighted_merge``) + :56-70
+    (``standard_nms``), over rows ``(coords…, score)`` with the coords
+    as (x, y) pairs, in the caller's dtype (SAST merges in float32),
+    and the caller's ``iou(a, b)`` on two such rows.
 
-    Sequential scan in INPUT order (the reference feeds row-major score-map
-    order): the running poly p merges into the next box g whenever
-    IoU(g, p) > thres — merged coords are the score-weighted average,
-    merged score the sum — else p is flushed. The merged set then passes
-    standard NMS (score-descending greedy, suppress IoU > thres). The
-    reference's corner-wise weighted average of axis-aligned rectangles is
-    again an axis-aligned rectangle, so (x1,y1,x2,y2) carries exactly.
+    Sequential scan in INPUT order (the reference feeds row-major
+    score-map order): the running row p merges into the next row g
+    whenever iou(g, p) > thres — merged coords are the score-weighted
+    average, merged score the sum — else p is flushed. The merged set
+    then passes standard NMS (score-descending greedy, suppress
+    iou > thres).
 
-    DELIBERATE DEVIATION (same as hard_nms): standard_nms's score argsort
-    is made stable (reference np.argsort is not), so tied scores pick
-    deterministically across numpy versions/partitionings.
+    DELIBERATE DEVIATION: standard_nms's score argsort is made stable
+    (the reference's np.argsort is not), so tied scores pick
+    deterministically across numpy versions and partitionings.
 
-    Returns (boxes [K,4] float64, scores [K] float64) in pick order.
+    The sweep skips pairs whose coordinate bounding boxes are strictly
+    disjoint: each caller's IoU is 0 for them, and 0 <= thres keeps
+    them without a Python IoU call.
+
+    Returns the kept rows in pick order (``rows[:0]`` for no rows).
     """
-    def iou(a, b):
-        ix = min(a[2], b[2]) - max(a[0], b[0])
-        iy = min(a[3], b[3]) - max(a[1], b[1])
-        if ix <= 0 or iy <= 0:
-            return 0.0
-        inter = ix * iy
-        ua = (a[2] - a[0]) * (a[3] - a[1])
-        ub = (b[2] - b[0]) * (b[3] - b[1])
-        union = ua + ub - inter
-        return 0.0 if union == 0 else inter / union
-
-    merged: list[list[float]] = []
+    merged = []
     p = None
-    for g, s in zip(np.asarray(boxes, dtype=np.float64),
-                    np.asarray(scores, dtype=np.float64)):
-        g = [float(g[0]), float(g[1]), float(g[2]), float(g[3]), float(s)]
+    for g in rows:
         if p is not None and iou(g, p) > thres:
-            # weighted_merge(g, p): merge INTO g (locality_aware_nms.py:45-52)
-            w = g[4] + p[4]
-            g = [(g[4] * g[i] + p[4] * p[i]) / w for i in range(4)] + [w]
-            p = g
-        else:
-            if p is not None:
-                merged.append(p)
-            p = g
-    if p is not None:
-        merged.append(p)
-    if not merged:
-        return np.empty((0, 4)), np.empty(0)
-
-    arr = np.asarray(merged, dtype=np.float64)
-    order = list(np.argsort(arr[:, 4], kind="stable")[::-1])
-    keep: list[int] = []
+            # weighted_merge(g, p): merge INTO g
+            w = g[-1] + p[-1]
+            g = (g[-1] * g + p[-1] * p) / w
+            g[-1] = w
+        elif p is not None:
+            merged.append(p)
+        p = g
+    if p is None:
+        return rows[:0]
+    merged.append(p)
+    S = np.array(merged)
+    xs, ys = S[:, 0:-1:2], S[:, 1:-1:2]
+    xlo, xhi = xs.min(axis=1), xs.max(axis=1)
+    ylo, yhi = ys.min(axis=1), ys.max(axis=1)
+    order = list(np.argsort(S[:, -1], kind="stable")[::-1])
+    keep = []
     while order:
         i = order.pop(0)
         keep.append(i)
-        order = [t for t in order if iou(arr[i], arr[t]) <= thres]
-    return arr[keep, :4], arr[keep, 4]
+        if not order:
+            break
+        rest = np.asarray(order)
+        disjoint = ((xhi[i] < xlo[rest]) | (xhi[rest] < xlo[i])
+                    | (yhi[i] < ylo[rest]) | (yhi[rest] < ylo[i]))
+        order = [t for t, d in zip(order, disjoint)
+                 if d or iou(S[i], S[t]) <= thres]
+    return S[keep]
+
+
+def _box_iou(a, b) -> float:
+    """IoU of two axis-aligned ``(x1, y1, x2, y2, score)`` rows."""
+    ax1, ay1, ax2, ay2 = a.tolist()[:4]
+    bx1, by1, bx2, by2 = b.tolist()[:4]
+    ix = min(ax2, bx2) - max(ax1, bx1)
+    iy = min(ay2, by2) - max(ay1, by1)
+    if ix <= 0 or iy <= 0:
+        return 0.0
+    inter = ix * iy
+    union = (ax2 - ax1) * (ay2 - ay1) + (bx2 - bx1) * (by2 - by1) - inter
+    return 0.0 if union == 0 else inter / union
+
+
+def nms_locality(boxes, scores, thres: float = 0.3):
+    """EAST locality-aware NMS over axis-aligned boxes: the shared
+    :func:`locality_aware_nms` walk with the exact box IoU. The
+    reference's corner-wise weighted average of axis-aligned rectangles
+    is again an axis-aligned rectangle, so (x1,y1,x2,y2) carries
+    exactly.
+
+    Returns (boxes [K,4] float64, scores [K] float64) in pick order.
+    """
+    rows = np.column_stack([
+        np.asarray(boxes, dtype=np.float64).reshape(-1, 4),
+        np.asarray(scores, dtype=np.float64)])
+    kept = locality_aware_nms(rows, thres, _box_iou)
+    return kept[:, :4], kept[:, 4]
 
 
 # ---------------------------------------------------------------------------
@@ -943,59 +972,74 @@ def drrg_boundaries(edges: "np.ndarray", scores: "np.ndarray",
 # FCE (Fourier Contour Embedding) — D3 fourth family
 # ---------------------------------------------------------------------------
 
-def _poly_area(pts: "np.ndarray") -> float:
-    """|shoelace|/2 — shapely Polygon.area for a simple polygon."""
-    import numpy as np
-
-    # elementwise + np.sum, not np.dot: 1-D np.dot is BLAS ddot whose
-    # rounding varies across builds (cross-container fixture drift)
-    x, y = pts[:, 0], pts[:, 1]
-    cross = x * np.roll(y, -1) - y * np.roll(x, -1)
-    return float(abs(np.sum(cross)) / 2.0)
-
-
-def _convex_clip(subject: "np.ndarray", clip: "np.ndarray") -> "np.ndarray":
-    """Sutherland–Hodgman: subject polygon clipped by a CONVEX clip
-    polygon; returns the intersection polygon's vertices (possibly
-    empty). Orientation-normalized to CCW clip."""
-    import numpy as np
-
-    cp = clip
-    if np.sum(cp[:, 0] * np.roll(cp[:, 1], -1)
-              - cp[:, 1] * np.roll(cp[:, 0], -1)) < 0:
-        cp = cp[::-1]
-    out = [tuple(p) for p in subject]
-    n = len(cp)
+def shoelace2(pts) -> float:
+    """2x signed shoelace area of a list of (x, y) pairs, summed in
+    vertex order (a plain Python loop: no BLAS, so the last bit is the
+    same on every build)."""
+    s = 0.0
+    n = len(pts)
     for i in range(n):
-        a, b = cp[i], cp[(i + 1) % n]
+        x0, y0 = pts[i]
+        x1, y1 = pts[(i + 1) % n]
+        s += x0 * y1 - y0 * x1
+    return s
+
+
+def convex_clip(a, b):
+    """Sutherland-Hodgman: clip CCW polygon ``a`` by CCW CONVEX polygon
+    ``b`` (lists of (x, y)); returns the intersection's vertices,
+    possibly none. Pure Python: this is the NMS hot loop."""
+    out = a
+    nb = len(b)
+    for i in range(nb):
+        if not out:
+            return out
+        cx, cy = b[i]
+        dx, dy = b[(i + 1) % nb]
+        ex, ey = dx - cx, dy - cy
         inp = out
         out = []
-        if not inp:
-            break
+        sides = [ex * (py - cy) - ey * (px - cx) for px, py in inp]
+        m = len(inp)
+        for j in range(m):
+            k = j + 1 if j + 1 < m else 0
+            sp, sq = sides[j], sides[k]
+            if sp >= 0:
+                out.append(inp[j])
+            if (sp > 0 > sq) or (sp < 0 < sq):
+                t = sp / (sp - sq)
+                px, py = inp[j]
+                qx, qy = inp[k]
+                out.append((px + t * (qx - px), py + t * (qy - py)))
+    return out
 
-        def inside(p):
-            return ((b[0] - a[0]) * (p[1] - a[1])
-                    - (b[1] - a[1]) * (p[0] - a[0])) >= 0
 
-        def isect(p, q):
-            dx1, dy1 = q[0] - p[0], q[1] - p[1]
-            dx2, dy2 = b[0] - a[0], b[1] - a[1]
-            den = dx1 * dy2 - dy1 * dx2
-            if den == 0:
-                return q
-            t = ((a[0] - p[0]) * dy2 - (a[1] - p[1]) * dx2) / den
-            return (p[0] + t * dx1, p[1] + t * dy1)
+def _pairs(pts) -> list:
+    """A polygon as a list of [x, y] floats; lists pass through."""
+    if isinstance(pts, list):
+        return pts
+    return np.asarray(pts, dtype=np.float64).reshape(-1, 2).tolist()
 
-        s = inp[-1]
-        for e in inp:
-            if inside(e):
-                if not inside(s):
-                    out.append(isect(s, e))
-                out.append(e)
-            elif inside(s):
-                out.append(isect(s, e))
-            s = e
-    return np.array(out) if out else np.zeros((0, 2))
+
+def poly_area(pts) -> float:
+    """Absolute shoelace area (shapely Polygon(...).area for simple
+    polys) of an (N, 2) array or a list of (x, y) pairs."""
+    return abs(shoelace2(_pairs(pts))) / 2.0
+
+
+def convex_intersect_area(a, b) -> float:
+    """Intersection area of two CONVEX polygons: Sutherland-Hodgman
+    clip + shoelace (shapely's Polygon.intersection(...).area), both
+    oriented CCW first."""
+    a, b = _pairs(a), _pairs(b)
+    if shoelace2(a) < 0:
+        a = a[::-1]
+    if shoelace2(b) < 0:
+        b = b[::-1]
+    out = convex_clip(a, b)
+    if len(out) < 3:
+        return 0.0
+    return abs(shoelace2(out)) / 2.0
 
 
 def fce_boundary_iou(src: list, target: list) -> float:
@@ -1017,10 +1061,10 @@ def fce_boundary_iou(src: list, target: list) -> float:
             or b[:, 1].max() <= a[:, 1].min()):
         return 0.0
     if a.shape == b.shape and (a == b).all():
-        return 1.0 if _poly_area(a) > 0 else 0.0  # identical: IoU exact
-    inter_poly = _convex_clip(a, b)
-    inter = _poly_area(inter_poly) if len(inter_poly) >= 3 else 0.0
-    union = _poly_area(a) + _poly_area(b) - inter
+        return 1.0 if poly_area(a) > 0 else 0.0  # identical: IoU exact
+    a, b = _pairs(a), _pairs(b)
+    inter = convex_intersect_area(a, b)
+    union = poly_area(a) + poly_area(b) - inter
     return 0.0 if union == 0 else inter / union
 
 
@@ -1158,64 +1202,51 @@ def fce_boundaries(cls_pred: "np.ndarray", reg_pred: "np.ndarray",
     return np.array(boxes, dtype=np.float32), scores
 
 
+def _quad_envelope_iou(g, p) -> float:
+    """IoU of the corner envelopes of two ``(x0, y0, …, x3, y3, …)``
+    quad rows, in their dtype."""
+    gx1, gy1 = g[0:8:2].min(), g[1:8:2].min()
+    gx2, gy2 = g[0:8:2].max(), g[1:8:2].max()
+    px1, py1 = p[0:8:2].min(), p[1:8:2].min()
+    px2, py2 = p[0:8:2].max(), p[1:8:2].max()
+    ix = min(gx2, px2) - max(gx1, px1)
+    iy = min(gy2, py2) - max(gy1, py1)
+    if ix <= 0 or iy <= 0:
+        return 0.0
+    inter = ix * iy
+    union = ((gx2 - gx1) * (gy2 - gy1)
+             + (px2 - px1) * (py2 - py1) - inter)
+    return 0.0 if union == 0 else inter / union
+
+
 def _sast_quad_nms(dets: "np.ndarray", thres: float = 0.2) -> "np.ndarray":
-    """locality_aware_nms.nms_locality over (N, 9) quad dets
-    (:183-205): sequential scan in input order, score-weighted
-    8-coordinate merge (weighted_merge, :62-68) whenever IoU > thres,
-    then standard_nms (:55-69, score-descending argsort[::-1], suppress
-    IoU > thres).
+    """locality_aware_nms.nms_locality over (N, 9) float32 quad dets
+    (:183-205): the shared :func:`locality_aware_nms` walk, merging in
+    float32 as the reference's float32 dets do.
 
     DEVIATION (same as the EAST transcription): shapely's Polygon IoU is
     computed as the axis-aligned IoU of each quad's corner envelope —
     EXACT whenever the quads are axis-aligned rectangles, which the
     sast_detect synthesis guarantees (and the exec-ref differential
     re-checks by stubbing the reference's ``intersection`` the same
-    way). np.argsort is kept UNSTABLE-equivalent by using the same
-    default introsort; the synthesis keeps scores distinct.
+    way). The walk's stable score sort gives the reference's introsort
+    order here because the synthesis keeps scores distinct. Each
+    float32 IoU is compared with ``thres`` as a Python-float scalar in
+    both phases.
     """
-    import numpy as np
+    return locality_aware_nms(dets, thres, _quad_envelope_iou)
 
-    def iou(g, p):
-        gx1, gy1 = g[0:8:2].min(), g[1:8:2].min()
-        gx2, gy2 = g[0:8:2].max(), g[1:8:2].max()
-        px1, py1 = p[0:8:2].min(), p[1:8:2].min()
-        px2, py2 = p[0:8:2].max(), p[1:8:2].max()
-        ix = min(gx2, px2) - max(gx1, px1)
-        iy = min(gy2, py2) - max(gy1, py1)
-        if ix <= 0 or iy <= 0:
-            return 0.0
-        inter = ix * iy
-        union = ((gx2 - gx1) * (gy2 - gy1)
-                 + (px2 - px1) * (py2 - py1) - inter)
-        return 0.0 if union == 0 else inter / union
 
-    S: list = []
-    p = None
-    for g in dets:
-        g = g.copy()
-        if p is not None and iou(g, p) > thres:
-            w = g[8] + p[8]
-            g[:8] = (g[8] * g[:8] + p[8] * p[:8]) / w
-            g[8] = w
-            p = g
-        else:
-            if p is not None:
-                S.append(p)
-            p = g
-    if p is not None:
-        S.append(p)
-    if len(S) == 0:
-        return np.zeros((0, 9), dtype=np.float32)
-    S = np.array(S)
-    order = np.argsort(S[:, 8])[::-1]
-    keep = []
-    while order.size > 0:
-        i = order[0]
-        keep.append(i)
-        ovr = np.array([iou(S[i], S[t]) for t in order[1:]])
-        inds = np.where(ovr <= thres)[0]
-        order = order[inds + 1]
-    return S[keep]
+def quad_area(poly) -> float:
+    """Signed shoelace over a polygon's first four points: the
+    trapezoid sum of sast_process.py:42-52, which the reference repeats
+    in sast_postprocess.py:133-142 and, as ``polygon_area``, in
+    east_process.py:95-105. Negative for clockwise image-space quads."""
+    edge = [(poly[1][0] - poly[0][0]) * (poly[1][1] + poly[0][1]),
+            (poly[2][0] - poly[1][0]) * (poly[2][1] + poly[1][1]),
+            (poly[3][0] - poly[2][0]) * (poly[3][1] + poly[2][1]),
+            (poly[0][0] - poly[3][0]) * (poly[0][1] + poly[3][1])]
+    return np.sum(edge) / 2.
 
 
 def sast_polys(tcl_map: "np.ndarray", tvo_map: "np.ndarray",
@@ -1262,14 +1293,6 @@ def sast_polys(tcl_map: "np.ndarray", tvo_map: "np.ndarray",
     if dets.shape[0] == 0:
         return []
     quads = dets[:, :-1].reshape(-1, 4, 2)
-
-    def quad_area(quad):
-        edge = [(quad[1][0] - quad[0][0]) * (quad[1][1] + quad[0][1]),
-                (quad[2][0] - quad[1][0]) * (quad[2][1] + quad[1][1]),
-                (quad[3][0] - quad[2][0]) * (quad[3][1] + quad[2][1]),
-                (quad[0][0] - quad[3][0]) * (quad[0][1] + quad[3][1])]
-        return np.sum(edge) / 2.0
-
     quad_areas = [-quad_area(q) for q in quads]
 
     # cluster_by_quads_tco

@@ -26,11 +26,11 @@ head_id. Everything is JVM-side; the DuckDB twin restates it verbatim.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..sources.readers import sf_table
 
 #: SER label stand-in: (doc_id + 7*entity_id) % 11 → label class
 #: (entities_labels = {HEADER: 0, QUESTION: 1, ANSWER: 2},
@@ -53,7 +53,7 @@ def ser_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     3 + n_chars % 5 entities per document; 'O' entities already dropped
     (the reference filters them before relation building)."""
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = sf_table(spark, sf_dir, "documents")
     ents = docs.select(
         "doc_id",
         F.explode(F.expr("sequence(0, 2 + n_chars % 5)")).alias("entity_id"),

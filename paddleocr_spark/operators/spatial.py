@@ -24,6 +24,10 @@ NMS_SCHEMA = ("doc_id string, label string, box_id long, "
               "x1 double, y1 double, x2 double, y2 double, "
               "score double, keep_order long")
 _NMS_IN = ("doc_id", "label", "box_id", "x1", "y1", "x2", "y2", "score")
+#: Row order inside an NMS group. ``box_id`` alone is not unique, and
+#: both walks are greedy, so ties must break on the box itself: with a
+#: total order the result does not depend on the input layout.
+_BOX_ORDER = ["box_id", "x1", "y1", "x2", "y2", "score"]
 
 
 def _corners(g) -> np.ndarray:
@@ -41,11 +45,12 @@ def nms_per_class(boxes: DataFrame, iou_threshold: float = 0.5,
     Output: kept boxes with their greedy pick order (0-based).
 
     JVM pre-stage: rank ≤ nms_top_k per (doc_id, label) by (score desc,
-    box_id) — the picodet nms_top_k cap (:182) — so group size into the
-    Python kernel is bounded regardless of detector fan-out.
+    box_id, x1, y1, x2, y2) — the picodet nms_top_k cap (:182) — so
+    group size into the Python kernel is bounded regardless of detector
+    fan-out.
     """
     w = Window.partitionBy("doc_id", "label").orderBy(
-        F.col("score").desc(), F.col("box_id"))
+        F.col("score").desc(), *_BOX_ORDER[:-1])
     capped = (boxes.withColumn("rk", F.row_number().over(w))
               .filter(F.col("rk") <= nms_top_k).drop("rk"))
 
@@ -56,7 +61,7 @@ def nms_per_class(boxes: DataFrame, iou_threshold: float = 0.5,
         return [tuple(g[c][p] for c in _NMS_IN) + (k,)
                 for k, p in enumerate(picked)]
 
-    return grouped_map_rows(capped, ["doc_id", "label"], ["box_id"],
+    return grouped_map_rows(capped, ["doc_id", "label"], _BOX_ORDER,
                             per_group, NMS_SCHEMA)
 
 
@@ -85,10 +90,10 @@ def east_nms_locality(boxes: DataFrame, thres: float = 0.3) -> DataFrame:
     """D2 EAST locality-aware NMS distributed per document.
 
     Input (doc_id, box_id, x1, y1, x2, y2, score); the kernel's sequential
-    merge scan runs over box_id order (the row-major score-map order
-    analog), as a grouped Arrow kernel exactly like nms_per_class. Output
-    carries the MERGED geometry (weighted averages) and summed scores in
-    pick order.
+    merge scan runs over (box_id, x1, y1, x2, y2, score) order (the
+    row-major score-map order analog), as a grouped Arrow kernel exactly
+    like nms_per_class. Output carries the MERGED geometry (weighted
+    averages) and summed scores in pick order.
     """
     from ..kernels import nms_locality
 
@@ -99,7 +104,7 @@ def east_nms_locality(boxes: DataFrame, thres: float = 0.3) -> DataFrame:
         return [(g["doc_id"][0], k, *box, float(sc))
                 for k, (box, sc) in enumerate(zip(geo, scores))]
 
-    return grouped_map_rows(boxes, ["doc_id"], ["box_id"], per_doc,
+    return grouped_map_rows(boxes, ["doc_id"], _BOX_ORDER, per_doc,
                             EAST_NMS_SCHEMA)
 
 

@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.readers import sf_table
+
 #: Structure-token dictionary AFTER merge_no_span_structure
 #: (table_postprocess.py:34-40: '<td>' removed, '<td></td>' appended),
 #: wrapped in sos/eos (AttnLabelDecode.add_special_char,
@@ -150,7 +152,7 @@ def table_decode_sql(ids: str, dialect: str = "spark") -> str:
 
 def _tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = sf_table(spark, sf_dir, "lineitem")
     return (li.select((F.col("l_orderkey") % 50).alias("t_id")).distinct())
 
 

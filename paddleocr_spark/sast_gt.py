@@ -43,11 +43,14 @@ Quirks preserved:
 Reference: hv_tag = 0 marks vertical polys (len_w*2 < len_h).
 
 Shared helpers: the reference copies these geometry helpers verbatim
-into pg_process.py (and the shoelace into east_process.py as
-polygon_area), so ``pg_gt`` and the EAST path in ``augments`` import
-them from here. gen_quad_tbo is vectorised over the TCL pixels and
-bit-identical to the reference's per-pixel loop; the bbox fills go
-through ``kernels.fill_bboxes``.
+into pg_process.py, so ``pg_gt`` imports them from here. It copies
+crop_area from east_process.py, so ``padded_crop_area`` serves both
+SAST and the EAST path in ``augments``, with each one's arguments. The
+signed shoelace ``quad_area`` (east_process.py's polygon_area) is
+``kernels.quad_area``, shared with the SAST post-process.
+gen_quad_tbo is vectorised over the TCL pixels and bit-identical to the
+reference's per-pixel loop; the bbox fills go through
+``kernels.fill_bboxes``.
 """
 
 from __future__ import annotations
@@ -56,22 +59,13 @@ import math
 
 import numpy as np
 
-from .kernels import fill_bboxes
+from .kernels import fill_bboxes, quad_area
 
 SAST_INPUT_SIZE = 512        #: sast_process.py:30 image_shape
 SAST_MIN_CROP_SIZE = 24      #: :31
 SAST_MIN_CROP_SIDE = 0.3     #: :32 (unused by the shipped crop arm)
 SAST_MIN_TEXT = 10           #: :33
 SAST_MAX_TEXT = 512          #: :34
-
-
-def quad_area(poly) -> float:
-    """:42-52 verbatim signed shoelace over the first four points."""
-    edge = [(poly[1][0] - poly[0][0]) * (poly[1][1] + poly[0][1]),
-            (poly[2][0] - poly[1][0]) * (poly[2][1] + poly[1][1]),
-            (poly[3][0] - poly[2][0]) * (poly[3][1] + poly[2][1]),
-            (poly[0][0] - poly[3][0]) * (poly[0][1] + poly[3][1])]
-    return np.sum(edge) / 2.
 
 
 def gen_quad_from_poly(poly: np.ndarray) -> np.ndarray:
@@ -149,15 +143,24 @@ def sast_validate_polys(polys: np.ndarray, tags: np.ndarray, h: int,
             np.array(hv_tags))
 
 
-def sast_crop_area(rng: np.random.RandomState, h: int, w: int,
-                   polys: np.ndarray, tags: np.ndarray,
-                   hv_tags: np.ndarray, crop_background: bool = False,
-                   max_tries: int = 25,
-                   min_crop_size: int = SAST_MIN_CROP_SIZE):
-    """crop_area (:128-201): EAST's padded occupancy walk but with the
-    absolute min_crop_size gate (the ratio gate is commented out in the
-    reference) and hv_tags threaded through. Returns
-    (new_h, new_w, polys, tags, hv_tags, rect-or-None)."""
+def padded_crop_area(rng: np.random.RandomState, h: int, w: int,
+                     polys: np.ndarray, labels: tuple,
+                     crop_background: bool, max_tries: int,
+                     min_w: float, min_h: float):
+    """crop_area of east_process.py:288-358, which sast_process.py
+    :128-201 copies, with the image replaced by its (h, w): the padded
+    occupancy arrays (pad = dim//10, maxx EXCLUSIVE as in the inference
+    crop), per-try x-then-y choice pairs CLIPPED to the canvas after the
+    pad shift, the min-side gate, the all-4-corners containment test,
+    and the background / foreground return arms.
+
+    The two copies differ only in arguments: EAST tries 50 times with
+    min sides 0.1 x (w, h); SAST tries 25 times with an absolute 24 px
+    (its ratio gate is commented out) and crops its hv_tags too.
+    ``labels`` is a tuple of per-poly arrays (tags, hv_tags) cut along
+    with the polys. Returns (new_h, new_w, polys, labels, rect) where
+    rect is the accepted (xmin, ymin, xmax, ymax), or None when the
+    tries run out (canvas returned whole)."""
     pad_h = h // 10
     pad_w = w // 10
     h_array = np.zeros((h + pad_h * 2), dtype=np.int32)
@@ -173,8 +176,8 @@ def sast_crop_area(rng: np.random.RandomState, h: int, w: int,
     h_axis = np.where(h_array == 0)[0]
     w_axis = np.where(w_array == 0)[0]
     if len(h_axis) == 0 or len(w_axis) == 0:
-        return h, w, polys, tags, hv_tags, None
-    for i in range(max_tries):
+        return h, w, polys, labels, None
+    for _ in range(max_tries):
         xx = rng.choice(w_axis, size=2)
         xmin = np.min(xx) - pad_w
         xmax = np.max(xx) - pad_w
@@ -185,7 +188,7 @@ def sast_crop_area(rng: np.random.RandomState, h: int, w: int,
         ymax = np.max(yy) - pad_h
         ymin = np.clip(ymin, 0, h - 1)
         ymax = np.clip(ymax, 0, h - 1)
-        if xmax - xmin < min_crop_size or ymax - ymin < min_crop_size:
+        if xmax - xmin < min_w or ymax - ymin < min_h:
             continue
         if polys.shape[0] != 0:
             poly_axis_in_area = (polys[:, :, 0] >= xmin) \
@@ -195,24 +198,16 @@ def sast_crop_area(rng: np.random.RandomState, h: int, w: int,
                 np.sum(poly_axis_in_area, axis=1) == 4)[0]
         else:
             selected_polys = []
-        if len(selected_polys) == 0:
-            if crop_background:
-                return (int(ymax) - int(ymin) + 1,
-                        int(xmax) - int(xmin) + 1,
-                        polys[selected_polys], tags[selected_polys],
-                        hv_tags[selected_polys],
-                        (int(xmin), int(ymin), int(xmax), int(ymax)))
-            else:
-                continue
+        if len(selected_polys) == 0 and not crop_background:
+            continue
         polys = polys[selected_polys]
-        tags = tags[selected_polys]
-        hv_tags = hv_tags[selected_polys]
+        labels = tuple(lab[selected_polys] for lab in labels)
         polys[:, :, 0] -= xmin
         polys[:, :, 1] -= ymin
         return (int(ymax) - int(ymin) + 1, int(xmax) - int(xmin) + 1,
-                polys, tags, hv_tags,
+                polys, labels,
                 (int(xmin), int(ymin), int(xmax), int(ymax)))
-    return h, w, polys, tags, hv_tags, None
+    return h, w, polys, labels, None
 
 
 def adjust_point(poly: np.ndarray) -> np.ndarray:
@@ -555,8 +550,9 @@ def sast_process_doc(seed: int, quads: np.ndarray, tags: np.ndarray,
     if min(h, w) < 16:
         out["status"] = "none_small"
         return out
-    h, w, text_polys, text_tags, hv_tags, rect = sast_crop_area(
-        rng, h, w, text_polys, text_tags, hv_tags, crop_background=False)
+    h, w, text_polys, (text_tags, hv_tags), rect = padded_crop_area(
+        rng, h, w, text_polys, (text_tags, hv_tags), crop_background=False,
+        max_tries=25, min_w=SAST_MIN_CROP_SIZE, min_h=SAST_MIN_CROP_SIZE)
     out["crop"] = rect
     if text_polys.shape[0] == 0:
         out["status"] = "none_crop_empty"

@@ -8,7 +8,7 @@ table.
 """
 
 from .readers import (read_binary_dir, read_documents, read_jsonl_source,
-                      read_label_files)
+                      read_label_files, sf_table)
 
 __all__ = ["read_binary_dir", "read_documents", "read_jsonl_source",
-           "read_label_files"]
+           "read_label_files", "sf_table"]

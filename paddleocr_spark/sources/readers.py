@@ -64,9 +64,16 @@ def read_jsonl_source(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.json(path)
 
 
+def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of a scale-factor dir (``<sf_dir>/<name>.parquet``),
+    as scanned: the one opener of the test-data tables. It does not
+    widen a one-file scan (ROADMAP item 2 records why); the few callers
+    that need parallelism call ``pipeline.ensure_input_parallelism``."""
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
 def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The primary corpus scan. Iceberg at scale (partition spec
     bucket(doc_id)); parquet in the sandbox. Reads ONLY the columns the
     pipeline needs so column pruning reaches the scan."""
-    return (spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-            .select("doc_id", "text"))
+    return sf_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -20,8 +20,9 @@ import types
 import numpy as np
 
 from paddleocr_spark.drrg_gt import (
-    connected_components8, convex_intersect_area, drrg_gt_rows_for_doc,
-    drrg_targets_doc, erode_min, fill_poly, la_nms_quads, polyline8)
+    connected_components8, drrg_gt_rows_for_doc, drrg_targets_doc,
+    erode_min, fill_poly, la_nms_quads, polyline8)
+from paddleocr_spark.kernels import convex_intersect_area, poly_area
 
 REF = "/root/reference/ppocr/data/imaug"
 
@@ -45,7 +46,6 @@ class _ShapelyPoly:
 
     @property
     def area(self):
-        from paddleocr_spark.drrg_gt import poly_area
         return poly_area(self._p)
 
     def intersection(self, other):

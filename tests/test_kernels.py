@@ -360,6 +360,42 @@ def test_nms_locality_scan_is_order_dependent():
     assert ks.tolist() == [3.0, 0.5]
 
 
+def test_iou_deviations_exact_on_axis_aligned_rects():
+    """EAST's box IoU and SAST's quad-envelope IoU stand in for the
+    reference's shapely polygon IoU, which their DEVIATION docstrings
+    call exact on axis-aligned rectangles. Checked here without the
+    reference: on seeded random integer rects both agree with DRRG's
+    exact convex-clip IoU within 1e-12, and the shared locality-aware
+    walk keeps the same rows under each of the three."""
+    from paddleocr_spark.drrg_gt import _quad_iou
+    from paddleocr_spark.kernels import (_box_iou, _quad_envelope_iou,
+                                         locality_aware_nms)
+    rng = np.random.RandomState(20171)
+    n_overlap = n_merged = 0
+    for _ in range(200):
+        n = rng.randint(1, 30)
+        x1, y1 = rng.randint(0, 60, n), rng.randint(0, 60, n)
+        x2, y2 = x1 + rng.randint(1, 25, n), y1 + rng.randint(1, 25, n)
+        score = rng.rand(n) + 0.1
+        boxes = np.column_stack([x1, y1, x2, y2, score]).astype(float)
+        quads = np.column_stack([x1, y1, x2, y1, x2, y2, x1, y2,
+                                 score]).astype(float)
+        for i in range(n):
+            for j in range(n):
+                want = _quad_iou(quads[i], quads[j])
+                assert abs(_box_iou(boxes[i], boxes[j]) - want) <= 1e-12
+                assert abs(_quad_envelope_iou(quads[i], quads[j])
+                           - want) <= 1e-12
+                n_overlap += 0 < want < 1
+        kept = locality_aware_nms(boxes, 0.3, _box_iou)
+        as_quads = kept[:, [0, 1, 2, 1, 2, 3, 0, 3, 4]]
+        for iou in (_quad_envelope_iou, _quad_iou):
+            assert np.array_equal(
+                locality_aware_nms(quads, 0.3, iou), as_quads)
+        n_merged += len(kept) < n
+    assert n_overlap > 1000 and n_merged > 50      # both paths exercised
+
+
 # ---------------------------------------------------------------------------
 # PSE progressive scale expansion (D3 representative)
 # ---------------------------------------------------------------------------

@@ -171,8 +171,9 @@ def test_nms_distributed_equals_kernel(spark):
 
     rows = q_nms(spark, SF).collect()
     # rebuild the input deterministically and run the kernel single-node
-    from paddleocr_spark.entry_queries import _lineitem
-    li = _lineitem(spark, SF).filter(F.col("l_linenumber") <= 3).collect()
+    from paddleocr_spark.sources.readers import sf_table
+    li = sf_table(spark, SF, "lineitem").filter(
+        F.col("l_linenumber") <= 3).collect()
     groups: dict = {}
     for r in li:
         doc = f"doc_{r['l_orderkey'] % 20:03d}"

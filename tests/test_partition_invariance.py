@@ -1,5 +1,6 @@
 """Partition invariance: representative registry queries must produce
-IDENTICAL canonical results under different spark.sql.shuffle.partitions.
+IDENTICAL canonical results under different spark.sql.shuffle.partitions,
+and under a different input layout.
 
 This is the distributed-correctness property the DuckDB gate cannot see
 (the oracle never shuffles): any order-dependence smuggled into an
@@ -8,11 +9,20 @@ up as a hash drift between exchange layouts. Representative set: one
 query per execution shape — the flagship mapInArrow carry, a grouped
 Arrow walk, a min_by tie-break aggregate, an iterative CC, a band-join
 dedup, the LMDB fan-out, a gt-map raster, and the survivor anti-join.
+
+The shuffle setting never reaches the input scan (each sf table is one
+file, so one task) nor the grouped kernels (they repartition to an
+explicit count), so the second arm re-reads the same rows from a copy of
+the sf dir whose ``documents``, ``events`` and ``lineitem`` are split
+round-robin into three files each: rows reach every exchange from
+several map tasks, in a different order.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
 
 import pytest
 
@@ -87,3 +97,36 @@ def test_query_is_shuffle_partition_invariant(spark, name):
     finally:
         spark.conf.set(key, orig)
     assert h3 == h64, f"{name} drifts across shuffle layouts"
+
+
+#: Tables the layout arm splits; the rest are copied as they are (one
+#: file each: ``similarity.embeddings_meta`` reads its table as a file).
+SPLIT_TABLES = ("documents", "events", "lineitem")
+
+
+@pytest.fixture(scope="module")
+def split_sf_dir(tmp_path_factory):
+    """A copy of SF with each SPLIT_TABLES table written round-robin as
+    three parquet files in a ``<name>.parquet`` directory."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("sf_split")
+    for f in sorted(os.listdir(SF)):
+        if f.removesuffix(".parquet") not in SPLIT_TABLES:
+            shutil.copy(os.path.join(SF, f), out / f)
+            continue
+        t = pq.read_table(os.path.join(SF, f))
+        (out / f).mkdir()
+        for k in range(3):
+            pq.write_table(t.take(list(range(k, t.num_rows, 3))),
+                           out / f / f"part-{k}.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize("name",
+                         REPRESENTATIVE + ["east_nms", "nms_per_class"])
+def test_query_is_input_layout_invariant(spark, split_sf_dir, name):
+    from paddleocr_spark.entry_queries import queries
+    fn = queries()[name]
+    assert _canon_hash(fn(spark, SF)) == _canon_hash(
+        fn(spark, split_sf_dir)), f"{name} drifts with the input layout"

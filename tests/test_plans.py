@@ -88,8 +88,9 @@ def test_utf8_chain_widens_before_per_char_hofs(spark):
     inside the single-file scan task. The pre-fix layout (repartition
     after the projection) ran 3.2 s single-threaded at sf0.1; regression
     here re-serializes the whole jamo chain."""
-    from paddleocr_spark.functions.grapheme import docs_table, utf8_decompose
-    df = utf8_decompose(docs_table(spark, SF))
+    from paddleocr_spark.functions.grapheme import utf8_decompose
+    from paddleocr_spark.sources.readers import sf_table
+    df = utf8_decompose(sf_table(spark, SF, "documents"))
     plan = _plan(df)
     assert "Exchange" in plan and "transform(" in plan
     # toString is root-first: parent nodes print before children, so the

@@ -704,9 +704,9 @@ def test_fce_postprocess_matches_executed_reference():
 
     import numpy as np
 
-    from paddleocr_spark.kernels import (_convex_clip, _poly_area,
-                                         connected_components_4,
-                                         fce_boundaries)
+    from paddleocr_spark.kernels import (connected_components_4,
+                                         convex_intersect_area,
+                                         fce_boundaries, poly_area)
     from paddleocr_spark.operators.spatial import FCE_RATIO, fce_doc_maps
 
     class _Poly:
@@ -720,7 +720,7 @@ def test_fce_postprocess_matches_executed_reference():
 
         @property
         def area(self):
-            return _poly_area(self.pts) if len(self.pts) >= 3 else 0.0
+            return poly_area(self.pts) if len(self.pts) >= 3 else 0.0
 
         def __and__(self, other):
             a, b = self.pts, other.pts
@@ -728,8 +728,8 @@ def test_fce_postprocess_matches_executed_reference():
                     or b[:, 0].max() <= a[:, 0].min()
                     or a[:, 1].max() <= b[:, 1].min()
                     or b[:, 1].max() <= a[:, 1].min()):
-                return _Poly(np.zeros((0, 2)))
-            return _Poly(_convex_clip(a, b))
+                return types.SimpleNamespace(area=0.0)
+            return types.SimpleNamespace(area=convex_intersect_area(a, b))
 
         def intersection(self, other):
             return self & other

@@ -48,6 +48,11 @@ from paddleocr_spark.kernels import hard_nms
 from paddleocr_spark.oracle import extract_pandas
 
 
+#: Row order inside an NMS group (the Spark side's ``spatial._BOX_ORDER``):
+#: ``box_id`` is not unique, so ties break on the box itself.
+BOX_ORDER = ["box_id", "x1", "y1", "x2", "y2", "score"]
+
+
 def f_round(x: float, scale: int = 4) -> float:
     """Spark F.round semantics for DoubleType: HALF_UP on the shortest
     decimal representation (BigDecimal.valueOf == repr for our ranges)."""
@@ -85,10 +90,10 @@ def fx_nms_per_class(con, sf_dir: str) -> pd.DataFrame:
     """).df()
     outs = []
     for (doc_id, label), g in base.groupby(["doc_id", "label"], sort=True):
-        # JVM pre-cap: rank <= nms_top_k by (score desc, box_id)
-        g = g.sort_values(["score", "box_id"],
-                          ascending=[False, True]).head(1000)
-        g = g.sort_values("box_id", kind="stable")
+        # JVM pre-cap: rank <= nms_top_k by (score desc, box_id, x1..y2)
+        g = g.sort_values(["score"] + BOX_ORDER[:-1],
+                          ascending=[False] + [True] * 5).head(1000)
+        g = g.sort_values(BOX_ORDER, kind="stable")
         picked = hard_nms(g[["x1", "y1", "x2", "y2"]].to_numpy(dtype=float),
                           g["score"].to_numpy(dtype=float),
                           iou_threshold=0.5, top_k=100, candidate_size=200)
@@ -467,7 +472,7 @@ def fx_east_nms(con, sf_dir: str) -> pd.DataFrame:
     """).df()
     outs = []
     for doc_id, g in base.groupby("doc_id", sort=True):
-        g = g.sort_values("box_id", kind="stable")
+        g = g.sort_values(BOX_ORDER, kind="stable")
         kept, scores = nms_locality(
             g[["x1", "y1", "x2", "y2"]].to_numpy(dtype=float),
             g["score"].to_numpy(dtype=float))
