@@ -1980,8 +1980,9 @@ def _media_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     span-explode + distinct exchange once per gate run (~2 s each at
     sf0.1) instead of once per query. The production analog is the
     content-addressed media table materialized once per corpus snapshot.
-    The persisted table keeps its 2x-parallelism hash partitioning, so
-    downstream per-row Python stages stay wide."""
+    The persisted table keeps its hash partitioning into one partition
+    per core, so downstream per-row Python stages run as one wide wave
+    (each Python task pays a fixed set-up toll; see grouped.cluster)."""
     from .functions.dedup import _cached
 
     def build() -> DataFrame:
@@ -1990,7 +1991,7 @@ def _media_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter(F.col("s.kind") == "media")
                 .select(F.col("s.media_ref").alias("media_ref"))
                 .distinct()
-                .repartition(spark.sparkContext.defaultParallelism * 2,
+                .repartition(spark.sparkContext.defaultParallelism,
                              F.xxhash64("media_ref")))
 
     return _cached(spark, sf_dir, "media_refs", build)

@@ -13,10 +13,11 @@ only place the output columns are declared:
   slices. ``groupBy().applyInPandas`` pays a per-GROUP toll twice (the
   JVM slices one Arrow batch per group, Python builds one pandas frame
   per group), so groups instead take one shape: hash-partition by the
-  key (explicit repartition, exempt from AQE byte-based coalescing),
-  sort within partitions so groups arrive contiguous, then stream WHOLE
-  Arrow batches into Python, carrying each batch's trailing group into
-  the next (:func:`carry_groups`).
+  key into one partition per core (explicit repartition, exempt from
+  AQE byte-based coalescing; one wave of Python tasks), sort within
+  partitions so groups arrive contiguous, then stream WHOLE Arrow
+  batches into Python, carrying each batch's trailing group into the
+  next (:func:`carry_groups`).
 
 Both read each input batch as numpy columns (:func:`_numpy_columns`) and
 build each output batch with :func:`_batch`, which casts every Python
@@ -105,12 +106,17 @@ def carry_groups(batches: Iterator, keys: list[str],
 
 def cluster(df: DataFrame, keys: list[str],
             sort_cols: list[str]) -> DataFrame:
-    """Hash-partition by ``keys`` into 2× defaultParallelism partitions
-    (an explicit count, so AQE does not coalesce the Python stage narrow)
-    and sort by ``keys + sort_cols`` within each partition, so every group
-    is contiguous and in a deterministic order — output is therefore
-    invariant to partition count and input row order."""
-    n = df.sparkSession.sparkContext.defaultParallelism * 2
+    """Hash-partition by ``keys`` into defaultParallelism partitions (an
+    explicit count, so AQE does not coalesce the Python stage narrow) and
+    sort by ``keys + sort_cols`` within each partition, so every group is
+    contiguous and in a deterministic order — output is therefore
+    invariant to partition count and input row order.
+
+    One partition per core makes the Python stage one wave of tasks. Each
+    Python task pays a fixed ~0.1 s of worker set-up before its first row
+    (PERF.md, "The per-task Python toll"), so a second wave costs more
+    than the load-balancing slack it buys."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *keys).sortWithinPartitions(*keys, *sort_cols)
 
 

@@ -303,7 +303,7 @@ def order_and_assemble(spans: DataFrame) -> DataFrame:
     """Reading-order resolution + document re-assembly (the one shuffle).
 
     Physical strategy (deliberate, see BENCH notes): grouped.cluster's
-    EXPLICIT ``repartition(2 × defaultParallelism, doc_id)`` +
+    EXPLICIT ``repartition(defaultParallelism, doc_id)`` +
     ``sortWithinPartitions(doc_id, span_idx)``, then ``mapInArrow`` over
     ``_assemble_arrow``, instead of ``groupBy(doc_id).applyInPandas``,
     because
@@ -314,7 +314,9 @@ def order_and_assemble(spans: DataFrame) -> DataFrame:
     * AQE coalesces shuffle partitions by BYTE size, but this stage is
       CPU-bound in Python at very low bytes/CPU — byte-based coalescing
       collapsed it to ~9 tasks on 32 cores. An explicit repartition count
-      is exempt from AQE coalescing, keeping the Python stage wide.
+      is exempt from AQE coalescing, keeping the Python stage wide;
+    * one partition per core, not more, so the stage runs as one wave
+      of Python tasks (see grouped.cluster for why).
 
     Hash partitioning on doc_id guarantees each document lands whole in one
     partition; the within-partition sort makes output independent of both

@@ -19,7 +19,14 @@ def get_spark(app: str = "paddleocr-spark",
     ``$SPARK_GRAFT_CPUS``, else this host's CPU count. Shuffles default to
     2× cores partitions: enough slots for AQE to coalesce down, few enough
     that sf-scale partitions stay >memory-trivial. At cluster scale this
-    is sized to data volume instead (see README scale notes)."""
+    is sized to data volume instead (see README scale notes).
+
+    That 2× sizes the JVM-only stages, which AQE coalesces by bytes and
+    whose tasks start in milliseconds. Python stages do not use it: they
+    repartition explicitly into one partition per core
+    (``operators.grouped.cluster``), because each Python task pays a
+    fixed ~0.1 s of worker set-up, so a second wave of them costs more
+    than its load-balancing slack buys."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     return (

@@ -8,6 +8,8 @@ that silently adds an exchange or un-pushes a filter fails here first.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 
@@ -23,6 +25,13 @@ def _formatted(df) -> str:
 
 
 SF = "/root/testdata/sf0.001"
+
+
+def _hash_exchange_widths(plan: str, key: str) -> list[int]:
+    """Partition counts of every ``Exchange hashpartitioning(<key>#…, N)``
+    in ``plan``."""
+    return [int(n) for n in re.findall(
+        rf"Exchange hashpartitioning\({key}#\d+, (\d+)\)", plan)]
 
 
 def test_per_doc_detectors_have_no_shuffle_and_pushed_filter(spark):
@@ -69,6 +78,9 @@ def test_flagship_has_exactly_one_payload_shuffle(spark):
     assert plan.count("Exchange hashpartitioning") == 1
     assert "REPARTITION_BY_NUM" in plan          # AQE-coalesce-exempt
     assert "MapInArrow" in plan
+    # one Python task per core: a second wave pays the per-task toll again
+    assert _hash_exchange_widths(plan, "doc_id") == [
+        spark.sparkContext.defaultParallelism]
 
 
 def test_grouped_arrow_family_has_single_hash_exchange(spark):
@@ -79,6 +91,8 @@ def test_grouped_arrow_family_has_single_hash_exchange(spark):
     plan = _plan(df)
     assert "MapInArrow" in plan
     assert "FlatMapGroupsInPandas" not in plan   # the old applyInPandas node
+    assert _hash_exchange_widths(plan, "doc_id") == [
+        spark.sparkContext.defaultParallelism]   # one Python wave
 
 
 def test_utf8_chain_widens_before_per_char_hofs(spark):
