@@ -26,8 +26,10 @@ value into its column's Arrow type: ints into ``double`` and floats into
 not NULL) and a Python ``bool`` is not an integer, so kernels emit
 ``None`` and ``int`` for those.
 
-The flagship (pipeline.order_and_assemble) clusters with :func:`cluster`
-and runs its own ``mapInArrow`` body over :func:`carry_groups`.
+The flagship (pipeline.order_and_assemble) needs no :func:`cluster`: each
+of its input rows is one whole document, so its exploded spans already
+arrive contiguous and in order within their scan partition, and it runs
+its own ``mapInArrow`` body over :func:`carry_groups` in the scan's stage.
 """
 
 from __future__ import annotations
@@ -73,7 +75,8 @@ def _last_group_start(tbl, keys: list[str]) -> int:
 
 
 def _complete_groups(batches: Iterator, keys: list[str]) -> Iterator:
-    """Tables of complete groups from Arrow batches sorted by ``keys``:
+    """Tables of complete groups from Arrow batches in which each ``keys``
+    group is one contiguous run (sorted, or as the flagship's scan emits):
     the trailing (possibly incomplete) group of each batch is carried
     into the next, and the last carry comes out at the end."""
     import pyarrow as pa
@@ -96,8 +99,8 @@ def _complete_groups(batches: Iterator, keys: list[str]) -> Iterator:
 def carry_groups(batches: Iterator, keys: list[str],
                  emit: Callable) -> Iterator:
     """Yield ``emit(pa.Table)`` over runs of complete groups of
-    ``batches`` (Arrow record batches sorted by ``keys``), skipping
-    ``None`` and empty outputs."""
+    ``batches`` (Arrow record batches, each ``keys`` group contiguous),
+    skipping ``None`` and empty outputs."""
     for tbl in _complete_groups(batches, keys):
         out = emit(tbl)
         if out is not None and out.num_rows:

@@ -4,21 +4,28 @@ Restates the reference dataflow (SURVEY.md §3.2):
 
     documents → explode spans → geometry (JVM) → det filter P9 (JVM)
     → drop_score P10 (JVM) → style strip P11 (JVM replace chain)
-    → repartition(n, doc_id) + sortWithinPartitions → mapInArrow kernel
+    → mapInArrow kernel in the same stage
       (sorted_boxes O1 + region segmentation D1 + sorted_layout_boxes O2 +
       ordered emission O5, Arrow-native reassembly)
     → extracted (doc_id, spans array<struct<kind,text,media_ref,offset>>)
 
-Exactly ONE payload shuffle end-to-end: the explicit hash repartition on
-doc_id feeding the kernel. Everything before it is map-side
-whole-stage-codegen; the kernel emits fully assembled documents so no
-re-aggregation shuffle follows. The kernel is ``mapInArrow`` (not
-per-group ``applyInPandas``, not pandas) for two measured reasons — see
-``order_and_assemble`` — and string columns are only ever moved by
-vectorized Arrow ``take``, never through per-span Python objects. The
-clustering and the batch-boundary carry are operators/grouped.py's, shared
-with every other per-group operator; this module owns only the kernel
-body (``_order_ranks`` + ``_emit_arrow``).
+No payload shuffle: each input row is one whole document, and
+``posexplode`` emits its spans together and in ``span_idx`` order, so the
+kernel reads every scan partition's exploded spans straight from the map
+side (see ``order_and_assemble``). The only exchange an extract can have is
+``ensure_input_parallelism``'s round-robin widening of an under-partitioned
+scan. The kernel emits fully assembled documents, so no re-aggregation
+shuffle follows. It is ``mapInArrow`` (not per-group ``applyInPandas``,
+not pandas), and string columns are only ever moved by vectorized Arrow
+``take``, never through per-span Python objects. The batch-boundary carry
+is operators/grouped.py's, shared with every other per-group operator;
+this module owns only the kernel body (``_order_ranks`` + ``_emit_arrow``).
+
+The map-side stages build their expressions as SQL strings
+(``selectExpr``, ``where``, one ``F.expr`` each): every PySpark ``Column``
+call costs several py4j round trips of query-context bookkeeping, paid in
+driver time before the first job (PERF.md, "No shuffle, and a plan built
+from SQL strings").
 Reference parity citations live in paddleocr_spark/kernels.py.
 """
 
@@ -46,16 +53,11 @@ EXTRACTED_SCHEMA = StructType([
 
 def explode_spans(documents: DataFrame) -> DataFrame:
     """documents(doc_id, spans) → one row per span with its array position."""
-    return documents.select(
-        "doc_id",
-        F.posexplode("spans").alias("span_idx", "span"),
-    ).select(
-        "doc_id", "span_idx",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+    return documents.selectExpr(
+        "doc_id", "posexplode(spans) AS (span_idx, span)",
+    ).selectExpr(
+        "doc_id", "span_idx", "span.kind AS kind", "span.text AS text",
+        "span.media_ref AS media_ref", "span.`offset` AS `offset`")
 
 
 def with_geometry(spans: DataFrame) -> DataFrame:
@@ -64,39 +66,34 @@ def with_geometry(spans: DataFrame) -> DataFrame:
     x = offset MOD page_width, y = offset DIV page_width (FIXTURES.md §1);
     extent from kind/text length. Pure JVM expressions.
     """
-    x1 = (F.col("offset") % G.PAGE_WIDTH).alias("x1")
-    y1 = F.floor(F.col("offset") / G.PAGE_WIDTH).cast("int").alias("y1")
-    h = (
-        F.when(F.col("kind") == "text", G.KIND_HEIGHT["text"])
-        .when(F.col("kind") == "title", G.KIND_HEIGHT["title"])
-        .when(F.col("kind") == "table", G.KIND_HEIGHT["table"])
-        .otherwise(G.KIND_HEIGHT["media"])
-    )
-    tlen = F.length(F.coalesce(F.col("text"), F.lit("")))
-    w = (
-        F.when(F.col("kind") == "media", G.KIND_WIDTH_FIXED["media"])
-        .when(F.col("kind") == "table", G.KIND_WIDTH_FIXED["table"])
-        .when(F.col("kind") == "title", G.KIND_WIDTH_FIXED["title"])
-        .when(tlen == 0, G.EMPTY_TEXT_WIDTH)
-        .otherwise(F.lit(G.TEXT_WIDTH_BASE) + tlen % G.TEXT_WIDTH_MOD)
-    )
-    df = spans.select("*", x1, y1, w.alias("w"), h.alias("h"))
-    return df.select(
-        "*",
-        (F.col("x1") + F.col("w")).alias("x2"),
-        (F.col("y1") + F.col("h")).alias("y2"),
-    ).drop("w", "h")
+    x1 = f"`offset` % {G.PAGE_WIDTH}"
+    y1 = f"CAST(FLOOR(`offset` / {G.PAGE_WIDTH}) AS INT)"
+    h = (f"CASE WHEN kind = 'text' THEN {G.KIND_HEIGHT['text']}"
+         f" WHEN kind = 'title' THEN {G.KIND_HEIGHT['title']}"
+         f" WHEN kind = 'table' THEN {G.KIND_HEIGHT['table']}"
+         f" ELSE {G.KIND_HEIGHT['media']} END")
+    tlen = "length(coalesce(text, ''))"
+    w = (f"CASE WHEN kind = 'media' THEN {G.KIND_WIDTH_FIXED['media']}"
+         f" WHEN kind = 'table' THEN {G.KIND_WIDTH_FIXED['table']}"
+         f" WHEN kind = 'title' THEN {G.KIND_WIDTH_FIXED['title']}"
+         f" WHEN {tlen} = 0 THEN {G.EMPTY_TEXT_WIDTH}"
+         f" ELSE {G.TEXT_WIDTH_BASE} + {tlen} % {G.TEXT_WIDTH_MOD} END")
+    return spans.selectExpr("*", f"{x1} AS x1", f"{y1} AS y1",
+                            f"{x1} + {w} AS x2", f"{y1} + {h} AS y2")
+
+
+#: The P9 keep condition as SQL (det_filter, det_keep_predicate).
+_DET_KEEP = f"x2 - x1 > {G.MIN_SIDE} AND y2 - y1 > {G.MIN_SIDE}"
 
 
 def det_keep_predicate():
     """P9 keep condition: every side > 3 px (predict_det.py:209-223)."""
-    return (((F.col("x2") - F.col("x1")) > G.MIN_SIDE)
-            & ((F.col("y2") - F.col("y1")) > G.MIN_SIDE))
+    return F.expr(_DET_KEEP)
 
 
 def det_filter(spans: DataFrame) -> DataFrame:
     """P9: drop boxes with any side ≤ 3 px (predict_det.py:209-223)."""
-    return spans.filter(det_keep_predicate())
+    return spans.where(_DET_KEEP)
 
 
 def drop_score_filter(spans: DataFrame,
@@ -111,17 +108,22 @@ def drop_score_filter(spans: DataFrame,
     confidence that in production arrives as its own column — this
     expression is the fixture, not a general doc_id contract.
     """
-    return spans.filter(score_keep_predicate(drop_score))
+    return spans.where(_score_keep(drop_score))
+
+
+def _score_keep(drop_score: float) -> str:
+    """The P10 keep condition as SQL (see drop_score_filter)."""
+    smod = (f"(CAST(substring(doc_id, 5) AS LONG) * 7 + span_idx * 173)"
+            f" % {G.SCORE_MOD}")
+    milli = (f"{G.SCORE_BASE_MILLI} + CAST(FLOOR({smod}"
+             f" * {G.SCORE_SPREAD_NUM} / {G.SCORE_SPREAD_DEN}) AS LONG)")
+    thresh = int(round(drop_score * G.SCORE_MOD))
+    return f"kind != 'text' OR {milli} >= {thresh}"
 
 
 def score_keep_predicate(drop_score: float = G.DROP_SCORE):
     """P10 keep condition as a reusable Column (see drop_score_filter)."""
-    did = F.expr("CAST(substring(doc_id, 5) AS LONG)")
-    smod = (did * 7 + F.col("span_idx") * 173) % G.SCORE_MOD
-    milli = G.SCORE_BASE_MILLI + F.floor(
-        smod * G.SCORE_SPREAD_NUM / G.SCORE_SPREAD_DEN).cast("long")
-    thresh = int(round(drop_score * G.SCORE_MOD))
-    return (F.col("kind") != "text") | (milli >= thresh)
+    return F.expr(_score_keep(drop_score))
 
 
 def strip_styles(spans: DataFrame) -> DataFrame:
@@ -139,25 +141,24 @@ def strip_styles(spans: DataFrame) -> DataFrame:
     engine).
     """
     from .kernels import STYLE_TOKENS
-    col = F.col("text")
-    for tok in STYLE_TOKENS:
-        col = F.replace(col, F.lit(tok), F.lit(""))
+    chain = "text"
+    for tok in STYLE_TOKENS:   # no token holds a quote or a backslash
+        chain = f"replace({chain}, '{tok}', '')"
     # exact short-circuit: every token contains '<', so a text without
     # '<' is a fixed point of the whole chain (~70% of spans on the synth
     # corpus, more on real web text). Measured at 8 cores on a 775k-span
     # corpus: chain 1.60 s, old single-pass regexp 1.88 s, guarded chain
     # 1.53 s — the literal chain beats the regex engine even unguarded.
-    return spans.withColumn(
-        "text", F.when(F.instr("text", "<") == 0, F.col("text"))
-        .otherwise(col))
+    return spans.withColumn("text", F.expr(
+        f"CASE WHEN instr(text, '<') = 0 THEN text ELSE {chain} END"))
 
 
 def _order_ranks(doc_codes, kind_codes, text_code, kind_dict,
                  x1, y1, x2, y2):
-    """Per-document reading-order resolution over a sorted run of spans.
+    """Per-document reading-order resolution over a run of spans.
 
-    Args are aligned arrays sorted by (doc_id, span_idx); ``doc_codes``
-    must be grouped (all rows of a doc contiguous); kinds arrive
+    Args are aligned arrays grouped by document (all rows of a doc
+    contiguous in ``doc_codes``), in ``span_idx`` order within; kinds arrive
     dictionary-encoded (``kind_codes`` + ``kind_dict``, ``text_code`` =
     code of 'text' or -1). Returns (starts, take, offsets): document start
     indices, a take-index array mapping output position → input row (docs
@@ -252,17 +253,38 @@ def _order_ranks(doc_codes, kind_codes, text_code, kind_dict,
     return starts, take, offsets
 
 
+def _check_runs(doc_dict, doc_codes, span_idx, starts) -> None:
+    """The kernel's input precondition: each document is one run of rows,
+    in increasing ``span_idx`` order. Without a shuffle in front of the
+    kernel, a ``doc_id`` held by two input rows would otherwise come out as
+    two documents (two runs) or one interleaved document (one run)."""
+    if len(starts) != len(doc_dict):
+        codes, counts = np.unique(doc_codes[starts], return_counts=True)
+        code, what = codes[counts > 1][0], "comes as two runs of spans"
+    else:
+        bad = np.flatnonzero((doc_codes[1:] == doc_codes[:-1])
+                             & (span_idx[1:] <= span_idx[:-1]))
+        if not bad.size:
+            return
+        code, what = doc_codes[bad[0]], "has a span_idx that does not increase"
+    raise ValueError(f"doc_id {doc_dict[int(code)].as_py()!r} {what}: "
+                     "two input rows share it")
+
+
 def _emit_arrow(tbl: "pa.Table"):
     """Assemble one run of complete documents into an Arrow RecordBatch of
     (doc_id, spans) — all column movement via vectorized Arrow take and
     dictionary codes; the only per-span Python objects are the kind
-    strings of documents on the exact-kernel slow path."""
+    strings of documents on the exact-kernel slow path. Raises
+    ``ValueError`` naming the ``doc_id`` when a document is not one run in
+    ``span_idx`` order (``_check_runs``)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     doc_col = tbl.column("doc_id").combine_chunks()
     kind_col = tbl.column("kind").combine_chunks()
-    doc_codes = np.asarray(doc_col.dictionary_encode().indices)
+    doc_enc = doc_col.dictionary_encode()
+    doc_codes = np.asarray(doc_enc.indices)
     kind_enc = kind_col.dictionary_encode()
     kind_codes = np.asarray(kind_enc.indices)
     kind_dict = kind_enc.dictionary.to_pylist()
@@ -273,6 +295,8 @@ def _emit_arrow(tbl: "pa.Table"):
     y2 = tbl.column("y2").to_numpy()
     starts, take, offsets = _order_ranks(
         doc_codes, kind_codes, text_code, kind_dict, x1, y1, x2, y2)
+    _check_runs(doc_enc.dictionary, doc_codes,
+                tbl.column("span_idx").to_numpy(), starts)
 
     idx = pa.array(take)
     kind_o = pc.take(kind_col, idx)
@@ -290,46 +314,40 @@ def _emit_arrow(tbl: "pa.Table"):
 
 
 def _assemble_arrow(it):
-    """mapInArrow body: batches of one hash-partition arrive sorted by
-    (doc_id, span_idx); grouped.carry_groups carries the last (possibly
-    incomplete) document of each batch into the next before
-    ``_emit_arrow`` assembles a run of complete documents."""
+    """mapInArrow body: the batches of one scan partition arrive with each
+    document's spans contiguous and in ``span_idx`` order;
+    grouped.carry_groups carries the last (possibly incomplete) document of
+    each batch into the next before ``_emit_arrow`` assembles a run of
+    complete documents."""
     from .operators.grouped import carry_groups
 
     yield from carry_groups(it, ["doc_id"], _emit_arrow)
 
 
 def order_and_assemble(spans: DataFrame) -> DataFrame:
-    """Reading-order resolution + document re-assembly (the one shuffle).
+    """Reading-order resolution + document re-assembly, in the scan's own
+    stage: no Exchange, no Sort.
 
-    Physical strategy (deliberate, see BENCH notes): grouped.cluster's
-    EXPLICIT ``repartition(defaultParallelism, doc_id)`` +
-    ``sortWithinPartitions(doc_id, span_idx)``, then ``mapInArrow`` over
-    ``_assemble_arrow``, instead of ``groupBy(doc_id).applyInPandas``,
-    because
+    Each input row of ``extract`` is one whole document, and ``posexplode``
+    plus the map-side filters keep its spans together and in ``span_idx``
+    order within their partition. That is all the kernel needs, so it
+    streams each partition's spans straight into ``mapInArrow`` over
+    ``_assemble_arrow``, and the Python stage is as wide as the scan
+    (``ensure_input_parallelism`` widens an under-partitioned one). The
+    reference and ``oracle.extract_pandas`` also order each input document
+    by itself; a ``doc_id`` held by two input rows raises in the kernel
+    (``_check_runs``) rather than being merged.
 
-    * per-group applyInPandas pays Arrow slicing + pandas construction per
-      document — ruinous for web-scale corpora of small docs (40k docs/task
-      at sf0.1 ⇒ the Python stage dominated wall time ~2×);
-    * AQE coalesces shuffle partitions by BYTE size, but this stage is
-      CPU-bound in Python at very low bytes/CPU — byte-based coalescing
-      collapsed it to ~9 tasks on 32 cores. An explicit repartition count
-      is exempt from AQE coalescing, keeping the Python stage wide;
-    * one partition per core, not more, so the stage runs as one wave
-      of Python tasks (see grouped.cluster for why).
-
-    Hash partitioning on doc_id guarantees each document lands whole in one
-    partition; the within-partition sort makes output independent of both
-    partition count and input row order. This is the same shape as every
-    other per-group operator (operators/grouped.py); only the kernel body
-    differs.
+    ``mapInArrow`` over whole Arrow batches, not
+    ``groupBy(doc_id).applyInPandas``: per-group applyInPandas pays Arrow
+    slicing + pandas construction per document — ruinous for web-scale
+    corpora of small docs (40k docs/task at sf0.1 ⇒ the Python stage
+    dominated wall time ~2×).
     """
-    from .operators.grouped import cluster
-
-    df = spans.select("doc_id", "span_idx", "kind", "text", "media_ref",
-                      "x1", "y1", "x2", "y2")
-    return cluster(df, ["doc_id"], ["span_idx"]).mapInArrow(
-        _assemble_arrow, schema=EXTRACTED_SCHEMA)
+    return spans.selectExpr(
+        "doc_id", "span_idx", "kind", "text", "media_ref",
+        "x1", "y1", "x2", "y2").mapInArrow(
+            _assemble_arrow, schema=EXTRACTED_SCHEMA)
 
 
 def ensure_input_parallelism(documents: DataFrame) -> DataFrame:

@@ -2,7 +2,7 @@
 pipeline._assemble_arrow runs the flagship kernel through) and the batch
 building of both row drivers (grouped_map_rows and map_rows), checked
 without a Spark session: hand-built Arrow batches stand in for one
-sorted hash partition."""
+scan partition, each document's rows contiguous and in span_idx order."""
 
 from __future__ import annotations
 
@@ -21,9 +21,9 @@ KINDS = ["text", "title", "table", "media"]
 
 
 def _kernel_rows(sizes: list[int], seed: int = 0) -> pa.Table:
-    """Kernel input sorted by (doc_id, span_idx): one doc per entry of
-    ``sizes``, with scattered boxes so both the fast and the exact path
-    of _order_ranks are taken."""
+    """Kernel input grouped by doc_id, in span_idx order within: one doc
+    per entry of ``sizes``, with scattered boxes so both the fast and the
+    exact path of _order_ranks are taken."""
     rng = np.random.default_rng(seed)
     n = sum(sizes)
     kind = rng.choice(KINDS, n)
@@ -91,6 +91,32 @@ def test_carry_is_invariant_to_batch_cuts(sizes, cuts, seed):
     cuts = [c % (tbl.num_rows + 1) for c in cuts]
     want = pa.Table.from_batches([pipeline._emit_arrow(tbl)])
     assert _assembled(_batches(tbl, cuts)).equals(want)
+
+
+def _shared_doc_id(doc_ids: list[str], span_idx: list[int]) -> pa.Table:
+    return _kernel_rows([1] * len(doc_ids)).set_column(
+        0, "doc_id", pa.array(doc_ids)).set_column(
+        1, "span_idx", pa.array(span_idx))
+
+
+@pytest.mark.parametrize("doc_ids,span_idx", [
+    (["doc_a", "doc_b", "doc_a"], [0, 0, 1]),
+    (["doc_a", "doc_a", "doc_a"], [0, 1, 0]),
+], ids=["two_runs", "span_idx_falls"])
+def test_kernel_rejects_a_doc_id_held_by_two_input_rows(doc_ids, span_idx):
+    """Without a shuffle in front of the kernel, two input rows with one
+    doc_id reach it as two runs, or as one run whose span_idx falls; both
+    raise, naming the doc, instead of emitting a split or merged doc."""
+    with pytest.raises(ValueError, match="doc_id 'doc_a'"):
+        pipeline._emit_arrow(_shared_doc_id(doc_ids, span_idx))
+
+
+def test_carry_keeps_a_falling_run_whole_so_the_kernel_raises():
+    """A batch cut inside the run does not hide the fall: the carry hands
+    the whole run to one ``_emit_arrow`` call."""
+    tbl = _shared_doc_id(["doc_a", "doc_a", "doc_a"], [0, 1, 0])
+    with pytest.raises(ValueError, match="doc_id 'doc_a'"):
+        _assembled(_batches(tbl, [1, 2]))
 
 
 def test_row_driver_casts_to_schema_and_skips_empty_groups():

@@ -243,8 +243,8 @@ def test_order_document_is_permutation_and_follows_items(spans):
 
     # Strict follow-the-item invariance needs distinct top-left corners:
     # sorted_boxes sorts on (y, x) only, so identical corners tie-break by
-    # input order — deterministic in the pipeline because rows are always
-    # pre-sorted by (doc_id, span_idx) before the kernel.
+    # input order — deterministic in the pipeline because each document's
+    # rows always reach the kernel in span_idx order.
     if len({(s[1], s[2]) for s in spans}) == len(spans):
         perm = np.arange(len(spans))[::-1]
         rank2 = order_document([kinds[i] for i in perm], xs[perm], ys[perm],

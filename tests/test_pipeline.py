@@ -40,6 +40,22 @@ def test_extract_partition_invariant(documents, oracle_rows):
         assert rows == oracle_rows
 
 
+def test_extract_rejects_a_doc_id_held_by_two_input_rows(spark):
+    """Each input row is one document, as in the reference and the oracle,
+    so two rows with one doc_id are an input error: the kernel raises
+    rather than merging them into one interleaved document. Both rows sit
+    in one partition of a scan that needs no widening."""
+    from pyspark.sql import functions as F
+    span = "struct<kind:string,text:string,media_ref:string,offset:int>"
+    row = ("doc_0000001", [("title", "T", None, 0),
+                           ("media", None, "m", 5000)])
+    docs = spark.createDataFrame(
+        [row, row], f"doc_id string, spans array<{span}>").repartition(
+        spark.sparkContext.defaultParallelism, F.lit(0))
+    with pytest.raises(Exception, match="doc_id 'doc_0000001'"):
+        extract(docs).collect()
+
+
 def test_extract_covers_fixture_paths(documents, oracle_rows):
     """The synthetic corpus actually exercises every fixture knob."""
     rows = oracle_rows

@@ -8,6 +8,7 @@ that silently adds an exchange or un-pushes a filter fails here first.
 
 from __future__ import annotations
 
+import gc
 import re
 
 import pytest
@@ -61,26 +62,71 @@ def test_sar_decode_is_pure_projection(spark):
     assert "Scan parquet" in plan
 
 
-def test_flagship_has_exactly_one_payload_shuffle(spark):
-    """extract(): ONE hash exchange (doc_id repartition for the
-    reading-order kernel); scan prunes to (doc_id, spans)."""
-    from paddleocr_spark.pipeline import extract
+@pytest.fixture(scope="module")
+def flagship_corpus(spark, tmp_path_factory):
+    """The synth corpus materialized as parquet, so the plan under test is
+    the extraction side only: ``(files) -> DataFrame`` over that many
+    files, each layout written once."""
     from paddleocr_spark.synth import synth_spans
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    corpus = synth_spans(docs)
-    # materialize the synth to parquet so the plan under test is the
-    # extraction side only
-    import tempfile
-    path = tempfile.mkdtemp() + "/c"
-    corpus.write.mode("overwrite").parquet(path)
-    out = extract(spark.read.parquet(path))
-    plan = _plan(out)
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "REPARTITION_BY_NUM" in plan          # AQE-coalesce-exempt
+    corpus = synth_spans(spark.read.parquet(f"{SF}/documents.parquet"))
+    paths: dict[int, str] = {}
+
+    def read(files: int):
+        if files not in paths:
+            paths[files] = str(tmp_path_factory.mktemp("corpus") / "c")
+            corpus.repartition(files).write.parquet(paths[files])
+        return spark.read.parquet(paths[files])
+    return read
+
+
+def test_flagship_has_no_payload_shuffle(spark, flagship_corpus):
+    """extract(): the kernel reads each scan partition's exploded spans in
+    the scan's own stage — no Exchange, no Sort; scan prunes to
+    (doc_id, spans). On a one-file scan the only exchange is
+    ensure_input_parallelism's round-robin widening."""
+    from paddleocr_spark.pipeline import extract
+    n = spark.sparkContext.defaultParallelism
+    wide = flagship_corpus(2 * n)
+    assert wide.rdd.getNumPartitions() >= n
+    plan = _plan(extract(wide))
+    assert "Exchange" not in plan
+    assert "Sort" not in plan
     assert "MapInArrow" in plan
-    # one Python task per core: a second wave pays the per-task toll again
-    assert _hash_exchange_widths(plan, "doc_id") == [
-        spark.sparkContext.defaultParallelism]
+    assert "ReadSchema: struct<doc_id:string,spans:array<" in plan
+
+    plan = _plan(extract(flagship_corpus(1)))
+    assert plan.count("Exchange") == 1
+    assert f"Exchange RoundRobinPartitioning({n})" in plan
+    assert "Sort" not in plan
+    assert "MapInArrow" in plan
+
+
+def test_flagship_plan_builds_in_few_jvm_calls(spark, flagship_corpus,
+                                               monkeypatch):
+    """Building extract(df), without running a job, makes at most 300 py4j
+    round trips. Each PySpark ``Column`` call costs several of them in
+    query-context bookkeeping, so the map-side stages are SQL strings."""
+    from py4j.clientserver import ClientServerConnection
+
+    from paddleocr_spark.pipeline import extract
+    wide = flagship_corpus(2 * spark.sparkContext.defaultParallelism)
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *a, **kw):
+        calls.append(command)
+        return send(self, command, *a, **kw)
+    # a cyclic-GC pass mid-build would add one py4j detach per collected
+    # JavaObject: collect before, and hold it off during, the build
+    gc.collect()
+    gc.disable()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    try:
+        extract(wide)
+    finally:
+        monkeypatch.undo()
+        gc.enable()
+    assert 0 < len(calls) <= 300
 
 
 def test_grouped_arrow_family_has_single_hash_exchange(spark):
