@@ -37,8 +37,6 @@ family; the kernel is O(canvas + tries·polys) per doc.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

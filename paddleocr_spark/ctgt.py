@@ -38,7 +38,6 @@ Reference: hoonisone/PaddleOCR ``ppocr/data/imaug/ct_process.py``
 from __future__ import annotations
 
 import json
-import math
 import random as _random
 
 import numpy as np

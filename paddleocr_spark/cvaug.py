@@ -50,8 +50,7 @@ __all__ = [
     "INTER_NEAREST", "INTER_LINEAR", "INTER_CUBIC", "INTER_AREA",
     "get_rotation_matrix_2d", "warp_affine", "warp_perspective_interp",
     "resize_interp", "pyr_down", "filter2d_reflect101",
-    "cv_geometry", "cv_deterioration", "svtr_geometry",
-    "svtr_deterioration", "abinet_rec_aug_image", "svtr_rec_aug_image",
+    "svtr_geometry", "abinet_rec_aug_image", "svtr_rec_aug_image",
     "cvaug_for_ref", "CVAUG_VARIANTS",
 ]
 
@@ -576,18 +575,6 @@ def _geometry_dispatch(rng_py, rng_np, img, type_p, degrees, translate,
     return _perspective_call(rng_py, rng_np, img, distortion)
 
 
-def cv_geometry(rng_py, rng_np, img, degrees=15, translate=(0.3, 0.3),
-                scale=(0.5, 2.), shear=(45, 15), distortion=0.5, p=0.5):
-    """CVGeometry (abinet_aug.py:343-365), fresh-construct-then-apply:
-    the transform TYPE is drawn at init (one stdlib uniform), the apply
-    gate at call."""
-    type_p = rng_py.random()
-    if rng_py.random() >= p:
-        return img
-    return _geometry_dispatch(rng_py, rng_np, img, type_p, degrees,
-                              translate, scale, shear, distortion)
-
-
 def _deterioration_init(rng_py, rng_np, var, degrees, factor,
                         shuffle_at_init):
     """Shared CVDeterioration/SVTRDeterioration __init__ replay:
@@ -600,29 +587,6 @@ def _deterioration_init(rng_py, rng_np, var, degrees, factor,
     if shuffle_at_init:
         rng_py.shuffle(transforms)
     return transforms
-
-
-def cv_deterioration(rng_py, rng_np, img, var, degrees, factor, p=0.5):
-    """CVDeterioration (abinet_aug.py:368-388), fresh-construct-then-
-    apply: init-shuffled pipeline behind a call gate."""
-    transforms = _deterioration_init(rng_py, rng_np, var, degrees, factor,
-                                     shuffle_at_init=True)
-    if rng_py.random() < p:
-        for t in transforms:
-            img = t(img)
-    return img
-
-
-def svtr_deterioration(rng_py, rng_np, img, var, degrees, factor, p=0.5):
-    """SVTRDeterioration (abinet_aug.py:410-428), fresh-construct-then-
-    apply: same members, shuffle INSIDE the gate at call time."""
-    transforms = _deterioration_init(rng_py, rng_np, var, degrees, factor,
-                                     shuffle_at_init=False)
-    if rng_py.random() < p:
-        rng_py.shuffle(transforms)
-        for t in transforms:
-            img = t(img)
-    return img
 
 
 def svtr_geometry(rng_py, rng_np, img, aug_type=0, degrees=15,

@@ -14,10 +14,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .dedup import (dedup_exact, dedup_minhash_pairs, dedup_ngram_jaccard,
-                    dedup_simhash, noisy_corpus, release_band_cache,
-                    simhash_pairs)
+                    dedup_simhash, noisy_corpus, simhash_pairs)
 from .metrics import char_prf, det_eval, lcs_string
-from .teds import teds, teds_batch_avg, teds_score
+from .teds import teds, teds_score
 from .similarity import (ann_cosine_topk, ann_ivf_topk, ann_lsh_buckets,
                          embedding_neardup, ivf_assign,
                          neardup_components, neardup_survivors)
@@ -62,7 +61,7 @@ __all__ = [
     "dedup_simhash", "noisy_corpus", "ann_cosine_topk", "ann_lsh_buckets",
     "embedding_neardup", "fingerprint", "lang_id", "quality_score", "strq2b",
     "token_count", "bench_queries", "char_prf", "det_eval", "lcs_string",
-    "teds", "teds_batch_avg", "teds_score", "ann_ivf_topk", "ivf_assign",
-    "simhash_pairs", "release_band_cache", "gopher_rules",
+    "teds", "teds_score", "ann_ivf_topk", "ivf_assign", "simhash_pairs",
+    "gopher_rules",
     "neardup_components",
 ]

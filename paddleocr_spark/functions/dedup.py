@@ -105,8 +105,9 @@ def minhash_bands(corpus: DataFrame) -> DataFrame:
 #: runs) reuse a single cached copy instead of stacking a new persist each
 #: call, and self-joins read one materialization instead of recomputing the
 #: build chain per side (Spark does NOT reuse the exchange across the two
-#: aliased sides — verified on the physical plan). ``release_band_cache``
-#: unpersists and clears.
+#: aliased sides — verified on the physical plan). Nothing evicts an
+#: entry; the key holds the session's application id, so a new session
+#: builds its own.
 _BAND_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -125,26 +126,15 @@ def _cached_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                    lambda: minhash_bands(noisy_corpus(spark, sf_dir)))
 
 
-def release_band_cache() -> None:
-    """Unpersist every cached band table (call when done with dedup ops)."""
-    while _BAND_CACHE:
-        _, bands = _BAND_CACHE.popitem()
-        try:
-            bands.unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
-
-
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs: docs sharing ≥1 minhash band bucket (a < b).
 
     The band table is persisted before the self-join — otherwise Spark
     computes the shingle→minhash chain twice (once per join side) — and
-    cached per (session, sf_dir) so repeated callers share one copy
-    (``release_band_cache`` frees it). At 10^12-doc scale the band table is
-    materialized to its own Iceberg table instead (it is also the
-    incremental-dedup index: new docs join against it without recomputing
-    the corpus).
+    cached per (session, sf_dir) so repeated callers share one copy. At
+    10^12-doc scale the band table is materialized to its own Iceberg
+    table instead (it is also the incremental-dedup index: new docs join
+    against it without recomputing the corpus).
     """
     bands = _cached_bands(spark, sf_dir)
     a = bands.alias("a")

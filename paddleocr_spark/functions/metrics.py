@@ -302,19 +302,13 @@ def can_batch_stats(labels: list[list[str]], preds: list[list[str]]):
 # ---------------------------------------------------------------------------
 
 def _rect_inter_matrix(gt: np.ndarray, det: np.ndarray) -> np.ndarray:
-    """(n_gt, n_det) pairwise axis-aligned intersection areas — the
-    broadcast form of :func:`_rect_inter` (identical scalars)."""
+    """(n_gt, n_det) pairwise axis-aligned intersection areas: the
+    clipped overlap width times height, 0 where either is not positive."""
     w = (np.minimum(gt[:, None, 2], det[None, :, 2])
          - np.maximum(gt[:, None, 0], det[None, :, 0]))
     h = (np.minimum(gt[:, None, 3], det[None, :, 3])
          - np.maximum(gt[:, None, 1], det[None, :, 1]))
     return np.where((w > 0) & (h > 0), w * h, 0.0)
-
-
-def _rect_inter(a: np.ndarray, b: np.ndarray) -> float:
-    w = min(a[2], b[2]) - max(a[0], b[0])
-    h = min(a[3], b[3]) - max(a[1], b[1])
-    return float(w * h) if w > 0 and h > 0 else 0.0
 
 
 def ct_sigma_tau(gt: np.ndarray, dc: np.ndarray, det: np.ndarray):

@@ -29,7 +29,6 @@ import re
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _TOKEN_RE = re.compile(r"<(/?)([a-zA-Z][a-zA-Z0-9]*)((?:[^>'\"]|'[^']*'|\"[^\"]*\")*?)(/?)>|([^<]+)")
 _ATTR_RE = re.compile(r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s\"'>]+))")
@@ -77,16 +76,6 @@ def _parse_html(s: str) -> list[_Elem]:
         if not selfclose and tag not in _VOID:
             stack.append(el)
     return root.children
-
-
-def _find_table(nodes: list[_Elem]) -> _Elem | None:
-    for n in nodes:
-        if n.tag == "table":
-            return n
-        found = _find_table(n.children)
-        if found is not None:
-            return found
-    return None
 
 
 def _find_body_table(nodes: list[_Elem]) -> _Elem | None:
@@ -257,10 +246,3 @@ def teds(pairs: DataFrame) -> DataFrame:
     return map_rows(pairs.select("pair_id", "pred_html", "true_html"),
                     lambda i, p, t: [(i, round(teds_score(p, t), 4))],
                     TEDS_SCHEMA)
-
-
-def teds_batch_avg(pairs: DataFrame) -> DataFrame:
-    """batch_evaluate average (table_metric.py:169-183)."""
-    return teds(pairs).agg(
-        F.round(F.avg("teds"), 4).alias("avg_teds"),
-        F.count("*").cast("long").alias("n_tables"))

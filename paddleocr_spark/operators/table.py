@@ -151,7 +151,6 @@ def table_decode_sql(ids: str, dialect: str = "spark") -> str:
 # ---------------------------------------------------------------------------
 
 def _tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     li = sf_table(spark, sf_dir, "lineitem")
     return (li.select((F.col("l_orderkey") % 50).alias("t_id")).distinct())
 

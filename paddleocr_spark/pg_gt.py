@@ -4,9 +4,10 @@ remaining target-generation enum row): 16-point poly validation with
 the direction-reversal quirk, aspect/scale jitters, blur/brightness
 gates, random pad placement, TCL polygon shrinking along width,
 per-quad TBO offset fields, direction maps, CTC text labels over the
-36-char lexicon, and both TCL point-gather modes (v2 projection sort;
-v3 'align' with morphological thinning + direction-sorted expansion
-via the reference's own extract_textpoint_fast walk).
+36-char lexicon, and the default TCL point gather (v2 projection sort).
+The reference's 'align' gather (v3: morphological thinning plus the
+extract_textpoint_fast direction walk) is not transcribed: no caller
+here selects it.
 
 Contract: pure (image, polys, tags, texts, seed) functions —
 ``np.random.RandomState(seed)`` replays the reference's global
@@ -18,12 +19,9 @@ differential and the per-document kernel use).
 
 Circularity status: poly validation/reversal, quad fitting, TCL
 shrink geometry, TBO line-intersection fields, direction labels, CTC
-label prep/padding, all RNG gates/draws, and the v2/v3 gather walks
-(incl. sort_with_direction / sort_and_expand_with_direction_v2,
-transcribed from ``ppocr/utils/e2e_utils/extract_textpoint_fast.py``
-— pure numpy, executed VERBATIM on the reference side) are genuinely
-differentialed (tests/test_pg_gt.py).  Re-derived-and-shimmed axioms
-(both differential sides): the drrg_gt raster set (even-odd scanline
+label prep/padding, all RNG gates/draws, and the v2 gather walk are
+genuinely differentialed (tests/test_pg_gt.py).  Re-derived-and-shimmed
+axioms (both differential sides): the drrg_gt raster set (even-odd scanline
 fillPoly incl. multi-channel labels, LINE_8 polylines, 8-CC
 first-occurrence labeling), bilinear resize, separable Gaussian blur
 with cv2's auto sigma, minAreaRect+boxPoints, and skimage's ``thin``
@@ -43,10 +41,9 @@ imports its raster axioms from ``drrg_gt``.
 Reference: hoonisone/PaddleOCR ``ppocr/data/imaug/pg_process.py``
   get_dict/quad_area/gen_quad_from_poly :53-98
   check_and_validate_polys :100-144     crop_area :146-225
-  fit_and_gather_tcl_points_v2 :227-292 / _v3 :294-381
+  fit_and_gather_tcl_points_v2 :227-292
   generate_direction_map :383-421       generate_tcl_ctc_label :423-572
   geometry helpers :574-831 (= sast_gt)  __call__ :863-1034
-  ``ppocr/utils/e2e_utils/extract_textpoint_fast.py:157-296``
 """
 from __future__ import annotations
 
@@ -56,8 +53,7 @@ import numpy as np
 
 __all__ = [
     "thin_skeleton", "gaussian_blur_auto", "pg_process_doc",
-    "pg_gt_rows_for_doc", "sort_with_direction",
-    "sort_and_expand_with_direction_v2", "PG_LEXICON",
+    "pg_gt_rows_for_doc", "PG_LEXICON",
 ]
 
 from .functions.labelenc import ENC_CHARSET as PG_LEXICON
@@ -198,84 +194,6 @@ def gaussian_blur_auto(img: np.ndarray, ks: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# extract_textpoint_fast walk (pure numpy; executed verbatim in tests)
-# ---------------------------------------------------------------------------
-
-def sort_with_direction(pos_list, f_direction):
-    """extract_textpoint_fast.py:157-193."""
-    def sort_part(pos, direction):
-        pos = np.array(pos).reshape(-1, 2)
-        direction = np.array(direction).reshape(-1, 2)
-        average = np.mean(direction, axis=0, keepdims=True)
-        proj = np.sum(pos * average, axis=1)
-        order = np.argsort(proj)
-        return pos[order].tolist(), direction[order].tolist()
-
-    pos_list = np.array(pos_list).reshape(-1, 2)
-    point_direction = f_direction[pos_list[:, 0], pos_list[:, 1]]
-    point_direction = point_direction[:, ::-1]
-    sorted_point, sorted_direction = sort_part(pos_list, point_direction)
-
-    point_num = len(sorted_point)
-    if point_num >= 16:
-        middle = point_num // 2
-        first_p, first_d = sort_part(sorted_point[:middle],
-                                     sorted_direction[:middle])
-        last_p, last_d = sort_part(sorted_point[middle:],
-                                   sorted_direction[middle:])
-        sorted_point = first_p + last_p
-        sorted_direction = first_d + last_d
-    return sorted_point, np.array(sorted_direction)
-
-
-def sort_and_expand_with_direction_v2(pos_list, f_direction,
-                                      binary_tcl_map):
-    """extract_textpoint_fast.py:247-296 — sorted centre points grown
-    outward along the average end directions while the TCL map stays
-    hot."""
-    h, w, _ = f_direction.shape
-    sorted_list, point_direction = sort_with_direction(pos_list,
-                                                       f_direction)
-    point_num = len(sorted_list)
-    sub_len = max(point_num // 3, 2)
-    left_dir = point_direction[:sub_len, :]
-    right_dir = point_direction[point_num - sub_len:, :]
-
-    left_avg = -np.mean(left_dir, axis=0, keepdims=True)
-    left_len = np.linalg.norm(left_avg)
-    left_start = np.array(sorted_list[0])
-    left_step = left_avg / (left_len + 1e-6)
-
-    right_avg = np.mean(right_dir, axis=0, keepdims=True)
-    right_len = np.linalg.norm(right_avg)
-    right_step = right_avg / (right_len + 1e-6)
-    right_start = np.array(sorted_list[-1])
-
-    append_num = max(int((left_len + right_len) / 2.0 * 0.15), 1)
-    max_append = 2 * append_num
-
-    left_list = []
-    right_list = []
-    for i in range(max_append):
-        ly, lx = np.round(left_start + left_step * (i + 1)).flatten() \
-            .astype("int32").tolist()
-        if ly < h and lx < w and (ly, lx) not in left_list:
-            if binary_tcl_map[ly, lx] > 0.5:
-                left_list.append((ly, lx))
-            else:
-                break
-    for i in range(max_append):
-        ry, rx = np.round(right_start + right_step * (i + 1)).flatten() \
-            .astype("int32").tolist()
-        if ry < h and rx < w and (ry, rx) not in right_list:
-            if binary_tcl_map[ry, rx] > 0.5:
-                right_list.append((ry, rx))
-            else:
-                break
-    return left_list[::-1] + sorted_list + right_list
-
-
-# ---------------------------------------------------------------------------
 # TCL point gathering (the RNG consumers inside label generation)
 # ---------------------------------------------------------------------------
 
@@ -330,82 +248,6 @@ def _fit_gather_v2(rng_np, min_area_quad, poly, max_h, max_w, tcl_len,
     return pos_l, pos_m
 
 
-def _fit_gather_v3(rng_np, f_direction, poly, max_h, max_w, ds_ratio,
-                   tcl_len, fixed_point_num=64, img_id=0,
-                   reference_height=3):
-    """pg_process.py:294-381 (point_gather_mode='align'): thin-skeleton
-    centre extraction, direction-sorted expansion, stride in-fill,
-    seeded jitter."""
-    from .drrg_gt import connected_components8
-
-    det_mask = np.zeros((int(max_h / ds_ratio),
-                         int(max_w / ds_ratio))).astype(np.float32)
-    _fill_polys(det_mask, np.round(poly / ds_ratio).astype(np.int32),
-                1.0)
-    det_mask = _resize_fxfy(det_mask, ds_ratio, ds_ratio)
-    det_mask = np.array(det_mask > 1e-3, dtype="float32")
-
-    skeleton_map = thin_skeleton(det_mask.astype(np.uint8))
-    _, instance_label_map = connected_components8(
-        skeleton_map.astype(np.uint8))
-
-    ys, xs = np.where(instance_label_map == 1)
-    pos_list = list(zip(ys, xs))
-    if len(pos_list) < 3:
-        return None
-    pos_list_sorted = np.array(sort_and_expand_with_direction_v2(
-        pos_list, f_direction, det_mask))
-
-    length = len(pos_list_sorted) - 1
-    insert_num = 0
-    for index in range(length):
-        stride_y = np.abs(pos_list_sorted[index + insert_num][0]
-                          - pos_list_sorted[index + 1 + insert_num][0])
-        stride_x = np.abs(pos_list_sorted[index + insert_num][1]
-                          - pos_list_sorted[index + 1 + insert_num][1])
-        max_points = int(max(stride_x, stride_y))
-        stride = (pos_list_sorted[index + insert_num]
-                  - pos_list_sorted[index + 1 + insert_num]) / max_points
-        insert_num_temp = max_points - 1
-        for i in range(int(insert_num_temp)):
-            insert_value = pos_list_sorted[index + insert_num] \
-                - (i + 1) * stride
-            insert_index = index + i + 1 + insert_num
-            pos_list_sorted = np.insert(pos_list_sorted, insert_index,
-                                        insert_value, axis=0)
-        insert_num += insert_num_temp
-
-    pos_info = np.array(pos_list_sorted).reshape(-1, 2).astype(
-        np.float32)
-    point_num = len(pos_info)
-    if point_num > fixed_point_num:
-        keep_ids = [int((point_num * 1.0 / fixed_point_num) * x)
-                    for x in range(fixed_point_num)]
-        pos_info = pos_info[keep_ids, :]
-
-    keep = int(min(len(pos_info), fixed_point_num))
-    reference_width = (np.abs(poly[0, 0, 0] - poly[-1, 1, 0])
-                       + np.abs(poly[0, 3, 0] - poly[-1, 2, 0])) // 2
-    if rng_np.rand() < 1:
-        dh = (rng_np.rand(keep) - 0.5) * reference_height
-        offset = rng_np.rand() - 0.5
-        dw = np.array([[0, offset * reference_width * 0.2]])
-        random_float_h = np.array([1, 0]).reshape([1, 2]) * dh.reshape(
-            [keep, 1])
-        random_float_w = dw.repeat(keep, axis=0)
-        pos_info += random_float_h                # float32 in place
-        pos_info += random_float_w
-        pos_info[:, 0] = np.clip(pos_info[:, 0], 0, max_h - 1)
-        pos_info[:, 1] = np.clip(pos_info[:, 1], 0, max_w - 1)
-
-    pos_l = np.zeros((tcl_len, 3), dtype=np.int32)
-    pos_l[:, 0] = np.ones((tcl_len,)) * img_id
-    pos_m = np.zeros((tcl_len, 1), dtype=np.float32)
-    pos_l[:keep, 1:] = np.round(pos_info).astype(np.int32)
-    pos_m[:keep] = 1.0
-    return pos_l, pos_m
-
-
 def _generate_direction_map(poly_quads, n_char, direction_map):
     width_list = []
     height_list = []
@@ -441,9 +283,9 @@ def _prepare_text_label(label_str, lexicon):
 
 
 def _generate_tcl_ctc_label(rng_np, h, w, polys, tags, text_strs,
-                            ds_ratio, point_gather_mode, img_id,
-                            tcl_len, min_text_size=4, max_text_size=512,
-                            tcl_ratio=0.3, shrink_ratio_of_width=0.15):
+                            ds_ratio, img_id, tcl_len, min_text_size=4,
+                            max_text_size=512, tcl_ratio=0.3,
+                            shrink_ratio_of_width=0.15):
     """pg_process.py:423-572."""
     score_map_big = np.zeros((h, w), dtype=np.float32)
     h, w = int(h * ds_ratio), int(w * ds_ratio)
@@ -515,20 +357,10 @@ def _generate_tcl_ctc_label(rng_np, h, w, polys, tags, text_strs,
                                                 direction_map)
         average_shrink_height = _calculate_average_height(stcl_quads)
 
-        if point_gather_mode == "align":
-            f_direction = direction_map[:, :, :-1].copy()
-            pos_res = _fit_gather_v3(
-                rng_np, f_direction, stcl_quads, max_h=h, max_w=w,
-                ds_ratio=ds_ratio, tcl_len=tcl_len, fixed_point_num=64,
-                img_id=img_id, reference_height=average_shrink_height)
-            if pos_res is None:
-                continue
-            pos_l, pos_m = pos_res
-        else:
-            pos_l, pos_m = _fit_gather_v2(
-                rng_np, min_area_quad, poly, max_h=h, max_w=w,
-                tcl_len=tcl_len, fixed_point_num=64, img_id=img_id,
-                reference_height=average_shrink_height)
+        pos_l, pos_m = _fit_gather_v2(
+            rng_np, min_area_quad, poly, max_h=h, max_w=w,
+            tcl_len=tcl_len, fixed_point_num=64, img_id=img_id,
+            reference_height=average_shrink_height)
 
         if len(text_label_index_list) < 2:
             continue
@@ -549,8 +381,7 @@ def _generate_tcl_ctc_label(rng_np, h, w, polys, tags, text_strs,
 # the full __call__ walk (pg_process.py:863-1034)
 # ---------------------------------------------------------------------------
 
-def pg_process_doc(im, polys16, tags, texts, seed: int,
-                   point_gather_mode=None, img_id: int = 0,
+def pg_process_doc(im, polys16, tags, texts, seed: int, img_id: int = 0,
                    max_text_length: int = _MAX_TEXT_LENGTH,
                    max_text_nums: int = _MAX_TEXT_NUMS,
                    tcl_len: int = _TCL_LEN):
@@ -641,7 +472,7 @@ def pg_process_doc(im, polys16, tags, texts, seed: int,
      training_mask, pos_list, pos_mask, label_list,
      score_label_map_text_label) = _generate_tcl_ctc_label(
         rng_np, input_size, input_size, text_polys, text_tags,
-        text_strs, 0.25, point_gather_mode, img_id, tcl_len)
+        text_strs, 0.25, img_id, tcl_len)
     del score_label_map_text_label               # refine-head only
     if len(label_list) <= 0:
         return None
@@ -700,8 +531,7 @@ def _rect_to_poly16(x0, y0, x1, y1):
 
 
 def pg_gt_rows_for_doc(doc_id: str, rects: np.ndarray, ignored, texts,
-                       canvas_h: int, canvas_w: int,
-                       point_gather_mode=None) -> tuple:
+                       canvas_h: int, canvas_w: int) -> tuple:
     """Gate-query kernel: span rects → 16-point polys → the PGNet
     target walk seeded crc32(doc_id); one row of tensor statistics
     (float64-exact channel sums, live counts, pad-aware label sum)."""
@@ -715,8 +545,7 @@ def pg_gt_rows_for_doc(doc_id: str, rects: np.ndarray, ignored, texts,
     img = ((xs * 5 + ys * 11 + seed) % 256).astype(np.uint8)
     img = np.stack([img, (img * 3 + 17) % 256, (img * 7 + 43) % 256],
                    axis=-1).astype(np.uint8)
-    out = pg_process_doc(img, polys, tags, texts, seed,
-                         point_gather_mode=point_gather_mode)
+    out = pg_process_doc(img, polys, tags, texts, seed)
     if out is None:
         return (doc_id, 0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0, 0.0, 0.0)
     return (

@@ -18,7 +18,7 @@ Exec-ref differentials (tests/test_recaug.py):
 * tia_distort / tia_stretch / tia_perspective + WarpMLS — GENUINE
   end-to-end: the reference modules import nothing but numpy, so the
   test executes them verbatim against seeded globals.
-* RecAug / BaseDataAugmentation / RecConAug — the composition, RNG
+* RecAug / BaseDataAugmentation — the composition, RNG
   gating, crop/jitter/noise/reverse arithmetic are genuine; the only
   shim-circular spots are the two cv2 primitives (the 5-tap Gaussian
   separable filter and the uint8 HSV round-trip), re-derived below from
@@ -29,10 +29,8 @@ Reference: hoonisone/PaddleOCR
   BaseDataAugmentation       rec_img_aug.py:57-121
   helpers flag/hsv_aug/jitter/add_gasuss_noise/get_crop
                              rec_img_aug.py:724-797
-  RecConAug / _GraphemeLabel rec_img_aug.py:132-222
   tia_distort/stretch/persp  ppocr/data/imaug/text_image_aug/augment.py
   WarpMLS                    ppocr/data/imaug/text_image_aug/warp_mls.py
-  ExtractGrapheme            ppocr/data/imaug/operators_mh.py:77-104
 """
 from __future__ import annotations
 
@@ -43,8 +41,7 @@ import numpy as np
 __all__ = [
     "gaussian_kernel_1d", "sep_gauss5_blur", "bgr2hsv_u8", "hsv2bgr_u8",
     "warp_mls", "tia_distort", "tia_stretch", "tia_perspective",
-    "bda_image", "rec_aug_image", "rec_con_aug", "extract_grapheme_record",
-    "rec_aug_for_ref", "REC_AUG_VARIANTS",
+    "bda_image", "rec_aug_image", "rec_aug_for_ref", "REC_AUG_VARIANTS",
 ]
 
 _GRID = 100                     # WarpMLS.grid_size (warp_mls.py:31)
@@ -464,112 +461,6 @@ def rec_aug_image(img: np.ndarray, seed: int, tia_prob: float = 0.4,
         img = tia_perspective(rng_np, img)
     return bda_image(rng_py, rng_np, img, crop_prob, reverse_prob,
                      noise_prob, jitter_prob, blur_prob, hsv_aug_prob)
-
-
-# ---------------------------------------------------------------------------
-# RecConAug (+ the fork's grapheme-label dialect), rec_img_aug.py:132-222
-# ---------------------------------------------------------------------------
-
-def extract_grapheme_record(data: dict) -> dict:
-    """ExtractGrapheme.__call__ (operators_mh.py:89-104): label string ->
-    {initial, medial, final, character} dict via the representative-
-    syllable decomposition, plus the utf8string channel; both text_label
-    and label carry it."""
-    import copy as _copy
-
-    from .kernels import decompose_hangul_by_utf8, decompose_korean_char
-
-    ini, med, fin = decompose_korean_char(data["label"])
-    text_label = {"initial": ini, "medial": med, "final": fin,
-                  "character": data["label"]}
-    data = dict(data)
-    data["text_label"] = text_label
-    data["label"] = _copy.copy(text_label)
-    data["text_label"]["utf8string"] = decompose_hangul_by_utf8(
-        text_label["character"])
-    data["label"]["utf8string"] = _copy.copy(
-        data["text_label"]["utf8string"])
-    return data
-
-
-def _concat_resize(img: np.ndarray, ext_img: np.ndarray,
-                   target_h: int) -> np.ndarray:
-    """RecConAug.merge_ext_data's pixel half (rec_img_aug.py:145-156):
-    both images resized to target_h at python-round()ed aspect widths
-    (cv2.resize INTER_LINEAR semantics via pixelops.resize_bilinear),
-    concatenated along width."""
-    from .pixelops import resize_bilinear
-
-    ori_w = round(img.shape[1] / img.shape[0] * target_h)
-    ext_w = round(ext_img.shape[1] / ext_img.shape[0] * target_h)
-    a = resize_bilinear(img, target_h, ori_w)
-    b = resize_bilinear(ext_img, target_h, ext_w)
-    return np.concatenate([a, b], axis=1)
-
-
-def _concat_len_check(label, ext_label, max_text_length: int,
-                      handling_grapheme) -> object:
-    """label_length_check, BOTH dialects with their pinned quirks.
-
-    Base (rec_img_aug.py:175-178): returns False when the MERGED label
-    would be TOO LONG — inverted wrt its use site (``if check: break``),
-    so the reference stops concatenating exactly when the labels still
-    fit and merges when they overflow.  Grapheme dialect
-    (rec_img_aug.py:200-210): checks only the FIRST handled grapheme
-    (the ``return True`` sits inside the loop), and a plain-str ext
-    label is decomposed into a LOCAL variable the caller never sees."""
-    if handling_grapheme is None:
-        if len(label) + len(ext_label) > max_text_length:
-            return False
-        return True
-    if isinstance(ext_label, str):
-        ext_label = extract_grapheme_record({"label": ext_label})["label"]
-    for g in handling_grapheme:
-        if len(label[g]) + len(ext_label[g]) > max_text_length:
-            return False
-        return True
-    return None
-
-
-def rec_con_aug(rng_py, data: dict, image_shape=(32, 320, 3),
-                max_text_length: int = 25, prob: float = 0.5,
-                handling_grapheme=None) -> dict:
-    """RecConAug.__call__ / RecConAug_GraphemeLabel.__call__
-    (rec_img_aug.py:158-171): one gate draw, then for each ext record
-    stop on the (inverted) length check or on the combined aspect ratio
-    exceeding image_shape's w/h; otherwise resize-and-concat pixels and
-    merge labels (grapheme dialect merges per-channel, re-decomposing
-    plain-str ext labels — this time visibly)."""
-    data = dict(data)
-    max_wh_ratio = image_shape[1] / image_shape[0]
-    if rng_py.random() > prob:
-        data.pop("ext_data", None)
-        return data
-    for ext_data in data["ext_data"]:
-        chk = _concat_len_check(data["label"], ext_data["label"],
-                                max_text_length, handling_grapheme)
-        if chk:
-            break
-        concat_ratio = (data["image"].shape[1] / data["image"].shape[0]
-                        + ext_data["image"].shape[1]
-                        / ext_data["image"].shape[0])
-        if concat_ratio > max_wh_ratio:
-            break
-        data["image"] = _concat_resize(data["image"], ext_data["image"],
-                                       image_shape[0])
-        if handling_grapheme is None:
-            data["label"] = data["label"] + ext_data["label"]
-        else:
-            ext_label = ext_data["label"]
-            if isinstance(ext_label, str):
-                ext_label = extract_grapheme_record(
-                    {"label": ext_label})["label"]
-            merged = dict(data["label"])
-            for g in handling_grapheme:
-                merged[g] = merged[g] + ext_label[g]
-            data["label"] = merged
-    data.pop("ext_data", None)
-    return data
 
 
 # ---------------------------------------------------------------------------

@@ -24,7 +24,6 @@ Reference: hoonisone/PaddleOCR ``ppocr/data/imaug/rec_img_aug.py``
   RFLRecResizeImg :326  SRNRecResizeImg :353  SARRecResizeImg :373
   PRENResizeImg :389  SPINRecResizeImg :408  GrayRecResizeImg :453
   ABINetRecResizeImg :504  SVTRRecResizeImg :516
-  RobustScannerRecResizeImg :531
 """
 from __future__ import annotations
 
@@ -39,7 +38,7 @@ __all__ = [
     "resize_norm_img_chinese", "resize_norm_img_sar",
     "resize_norm_img_srn", "resize_norm_img_abinet", "srn_other_inputs",
     "gray_resize", "pren_resize", "vl_resize", "spin_resize",
-    "rfl_resize", "robust_scanner_resize", "rec_resize_for_ref",
+    "rfl_resize", "rec_resize_for_ref",
     "REC_RESIZE_VARIANTS",
 ]
 
@@ -372,17 +371,6 @@ def rfl_resize(img: np.ndarray, image_shape, padding: bool = True,
     resize_norm_img walk (the gray 2-D array rides its imgC==1 branch)."""
     img = cvt_bgr2gray(img)
     return resize_norm_img(img, image_shape, padding, interpolation)
-
-
-def robust_scanner_resize(img: np.ndarray, image_shape,
-                          max_text_length: int,
-                          width_downsample_ratio: float = 0.25):
-    """RobustScannerRecResizeImg (rec_img_aug.py:531-551): SAR resize +
-    the int64 word-position ramp."""
-    norm_img, resize_shape, pad_shape, valid_ratio = resize_norm_img_sar(
-        img, image_shape, width_downsample_ratio)
-    word_positons = np.array(range(0, max_text_length)).astype("int64")
-    return norm_img, resize_shape, pad_shape, valid_ratio, word_positons
 
 
 # ---------------------------------------------------------------------------

@@ -12,25 +12,6 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: Extension filter of get_image_file_list (ppocr/utils/utility.py:60-75).
-IMG_EXTENSIONS = ["jpg", "bmp", "png", "jpeg", "rgb", "tif", "tiff", "gif",
-                  "pdf"]
-
-
-def read_binary_dir(spark: SparkSession, path: str) -> DataFrame:
-    """S1 get_image_file_list: recursive directory scan with extension
-    filter, sorted by path (utility.py:60-75 sorts the list; we order by
-    input file name — same total order, but computed distributed).
-
-    Returns (path, modificationTime, length, content:binary).
-    """
-    glob = "{" + ",".join(IMG_EXTENSIONS + [e.upper() for e in IMG_EXTENSIONS]) + "}"
-    return (spark.read.format("binaryFile")
-            .option("pathGlobFilter", f"*.{glob}")
-            .option("recursiveFileLookup", "true")
-            .load(path)
-            .orderBy("path"))
-
 
 def read_label_files(spark: SparkSession, label_files: list[str],
                      ratios: list[float] | None = None) -> DataFrame:
@@ -58,22 +39,9 @@ def read_label_files(spark: SparkSession, label_files: list[str],
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-def read_jsonl_source(spark: SparkSession, path: str) -> DataFrame:
-    """S6 PubTabDataSet: JSONL annotation source
-    (ppocr/data/pubtab_dataset.py:24-133) → spark.read.json."""
-    return spark.read.json(path)
-
-
 def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Table ``name`` of a scale-factor dir (``<sf_dir>/<name>.parquet``),
     as scanned: the one opener of the test-data tables. It does not
     widen a one-file scan (ROADMAP item 2 records why); the few callers
     that need parallelism call ``pipeline.ensure_input_parallelism``."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The primary corpus scan. Iceberg at scale (partition spec
-    bucket(doc_id)); parquet in the sandbox. Reads ONLY the columns the
-    pipeline needs so column pruning reaches the scan."""
-    return sf_table(spark, sf_dir, "documents").select("doc_id", "text")

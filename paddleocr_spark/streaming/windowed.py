@@ -28,8 +28,6 @@ stopping.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 

@@ -25,9 +25,8 @@ import numpy as np
 from paddleocr_spark.cvaug import (
     CVAUG_VARIANTS, INTER_AREA, INTER_LINEAR, INTER_NEAREST,
     _affine_call, _gaussian_noise, _motion_blur, _perspective_call,
-    _rescale, _rotation_call, abinet_rec_aug_image, cv_deterioration,
-    cv_geometry, cvaug_for_ref, filter2d_reflect101,
-    get_rotation_matrix_2d, pyr_down, resize_interp, svtr_deterioration,
+    _rescale, _rotation_call, abinet_rec_aug_image, cvaug_for_ref,
+    filter2d_reflect101, get_rotation_matrix_2d, pyr_down, resize_interp,
     svtr_geometry, svtr_rec_aug_image, warp_affine,
     warp_perspective_interp)
 
@@ -277,43 +276,6 @@ def test_motion_blur_matches_executed_reference():
         rpy, rnp = _seeded(seed)
         want = ns["CVMotionBlur"](degrees=6)(img.copy())
         got = _motion_blur(rnp, 6, 90)(img.copy())
-        assert np.array_equal(got, want), seed
-
-
-def test_cv_geometry_matches_executed_reference():
-    ns = _load_ref_abinet()
-    for h, w in [(32, 100), (48, 160)]:
-        img = _img(h, w, 7)
-        for seed in range(16):             # all 3 types x gate outcomes
-            rpy, rnp = _seeded(seed)
-            want = ns["CVGeometry"](
-                degrees=45, translate=(0.0, 0.0), scale=(0.5, 2.),
-                shear=(45, 15), distortion=0.5, p=0.5)(img.copy())
-            got = cv_geometry(rpy, rnp, img.copy(), degrees=45,
-                              translate=(0.0, 0.0), scale=(0.5, 2.),
-                              shear=(45, 15), distortion=0.5, p=0.5)
-            assert np.array_equal(got, want), (h, w, seed)
-
-
-def test_cv_deterioration_matches_executed_reference():
-    ns = _load_ref_abinet()
-    img = _img(32, 100, 8)
-    for seed in range(16):
-        rpy, rnp = _seeded(seed)
-        want = ns["CVDeterioration"](var=20, degrees=6, factor=4,
-                                     p=0.5)(img.copy())
-        got = cv_deterioration(rpy, rnp, img.copy(), 20, 6, 4, p=0.5)
-        assert np.array_equal(got, want), seed
-
-
-def test_svtr_deterioration_matches_executed_reference():
-    ns = _load_ref_abinet()
-    img = _img(32, 100, 9)
-    for seed in range(16):
-        rpy, rnp = _seeded(seed)
-        want = ns["SVTRDeterioration"](var=20, degrees=6, factor=4,
-                                       p=0.5)(img.copy())
-        got = svtr_deterioration(rpy, rnp, img.copy(), 20, 6, 4, p=0.5)
         assert np.array_equal(got, want), seed
 
 

@@ -106,7 +106,7 @@ def _digest_all(run) -> dict:
 def test_pg_process_doc_goldens():
     from paddleocr_spark.pg_gt import PG_LEXICON, pg_process_doc
 
-    def run(kind, seed, mode):
+    def run(kind, seed):
         rng = np.random.RandomState(seed)
         h, w = 300, 400
         im = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
@@ -123,13 +123,9 @@ def test_pg_process_doc_goldens():
         tags = [bool(v) for v in rng.rand(n) < 0.2]
         texts = ["".join(rng.choice(list(PG_LEXICON), rng.randint(2, 9)))
                  for _ in range(n)]
-        return pg_process_doc(im, polys, tags, texts, seed,
-                              point_gather_mode=mode)
+        return pg_process_doc(im, polys, tags, texts, seed)
 
-    got = {name: {kind: _md5([run(kind, s, mode) for s in SEEDS])
-                  for kind in KINDS}
-           for name, mode in (("v2", None), ("align", "align"))}
-    assert got == PG_GOLDEN
+    assert _digest_all(run) == PG_GOLDEN
 
 
 def test_sast_process_doc_goldens():
@@ -187,16 +183,9 @@ def test_east_process_doc_goldens(kind):
 
 #: md5 digests recorded before the helper deduplication.
 PG_GOLDEN = {
-    "align": {
-        "curved": "c10648343cc9ffaf177566d1811e166f",
-        "rect": "f9771c1a25171ab1f0270542a3f68728",
-        "rot": "a7df0ea4fae19e7dd8bb8840817d025b",
-    },
-    "v2": {
-        "curved": "f58b67d001024779cbcb71d5956baacf",
-        "rect": "416b53887b0deb86aa3b7546bd0b30cd",
-        "rot": "3b2d196369200447434991b038a07ec3",
-    },
+    "curved": "f58b67d001024779cbcb71d5956baacf",
+    "rect": "416b53887b0deb86aa3b7546bd0b30cd",
+    "rot": "3b2d196369200447434991b038a07ec3",
 }
 
 SAST_GOLDEN = {

@@ -9,7 +9,7 @@ auto-sigma Gaussian blur, minAreaRect+boxPoints, the regenerated
 Lam-Lee-Suen thinning LUTs) shimmed on both sides.  The poly
 validation/reversal walk, all scale/blur/brightness/pad draws, TCL
 shrink geometry, TBO fields, direction labels, CTC label prep, and
-both point-gather modes run from reference source.
+the default (v2) point gather run from reference source.
 """
 from __future__ import annotations
 
@@ -23,8 +23,7 @@ import numpy as np
 
 from paddleocr_spark.pg_gt import (
     PG_LEXICON, _rect_to_poly16, gaussian_blur_auto, pg_gt_rows_for_doc,
-    pg_process_doc, sort_and_expand_with_direction_v2,
-    sort_with_direction, thin_skeleton)
+    pg_process_doc, thin_skeleton)
 
 REF = "/root/reference"
 
@@ -76,7 +75,7 @@ def _cv2_stub():
 
 def _load_ref_pg():
     """Execute extract_textpoint_fast.py then pg_process.py verbatim;
-    returns (pg namespace, textpoint namespace, dict_path)."""
+    returns (pg namespace, dict_path)."""
     cv2 = _cv2_stub()
     skel = types.ModuleType("skimage.morphology._skeletonize")
     skel.thin = lambda m: thin_skeleton(m)
@@ -122,7 +121,7 @@ def _load_ref_pg():
     fd, dict_path = tempfile.mkstemp(suffix=".txt")
     with os.fdopen(fd, "w", encoding="utf-8") as f:
         f.write("\n".join(PG_LEXICON))
-    return ns, tp_ns, dict_path
+    return ns, dict_path
 
 
 def _mk_doc(rng, h, w, n):
@@ -148,13 +147,11 @@ def _mk_doc(rng, h, w, n):
     return img, polys, tags, texts
 
 
-def _run_ref(ns, dict_path, img, polys, tags, texts, seed,
-             point_gather_mode=None):
+def _run_ref(ns, dict_path, img, polys, tags, texts, seed):
     np.random.seed(seed)
     op = ns["PGProcessTrain"](
         character_dict_path=dict_path, max_text_length=50,
-        max_text_nums=30, tcl_len=64, use_resize=True,
-        point_gather_mode=point_gather_mode)
+        max_text_nums=30, tcl_len=64, use_resize=True)
     return op({"image": img.copy(),
                "polys": np.array(polys, dtype=np.float32),
                "ignore_tags": list(tags),
@@ -178,7 +175,7 @@ def _assert_same(got, want, ctx):
 
 
 def test_pg_process_matches_executed_reference():
-    ns, _, dict_path = _load_ref_pg()
+    ns, dict_path = _load_ref_pg()
     rng = random.Random(91)
     live = 0
     for trial in range(20):
@@ -191,48 +188,6 @@ def test_pg_process_matches_executed_reference():
         _assert_same(got, want, trial)
         live += want is not None
     assert live >= 5                       # drop arms aren't everything
-
-
-def test_pg_process_align_mode_matches():
-    """point_gather_mode='align': the thin-skeleton v3 gather with
-    direction-sorted expansion."""
-    ns, _, dict_path = _load_ref_pg()
-    rng = random.Random(7)
-    live = 0
-    for trial in range(10):
-        img, polys, tags, texts = _mk_doc(rng, 512, 512,
-                                          rng.randint(1, 4))
-        seed = 6000 + trial
-        want = _run_ref(ns, dict_path, img, polys, tags, texts, seed,
-                        point_gather_mode="align")
-        got = pg_process_doc(img, polys, tags, texts, seed,
-                             point_gather_mode="align")
-        _assert_same(got, want, trial)
-        live += want is not None
-    assert live >= 3
-
-
-def test_sort_walks_match_executed_reference():
-    """sort_with_direction / sort_and_expand_with_direction_v2 vs the
-    executed extract_textpoint_fast.py (pure numpy — genuine)."""
-    _, tp_ns, _ = _load_ref_pg()
-    rng = np.random.RandomState(3)
-    for trial in range(20):
-        h, w = 40, 80
-        f_dir = rng.uniform(-1, 1, (h, w, 2))
-        n = int(rng.randint(3, 30))
-        pos = [(int(rng.randint(0, h)), int(rng.randint(0, w)))
-               for _ in range(n)]
-        tcl = (rng.uniform(0, 1, (h, w)) > 0.3).astype(np.float32)
-        want_s, want_d = tp_ns["sort_with_direction"](list(pos), f_dir)
-        got_s, got_d = sort_with_direction(list(pos), f_dir)
-        assert got_s == want_s and np.array_equal(got_d, want_d), trial
-        want_all = tp_ns["sort_and_expand_with_direction_v2"](
-            list(pos), f_dir, tcl)
-        got_all = sort_and_expand_with_direction_v2(list(pos), f_dir,
-                                                    tcl)
-        assert [tuple(p) for p in got_all] == \
-            [tuple(p) for p in want_all], trial
 
 
 def test_thin_skeleton_basics():

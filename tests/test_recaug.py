@@ -23,8 +23,7 @@ import pytest
 from paddleocr_spark.recaug import (
     REC_AUG_VARIANTS, _reflect101_pad, bda_image, bgr2hsv_u8,
     gaussian_kernel_1d, hsv2bgr_u8, rec_aug_for_ref, rec_aug_image,
-    rec_con_aug, sep_gauss5_blur, tia_distort, tia_perspective,
-    tia_stretch, warp_mls)
+    sep_gauss5_blur, tia_distort, tia_perspective, tia_stretch, warp_mls)
 
 REF = "/root/reference/ppocr/data/imaug"
 
@@ -124,8 +123,7 @@ def _load_ref_rec_img_aug():
         "Image": pil.Image,
         "CVGeometry": object, "CVDeterioration": object,
         "CVColorJitter": object, "SVTRGeometry": object,
-        "SVTRDeterioration": object,
-        "ExtractGrapheme": _ref_extract_grapheme_cls(),
+        "SVTRDeterioration": object, "ExtractGrapheme": object,
     }
     saved = {m: sys.modules.get(m)
              for m in ("cv2", "PIL", "paddle", "paddle.vision",
@@ -144,58 +142,6 @@ def _load_ref_rec_img_aug():
             else:
                 sys.modules[m] = v
     return ns
-
-
-def _ref_extract_grapheme_cls():
-    """The reference ExtractGrapheme rebuilt from ITS OWN executed
-    dependencies: korean_grapheme_label.decompose_korean_char (pydantic/
-    rapidfuzz import stubs only) + korean_compose_by_utf8 (pure stdlib),
-    wrapped in the 6-line __call__ of operators_mh.py:89-104."""
-    import copy as _copy
-
-    pyd = types.ModuleType("pydantic")
-    pyd.BaseModel = object
-    pyd.validate_call = lambda f=None, **k: (f if f else (lambda g: g))
-    rf = types.ModuleType("rapidfuzz")
-    dist = types.ModuleType("rapidfuzz.distance")
-    dist.Levenshtein = types.SimpleNamespace(distance=lambda a, b: 0)
-    rf.distance = dist
-    saved = {m: sys.modules.get(m)
-             for m in ("pydantic", "rapidfuzz", "rapidfuzz.distance")}
-    sys.modules["pydantic"] = pyd
-    sys.modules["rapidfuzz"] = rf
-    sys.modules["rapidfuzz.distance"] = dist
-    ns_g: dict = {}
-    try:
-        exec(open("/root/reference/ppocr/utils/"
-                  "korean_grapheme_label.py").read(), ns_g)
-    finally:
-        for m, v in saved.items():
-            if v is None:
-                sys.modules.pop(m, None)
-            else:
-                sys.modules[m] = v
-    ns_u: dict = {}
-    exec(open("/root/reference/ppocr/utils/"
-              "korean_compose_by_utf8.py").read(), ns_u)
-    decompose = ns_g["decompose_korean_char"]
-    dec_utf8 = ns_u["decompose_hangul_by_utf8"]
-
-    class _RefExtractGrapheme:
-        def __init__(self, **kwargs):
-            pass
-
-        def __call__(self, data):
-            data["text_label"] = dict(decompose(data["label"]),
-                                      character=data["label"])
-            data["label"] = _copy.copy(data["text_label"])
-            data["text_label"]["utf8string"] = dec_utf8(
-                data["text_label"]["character"])
-            data["label"]["utf8string"] = _copy.copy(
-                data["text_label"]["utf8string"])
-            return data
-
-    return _RefExtractGrapheme
 
 
 def _img(h, w, tag=0):
@@ -303,58 +249,6 @@ def test_bda_small_image_guards_match_reference():
             got = bda_image(random.Random(seed),
                             np.random.RandomState(seed), img.copy())
             assert np.array_equal(got, want["image"]), (h, w, seed)
-
-
-def test_rec_con_aug_matches_executed_reference():
-    """Base RecConAug: gate fail, inverted length-check break (short
-    labels STOP the merge — quirk), ratio break, and a real merge."""
-    ns = _load_ref_rec_img_aug()
-    main = {"image": _img(32, 64, 7), "label": "x" * 20}
-    exts = [{"image": _img(32, 48, 8), "label": "y" * 10},
-            {"image": _img(32, 40, 9), "label": "z" * 3}]
-    for seed in range(10):
-        random.seed(seed)
-        data = {"image": main["image"].copy(), "label": main["label"],
-                "ext_data": [dict(e, image=e["image"].copy())
-                             for e in exts]}
-        want = ns["RecConAug"]()(data)
-        got = rec_con_aug(
-            random.Random(seed),
-            {"image": main["image"].copy(), "label": main["label"],
-             "ext_data": [dict(e, image=e["image"].copy())
-                          for e in exts]})
-        assert got["label"] == want["label"], seed
-        assert np.array_equal(got["image"], want["image"]), seed
-        assert "ext_data" not in got
-
-
-def test_rec_con_aug_grapheme_matches_executed_reference():
-    """The fork's RecConAug_GraphemeLabel: per-channel label merge with
-    the first-grapheme-only length check and the re-decomposed plain-str
-    ext labels; the reference side decomposes via ITS OWN executed
-    korean_grapheme_label/korean_compose_by_utf8."""
-    ns = _load_ref_rec_img_aug()
-    from paddleocr_spark.recaug import extract_grapheme_record
-
-    main_label = extract_grapheme_record({"label": "안녕하세요"})["label"]
-    exts = [{"image": _img(32, 48, 10), "label": "테스트"},
-            {"image": _img(32, 40, 11), "label": "나" * 30}]
-    grapheme = ["initial", "medial", "final", "utf8string"]
-    for seed in range(10):
-        random.seed(seed)
-        data = {"image": _img(32, 64, 12), "label": dict(main_label),
-                "ext_data": [dict(e, image=e["image"].copy())
-                             for e in exts]}
-        want = ns["RecConAug_GraphemeLabel"](handling_grapheme=grapheme)(
-            dict(data, label=dict(data["label"]),
-                 ext_data=[dict(e, image=e["image"].copy())
-                           for e in exts]))
-        got = rec_con_aug(random.Random(seed), data,
-                          handling_grapheme=grapheme)
-        for g in grapheme + ["character"]:
-            if g in want["label"]:
-                assert got["label"].get(g) == want["label"][g], (seed, g)
-        assert np.array_equal(got["image"], want["image"]), seed
 
 
 # ---------------------------------------------------------------------------

@@ -143,12 +143,6 @@ def test_rec_resize_roster_matches_executed_reference(ref):
          lambda im: dict(zip(
              ("image", "resized_shape", "pad_shape", "valid_ratio"),
              RR.resize_norm_img_sar(im, (3, 48, 48, 160))))),
-        (ref["RobustScannerRecResizeImg"](image_shape=[3, 48, 48, 160],
-                                          max_text_length=25),
-         lambda im: dict(zip(
-             ("image", "resized_shape", "pad_shape", "valid_ratio",
-              "word_positons"),
-             RR.robust_scanner_resize(im, (3, 48, 48, 160), 25)))),
         (ref["SRNRecResizeImg"](image_shape=[1, 64, 256], num_heads=8,
                                 max_text_length=25),
          lambda im: dict(zip(

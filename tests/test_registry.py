@@ -3,8 +3,9 @@
 ``queries()`` holds the operators themselves (no recording or forwarding
 layer), every entry has a DuckDB twin, ``bench_queries()`` keeps the
 names and order that perfbench times, every Python stage of the
-package runs through the one driver in ``operators/grouped.py``, and no
-function body is written twice.
+package runs through the one driver in ``operators/grouped.py``, no
+function body is written twice, and every module is imported by
+non-test code.
 """
 
 from __future__ import annotations
@@ -85,3 +86,49 @@ def test_no_duplicate_function_bodies():
             seen.setdefault(key, []).append(
                 f"{path.relative_to(pkg).as_posix()}:{node.name}")
     assert [v for v in seen.values() if len(v) > 1] == []
+
+
+#: Modules no non-test code imports: the two Tier-1 entry points, which
+#: run as scripts (``spark-submit paddleocr_spark/__main__.py``,
+#: ``python -m paddleocr_spark.package``), and ``streaming.windowed``,
+#: kept with ``tests/test_streaming_window.py`` until that test retires
+#: (ROADMAP item 8).
+_ALLOWED_UNIMPORTED = {"__main__", "package", "streaming.windowed"}
+
+
+def test_every_module_is_imported():
+    """Every module under ``paddleocr_spark/`` is imported, statically,
+    by the package itself, ``tools/``, ``perfbench/`` or
+    ``__spark_entry__.py``; importing a submodule counts for its parent
+    packages. A module that only tests import is code no run reaches."""
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "paddleocr_spark"
+
+    def dotted(path: Path) -> str:
+        parts = path.relative_to(root).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    sources = [root / "__spark_entry__.py", *sorted(pkg.rglob("*.py")),
+               *sorted((root / "tools").rglob("*.py")),
+               *sorted((root / "perfbench").rglob("*.py"))]
+    imported: set[str] = set()
+    for path in sources:
+        here = dotted(path).split(".")
+        if path.name != "__init__.py":
+            here = here[:-1]
+        for node in ast.walk(ast.parse(path.read_text())):
+            names = []
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = ".".join(here[:len(here) - node.level + 1]
+                                + ([node.module] if node.module else [])
+                                ) if node.level else node.module
+                names = [base] + [f"{base}.{a.name}" for a in node.names]
+            for name in names:
+                parts = name.split(".")
+                imported.update(".".join(parts[:i])
+                                for i in range(1, len(parts) + 1))
+    modules = {dotted(p) for p in pkg.rglob("*.py")} - {"paddleocr_spark"}
+    missing = sorted(m.split(".", 1)[1] for m in modules - imported)
+    assert [m for m in missing if m not in _ALLOWED_UNIMPORTED] == []
