@@ -9,8 +9,9 @@ Usage (sandbox stand-in for the multi-executor cluster submit):
         --output /tmp/extracted_out --run-id run1 [--buckets 32]
 
 Reads the documents table, synthesizes the interleaved span corpus
-(synth.py), runs the extraction pipeline, writes extracted + lineage with
-resume (lineage.py), prints a one-line JSON summary.
+(synth.py), runs the extraction pipeline, writes extracted and commits it
+with a resumable snapshot manifest (lineage.py), prints a one-line JSON
+summary.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--mode",
                     choices=["batch", "incremental", "dedup-stream"],
                     default="batch",
-                    help="batch: lineage-table resume; incremental: "
+                    help="batch: snapshot-manifest resume; incremental: "
                          "Structured Streaming AvailableNow with "
                          "checkpointed file tracking. In incremental mode "
                          "--input must be a DIRECTORY containing ONLY raw "

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.readers import sf_table
+from .textfns import WORDS_SQL, words_col
 from .retrieval import _doc_words
 
 #: Decontamination shingle width (words), the deterministic eval-split
@@ -149,7 +150,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = sf_table(spark, sf_dir, "documents").select(
         "doc_id", "lang",
-        F.expr("filter(split(lower(text), ' '), w -> w != '')").alias("w"))
+        words_col().alias("w"))
     tok = d.select("doc_id", "lang", F.explode("w").alias("v"))
     raw = tok.groupBy("v").agg(F.count("*").cast("double").alias("cr"))
     tgt = (tok.where(F.col("lang") == DSIR_TARGET_LANG)
@@ -230,7 +231,7 @@ def pack_shards(spark: SparkSession, sf_dir: str,
     """
     d = sf_table(spark, sf_dir, "documents").select(
         "doc_id", "source",
-        F.expr("size(filter(split(lower(text), ' '), w -> w != ''))")
+        F.expr(f"size({WORDS_SQL})")
         .cast("long").alias("n_words"))
     win = (Window.partitionBy("source").orderBy("doc_id")
            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -443,8 +444,7 @@ def blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (sf_table(spark, sf_dir, "documents")
             .select("doc_id",
                     F.expr(
-                        f"size(filter(filter(split(lower(text), ' '), "
-                        f"w -> w != ''), x -> {pred}))")
+                        f"size(filter({WORDS_SQL}, x -> {pred}))")
                     .cast("long").alias("n_blocked"))
             .withColumn("kept", F.col("n_blocked") == 0))
 
@@ -511,7 +511,7 @@ def sampling_temperature(spark: SparkSession, sf_dir: str,
     """
     per_lang = (sf_table(spark, sf_dir, "documents")
                 .select("lang", F.expr(
-                    "size(filter(split(lower(text), ' '), w -> w != ''))")
+                    f"size({WORDS_SQL})")
                     .cast("long").alias("nw"))
                 .groupBy("lang")
                 .agg(F.count("*").cast("long").alias("n_docs"),
@@ -648,7 +648,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = gopher_rules(spark, sf_dir).select("doc_id", "gopher_pass")
     d = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr("filter(split(lower(text), ' '), w -> w != '')").alias("w"))
+        words_col().alias("w"))
     tok = d.select("doc_id", F.explode("w").alias("v"))
     whole = Window.partitionBy()
     counts = (tok.join(labels, "doc_id")
@@ -701,7 +701,7 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = sf_table(spark, sf_dir, "documents").select(
         "lang", "source", "n_chars",
-        F.size(F.expr("filter(split(lower(text), ' '), w -> w != '')"))
+        F.expr(f"size({WORDS_SQL})")
         .cast("long").alias("nw"))
     return (d.rollup("lang", "source")
             .agg(F.count("*").cast("long").alias("n_docs"),

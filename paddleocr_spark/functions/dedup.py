@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import sf_table
+from .textfns import words_col
 
 #: MinHash parameters: K hashes in B bands of R rows (K = B*R).
 MINHASH_K = 16
@@ -285,7 +286,7 @@ def dedup_trim(spark: SparkSession, sf_dir: str,
     """
     d = noisy_corpus(spark, sf_dir).select(
         "doc_id",
-        F.expr("filter(split(lower(text), ' '), w -> w != '')").alias("w"))
+        words_col().alias("w"))
     grams = (d.where(F.expr(f"size(w) >= {n}"))
              .select("doc_id", F.explode(F.expr(
                  f"transform(sequence(1, size(w) - {n - 1}), "

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import sf_table
+from .textfns import WORDS_SQL, words_col
 
 
 #: Register-index bits: m = 2^p registers per group.
@@ -89,7 +90,7 @@ def hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = sf_table(spark, sf_dir, "documents").select(
         "doc_id", "lang",
-        F.expr("filter(split(lower(text), ' '), w -> w != '')").alias("w"))
+        words_col().alias("w"))
     sh = (d.where(F.expr("size(w) >= 3"))
           .select("lang", F.explode(F.expr(
               "transform(sequence(1, size(w) - 2), "
@@ -176,7 +177,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr("filter(split(lower(text), ' '), w -> w != '')").alias("w"))
+        words_col().alias("w"))
     stream = (d.where(F.expr("size(w) >= 2"))
               .select(F.explode(F.expr(
                   "transform(sequence(1, size(w) - 1), "
@@ -284,8 +285,7 @@ def qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = sf_table(spark, sf_dir, "documents").select(
         "lang",
         F.least(F.expr(
-            "CAST(size(filter(split(lower(text), ' '), w -> w != '')) "
-            "AS INT)"), F.lit(n_top - 1)).alias("v"))
+            f"CAST(size({WORDS_SQL}) AS INT)"), F.lit(n_top - 1)).alias("v"))
     per_lang = (
         d.groupBy("lang", "v").agg(F.count("*").alias("c"))
         .groupBy("lang").agg(

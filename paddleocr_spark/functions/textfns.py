@@ -43,10 +43,13 @@ FW = "　" + "".join(chr(c) for c in range(0xFF01, 0xFF5F))
 HW = " " + "".join(chr(c - 0xFEE0) for c in range(0xFF01, 0xFF5F))
 
 
-def words_col(text_col: str = "text"):
-    """Whitespace tokenization of lowercased text, empty tokens dropped."""
-    return F.expr(
-        f"filter(split(lower({text_col}), ' '), w -> w != '')")
+#: Whitespace tokenization of lowercased text, empty tokens dropped (SQL).
+WORDS_SQL = "filter(split(lower(text), ' '), w -> w != '')"
+
+
+def words_col():
+    """:data:`WORDS_SQL` as a Column."""
+    return F.expr(WORDS_SQL)
 
 
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import sf_table
+from .textfns import words_col
 
 
 #: Number of BPE merge rounds the query trains.
@@ -65,7 +66,7 @@ _MERGE_FOLD = (
 def word_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, n, t): distinct corpus words, frequencies, char tokens."""
     w = sf_table(spark, sf_dir, "documents").select(F.explode(
-        F.expr("filter(split(lower(text), ' '), x -> x != '')"))
+        words_col())
         .alias("word"))
     return (w.groupBy("word")
             .agg(F.count("*").cast("long").alias("n"))
@@ -152,7 +153,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str,
     vocab = toks.select("word", F.size("t").cast("long").alias("wt"))
     d = sf_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x != '')").alias("w"))
+        words_col().alias("w"))
     per_doc = (d.select("doc_id", F.explode("w").alias("word"))
                .join(F.broadcast(vocab), "word")
                .groupBy("doc_id")

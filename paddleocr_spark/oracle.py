@@ -18,15 +18,14 @@ from .kernels import order_document, strip_style_tokens
 from .synth import synth_spans_pandas
 
 
-def extract_pandas(documents_pdf: pd.DataFrame,
-                   drop_score: float = G.DROP_SCORE) -> pd.DataFrame:
+def extract_pandas(documents_pdf: pd.DataFrame) -> pd.DataFrame:
     """(doc_id:int64, text) → extracted (doc_id:str, spans:list[dict]).
 
     Mirrors pipeline.extract stage by stage; see that module for the
     reference citations.
     """
     synth = synth_spans_pandas(documents_pdf)
-    thresh = int(round(drop_score * G.SCORE_MOD))
+    thresh = int(round(G.DROP_SCORE * G.SCORE_MOD))
     out = []
     for doc_id, spans in zip(synth["doc_id"], synth["spans"]):
         did = int(doc_id[4:])

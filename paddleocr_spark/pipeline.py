@@ -96,9 +96,16 @@ def det_filter(spans: DataFrame) -> DataFrame:
     return spans.where(_DET_KEEP)
 
 
-def drop_score_filter(spans: DataFrame,
-                      drop_score: float = G.DROP_SCORE) -> DataFrame:
-    """P10: keep text lines iff rec-confidence ≥ drop_score
+#: The P10 keep condition as SQL (see drop_score_filter).
+_SCORE_KEEP = (
+    f"kind != 'text' OR {G.SCORE_BASE_MILLI} + CAST(FLOOR("
+    f"(CAST(substring(doc_id, 5) AS LONG) * 7 + span_idx * 173)"
+    f" % {G.SCORE_MOD} * {G.SCORE_SPREAD_NUM} / {G.SCORE_SPREAD_DEN})"
+    f" AS LONG) >= {int(round(G.DROP_SCORE * G.SCORE_MOD))}")
+
+
+def drop_score_filter(spans: DataFrame) -> DataFrame:
+    """P10: keep text lines iff rec-confidence ≥ G.DROP_SCORE
     (predict_system.py:117-125; confidence analog per geometry.py).
 
     Integer milli-score comparison so the 0.500 boundary is exact.
@@ -108,22 +115,12 @@ def drop_score_filter(spans: DataFrame,
     confidence that in production arrives as its own column — this
     expression is the fixture, not a general doc_id contract.
     """
-    return spans.where(_score_keep(drop_score))
+    return spans.where(_SCORE_KEEP)
 
 
-def _score_keep(drop_score: float) -> str:
-    """The P10 keep condition as SQL (see drop_score_filter)."""
-    smod = (f"(CAST(substring(doc_id, 5) AS LONG) * 7 + span_idx * 173)"
-            f" % {G.SCORE_MOD}")
-    milli = (f"{G.SCORE_BASE_MILLI} + CAST(FLOOR({smod}"
-             f" * {G.SCORE_SPREAD_NUM} / {G.SCORE_SPREAD_DEN}) AS LONG)")
-    thresh = int(round(drop_score * G.SCORE_MOD))
-    return f"kind != 'text' OR {milli} >= {thresh}"
-
-
-def score_keep_predicate(drop_score: float = G.DROP_SCORE):
+def score_keep_predicate():
     """P10 keep condition as a reusable Column (see drop_score_filter)."""
-    return F.expr(_score_keep(drop_score))
+    return F.expr(_SCORE_KEEP)
 
 
 def strip_styles(spans: DataFrame) -> DataFrame:
@@ -366,8 +363,7 @@ def ensure_input_parallelism(documents: DataFrame) -> DataFrame:
     return documents
 
 
-def extract(documents: DataFrame,
-            drop_score: float = G.DROP_SCORE) -> DataFrame:
+def extract(documents: DataFrame) -> DataFrame:
     """documents(doc_id, spans) → extracted(doc_id, spans ordered).
 
     Output 'offset' = reading-order rank 0..n-1 (FIXTURES.md §2). Documents
@@ -378,6 +374,6 @@ def extract(documents: DataFrame,
     s = explode_spans(documents)
     s = with_geometry(s)
     s = det_filter(s)
-    s = drop_score_filter(s, drop_score)
+    s = drop_score_filter(s)
     s = strip_styles(s)
     return order_and_assemble(s)

@@ -14,7 +14,6 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 
-from . import geometry as G
 from . import pipeline as P
 
 StageFn = Callable[[DataFrame], DataFrame]
@@ -46,8 +45,8 @@ def _detf(**_):
 
 
 @register("DropScore")
-def _drop(drop_score: float = G.DROP_SCORE, **_):
-    return lambda df: P.drop_score_filter(df, drop_score)
+def _drop(**_):
+    return P.drop_score_filter
 
 
 @register("StripStyles")
@@ -64,7 +63,7 @@ DEFAULT_CONFIG: list[dict] = [
     {"ExplodeSpans": None},
     {"WithGeometry": None},
     {"DetFilter": None},
-    {"DropScore": {"drop_score": G.DROP_SCORE}},
+    {"DropScore": None},
     {"StripStyles": None},
     {"OrderAssemble": None},
 ]

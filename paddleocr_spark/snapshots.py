@@ -8,13 +8,16 @@ give — METADATA-DEFINED table state:
 
 * a **snapshot manifest** (`<run_dir>/snapshots/snap-<v>.json`, a
   SIBLING of the data dir so partition discovery never sees it) lists
-  the exact data files that make up table version v, plus per-bucket row
-  counts and the parent version — the moral equivalent of an Iceberg
-  manifest list;
+  the exact data files that make up table version v, the parent version,
+  and one record per bucket — doc and span counts, the ``run_id`` that
+  wrote it and its ``committed_at`` time — the moral equivalent of an
+  Iceberg manifest list. The bucket records are also the resume lineage:
+  ``lineage.committed_parts`` is the key set of the latest manifest;
 * **atomic publish**: the manifest is written to a temp name and
-  `os.rename`d into place (atomic on POSIX), so readers never observe a
-  half-written manifest; data files land BEFORE the manifest, so a crash
-  between the two leaves invisible orphans (Iceberg's own guarantee);
+  `os.link`ed into place (atomic create-if-absent on POSIX), so readers
+  never observe a half-written manifest; data files land BEFORE the
+  manifest, so a crash between the two leaves invisible orphans in
+  buckets the rerun redoes (Iceberg's own guarantee);
 * **snapshot-isolated reads**: :func:`read_snapshot` loads exactly the
   files in the manifest — concurrent writers and partially-written buckets
   are invisible, unlike directory-listing `spark.read.parquet(dir)`;
@@ -70,16 +73,17 @@ def load_manifest(table_dir: str, version: int | None = None) -> dict:
 
 
 def commit_snapshot(table_dir: str, new_files: dict[str, list[str]],
-                    counts: dict[str, dict] | None = None,
-                    operation: str = "overwrite-partitions") -> int:
-    """Publish a new table version: carry forward the parent's files,
-    REPLACE the buckets present in ``new_files`` (partition-overwrite
-    semantics), write the manifest atomically.
+                    counts: dict[str, dict]) -> int:
+    """Publish a new table version: carry forward the parent's files and
+    bucket records, REPLACE the buckets present in ``new_files``
+    (partition-overwrite semantics), write the manifest atomically.
 
     ``new_files``: {bucket_id: [data file paths]} for buckets written by
-    this pass. Returns the committed version number.
+    this pass; ``counts``: {bucket_id: record} for the same buckets, each
+    record stamped with the snapshot's ``committed_at``. Returns the
+    committed version number.
 
-    Concurrency: SINGLE WRITER assumed (the lineage pass is one driver).
+    Concurrency: SINGLE WRITER assumed (``run_extract`` is one driver).
     The manifest is still published with ``os.link`` onto the target —
     which FAILS if the version already exists — so a second committer
     racing the same parent raises ``FileExistsError`` (a loud lost-update,
@@ -87,19 +91,18 @@ def commit_snapshot(table_dir: str, new_files: dict[str, list[str]],
     """
     parent = current_version(table_dir)
     manifest = load_manifest(table_dir, parent)
-    files = dict(manifest.get("files", {}))
-    buckets = dict(manifest.get("buckets", {}))
+    now = time.time()
+    files = dict(manifest["files"])
+    buckets = dict(manifest["buckets"])
     for b, paths in new_files.items():
         files[str(b)] = sorted(paths)
-    if counts:
-        for b, c in counts.items():
-            buckets[str(b)] = c
+    for b, c in counts.items():
+        buckets[str(b)] = dict(c, committed_at=now)
     version = parent + 1
     snap = {
         "version": version,
         "parent": parent or None,
-        "operation": operation,
-        "committed_at": time.time(),
+        "committed_at": now,
         "files": files,
         "buckets": buckets,
     }
@@ -125,7 +128,7 @@ def read_snapshot(spark: SparkSession, table_dir: str,
     (time travel); files written but never committed are invisible.
 
     ``basePath`` is derived from the manifest's file paths (each is
-    ``<data_dir>/<part_col>=<v>/<file>``), so partition discovery
+    ``<data_dir>/part_id=<v>/<file>``), so partition discovery
     restores the ``part_id`` column exactly as ``spark.read.parquet(
     data_dir)`` would — leaf-file reads alone would silently drop it."""
     from .pipeline import EXTRACTED_SCHEMA
@@ -141,11 +144,10 @@ def read_snapshot(spark: SparkSession, table_dir: str,
     return spark.read.option("basePath", base).parquet(*paths)
 
 
-def list_bucket_files(data_dir: str, bucket: int,
-                      part_col: str = "part_id") -> list[str]:
+def list_bucket_files(data_dir: str, bucket: int) -> list[str]:
     """Data files currently on disk for one bucket partition (called
     AFTER the write pass; the manifest pins this exact set)."""
-    d = os.path.join(data_dir, f"{part_col}={bucket}")
+    d = os.path.join(data_dir, f"part_id={bucket}")
     if not os.path.isdir(d):
         return []
     return sorted(os.path.join(d, f) for f in os.listdir(d)

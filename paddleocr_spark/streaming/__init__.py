@@ -3,11 +3,11 @@
 The reference is strictly batch (SURVEY.md §2.11); the north rule's
 resumability maps to incremental batch processing. Two equivalent surfaces:
 
-* :mod:`paddleocr_spark.lineage` — plain batch + lineage-table anti-join
-  (the primary path: simplest, Iceberg-snapshot-friendly).
+* :mod:`paddleocr_spark.lineage` — plain batch + bucket pruning against
+  the snapshot manifest (the primary path: simplest, Iceberg-shaped).
 * this package — ``readStream`` + ``Trigger.AvailableNow`` + checkpointed
   ``foreachBatch``, for deployments that prefer Spark's own source tracking
-  (processed-files log) over an explicit lineage table.
+  (processed-files log) over an explicit commit manifest.
 """
 
 from .incremental import (DOCUMENTS_SCHEMA, RAW_DOCUMENTS_SCHEMA,

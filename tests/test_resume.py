@@ -6,7 +6,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from paddleocr_spark.lineage import LINEAGE_SCHEMA, run_extract
+from paddleocr_spark import snapshots as S
+from paddleocr_spark.lineage import run_extract
 from paddleocr_spark.pipeline import extract
 from paddleocr_spark.synth import synth_spans
 
@@ -33,29 +34,52 @@ def test_resume_no_dupes_no_missing(spark, extracted, tmp_path):
     assert len(ids) == len(set(ids)), "duplicate documents after resume"
     assert set(ids) == full, "missing documents after resume"
 
-    lin = spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out}/lineage")
-    per_part = lin.groupBy("part_id").count().collect()
-    assert len(per_part) == 16
-    assert all(r["count"] == 1 for r in per_part), "partition committed twice"
+    # the manifest's bucket records are the lineage: v1 holds the first
+    # run's 5 buckets, and the latest holds all 16, each committed exactly
+    # once — the resume never re-stamped a bucket run1 had committed
+    v1 = S.load_manifest(out, 1)["buckets"]
+    lin = S.load_manifest(out)["buckets"]
+    assert len(v1) == 5 and {b["run_id"] for b in v1.values()} == {"run1"}
+    assert sorted(map(int, lin)) == list(range(16))
+    assert all(lin[k] == rec for k, rec in v1.items()), \
+        "partition committed twice"
+    assert sum(b["run_id"] == "run2" for b in lin.values()) == 11
     # lineage metrics reconcile with the data
-    tot = lin.agg(F.sum("doc_count"), F.sum("span_count")).collect()[0]
-    assert tot[0] == len(full)
-    assert tot[1] == got.select(F.sum(F.size("spans"))).collect()[0][0]
+    assert sum(b["docs"] for b in lin.values()) == len(full)
+    assert (sum(b["spans"] for b in lin.values())
+            == got.select(F.sum(F.size("spans"))).collect()[0][0])
 
-    # third run is a no-op
+    # third run is a no-op that still reports the table version
     s3 = run_extract(spark, extracted, out, "run3", n_buckets=16)
     assert s3["parts_done"] == 0 and s3["parts_skipped"] == 16
+    assert s3["snapshot_version"] == 2
+
+
+def test_resume_noop_starts_no_spark_job(spark, extracted, tmp_path):
+    """Resume reads its commit record from the manifest on the driver, so
+    a run with nothing left to do launches no Spark job at all."""
+    out = str(tmp_path / "noop")
+    run_extract(spark, extracted, out, "run1", n_buckets=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-noop", "resume no-op")
+    try:
+        s = run_extract(spark, extracted, out, "run2", n_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert s["parts_done"] == 0 and s["parts_skipped"] == 4
+    assert sc.statusTracker().getJobIdsForGroup("resume-noop") == []
 
 
 def test_uncommitted_bucket_is_overwritten_idempotently(spark, extracted,
                                                         tmp_path):
-    """Crash between data write and lineage append: rerun overwrites the
+    """Crash between data write and manifest publish: rerun overwrites the
     orphan bucket data; nothing duplicates."""
     out = str(tmp_path / "out2")
-    # simulate the crash: write bucket data for 3 parts but drop their lineage
+    # simulate the crash: write bucket data for 3 parts but drop their
+    # manifest
     run_extract(spark, extracted, out, "run1", n_buckets=8, max_parts=3)
     import shutil
-    shutil.rmtree(f"{out}/lineage")
+    shutil.rmtree(f"{out}/snapshots")
     # rerun from scratch: all 8 parts reprocessed, orphan data overwritten
     s = run_extract(spark, extracted, out, "run2", n_buckets=8)
     assert s["parts_done"] == 8
@@ -71,9 +95,6 @@ def test_snapshot_isolation_and_time_travel(spark, extracted, tmp_path):
     Iceberg properties directory-listing parquet reads lack."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from paddleocr_spark import snapshots as S
-    from paddleocr_spark.lineage import run_extract
-
     out = str(tmp_path / "snap")
     data_dir = f"{out}/extracted"
     s1 = run_extract(spark, extracted, out, "run1", n_buckets=8,
@@ -149,8 +170,6 @@ def test_crash_before_snapshot_is_redone(spark, extracted, tmp_path,
     is published must not leave those buckets marked committed: the
     rerun redoes them, and the latest snapshot lists every document
     exactly once."""
-    from paddleocr_spark import snapshots as S
-
     out = str(tmp_path / "crash")
     real = S.commit_snapshot
     calls = []
