@@ -11,7 +11,8 @@ Usage (sandbox stand-in for the multi-executor cluster submit):
 Reads the documents table, synthesizes the interleaved span corpus
 (synth.py), runs the extraction pipeline, writes extracted and commits it
 with a resumable snapshot manifest (lineage.py), prints a one-line JSON
-summary.
+summary. A re-run with every bucket committed reads no input and builds
+no plan: it starts no Spark job.
 """
 
 from __future__ import annotations
@@ -84,9 +85,10 @@ def main(argv: list[str] | None = None) -> int:
                    "distinct_total": read_first_seen(spark,
                                                      args.output).count()}
     else:
-        docs = spark.read.parquet(args.input)
-        extracted = extract(synth_spans(docs))
-        summary = run_extract(spark, extracted, args.output, args.run_id,
+        summary = run_extract(spark,
+                              lambda: extract(synth_spans(
+                                  spark.read.parquet(args.input))),
+                              args.output, args.run_id,
                               n_buckets=args.buckets,
                               max_parts=args.max_parts)
     summary["wall_sec"] = round(time.time() - t0, 3)

@@ -22,6 +22,7 @@ stand-in.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -38,13 +39,16 @@ def committed_parts(out_dir: str) -> set[int]:
     return {int(b) for b in S.load_manifest(out_dir)["buckets"]}
 
 
-def run_extract(spark: SparkSession, extracted: DataFrame, out_dir: str,
-                run_id: str, n_buckets: int = 32,
+def run_extract(spark: SparkSession,
+                extracted: DataFrame | Callable[[], DataFrame],
+                out_dir: str, run_id: str, n_buckets: int = 32,
                 max_parts: int | None = None) -> dict:
     """Write `extracted` bucketed by doc_id, one manifest commit; resumable.
 
     Args:
-        extracted: (doc_id, spans) result of pipeline.extract (lazy).
+        extracted: (doc_id, spans) result of pipeline.extract (lazy), or a
+            function that builds it; the function is called only when a
+            bucket is left to do, so a resume no-op builds no plan.
         max_parts: process at most this many uncommitted buckets — the
             injected-failure hook for the resume test (simulates a mid-run
             kill after k committed partitions).
@@ -61,6 +65,8 @@ def run_extract(spark: SparkSession, extracted: DataFrame, out_dir: str,
                 "parts_skipped": len(done), "docs": 0, "spans": 0,
                 "snapshot_version": S.current_version(out_dir)}
 
+    if callable(extracted):
+        extracted = extracted()
     df = extracted.withColumn("part_id", bucket_of(n_buckets))
     # Anti-join against the committed buckets, expressed as partition
     # pruning on the stable bucket id (cheaper than a join: the bucket set

@@ -116,9 +116,10 @@ def cluster(df: DataFrame, keys: list[str],
     invariant to partition count and input row order.
 
     One partition per core makes the Python stage one wave of tasks. Each
-    Python task pays a fixed ~0.1 s of worker set-up before its first row
-    (PERF.md, "The per-task Python toll"), so a second wave costs more
-    than the load-balancing slack it buys."""
+    Python task pays a fixed ~0.05 s before its first row, most of it
+    waiting for the JVM's first Arrow message (PERF.md, "The per-task
+    Python toll"), so a second wave costs more than the load-balancing
+    slack it buys."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *keys).sortWithinPartitions(*keys, *sort_cols)
 

@@ -10,7 +10,17 @@ from __future__ import annotations
 
 import os
 
+import pyspark
 from pyspark.sql import SparkSession
+
+from paddleocr_spark import daemon
+
+# The directory or zip that ``paddleocr_spark`` is imported from. Spark
+# starts the daemon before ``--py-files`` reach the workers, so the
+# daemon module must be importable from the workers' PYTHONPATH, from
+# any working directory.
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(
+    os.path.abspath(daemon.__file__)))
 
 
 def get_spark(app: str = "paddleocr-spark",
@@ -24,12 +34,15 @@ def get_spark(app: str = "paddleocr-spark",
     That 2× sizes the JVM-only stages, which AQE coalesces by bytes and
     whose tasks start in milliseconds. Python stages do not use it: they
     repartition explicitly into one partition per core
-    (``operators.grouped.cluster``), because each Python task pays a
-    fixed ~0.1 s of worker set-up, so a second wave of them costs more
-    than its load-balancing slack buys."""
+    (``operators.grouped.cluster``), because each Python task still
+    costs a fixed ~0.05 s before its first row, so a second wave of them
+    costs more than its load-balancing slack buys.
+
+    Python workers run PySpark's own daemon from the installed pyspark
+    (``daemon``), so the session checks that it is the JVM's release."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
-    return (
+    spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(2 * cores))
@@ -41,5 +54,15 @@ def get_spark(app: str = "paddleocr-spark",
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", daemon.__name__)
+        .config("spark.executorEnv.PYTHONPATH", _IMPORT_ROOT)
         .getOrCreate()
     )
+    # The workers run the installed pyspark, not the copy that ships
+    # with the jars (see ``daemon``), so the two must be one release.
+    if pyspark.__version__ != spark.version:
+        raise RuntimeError(
+            f"pyspark {pyspark.__version__} does not match Spark "
+            f"{spark.version}: Python workers import the installed "
+            "pyspark, which must be the JVM's release")
+    return spark

@@ -3,10 +3,13 @@ duplicate and no missing documents (FIXTURES.md §5, SURVEY.md §7 step 7)."""
 
 from __future__ import annotations
 
+import json
+
 import pyspark.sql.functions as F
 import pytest
 
 from paddleocr_spark import snapshots as S
+from paddleocr_spark.__main__ import main
 from paddleocr_spark.lineage import run_extract
 from paddleocr_spark.pipeline import extract
 from paddleocr_spark.synth import synth_spans
@@ -68,6 +71,28 @@ def test_resume_noop_starts_no_spark_job(spark, extracted, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert s["parts_done"] == 0 and s["parts_skipped"] == 4
     assert sc.statusTracker().getJobIdsForGroup("resume-noop") == []
+
+
+def test_cli_resume_noop_starts_no_spark_job(spark, documents, extracted,
+                                             tmp_path, monkeypatch, capsys):
+    """The spark-submit entry point builds its read → synth → extract plan
+    only when a bucket is left to do, so its resume no-op starts no job
+    either."""
+    (source,) = documents.inputFiles()
+    out = str(tmp_path / "cli")
+    run_extract(spark, extracted, out, "run1", n_buckets=4)
+    monkeypatch.setattr(spark, "stop", lambda: None)  # the shared session
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-noop", "spark-submit resume no-op")
+    try:
+        main(["--input", source, "--output", out, "--run-id", "run2",
+              "--buckets", "4", "--cores", "8"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    s = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert s["parts_done"] == 0 and s["parts_skipped"] == 4
+    assert s["snapshot_version"] == 1
+    assert sc.statusTracker().getJobIdsForGroup("cli-noop") == []
 
 
 def test_uncommitted_bucket_is_overwritten_idempotently(spark, extracted,
