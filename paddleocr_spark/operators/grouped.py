@@ -26,10 +26,12 @@ value into its column's Arrow type: ints into ``double`` and floats into
 not NULL) and a Python ``bool`` is not an integer, so kernels emit
 ``None`` and ``int`` for those.
 
-The flagship (pipeline.order_and_assemble) needs no :func:`cluster`: each
-of its input rows is one whole document, so its exploded spans already
-arrive contiguous and in order within their scan partition, and it runs
-its own ``mapInArrow`` body over :func:`carry_groups` in the scan's stage.
+The flagship needs no :func:`cluster`: each of its input rows is one
+whole document. ``pipeline.extract`` sends those rows to Python whole, so
+its batches hold whole documents and need no carry; the registry chain's
+``pipeline.order_and_assemble`` reads exploded spans, which arrive
+contiguous and in order within their scan partition, and runs its own
+``mapInArrow`` body over :func:`carry_groups` in the scan's stage.
 """
 
 from __future__ import annotations

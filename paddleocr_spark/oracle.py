@@ -3,8 +3,8 @@
 Runs the same semantics as paddleocr_spark.pipeline on plain pandas, but
 implements the row-level stages *independently* (literal reference loop
 semantics: per-token ``str.replace`` for style stripping, per-span Python
-arithmetic for geometry/score) so the Spark pipeline's JVM re-expression is
-cross-checked, while the order kernels are the shared module
+arithmetic for geometry/score) so the Spark pipeline's re-expressions (the
+JVM stages and ``extract``'s Arrow prefix) are cross-checked, while the order kernels are the shared module
 (SURVEY.md §5: oracle == kernels imported twice — exact order ties cannot be
 re-derived two ways without breaking bit-equality).
 """

@@ -2,30 +2,35 @@
 
 Restates the reference dataflow (SURVEY.md §3.2):
 
-    documents → explode spans → geometry (JVM) → det filter P9 (JVM)
-    → drop_score P10 (JVM) → style strip P11 (JVM replace chain)
-    → mapInArrow kernel in the same stage
-      (sorted_boxes O1 + region segmentation D1 + sorted_layout_boxes O2 +
-      ordered emission O5, Arrow-native reassembly)
+    documents → explode spans → geometry → det filter P9
+    → drop_score P10 → style strip P11
+    → reading order (sorted_boxes O1 + region segmentation D1 +
+      sorted_layout_boxes O2 + ordered emission O5, Arrow-native
+      reassembly)
     → extracted (doc_id, spans array<struct<kind,text,media_ref,offset>>)
 
-No payload shuffle: each input row is one whole document, and
-``posexplode`` emits its spans together and in ``span_idx`` order, so the
-kernel reads every scan partition's exploded spans straight from the map
-side (see ``order_and_assemble``). The only exchange an extract can have is
-``ensure_input_parallelism``'s round-robin widening of an under-partitioned
-scan. The kernel emits fully assembled documents, so no re-aggregation
-shuffle follows. It is ``mapInArrow`` (not per-group ``applyInPandas``,
-not pandas), and string columns are only ever moved by vectorized Arrow
-``take``, never through per-span Python objects. The batch-boundary carry
-is operators/grouped.py's, shared with every other per-group operator;
-this module owns only the kernel body (``_order_ranks`` + ``_emit_arrow``).
+``extract`` runs all of it in one ``mapInArrow`` over the scan's own
+``(doc_id, spans)`` rows: each input row is one whole document and an
+Arrow batch holds whole rows, so every batch holds whole documents. The
+kernel flattens each batch's spans and runs the explode, the geometry and
+P9–P11 in numpy and ``pyarrow.compute`` (``_kept_spans``), then orders
+and re-assembles them (``_order_ranks`` + ``_emit_arrow``). No JVM
+``Generate``, no per-span ``doc_id`` copy crossing to Python, no
+batch-boundary carry, no shuffle: the only exchange an extract can have is
+``ensure_input_parallelism``'s round-robin widening of an
+under-partitioned scan. String columns are only ever moved by vectorized
+Arrow kernels, never through per-span Python objects (PERF.md,
+"Whole-document kernel").
 
-The map-side stages build their expressions as SQL strings
-(``selectExpr``, ``where``, one ``F.expr`` each): every PySpark ``Column``
-call costs several py4j round trips of query-context bookkeeping, paid in
-driver time before the first job (PERF.md, "No shuffle, and a plan built
-from SQL strings").
+The same prefix also exists as JVM SQL stages (``explode_spans`` …
+``strip_styles``), which the registry chain (``registry.DEFAULT_CONFIG``)
+and the secondary queries run; ``order_and_assemble`` is its kernel over
+exploded spans, through operators/grouped.py's batch-boundary carry. A
+differential test holds the two prefixes equal row for row. The JVM
+stages build their expressions as SQL strings (``selectExpr``, ``where``,
+one ``F.expr`` each): every PySpark ``Column`` call costs several py4j
+round trips of query-context bookkeeping, paid in driver time before the
+first job (PERF.md, "No shuffle, and a plan built from SQL strings").
 Reference parity citations live in paddleocr_spark/kernels.py.
 """
 
@@ -38,7 +43,7 @@ from pyspark.sql.types import (ArrayType, IntegerType, StringType, StructField,
                                StructType)
 
 from . import geometry as G
-from .kernels import order_document
+from .kernels import STYLE_TOKENS, order_document
 
 EXTRACTED_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -137,7 +142,6 @@ def strip_styles(spans: DataFrame) -> DataFrame:
     All 14 replaces stay inside whole-stage codegen (literal, no regex
     engine).
     """
-    from .kernels import STYLE_TOKENS
     chain = "text"
     for tok in STYLE_TOKENS:   # no token holds a quote or a backslash
         chain = f"replace({chain}, '{tok}', '')"
@@ -322,18 +326,20 @@ def _assemble_arrow(it):
 
 
 def order_and_assemble(spans: DataFrame) -> DataFrame:
-    """Reading-order resolution + document re-assembly, in the scan's own
-    stage: no Exchange, no Sort.
+    """Reading-order resolution + document re-assembly over exploded spans
+    (the registry chain's last stage), in their own stage: no Exchange,
+    no Sort.
 
-    Each input row of ``extract`` is one whole document, and ``posexplode``
+    When each input row of the chain is one whole document, ``posexplode``
     plus the map-side filters keep its spans together and in ``span_idx``
     order within their partition. That is all the kernel needs, so it
     streams each partition's spans straight into ``mapInArrow`` over
-    ``_assemble_arrow``, and the Python stage is as wide as the scan
-    (``ensure_input_parallelism`` widens an under-partitioned one). The
+    ``_assemble_arrow``; an Arrow batch here counts spans, so a document
+    can straddle two batches and ``grouped.carry_groups`` carries it. The
     reference and ``oracle.extract_pandas`` also order each input document
     by itself; a ``doc_id`` held by two input rows raises in the kernel
-    (``_check_runs``) rather than being merged.
+    (``_check_runs``) rather than being merged. ``extract`` runs the same
+    ``_emit_arrow`` over whole-document batches instead.
 
     ``mapInArrow`` over whole Arrow batches, not
     ``groupBy(doc_id).applyInPandas``: per-group applyInPandas pays Arrow
@@ -345,6 +351,134 @@ def order_and_assemble(spans: DataFrame) -> DataFrame:
         "doc_id", "span_idx", "kind", "text", "media_ref",
         "x1", "y1", "x2", "y2").mapInArrow(
             _assemble_arrow, schema=EXTRACTED_SCHEMA)
+
+
+#: ``with_geometry``'s kinds, in the order of the box tables below; a
+#: null or unknown kind takes the last slot, its CASEs' ELSE branches
+#: (as tall as media, as wide as text).
+_KINDS = ["text", "title", "table", "media"]
+_KIND_HEIGHT = np.array([G.KIND_HEIGHT[k] for k in _KINDS]
+                        + [G.KIND_HEIGHT["media"]])
+_KIND_WIDTH = np.array([G.KIND_WIDTH_FIXED.get(k, 0) for k in _KINDS] + [0])
+
+#: The JVM half of P10: the number a ``doc_<number>`` id carries, or NULL
+#: (``drop_score_filter`` casts it inside the filter and raises there).
+_DID = "try_cast(substring(doc_id, 5) AS BIGINT) AS did"
+
+#: ``did`` bounds within which ``did * 7`` fits a BIGINT.
+_DID_MIN, _DID_MAX = -(2 ** 63 // 7), (2 ** 63 - 1) // 7
+
+
+def _strip_styles_arrow(text):
+    """P11 over an Arrow string array: ``strip_styles``' sequential replace
+    chain in ``STYLE_TOKENS`` order, run only on the texts that hold a
+    '<' (the same exact short-cut)."""
+    import pyarrow.compute as pc
+
+    styled = pc.fill_null(pc.match_substring(text, "<"), False)
+    sub = text.filter(styled)
+    for tok in STYLE_TOKENS:
+        sub = pc.replace_substring(sub, pattern=tok, replacement="")
+    return pc.replace_with_mask(text, styled, sub)
+
+
+def _score_keep(doc_id, did, rows, span_idx):
+    """P10's keep condition for the spans of input ``rows`` that need a
+    score: ``drop_score_filter``'s integer milli-score over ``did * 7 +
+    span_idx * 173``, false where the ``doc_id`` is NULL (a NULL score).
+    Raises ``ValueError`` naming the ``doc_id`` where Spark's cast or its
+    BIGINT / INT arithmetic raises (``CAST_INVALID_INPUT``,
+    ``ARITHMETIC_OVERFLOW``)."""
+    has_did = did.is_valid().to_numpy(zero_copy_only=False)[rows]
+    has_doc = doc_id.is_valid().to_numpy(zero_copy_only=False)[rows]
+    d = did.fill_null(0).to_numpy()[rows]
+    b = span_idx.astype(np.int64) * 173
+    bad = has_doc & ~has_did
+    what = "has no number after its first 4 characters"
+    if not bad.any():
+        over = (d < _DID_MIN) | (d > _DID_MAX) | (b > np.iinfo(np.int32).max)
+        d = np.where(over, 0, d)
+        bad = over | (d * 7 > np.iinfo(np.int64).max - b)
+        what = "overflows BIGINT in its P10 score"
+    if bad.any():
+        row = int(rows[np.flatnonzero(bad)[0]])
+        raise ValueError(f"doc_id {doc_id[row].as_py()!r} {what}")
+    smod = np.fmod(d * 7 + b, G.SCORE_MOD)
+    milli = G.SCORE_BASE_MILLI + (smod * G.SCORE_SPREAD_NUM
+                                  // G.SCORE_SPREAD_DEN)
+    return has_did & (milli >= int(round(G.DROP_SCORE * G.SCORE_MOD)))
+
+
+def _kept_spans(batch):
+    """The map-side prefix of ``extract`` over one Arrow batch of whole
+    documents ``(doc_id, spans, did)``: explode, geometry, P9, P10 and the
+    P11 strip, with the JVM stages' semantics (``explode_spans`` …
+    ``strip_styles``). Returns the kernel's input table, its rows in
+    document and ``span_idx`` order, or ``None`` when no span is kept.
+
+    Spark's semantics, kept: a NULL or empty ``spans`` explodes to
+    nothing, and a NULL span (``StructArray.flatten`` applies the parent's
+    nulls) or a NULL ``offset`` fails P9; ``%`` is Java's remainder
+    (``np.fmod``) and ``FLOOR(offset / w)`` floor division; ``length``
+    counts code points, as ``utf8_length`` does; a NULL or unknown kind
+    takes the CASEs' ELSE branches, and a NULL kind needs P10's score."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    doc_id = batch.column("doc_id")
+    spans = batch.column("spans")
+    # list_parent_indices would count the slots under a NULL list, which
+    # list_flatten skips; the lengths count exactly what it emits
+    lengths = pc.fill_null(pc.list_value_length(spans), 0).to_numpy()
+    flat = pc.list_flatten(spans)
+    if not len(flat):
+        return None
+    col = dict(zip([f.name for f in flat.type], flat.flatten()))
+    kind, text, offset = col["kind"], col["text"], col["offset"]
+    parent = np.repeat(np.arange(len(lengths)), lengths)
+    span_idx = np.arange(len(flat)) - np.repeat(
+        np.cumsum(lengths) - lengths, lengths)
+
+    code = pc.fill_null(pc.index_in(kind, value_set=pa.array(_KINDS)),
+                        len(_KINDS)).to_numpy()
+    tlen = pc.fill_null(pc.utf8_length(text), 0).to_numpy()
+    w = np.where(tlen == 0, G.EMPTY_TEXT_WIDTH,
+                 G.TEXT_WIDTH_BASE + tlen % G.TEXT_WIDTH_MOD)
+    w = np.where(_KIND_WIDTH[code] > 0, _KIND_WIDTH[code], w)
+    off = offset.fill_null(0).to_numpy()
+    x1 = np.fmod(off, G.PAGE_WIDTH)
+    y1 = off // G.PAGE_WIDTH
+    x2, y2 = x1 + w, y1 + _KIND_HEIGHT[code]
+    keep = (offset.is_valid().to_numpy(zero_copy_only=False)
+            & (x2 - x1 > G.MIN_SIDE) & (y2 - y1 > G.MIN_SIDE))      # P9
+
+    scored = np.flatnonzero(
+        keep & ((code == 0) | kind.is_null().to_numpy(zero_copy_only=False)))
+    keep[scored] = _score_keep(doc_id, batch.column("did"), parent[scored],
+                               span_idx[scored])                     # P10
+    idx = np.flatnonzero(keep)
+    if not idx.size:
+        return None
+    take = pa.array(idx)
+    return pa.table({
+        "doc_id": doc_id.take(pa.array(parent[idx])),
+        "span_idx": span_idx[idx].astype(np.int32),
+        "kind": kind.take(take),
+        "text": _strip_styles_arrow(text.take(take)),                 # P11
+        "media_ref": col["media_ref"].take(take),
+        "x1": x1[idx].astype(np.int32), "y1": y1[idx].astype(np.int32),
+        "x2": x2[idx].astype(np.int32), "y2": y2[idx].astype(np.int32),
+    })
+
+
+def _extract_arrow(it):
+    """mapInArrow body of ``extract``: each batch holds whole documents,
+    so ``_kept_spans`` and ``_emit_arrow`` run on it alone, with no carry
+    into the next batch."""
+    for batch in it:
+        tbl = _kept_spans(batch)
+        if tbl is not None:
+            yield _emit_arrow(tbl)
 
 
 def ensure_input_parallelism(documents: DataFrame) -> DataFrame:
@@ -369,11 +503,14 @@ def extract(documents: DataFrame) -> DataFrame:
     Output 'offset' = reading-order rank 0..n-1 (FIXTURES.md §2). Documents
     whose spans are all filtered out do not appear (matching the reference,
     which emits nothing for empty results, predict_system.py:84-88).
+
+    One ``mapInArrow`` over the scan's own rows plus P10's ``did``, in the
+    scan's stage (``_extract_arrow``). Its Arrow batches hold whole
+    documents, so ``spark.sql.execution.arrow.maxRecordsPerBatch`` counts
+    documents here, not spans. A ``doc_id`` held by two input rows of one
+    batch raises (``_check_runs``), as does a text span whose score Spark
+    could not compute (``_score_keep``).
     """
     documents = ensure_input_parallelism(documents)
-    s = explode_spans(documents)
-    s = with_geometry(s)
-    s = det_filter(s)
-    s = drop_score_filter(s)
-    s = strip_styles(s)
-    return order_and_assemble(s)
+    return documents.selectExpr("doc_id", "spans", _DID).mapInArrow(
+        _extract_arrow, schema=EXTRACTED_SCHEMA)

@@ -9,9 +9,8 @@ the FIXED sf0.01 input are just tables, so the oracle can be a committed
 parquet file produced by an independent single-node computation, and the
 oracle SQL a plain ``read_parquet`` of it. That upgrades the five entries
 from the driver's weaker rows-only check to full hash rows — pinning, in
-particular, the flagship's distributed batch-carry path
-(pipeline.order_and_assemble), which pytest-in-repo covers only at tiny
-scale.
+particular, the flagship's distributed whole-document kernel
+(pipeline.extract), which pytest-in-repo covers only at tiny scale.
 
 Independence: input synthesis runs in DuckDB (the same engine the driver's
 gate uses, never Spark) and the per-group computation in plain
