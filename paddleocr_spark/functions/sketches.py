@@ -280,35 +280,43 @@ def qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans the same leaf array. Two shards merge by adding leaf counts
     then re-compressing — the mergeable-artifact property the paper
     proves.
+
+    Plan build: every projection is one ``selectExpr`` and every
+    aggregate an ``F.expr``, as in the flagship (PERF.md, "No shuffle,
+    and a plan built from SQL strings"): PySpark's ``Column`` calls cost
+    several py4j round trips each, and the build took 406 of them that
+    way, about half of a warm run's wall. Folding the two aggregates
+    into one ``groupBy(lang)`` of 2^QD_L ``count_if``s saves a job but
+    made ``collect`` slower (PERF.md, "Secondary queries: one schema
+    inference per file").
     """
     n_top = 1 << QD_L
-    d = sf_table(spark, sf_dir, "documents").select(
-        "lang",
-        F.least(F.expr(
-            f"CAST(size({WORDS_SQL}) AS INT)"), F.lit(n_top - 1)).alias("v"))
     per_lang = (
-        d.groupBy("lang", "v").agg(F.count("*").alias("c"))
+        sf_table(spark, sf_dir, "documents")
+        .selectExpr("lang", f"least(CAST(size({WORDS_SQL}) AS INT), "
+                            f"{n_top - 1}) AS v")
+        .groupBy("lang", "v").agg(F.expr("count(*) AS c"))
         .groupBy("lang").agg(
-            F.sum("c").cast("long").alias("n"),
-            F.map_from_entries(F.collect_list(F.struct("v", "c")))
-            .alias("m"))
-        .select("lang", "n",
-                F.ceil(F.col("n") / QD_K).cast("long").alias("thr"),
-                F.expr(f"transform(sequence(0, {n_top - 1}), "
-                       f"i -> coalesce(try_element_at(m, i), 0L))")
-                .alias("leaves")))
+            F.expr("CAST(sum(c) AS BIGINT) AS n"),
+            F.expr("map_from_entries(collect_list(struct(v, c))) AS m"))
+        .selectExpr(
+            "lang", "n", f"CAST(ceil(n / {QD_K}) AS BIGINT) AS thr",
+            f"transform(sequence(0, {n_top - 1}), "
+            f"i -> coalesce(try_element_at(m, i), 0L)) AS leaves"))
     walk = (f"array_sort(transform({_QD_FOLD}, e -> named_struct("
             f"'hi', shiftleft(e.idx + 1, {QD_L} - e.lvl) - 1, "
             f"'rng', shiftleft(1, {QD_L} - e.lvl) - 1, "
             f"'idx', e.idx, 'cnt', e.cnt)))")
-    ranked = (per_lang.withColumn("walk", F.expr(walk))
-              .withColumn("q", F.explode(F.array(
-                  *[F.lit(float(q)) for q in QD_QS])))
-              .withColumn("rk", F.ceil(F.col("q") * F.col("n"))
-                          .cast("long")))
-    return (ranked.select(
+    qs = ", ".join(f"{float(q)!r}D" for q in QD_QS)
+    # the walk is its own projection: in the explode's, Spark would
+    # evaluate it once per exploded row
+    ranked = (per_lang.selectExpr("lang", "n", "leaves", f"{walk} AS walk")
+              .selectExpr("lang", "n", "leaves", "walk",
+                          f"explode(array({qs})) AS q")
+              .selectExpr("*", "CAST(ceil(q * n) AS BIGINT) AS rk"))
+    return (ranked.selectExpr(
         "lang", "q", "n",
-        F.expr(_first_at_rank("walk", "e.cnt", "e.hi")).alias("qd_est"),
-        F.expr(_first_at_rank(f"sequence(0, {n_top - 1})", "leaves[e]",
-                              "e")).alias("exact"))
-        .withColumn("err", (F.col("qd_est") - F.col("exact")).cast("long")))
+        _first_at_rank("walk", "e.cnt", "e.hi") + " AS qd_est",
+        _first_at_rank(f"sequence(0, {n_top - 1})", "leaves[e]", "e")
+        + " AS exact")
+        .selectExpr("*", "CAST(qd_est - exact AS BIGINT) AS err"))

@@ -284,7 +284,8 @@ def _emit_arrow(tbl: "pa.Table"):
 
     doc_col = tbl.column("doc_id").combine_chunks()
     kind_col = tbl.column("kind").combine_chunks()
-    doc_enc = doc_col.dictionary_encode()
+    # a NULL doc_id is a document of its own, with its own code
+    doc_enc = doc_col.dictionary_encode(null_encoding="encode")
     doc_codes = np.asarray(doc_enc.indices)
     kind_enc = kind_col.dictionary_encode()
     kind_codes = np.asarray(kind_enc.indices)

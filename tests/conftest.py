@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from paddleocr_spark.session import get_spark
@@ -13,6 +15,23 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def started_jobs(spark):
+    """``started_jobs(fn)`` runs ``fn()`` in a Spark job group of its own
+    and returns its result with the ids of the jobs it started."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"started-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -111,6 +111,28 @@ def test_kernel_rejects_a_doc_id_held_by_two_input_rows(doc_ids, span_idx):
         pipeline._emit_arrow(_shared_doc_id(doc_ids, span_idx))
 
 
+def test_kernel_emits_a_null_doc_id_as_its_own_document():
+    """A NULL doc_id has a dictionary code of its own: its document comes
+    out under a NULL doc_id, with the spans the same rows get under a real
+    id."""
+    tbl = _kernel_rows([3, 2])
+    named = pipeline._emit_arrow(tbl)
+    null = pipeline._emit_arrow(tbl.set_column(
+        0, "doc_id", pa.array([None] * 3 + ["doc_00001"] * 2)))
+    assert null.column("doc_id").to_pylist() == [None, "doc_00001"]
+    assert null.column("spans").equals(named.column("spans"))
+
+
+@pytest.mark.parametrize("doc_ids,span_idx,what", [
+    ([None, "doc_b", None], [0, 0, 1], "comes as two runs of spans"),
+    ([None, None, None], [0, 1, 0], "has a span_idx that does not increase"),
+], ids=["two_runs", "span_idx_falls"])
+def test_kernel_names_a_null_doc_id_held_by_two_input_rows(doc_ids,
+                                                           span_idx, what):
+    with pytest.raises(ValueError, match=f"doc_id None {what}"):
+        pipeline._emit_arrow(_shared_doc_id(doc_ids, span_idx))
+
+
 def test_carry_keeps_a_falling_run_whole_so_the_kernel_raises():
     """A batch cut inside the run does not hide the fall: the carry hands
     the whole run to one ``_emit_arrow`` call."""

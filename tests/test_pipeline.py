@@ -67,6 +67,37 @@ def test_extract_rejects_a_doc_id_held_by_two_input_rows(spark):
         extract(docs).collect()
 
 
+def test_a_null_doc_id_is_a_document_of_its_own(spark):
+    """A document with a NULL doc_id keeps its media and title spans (P10
+    drops its text spans) and comes out under a NULL doc_id, through
+    ``extract`` and through the registry chain, with the spans the same
+    kept spans get under a real id."""
+    from paddleocr_spark.registry import (DEFAULT_CONFIG, create_operators,
+                                          transform)
+    media, title = ("media", None, "m", 5000), ("title", "T", None, 0)
+    docs = spark.createDataFrame(
+        [(None, [media, ("text", "x", None, 900), title]),
+         ("doc_1", [media])], _DOCUMENTS)
+    want = _collect(extract(spark.createDataFrame(
+        [("doc_0000002", [media, title])], _DOCUMENTS)))["doc_0000002"]
+    got = _collect(extract(docs))
+    assert got == {None: want, "doc_1": [dict(
+        kind="media", text=None, media_ref="m", offset=0)]}
+    assert _collect(transform(docs, create_operators(DEFAULT_CONFIG))) == got
+
+
+def test_extract_rejects_two_null_doc_id_rows_in_one_batch(spark):
+    """Two NULL-id rows of one batch are two input rows with one doc_id:
+    the kernel raises, naming it, as it does for a repeated real id."""
+    media = ("media", None, "m", 5000)
+    docs = spark.createDataFrame(
+        [(None, [media]), ("doc_1", [media]), (None, [media])],
+        _DOCUMENTS).repartition(spark.sparkContext.defaultParallelism,
+                                F.lit(0))
+    with pytest.raises(Exception, match="doc_id None"):
+        extract(docs).collect()
+
+
 def _jvm_prefix(docs):
     """The registry chain's JVM stages ahead of ``order_and_assemble``."""
     return strip_styles(drop_score_filter(det_filter(with_geometry(

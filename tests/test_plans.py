@@ -105,22 +105,17 @@ def test_flagship_has_no_payload_shuffle(spark, flagship_corpus):
     assert "MapInArrow" in plan
 
 
-def test_flagship_plan_builds_in_few_jvm_calls(spark, flagship_corpus,
-                                               monkeypatch):
-    """Building extract(df), without running a job, makes at most 75 py4j
-    round trips. Each PySpark ``Column`` call costs several of them in
-    query-context bookkeeping, so the map-side stages are SQL strings."""
+def _build_commands(build, monkeypatch) -> list:
+    """The py4j commands the calling thread sends while ``build()`` runs.
+    py4j's finalizer thread sends the detaches of JavaObjects freed
+    earlier whenever it wakes; they are not the build's round trips."""
     from py4j.clientserver import ClientServerConnection
 
-    from paddleocr_spark.pipeline import extract
-    wide = flagship_corpus(2 * spark.sparkContext.defaultParallelism)
     calls = []
     send = ClientServerConnection.send_command
     builder = threading.get_ident()
 
     def counted(self, command, *a, **kw):
-        # py4j's finalizer thread sends the detaches of JavaObjects freed
-        # earlier whenever it wakes; they are not the build's round trips
         if threading.get_ident() == builder:
             calls.append(command)
         return send(self, command, *a, **kw)
@@ -130,10 +125,21 @@ def test_flagship_plan_builds_in_few_jvm_calls(spark, flagship_corpus,
     gc.disable()
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
     try:
-        extract(wide)
+        build()
     finally:
         monkeypatch.undo()
         gc.enable()
+    return calls
+
+
+def test_flagship_plan_builds_in_few_jvm_calls(spark, flagship_corpus,
+                                               monkeypatch):
+    """Building extract(df), without running a job, makes at most 75 py4j
+    round trips. Each PySpark ``Column`` call costs several of them in
+    query-context bookkeeping, so the map-side stages are SQL strings."""
+    from paddleocr_spark.pipeline import extract
+    wide = flagship_corpus(2 * spark.sparkContext.defaultParallelism)
+    calls = _build_commands(lambda: extract(wide), monkeypatch)
     assert 0 < len(calls) <= 75
 
 
@@ -248,3 +254,27 @@ def test_qdigest_plan_is_one_fold(spark):
     for node in ("Join", "CartesianProduct", "Window", "Scan ExistingRDD"):
         assert node not in plan, node
     assert plan.count("Exchange") <= 2
+
+
+def test_qdigest_plan_builds_in_few_jvm_calls(spark, monkeypatch):
+    """Building qdigest_quantiles, without running a job, makes at most
+    150 py4j round trips (406 with ``Column`` expressions): its
+    projections and aggregates are SQL strings, as the flagship's are."""
+    from paddleocr_spark.functions.sketches import qdigest_quantiles
+    qdigest_quantiles(spark, SF)            # sf_table keeps the schema
+    calls = _build_commands(lambda: qdigest_quantiles(spark, SF),
+                            monkeypatch)
+    assert 0 < len(calls) <= 150
+
+
+def test_qdigest_warm_run_starts_three_jobs_all_in_collect(spark,
+                                                           started_jobs):
+    """A warm run is the two aggregates' shuffle stages and the result
+    stage: 3 jobs, and building the plan starts none (no schema
+    inference once ``sf_table`` has seen the file)."""
+    from paddleocr_spark.functions.sketches import qdigest_quantiles
+    qdigest_quantiles(spark, SF).collect()
+    df, built = started_jobs(lambda: qdigest_quantiles(spark, SF))
+    assert built == []
+    rows, ran = started_jobs(df.collect)
+    assert rows and len(ran) == 3

@@ -58,23 +58,21 @@ def test_resume_no_dupes_no_missing(spark, extracted, tmp_path):
     assert s3["snapshot_version"] == 2
 
 
-def test_resume_noop_starts_no_spark_job(spark, extracted, tmp_path):
+def test_resume_noop_starts_no_spark_job(spark, extracted, tmp_path,
+                                         started_jobs):
     """Resume reads its commit record from the manifest on the driver, so
     a run with nothing left to do launches no Spark job at all."""
     out = str(tmp_path / "noop")
     run_extract(spark, extracted, out, "run1", n_buckets=4)
-    sc = spark.sparkContext
-    sc.setJobGroup("resume-noop", "resume no-op")
-    try:
-        s = run_extract(spark, extracted, out, "run2", n_buckets=4)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    s, jobs = started_jobs(
+        lambda: run_extract(spark, extracted, out, "run2", n_buckets=4))
     assert s["parts_done"] == 0 and s["parts_skipped"] == 4
-    assert sc.statusTracker().getJobIdsForGroup("resume-noop") == []
+    assert jobs == []
 
 
 def test_cli_resume_noop_starts_no_spark_job(spark, documents, extracted,
-                                             tmp_path, monkeypatch, capsys):
+                                             tmp_path, monkeypatch, capsys,
+                                             started_jobs):
     """The spark-submit entry point builds its read → synth → extract plan
     only when a bucket is left to do, so its resume no-op starts no job
     either."""
@@ -82,17 +80,13 @@ def test_cli_resume_noop_starts_no_spark_job(spark, documents, extracted,
     out = str(tmp_path / "cli")
     run_extract(spark, extracted, out, "run1", n_buckets=4)
     monkeypatch.setattr(spark, "stop", lambda: None)  # the shared session
-    sc = spark.sparkContext
-    sc.setJobGroup("cli-noop", "spark-submit resume no-op")
-    try:
-        main(["--input", source, "--output", out, "--run-id", "run2",
-              "--buckets", "4", "--cores", "8"])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, jobs = started_jobs(lambda: main([
+        "--input", source, "--output", out, "--run-id", "run2",
+        "--buckets", "4", "--cores", "8"]))
     s = json.loads(capsys.readouterr().out.splitlines()[-1])
     assert s["parts_done"] == 0 and s["parts_skipped"] == 4
     assert s["snapshot_version"] == 1
-    assert sc.statusTracker().getJobIdsForGroup("cli-noop") == []
+    assert jobs == []
 
 
 def test_uncommitted_bucket_is_overwritten_idempotently(spark, extracted,
