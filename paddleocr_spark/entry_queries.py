@@ -4032,6 +4032,39 @@ SELECT doc_id,
         AND noal <= {T.GOPHER_MAX_NO_ALPHA_WORD_FRAC}) AS gopher_pass
 FROM gr"""
 
+    def _page_blocks(p: str) -> str:
+        """The ``{p}0`` … ``{p}n`` CTEs: one row per block of each page,
+        (doc_id, did, wl, W, nb, b, role, nw), in closed form. Keep in
+        lockstep with content.py's _ROLE and _WN."""
+        return f"""WITH {p}0 AS (
+  SELECT doc_id, CAST(doc_id AS BIGINT) AS did, {_WORDS} AS wl
+  FROM documents
+), {p}1 AS (
+  SELECT doc_id, did, wl, len(wl) AS W, 6 + did % 7 AS nb
+  FROM {p}0 WHERE len(wl) >= 1
+), {p}b AS (
+  SELECT doc_id, did, wl, W, nb, unnest(range(0, nb)) AS b FROM {p}1
+), {p}r AS (
+  SELECT *, CASE WHEN b = 0 THEN 'nav'
+                 WHEN b = nb - 1 THEN 'footer'
+                 WHEN (did + b) % 5 = 2 THEN 'h'
+                 WHEN (did * 3 + b) % 11 = 7 THEN 'aside'
+                 ELSE 'p' END AS role
+  FROM {p}b
+), {p}n AS (
+  SELECT *, CASE role WHEN 'nav' THEN 6 WHEN 'footer' THEN 5
+                 WHEN 'h' THEN 2 + (did + b) % 3
+                 WHEN 'aside' THEN 4 + (did + b) % 4
+                 ELSE 8 + (did * 7 + b * 5) % 56 END AS nw
+  FROM {p}r
+)"""
+
+    # the html tag each block role serializes as (content._OPEN)
+    _BLOCK_TAG = """         CASE WHEN role IN ('nav', 'aside') THEN 'div'
+              WHEN role = 'footer' THEN 'footer'
+              WHEN role = 'h' THEN CASE WHEN b = 1 THEN 'h1' ELSE 'h2' END
+              ELSE 'p' END AS tag,"""
+
     # main_content twin: predicts every block feature CLOSED-FORM from the
     # HTML-generator formulas in functions/content.py (it never parses the
     # serialized page, so Spark's serialize->regex-parse path is itself
@@ -4052,28 +4085,7 @@ FROM gr"""
            WHEN role = 'p' THEN (did + 17 * b + 3 * k) % 37 = 3
            ELSE false END"""
     sqls["main_content"] = f"""
-WITH mc0 AS (
-  SELECT doc_id, CAST(doc_id AS INTEGER) AS did, {_WORDS} AS wl
-  FROM documents
-), mc1 AS (
-  SELECT doc_id, did, wl, len(wl) AS W, 6 + did % 7 AS nb
-  FROM mc0 WHERE len(wl) >= 1
-), mcb AS (
-  SELECT doc_id, did, wl, W, nb, unnest(range(0, nb)) AS b FROM mc1
-), mcr AS (
-  SELECT *, CASE WHEN b = 0 THEN 'nav'
-                 WHEN b = nb - 1 THEN 'footer'
-                 WHEN (did + b) % 5 = 2 THEN 'h'
-                 WHEN (did * 3 + b) % 11 = 7 THEN 'aside'
-                 ELSE 'p' END AS role
-  FROM mcb
-), mcn AS (
-  SELECT *, CASE role WHEN 'nav' THEN 6 WHEN 'footer' THEN 5
-                 WHEN 'h' THEN 2 + (did + b) % 3
-                 WHEN 'aside' THEN 4 + (did + b) % 4
-                 ELSE 8 + (did * 7 + b * 5) % 56 END AS nw
-  FROM mcr
-), mct AS (
+{_page_blocks("mc")}, mct AS (
   SELECT doc_id, did, b, role, nw,
          list_transform(range(0, nw), k -> {_mc_tok}) AS toks,
          list_transform(range(0, nw), k ->
@@ -4081,10 +4093,7 @@ WITH mc0 AS (
   FROM mcn
 ), mcf AS (
   SELECT doc_id, CAST(b AS BIGINT) AS block_idx,
-         CASE WHEN role IN ('nav', 'aside') THEN 'div'
-              WHEN role = 'footer' THEN 'footer'
-              WHEN role = 'h' THEN CASE WHEN b = 1 THEN 'h1' ELSE 'h2' END
-              ELSE 'p' END AS tag,
+{_BLOCK_TAG}
          array_to_string(toks, ' ') AS text,
          role = 'h' AS heading,
          length(array_to_string(toks, ' ')) AS len_text,
@@ -4192,28 +4201,7 @@ FROM mcs10"""
     # content.synth_html_expr(comma=True) / content.readability_extract.
     _rd_comma = "(role = 'p' AND (did * 11 + b * 7 + k * 5) % 13 = 4)"
     sqls["readability_extract"] = f"""
-WITH rd0 AS (
-  SELECT doc_id, CAST(doc_id AS INTEGER) AS did, {_WORDS} AS wl
-  FROM documents
-), rd1 AS (
-  SELECT doc_id, did, wl, len(wl) AS W, 6 + did % 7 AS nb
-  FROM rd0 WHERE len(wl) >= 1
-), rdb AS (
-  SELECT doc_id, did, wl, W, nb, unnest(range(0, nb)) AS b FROM rd1
-), rdr AS (
-  SELECT *, CASE WHEN b = 0 THEN 'nav'
-                 WHEN b = nb - 1 THEN 'footer'
-                 WHEN (did + b) % 5 = 2 THEN 'h'
-                 WHEN (did * 3 + b) % 11 = 7 THEN 'aside'
-                 ELSE 'p' END AS role
-  FROM rdb
-), rdn AS (
-  SELECT *, CASE role WHEN 'nav' THEN 6 WHEN 'footer' THEN 5
-                 WHEN 'h' THEN 2 + (did + b) % 3
-                 WHEN 'aside' THEN 4 + (did + b) % 4
-                 ELSE 8 + (did * 7 + b * 5) % 56 END AS nw
-  FROM rdr
-), rdt AS (
+{_page_blocks("rd")}, rdt AS (
   SELECT doc_id, did, b, role, nw,
          list_transform(range(0, nw), k -> {_mc_tok}
              || CASE WHEN {_rd_comma} THEN ',' ELSE '' END) AS toks2,
@@ -4224,10 +4212,7 @@ WITH rd0 AS (
   FROM rdn
 ), rdf AS (
   SELECT doc_id, CAST(b AS BIGINT) AS block_idx,
-         CASE WHEN role IN ('nav', 'aside') THEN 'div'
-              WHEN role = 'footer' THEN 'footer'
-              WHEN role = 'h' THEN CASE WHEN b = 1 THEN 'h1' ELSE 'h2' END
-              ELSE 'p' END AS tag,
+{_BLOCK_TAG}
          CASE WHEN role IN ('nav', 'aside') THEN role ELSE '' END AS klass,
          array_to_string(toks2, ' ') AS text,
          length(array_to_string(toks2, ' ')) AS len_text,
@@ -4266,33 +4251,9 @@ FROM rdw"""
            WHEN role = 'p' THEN (did + 17 * b + 3 * k) % 37 = 3
            ELSE false END"""
     sqls["boilerpipe_extract"] = f"""
-WITH bp0 AS (
-  SELECT doc_id, CAST(doc_id AS INTEGER) AS did, {_WORDS} AS wl
-  FROM documents
-), bp1 AS (
-  SELECT doc_id, did, wl, len(wl) AS W, 6 + did % 7 AS nb
-  FROM bp0 WHERE len(wl) >= 1
-), bpb AS (
-  SELECT doc_id, did, wl, W, nb, unnest(range(0, nb)) AS b FROM bp1
-), bpr AS (
-  SELECT *, CASE WHEN b = 0 THEN 'nav'
-                 WHEN b = nb - 1 THEN 'footer'
-                 WHEN (did + b) % 5 = 2 THEN 'h'
-                 WHEN (did * 3 + b) % 11 = 7 THEN 'aside'
-                 ELSE 'p' END AS role
-  FROM bpb
-), bpn AS (
-  SELECT *, CASE role WHEN 'nav' THEN 6 WHEN 'footer' THEN 5
-                 WHEN 'h' THEN 2 + (did + b) % 3
-                 WHEN 'aside' THEN 4 + (did + b) % 4
-                 ELSE 8 + (did * 7 + b * 5) % 56 END AS nw
-  FROM bpr
-), bpf AS (
+{_page_blocks("bp")}, bpf AS (
   SELECT doc_id, CAST(b AS BIGINT) AS block_idx,
-         CASE WHEN role IN ('nav', 'aside') THEN 'div'
-              WHEN role = 'footer' THEN 'footer'
-              WHEN role = 'h' THEN CASE WHEN b = 1 THEN 'h1' ELSE 'h2' END
-              ELSE 'p' END AS tag,
+{_BLOCK_TAG}
          CASE WHEN role IN ('nav', 'aside') THEN role ELSE '' END AS klass,
          array_to_string(list_transform(range(0, nw), k -> {_mc_tok}),
                          ' ') AS text,
@@ -4357,7 +4318,7 @@ FROM bpw"""
                             for e, t in _rp_fracs.values())
     sqls["gopher_repetition"] = f"""
 WITH gp0 AS (
-  SELECT doc_id, CAST(doc_id AS INTEGER) AS did, {_WORDS} AS w0
+  SELECT doc_id, CAST(doc_id AS BIGINT) AS did, {_WORDS} AS w0
   FROM documents
 ), gpc AS (
   SELECT doc_id,

@@ -107,10 +107,11 @@ _WN = ("CASE {role} WHEN 'nav' THEN 6 WHEN 'footer' THEN 5 "
 _TOK = ("CASE WHEN {role} = 'p' AND did % 17 = 9 AND {b} = 2 AND {k} = 0 "
         "THEN '©2026' "
         "WHEN {role} = 'p' AND (did + {b}) % 2 = 0 AND ({k} + {b}) % 3 = 0 "
-        "THEN element_at({stop}, (did + {k}) % 8 + 1) "
+        "THEN element_at({stop}, CAST((did + {k}) % 8 + 1 AS INT)) "
         "WHEN {role} = 'p' AND (did + {b}) % 2 = 1 AND ({k} + {b}) % 5 = 0 "
-        "THEN element_at({stop}, (did + {k}) % 8 + 1) "
-        "ELSE element_at(wl, (did * 13 + {b} * 29 + {k}) % W + 1) END")
+        "THEN element_at({stop}, CAST((did + {k}) % 8 + 1 AS INT)) "
+        "ELSE element_at(wl, CAST((did * 13 + {b} * 29 + {k}) % W + 1 AS INT))"
+        " END")
 
 #: link flag at position k, by role (headings never carry links).
 _LINKED = ("CASE WHEN {role} IN ('nav', 'footer') THEN {k} % 2 = 0 "
@@ -174,6 +175,25 @@ _BLOCK_RE = r"<(p|h1|h2|div|footer)[^>]*>.*?</\\1>"
 _ANCHOR_RE = r"<a[^>]*>([^<]*)</a>"
 
 
+def _pages(spark: SparkSession, sf_dir: str, synth_expr: str) -> DataFrame:
+    """(doc_id, html): each document's page built by ``synth_expr`` from
+    (did, wl, W, nb), for the documents with at least one word."""
+    from ..pipeline import ensure_input_parallelism
+
+    # Widen BEFORE the synth/regex projections: the HTML serialize +
+    # block regex-parse are per-char work attached to the scan stage,
+    # and the sf corpus arrives as ONE file/task (the utf8-chain lesson,
+    # PERF.md). At production scale the scan is already wide → no-op.
+    return (ensure_input_parallelism(sf_table(spark, sf_dir, "documents"))
+            .select("doc_id",
+                    F.col("doc_id").cast("long").alias("did"),
+                    words_col().alias("wl"))
+            .withColumn("W", F.size("wl"))
+            .where(F.col("W") >= 1)
+            .withColumn("nb", F.expr("6 + did % 7"))
+            .select("doc_id", F.expr(synth_expr).alias("html")))
+
+
 def main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-block jusText classification over the synthesized corpus HTML.
 
@@ -181,21 +201,7 @@ def main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     final classes, and the rounded feature densities; ``kept`` marks the
     main-content selection (final class 'good').
     """
-    from ..pipeline import ensure_input_parallelism
-
-    # Widen BEFORE the synth/regex projections: the HTML serialize +
-    # block regex-parse are per-char work attached to the scan stage,
-    # and the sf corpus arrives as ONE file/task (the utf8-chain lesson,
-    # PERF.md). At production scale the scan is already wide → no-op.
-    base = (ensure_input_parallelism(sf_table(spark, sf_dir, "documents"))
-            .select("doc_id",
-                    F.col("doc_id").cast("int").alias("did"),
-                    words_col().alias("wl"))
-            .withColumn("W", F.size("wl"))
-            .where(F.col("W") >= 1)
-            .withColumn("nb", F.expr("6 + did % 7")))
-
-    html = base.select("doc_id", F.expr(synth_html_expr()).alias("html"))
+    html = _pages(spark, sf_dir, synth_html_expr())
 
     # Parse the serialized page back: block segmentation + tag strip +
     # anchor-text extraction (regex-only; never peeks at the generator).
@@ -341,17 +347,7 @@ def _read_blocks(spark: SparkSession, sf_dir: str,
     """Synthesize pages with ``synth_expr`` and regex-parse them back to
     one row per block with the raw open tag preserved (shared by the
     readability/boilerpipe extractors)."""
-    from ..pipeline import ensure_input_parallelism
-
-    base = (ensure_input_parallelism(sf_table(spark, sf_dir, "documents"))
-            .select("doc_id",
-                    F.col("doc_id").cast("int").alias("did"),
-                    words_col().alias("wl"))
-            .withColumn("W", F.size("wl"))
-            .where(F.col("W") >= 1)
-            .withColumn("nb", F.expr("6 + did % 7")))
-    html = base.select("doc_id", F.expr(synth_expr).alias("html"))
-    return (html
+    return (_pages(spark, sf_dir, synth_expr)
             .select("doc_id",
                     F.posexplode(F.expr(
                         f"regexp_extract_all(html, '{_BLOCK_RE}', 0)"))

@@ -94,7 +94,7 @@ def repetition_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     pw = PARA_LINES * LINE_WIDTH_WORDS
     docs = (sf_table(spark, sf_dir, "documents")
             .select("doc_id",
-                    F.col("doc_id").cast("int").alias("did"),
+                    F.col("doc_id").cast("long").alias("did"),
                     words_col().alias("w0"))
             .where(F.size("w0") >= 1))
     return docs.select(

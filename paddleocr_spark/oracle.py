@@ -24,11 +24,16 @@ def extract_pandas(documents_pdf: pd.DataFrame) -> pd.DataFrame:
     Mirrors pipeline.extract stage by stage; see that module for the
     reference citations.
     """
-    synth = synth_spans_pandas(documents_pdf)
+    return extract_spans_pandas(synth_spans_pandas(documents_pdf))
+
+
+def extract_spans_pandas(synth: pd.DataFrame) -> pd.DataFrame:
+    """(doc_id:str, spans:list[dict]) → extracted, one document per input
+    row. A NULL doc_id has no P10 score, so its text spans drop."""
     thresh = int(round(G.DROP_SCORE * G.SCORE_MOD))
     out = []
     for doc_id, spans in zip(synth["doc_id"], synth["spans"]):
-        did = int(doc_id[4:])
+        did = None if doc_id is None else int(doc_id[4:])
         kept = []
         for idx, sp in enumerate(spans):
             kind, text = sp["kind"], sp["text"]
@@ -38,7 +43,8 @@ def extract_pandas(documents_pdf: pd.DataFrame) -> pd.DataFrame:
             h = G.span_height(kind)
             if w <= G.MIN_SIDE or h <= G.MIN_SIDE:      # P9
                 continue
-            if kind == "text" and G.span_score_milli(did, idx) < thresh:  # P10
+            if kind == "text" and (did is None or G.span_score_milli(
+                    did, idx) < thresh):                          # P10
                 continue
             stripped = None if text is None else strip_style_tokens(text)  # P11
             kept.append({"kind": kind, "text": stripped,

@@ -14,9 +14,12 @@ Restates the reference dataflow (SURVEY.md §3.2):
 Arrow batch holds whole rows, so every batch holds whole documents. The
 kernel flattens each batch's spans and runs the explode, the geometry and
 P9–P11 in numpy and ``pyarrow.compute`` (``_kept_spans``), then orders
-and re-assembles them (``_order_ranks`` + ``_emit_arrow``). No JVM
-``Generate``, no per-span ``doc_id`` copy crossing to Python, no
-batch-boundary carry, no shuffle: the only exchange an extract can have is
+and re-assembles them (``_order_ranks`` + ``_emit_arrow``). Each kept
+span is keyed to its document by its input row, not by its ``doc_id``,
+so a repeated or NULL ``doc_id`` is one more document in every input
+layout, as in the reference and ``oracle.extract_pandas``. No JVM
+``Generate``, no per-span ``doc_id`` copy, no batch-boundary carry, no
+shuffle: the only exchange an extract can have is
 ``ensure_input_parallelism``'s round-robin widening of an
 under-partitioned scan. String columns are only ever moved by vectorized
 Arrow kernels, never through per-span Python objects (PERF.md,
@@ -25,12 +28,14 @@ Arrow kernels, never through per-span Python objects (PERF.md,
 The same prefix also exists as JVM SQL stages (``explode_spans`` …
 ``strip_styles``), which the registry chain (``registry.DEFAULT_CONFIG``)
 and the secondary queries run; ``order_and_assemble`` is its kernel over
-exploded spans, through operators/grouped.py's batch-boundary carry. A
-differential test holds the two prefixes equal row for row. The JVM
-stages build their expressions as SQL strings (``selectExpr``, ``where``,
-one ``F.expr`` each): every PySpark ``Column`` call costs several py4j
-round trips of query-context bookkeeping, paid in driver time before the
-first job (PERF.md, "No shuffle, and a plan built from SQL strings").
+exploded spans, through operators/grouped.py's batch-boundary carry; it
+finds documents by ``doc_id`` and raises when two input rows share one
+(``_check_runs``). A differential test holds the two prefixes equal row
+for row. The JVM stages build their expressions as SQL strings
+(``selectExpr``, ``where``, one ``F.expr`` each): every PySpark ``Column``
+call costs several py4j round trips of query-context bookkeeping, paid in
+driver time before the first job (PERF.md, "No shuffle, and a plan built
+from SQL strings").
 Reference parity citations live in paddleocr_spark/kernels.py.
 """
 
@@ -256,12 +261,16 @@ def _order_ranks(doc_codes, kind_codes, text_code, kind_dict,
 
 def _check_runs(doc_dict, doc_codes, span_idx, starts) -> None:
     """The kernel's input precondition: each document is one run of rows,
-    in increasing ``span_idx`` order. Without a shuffle in front of the
-    kernel, a ``doc_id`` held by two input rows would otherwise come out as
-    two documents (two runs) or one interleaved document (one run)."""
-    if len(starts) != len(doc_dict):
-        codes, counts = np.unique(doc_codes[starts], return_counts=True)
-        code, what = codes[counts > 1][0], "comes as two runs of spans"
+    in increasing ``span_idx`` order. Codes number documents in order of
+    first appearance, so the runs are distinct documents exactly when
+    their start codes strictly increase. On ``extract``'s path the codes
+    are input rows and neither check can fire; on the registry chain's
+    exploded input, a ``doc_id`` held by two input rows would otherwise
+    come out as two documents (two runs) or one interleaved document."""
+    first = doc_codes[starts]
+    bad = np.flatnonzero(first[1:] <= first[:-1])
+    if bad.size:
+        code, what = first[bad[0] + 1], "comes as two runs of spans"
     else:
         bad = np.flatnonzero((doc_codes[1:] == doc_codes[:-1])
                              & (span_idx[1:] <= span_idx[:-1]))
@@ -276,7 +285,10 @@ def _emit_arrow(tbl: "pa.Table"):
     """Assemble one run of complete documents into an Arrow RecordBatch of
     (doc_id, spans) — all column movement via vectorized Arrow take and
     dictionary codes; the only per-span Python objects are the kind
-    strings of documents on the exact-kernel slow path. Raises
+    strings of documents on the exact-kernel slow path. The documents are
+    the codes of ``doc_id``: a dictionary column (``extract``'s, coded by
+    input row) keeps its codes, and a plain one (the registry chain's) is
+    encoded here, a NULL id taking a code of its own. Raises
     ``ValueError`` naming the ``doc_id`` when a document is not one run in
     ``span_idx`` order (``_check_runs``)."""
     import pyarrow as pa
@@ -284,8 +296,7 @@ def _emit_arrow(tbl: "pa.Table"):
 
     doc_col = tbl.column("doc_id").combine_chunks()
     kind_col = tbl.column("kind").combine_chunks()
-    # a NULL doc_id is a document of its own, with its own code
-    doc_enc = doc_col.dictionary_encode(null_encoding="encode")
+    doc_enc = pc.dictionary_encode(doc_col, null_encoding="encode")
     doc_codes = np.asarray(doc_enc.indices)
     kind_enc = kind_col.dictionary_encode()
     kind_codes = np.asarray(kind_enc.indices)
@@ -310,7 +321,7 @@ def _emit_arrow(tbl: "pa.Table"):
     list_offsets = pa.array(
         np.concatenate([starts, [len(doc_codes)]]).astype(np.int32))
     spans = pa.ListArray.from_arrays(list_offsets, struct)
-    doc_ids = pc.take(doc_col, pa.array(starts))
+    doc_ids = doc_enc.dictionary.take(doc_codes[starts])
     return pa.RecordBatch.from_arrays([doc_ids, spans],
                                       names=["doc_id", "spans"])
 
@@ -338,9 +349,10 @@ def order_and_assemble(spans: DataFrame) -> DataFrame:
     ``_assemble_arrow``; an Arrow batch here counts spans, so a document
     can straddle two batches and ``grouped.carry_groups`` carries it. The
     reference and ``oracle.extract_pandas`` also order each input document
-    by itself; a ``doc_id`` held by two input rows raises in the kernel
-    (``_check_runs``) rather than being merged. ``extract`` runs the same
-    ``_emit_arrow`` over whole-document batches instead.
+    by itself, but exploded spans carry no input row: here a ``doc_id``
+    held by two input rows raises in the kernel (``_check_runs``) rather
+    than being merged. ``extract`` runs the same ``_emit_arrow`` over
+    whole-document batches instead, keyed on the input row.
 
     ``mapInArrow`` over whole Arrow batches, not
     ``groupBy(doc_id).applyInPandas``: per-group applyInPandas pays Arrow
@@ -416,6 +428,9 @@ def _kept_spans(batch):
     P11 strip, with the JVM stages' semantics (``explode_spans`` …
     ``strip_styles``). Returns the kernel's input table, its rows in
     document and ``span_idx`` order, or ``None`` when no span is kept.
+    Its ``doc_id`` is a dictionary column over the batch's ``doc_id``s
+    whose codes are the spans' input rows: the kernel's document key,
+    with no per-span string copy.
 
     Spark's semantics, kept: a NULL or empty ``spans`` explodes to
     nothing, and a NULL span (``StructArray.flatten`` applies the parent's
@@ -462,7 +477,7 @@ def _kept_spans(batch):
         return None
     take = pa.array(idx)
     return pa.table({
-        "doc_id": doc_id.take(pa.array(parent[idx])),
+        "doc_id": pa.DictionaryArray.from_arrays(parent[idx], doc_id),
         "span_idx": span_idx[idx].astype(np.int32),
         "kind": kind.take(take),
         "text": _strip_styles_arrow(text.take(take)),                 # P11
@@ -508,9 +523,10 @@ def extract(documents: DataFrame) -> DataFrame:
     One ``mapInArrow`` over the scan's own rows plus P10's ``did``, in the
     scan's stage (``_extract_arrow``). Its Arrow batches hold whole
     documents, so ``spark.sql.execution.arrow.maxRecordsPerBatch`` counts
-    documents here, not spans. A ``doc_id`` held by two input rows of one
-    batch raises (``_check_runs``), as does a text span whose score Spark
-    could not compute (``_score_keep``).
+    documents here, not spans. Each input row is its own document: a
+    ``doc_id`` held by several rows, NULL included, comes out once per
+    row in any input layout. A text span whose score Spark could not
+    compute raises (``_score_keep``).
     """
     documents = ensure_input_parallelism(documents)
     return documents.selectExpr("doc_id", "spans", _DID).mapInArrow(

@@ -203,3 +203,34 @@ def test_synthetic_adversarial_sequences():
         [True, False, False],
         [10, MAX_HEADING_DISTANCE + 1, 300],
     ) == ["bad", "bad", "good"]
+
+
+def test_page_queries_take_a_doc_id_past_2_31(spark, tmp_path):
+    """The page and repetition synthesizers read ``did`` as a BIGINT in
+    both engines: ids past 2^31 give the same blocks in Spark and in the
+    DuckDB twins (a 32-bit ``did`` raised in both)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from paddleocr_spark.entry_queries import oracle_sql, queries
+
+    docs = pq.read_table(f"{SF_SMALL}/documents.parquet").slice(0, 3)
+    ids = [2 ** 31 + 6, 3 * 2 ** 31 + 1, 7]
+    pq.write_table(docs.set_column(
+        docs.schema.get_field_index("doc_id"), "doc_id",
+        pa.array(ids, pa.int64())), tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path}/documents.parquet'")
+    sql, block = oracle_sql(), ("doc_id", "block_idx", "text")
+    for name, cols in [("main_content", block),
+                       ("readability_extract", block),
+                       ("boilerpipe_extract", block),
+                       ("gopher_repetition", ("doc_id", "n_words"))]:
+        got = sorted(tuple(r[c] for c in cols) for r in
+                     queries()[name](spark, str(tmp_path)).collect())
+        want = sorted(con.execute(
+            f"SELECT {', '.join(cols)} FROM ({sql[name]})").fetchall())
+        assert got == want, name
+        assert {r[0] for r in got} == set(ids), name

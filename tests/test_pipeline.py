@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from paddleocr_spark.oracle import extract_pandas
+from paddleocr_spark.oracle import extract_pandas, extract_spans_pandas
 from paddleocr_spark.pipeline import (det_filter, drop_score_filter,
                                       explode_spans, extract, strip_styles,
                                       with_geometry)
@@ -23,6 +23,12 @@ _PREFIX = ("doc_id string, span_idx int, kind string, text string, "
 
 def _collect(df):
     return {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in df.collect()}
+
+
+def _listed(rows) -> list:
+    """``(doc_id, spans)`` rows as a sorted list: ``_collect``'s dict would
+    fold two documents with one doc_id into one."""
+    return sorted(((d, list(spans)) for d, spans in rows), key=repr)
 
 
 @pytest.fixture(scope="module")
@@ -51,20 +57,25 @@ def test_extract_partition_invariant(documents, oracle_rows):
         assert rows == oracle_rows
 
 
-def test_extract_rejects_a_doc_id_held_by_two_input_rows(spark):
+def _one_partition(spark, docs):
+    """All of ``docs`` in one partition (one Arrow batch) of a scan that
+    needs no widening."""
+    return docs.repartition(spark.sparkContext.defaultParallelism, F.lit(0))
+
+
+def test_extract_emits_a_doc_id_held_by_two_input_rows_twice(spark):
     """Each input row is one document, as in the reference and the oracle,
-    so two rows with one doc_id are an input error: the kernel raises
-    rather than merging them into one interleaved document. Both rows sit
-    in one partition of a scan that needs no widening."""
-    from pyspark.sql import functions as F
-    span = "struct<kind:string,text:string,media_ref:string,offset:int>"
-    row = ("doc_0000001", [("title", "T", None, 0),
-                           ("media", None, "m", 5000)])
-    docs = spark.createDataFrame(
-        [row, row], f"doc_id string, spans array<{span}>").repartition(
-        spark.sparkContext.defaultParallelism, F.lit(0))
-    with pytest.raises(Exception, match="doc_id 'doc_0000001'"):
-        extract(docs).collect()
+    so two rows with one doc_id come out as two documents, each ordered by
+    itself, even when both rows sit in one Arrow batch."""
+    title, media = ("title", "T", None, 0), ("media", None, "m", 5000)
+    docs = _one_partition(spark, spark.createDataFrame(
+        [("doc_0000001", [title, media]), ("doc_0000001", [media])],
+        _DOCUMENTS))
+    got = sorted(([tuple(s) for s in r["spans"]] for r in
+                  extract(docs).where("doc_id = 'doc_0000001'").collect()),
+                 key=len)
+    assert got == [[("media", None, "m", 0)],
+                   [("title", "T", None, 0), ("media", None, "m", 1)]]
 
 
 def test_a_null_doc_id_is_a_document_of_its_own(spark):
@@ -86,16 +97,56 @@ def test_a_null_doc_id_is_a_document_of_its_own(spark):
     assert _collect(transform(docs, create_operators(DEFAULT_CONFIG))) == got
 
 
-def test_extract_rejects_two_null_doc_id_rows_in_one_batch(spark):
-    """Two NULL-id rows of one batch are two input rows with one doc_id:
-    the kernel raises, naming it, as it does for a repeated real id."""
+def test_extract_emits_two_null_doc_id_rows_in_one_batch_twice(spark):
+    """Two NULL-id rows of one batch are two documents under a NULL
+    doc_id, as two rows with one real id are."""
     media = ("media", None, "m", 5000)
+    docs = _one_partition(spark, spark.createDataFrame(
+        [(None, [media]), ("doc_1", [media]), (None, [media, media])],
+        _DOCUMENTS))
+    got = sorted(len(r["spans"]) for r in extract(docs).collect()
+                 if r["doc_id"] is None)
+    assert got == [1, 2]
+
+
+def test_extract_keys_documents_on_the_input_row_in_every_input_layout(
+        spark, documents_pdf):
+    """A repeated real doc_id and two NULL doc_ids give the same documents
+    from one input partition, from one batch of a scan two partitions per
+    core wide, from one row per Arrow batch and from the default layout:
+    the pandas oracle's documents for the same rows, one per input row."""
+    pdf = documents_pdf.head(8).reset_index(drop=True)
+    pdf.loc[1, "doc_id"] = pdf.loc[0, "doc_id"]
+    rows = synth_spans_pandas(pdf)
+    nulls = [i for i, spans in enumerate(rows["spans"])
+             if i > 1 and {s["kind"] for s in spans} - {"text"}][:2]
+    rows.loc[nulls, "doc_id"] = None
+    want = extract_spans_pandas(rows)
+    assert list(want["doc_id"].iloc[:2]) == [rows["doc_id"][0]] * 2
+    assert want["doc_id"].isna().sum() == 2
+    assert _listed(want.dropna().itertuples(index=False)) == _listed(
+        extract_pandas(pdf.drop(nulls)).itertuples(index=False))
+    want = _listed(want.itertuples(index=False))
+
     docs = spark.createDataFrame(
-        [(None, [media]), ("doc_1", [media]), (None, [media])],
-        _DOCUMENTS).repartition(spark.sparkContext.defaultParallelism,
-                                F.lit(0))
-    with pytest.raises(Exception, match="doc_id None"):
-        extract(docs).collect()
+        [(d, [(s["kind"], s["text"], s["media_ref"], int(s["offset"]))
+              for s in spans]) for d, spans in rows.itertuples(index=False)],
+        _DOCUMENTS)
+    wide = 2 * spark.sparkContext.defaultParallelism
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for layout, frame, batch in [
+                ("one partition", docs.repartition(1), old),
+                ("2 x cores", docs.repartition(wide, F.lit(0)), old),
+                ("one row per batch", docs.repartition(wide, F.lit(0)), "1"),
+                ("default", docs, old)]:
+            spark.conf.set(key, batch)
+            got = _listed((r["doc_id"], [s.asDict() for s in r["spans"]])
+                          for r in extract(frame).collect())
+            assert got == want, layout
+    finally:
+        spark.conf.set(key, old)
 
 
 def _jvm_prefix(docs):
@@ -151,8 +202,9 @@ def test_arrow_prefix_equals_jvm_prefix_on_adversarial_corpus(spark):
         from paddleocr_spark.pipeline import _kept_spans
         for b in batches:
             tbl = _kept_spans(b)
-            if tbl is not None:
-                yield from tbl.to_batches()
+            if tbl is not None:   # Spark reads no dictionary column
+                yield from tbl.set_column(0, "doc_id", tbl.column(
+                    "doc_id").cast("string")).to_batches()
 
     docs = spark.createDataFrame(_adversarial_documents(seed=15), _DOCUMENTS)
     cols = [c.split()[0] for c in _PREFIX.split(", ")]
@@ -274,7 +326,7 @@ def test_double_column_reads_left_column_before_right(documents_pdf):
     ALL left-column spans precede ALL right-column spans."""
     import pandas as pd
 
-    from paddleocr_spark.oracle import extract_pandas
+    from paddleocr_spark.oracle import extract_pandas, extract_spans_pandas
     from paddleocr_spark.synth import synth_spans_pandas
 
     # purpose-built long double-column docs (did%50==7) with many chunks so
@@ -312,7 +364,7 @@ def test_flagship_matches_pandas_oracle_at_sf01_sample(spark):
     import pandas as pd
     import pyspark.sql.functions as F
 
-    from paddleocr_spark.oracle import extract_pandas
+    from paddleocr_spark.oracle import extract_pandas, extract_spans_pandas
     from paddleocr_spark.pipeline import extract
     from paddleocr_spark.synth import synth_spans
 
