@@ -112,9 +112,10 @@ def test_extract_emits_two_null_doc_id_rows_in_one_batch_twice(spark):
 def test_extract_keys_documents_on_the_input_row_in_every_input_layout(
         spark, documents_pdf):
     """A repeated real doc_id and two NULL doc_ids give the same documents
-    from one input partition, from one batch of a scan two partitions per
-    core wide, from one row per Arrow batch and from the default layout:
-    the pandas oracle's documents for the same rows, one per input row."""
+    from one input partition, from a scan two partitions per core wide
+    (rows spread round-robin, or all in one batch), from one row per Arrow
+    batch and from the default layout: the pandas oracle's documents for
+    the same rows, one per input row."""
     pdf = documents_pdf.head(8).reset_index(drop=True)
     pdf.loc[1, "doc_id"] = pdf.loc[0, "doc_id"]
     rows = synth_spans_pandas(pdf)
@@ -138,7 +139,9 @@ def test_extract_keys_documents_on_the_input_row_in_every_input_layout(
     try:
         for layout, frame, batch in [
                 ("one partition", docs.repartition(1), old),
-                ("2 x cores", docs.repartition(wide, F.lit(0)), old),
+                ("2 x cores", docs.repartition(wide), old),
+                ("one batch of 2 x cores", docs.repartition(wide, F.lit(0)),
+                 old),
                 ("one row per batch", docs.repartition(wide, F.lit(0)), "1"),
                 ("default", docs, old)]:
             spark.conf.set(key, batch)
@@ -326,7 +329,7 @@ def test_double_column_reads_left_column_before_right(documents_pdf):
     ALL left-column spans precede ALL right-column spans."""
     import pandas as pd
 
-    from paddleocr_spark.oracle import extract_pandas, extract_spans_pandas
+    from paddleocr_spark.oracle import extract_pandas
     from paddleocr_spark.synth import synth_spans_pandas
 
     # purpose-built long double-column docs (did%50==7) with many chunks so
@@ -364,7 +367,7 @@ def test_flagship_matches_pandas_oracle_at_sf01_sample(spark):
     import pandas as pd
     import pyspark.sql.functions as F
 
-    from paddleocr_spark.oracle import extract_pandas, extract_spans_pandas
+    from paddleocr_spark.oracle import extract_pandas
     from paddleocr_spark.pipeline import extract
     from paddleocr_spark.synth import synth_spans
 
