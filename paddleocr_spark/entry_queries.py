@@ -5023,23 +5023,42 @@ SELECT media_ref,
            AS ratio_w
 FROM r0"""
 
+    # --- R4 decoder demos: each family's "model output" id stream is
+    #     operators/recognize.STREAMS, rendered here in DuckDB spellings
+    #     (the Spark rendering is recognize._text_ids); each decode walk
+    #     below stays hand-written, independent of the Spark one. ---
+    from .operators.recognize import BODY, CHARSET, HEAD2, STREAMS, Every
+    cs2 = CHARSET.replace("'", "''")
+    n_cs = len(CHARSET)
+
+    def _rec_ids(family: str) -> str:
+        """STREAMS[family] as a DuckDB list over doc_id and t."""
+        s = STREAMS[family]
+        ch = f"strpos('{cs2}', substring(t, CAST(i AS INT), 1))"
+        enc = (f"i -> CASE WHEN {ch} = 0 THEN {s.unknown} "
+               f"ELSE {ch} + {s.shift} END")
+        text = {BODY: f"list_transform(generate_series(1, length(t)), {enc})",
+                HEAD2: f"list_transform(generate_series(1, "
+                       f"least(length(t), 2)), {enc})"}
+
+        def seg(x) -> str:
+            if x in text:
+                return text[x]
+            if isinstance(x, Every):
+                return (f"(CASE WHEN doc_id % {x.k} = 0 THEN [{x.id}] "
+                        f"ELSE [] END)")
+            return f"[{x}]"
+        return "(" + "\n        || ".join(map(seg, s.segments)) + ")"
+
+    def _rec_ids_cte(family: str) -> str:
+        return (f"WITH ids AS (SELECT doc_id, {_rec_ids(family)} AS ids\n"
+                f"    FROM (SELECT doc_id, coalesce(text, '') AS t "
+                f"FROM documents))")
+
     # --- R4 AttnLabelDecode (dead break-at-eos quirk) ---
-    from .operators.recognize import CHARSET as _CS
-    cs2 = _CS.replace("'", "''")
-    eos_id = len(_CS) + 1
+    eos_id = n_cs + 1
     sqls["attn_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           ([0]
-            || list_transform(generate_series(1, length(t)),
-                 i -> strpos('{cs2}', substring(t, CAST(i AS INT), 1)))
-            || [{eos_id}]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> strpos('{cs2}', substring(t, CAST(i AS INT), 1)))
-           ) AS ids
-    FROM base
-)
+{_rec_ids_cte("attn")}
 SELECT doc_id,
        array_to_string(list_transform(
            list_filter(ids, i -> i != 0 AND i != {eos_id}),
@@ -5048,27 +5067,9 @@ FROM ids"""
 
 
     # --- R4b SARLabelDecode (live break-at-eos; <UKN> is a dict entry) ---
-    n_cs = len(_CS)
     ukn, s_eos, s_pad = n_cs, n_cs + 1, n_cs + 2
     sqls["sar_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           ((CASE WHEN doc_id % 5 = 0 THEN [{s_eos}] ELSE [] END)
-            || list_transform(generate_series(1, length(t)),
-                 i -> CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT),
-                          1)) = 0 THEN {ukn}
-                      ELSE strpos('{cs2}', substring(t, CAST(i AS INT),
-                          1)) - 1 END)
-            || [{s_pad}, {s_eos}]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT),
-                          1)) = 0 THEN {ukn}
-                      ELSE strpos('{cs2}', substring(t, CAST(i AS INT),
-                          1)) - 1 END)
-           ) AS ids
-    FROM base
-),
+{_rec_ids_cte("sar")},
 cuts AS (
     SELECT doc_id, ids,
            list_position(ids[2:], {s_eos}) AS p
@@ -5110,23 +5111,8 @@ FROM c WHERE cx2 - cx1 > 3 AND cy2 - cy1 > 3"""
     # --- R4c NRTRLabelDecode (no ignored tokens; live break; bare-except
     #     lookup: out-of-range skipped, negatives wrap Python-style) ---
     big = n_cs + 4
-    nrtr_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-                f"1)) = 0 THEN 1 ELSE strpos('{cs2}', substring(t, "
-                f"CAST(i AS INT), 1)) + 3 END")
     sqls["nrtr_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           ((CASE WHEN doc_id % 4 = 0 THEN [2] ELSE [] END)
-            || list_transform(generate_series(1, length(t)), i -> {nrtr_enc})
-            || (CASE WHEN doc_id % 2 = 0 THEN [0] ELSE [] END)
-            || (CASE WHEN doc_id % 7 = 0 THEN [-1] ELSE [] END)
-            || [{big + 20}, 3]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {nrtr_enc})
-           ) AS ids
-    FROM base
-),
+{_rec_ids_cte("nrtr")},
 cuts AS (SELECT doc_id, ids, list_position(ids, 3) AS p FROM ids)
 SELECT doc_id,
        array_to_string(list_transform(
@@ -5143,23 +5129,8 @@ FROM cuts"""
     # --- R4d ViTSTRLabelDecode (NRTR walk, 2-special dict, time-step-0
     #     column drop; eos = id 1 breaks anywhere) ---
     vit_big = n_cs + 2
-    vit_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-               f"1)) = 0 THEN {vit_big + 20} ELSE strpos('{cs2}', "
-               f"substring(t, CAST(i AS INT), 1)) + 1 END")
     sqls["vitstr_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           ([2]
-            || (CASE WHEN doc_id % 4 = 0 THEN [0] ELSE [] END)
-            || list_transform(generate_series(1, length(t)), i -> {vit_enc})
-            || (CASE WHEN doc_id % 7 = 0 THEN [-1] ELSE [] END)
-            || [1]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {vit_enc})
-           ) AS ids
-    FROM base
-),
+{_rec_ids_cte("vitstr")},
 drop0 AS (SELECT doc_id, ids[2:] AS ids FROM ids),
 cuts AS (SELECT doc_id, ids, list_position(ids, 1) AS p FROM drop0)
 SELECT doc_id,
@@ -5176,23 +5147,8 @@ FROM cuts"""
     # --- R4e SRNLabelDecode (specials at the dict END, both ignored
     #     anywhere, NO break; -1 wraps to the literal '<EOS>') ---
     srn_beg, srn_end = n_cs, n_cs + 1
-    srn_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-               f"1)) = 0 THEN {srn_beg} ELSE strpos('{cs2}', "
-               f"substring(t, CAST(i AS INT), 1)) - 1 END")
     sqls["srn_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           ((CASE WHEN doc_id % 5 = 0 THEN [{srn_end}] ELSE [] END)
-            || list_transform(generate_series(1, length(t)), i -> {srn_enc})
-            || (CASE WHEN doc_id % 3 = 0 THEN [{srn_beg}] ELSE [] END)
-            || [{srn_end}]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {srn_enc})
-            || (CASE WHEN doc_id % 7 = 0 THEN [-1] ELSE [] END)
-           ) AS ids
-    FROM base
-)
+{_rec_ids_cte("srn")}
 SELECT doc_id,
        array_to_string(list_transform(
            list_filter(ids, v -> v != {srn_beg} AND v != {srn_end}),
@@ -5204,23 +5160,13 @@ FROM ids"""
     # --- R4f RFLLabelDecode (Attn's walk over ['sos']+cs+['eos'] plus
     #     the counting branch: length = BANKER'S round of sum(lens)) ---
     rfl_end = n_cs + 1
-    rfl_enc = f"strpos('{cs2}', substring(t, CAST(i AS INT), 1))"
     sqls["rfl_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           ((CASE WHEN doc_id % 5 = 0 THEN [{rfl_end}] ELSE [] END)
-            || list_transform(generate_series(1, length(t)), i -> {rfl_enc})
-            || (CASE WHEN doc_id % 3 = 0 THEN [0] ELSE [] END)
-            || [{rfl_end}]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {rfl_enc})
-            || (CASE WHEN doc_id % 7 = 0 THEN [-1] ELSE [] END)
-           ) AS ids,
+WITH ids AS (
+    SELECT doc_id, {_rec_ids("rfl")} AS ids,
            coalesce(list_sum(list_transform(
                generate_series(1, length(t)),
                k -> ((doc_id + k) % 5) * 0.25)), 0.0) AS s
-    FROM base
+    FROM (SELECT doc_id, coalesce(text, '') AS t FROM documents)
 )
 SELECT doc_id,
        array_to_string(list_transform(
@@ -5237,22 +5183,8 @@ FROM ids"""
     # --- R4g SEEDLabelDecode (live break at eos; NO ignored-token skip:
     #     'padding'/'unknown' decode as literal dictionary strings) ---
     sd_eos, sd_pad, sd_unk = n_cs, n_cs + 1, n_cs + 2
-    seed_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-                f"1)) = 0 THEN {sd_unk} ELSE strpos('{cs2}', "
-                f"substring(t, CAST(i AS INT), 1)) - 1 END")
     sqls["seed_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           (list_transform(generate_series(1, length(t)), i -> {seed_enc})
-            || (CASE WHEN doc_id % 3 = 0 THEN [{sd_pad}] ELSE [] END)
-            || (CASE WHEN doc_id % 7 = 0 THEN [-1] ELSE [] END)
-            || [{sd_eos}]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {seed_enc})
-           ) AS ids
-    FROM base
-),
+{_rec_ids_cte("seed")},
 cuts AS (SELECT doc_id, ids, list_position(ids, {sd_eos}) AS p FROM ids)
 SELECT doc_id,
        array_to_string(list_transform(
@@ -5266,22 +5198,8 @@ FROM cuts"""
     # --- R4h SATRNLabelDecode rm_symbol=True (SAR's walk + lowercase +
     #     strip with LITERAL in-class '^' quirk) ---
     st_unk, st_end, st_pad = n_cs, n_cs + 1, n_cs + 2
-    satrn_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-                 f"1)) = 0 THEN {st_unk} ELSE strpos('{cs2}', "
-                 f"substring(t, CAST(i AS INT), 1)) - 1 END")
     sqls["satrn_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           ((CASE WHEN doc_id % 5 = 0 THEN [{st_end}] ELSE [] END)
-            || list_transform(generate_series(1, length(t)), i -> {satrn_enc})
-            || (CASE WHEN doc_id % 7 = 0 THEN [-1] ELSE [] END)
-            || [{st_end}]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {satrn_enc})
-           ) AS ids
-    FROM base
-),
+{_rec_ids_cte("satrn")},
 work AS (
     SELECT doc_id,
            CASE WHEN len(ids) > 0 AND ids[1] = {st_end}
@@ -5302,22 +5220,8 @@ FROM cuts"""
 
     # --- R4i PRENLabelDecode (all three specials PREPENDED:
     #     pad=0/eos=1/unk=2; eos breaks, pad/unk skip) ---
-    pren_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-                f"1)) = 0 THEN 2 ELSE strpos('{cs2}', "
-                f"substring(t, CAST(i AS INT), 1)) + 2 END")
     sqls["pren_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           ((CASE WHEN doc_id % 3 = 0 THEN [0] ELSE [] END)
-            || list_transform(generate_series(1, length(t)), i -> {pren_enc})
-            || (CASE WHEN doc_id % 7 = 0 THEN [-1] ELSE [] END)
-            || [1]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {pren_enc})
-           ) AS ids
-    FROM base
-),
+{_rec_ids_cte("pren")},
 cuts AS (SELECT doc_id, ids, list_position(ids, 1) AS p FROM ids)
 SELECT doc_id,
        array_to_string(list_transform(
@@ -5332,21 +5236,8 @@ FROM cuts"""
     # --- R4j ABINetLabelDecode (NRTR's bare-except walk over the
     #     1-special dict ['</s>'] + cs: eos is id ZERO) ---
     ab_big = n_cs + 1
-    ab_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-              f"1)) = 0 THEN {ab_big + 20} ELSE strpos('{cs2}', "
-              f"substring(t, CAST(i AS INT), 1)) END")
     sqls["abinet_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           (list_transform(generate_series(1, length(t)), i -> {ab_enc})
-            || (CASE WHEN doc_id % 7 = 0 THEN [-1] ELSE [] END)
-            || [0]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {ab_enc})
-           ) AS ids
-    FROM base
-),
+{_rec_ids_cte("abinet")},
 kept AS (
     SELECT doc_id,
            list_filter(list_transform(ids,
@@ -5363,23 +5254,8 @@ FROM cuts"""
 
     # --- R4k SPINLabelDecode (Attn's decode over the FRONT-loaded dict
     #     ['sos','eos'] + cs; -1 wraps to the LAST charset char) ---
-    spin_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-                f"1)) = 0 THEN 0 ELSE strpos('{cs2}', "
-                f"substring(t, CAST(i AS INT), 1)) + 1 END")
     sqls["spin_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           ((CASE WHEN doc_id % 5 = 0 THEN [1] ELSE [] END)
-            || list_transform(generate_series(1, length(t)), i -> {spin_enc})
-            || (CASE WHEN doc_id % 3 = 0 THEN [0] ELSE [] END)
-            || [1]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {spin_enc})
-            || (CASE WHEN doc_id % 7 = 0 THEN [-1] ELSE [] END)
-           ) AS ids
-    FROM base
-)
+{_rec_ids_cte("spin")}
 SELECT doc_id,
        array_to_string(list_transform(
            list_filter(ids, v -> v != 0 AND v != 1),
@@ -5390,22 +5266,14 @@ FROM ids"""
 
     # --- R4l VLLabelDecode eval path (fixed nsteps; length = first-0
     #     index INCLUSIVE; out-of-range ids decode to '' but count) ---
-    vl_pad, vl_n = n_cs + 30, n_cs
-    vl_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-              f"1)) = 0 THEN {vl_pad} ELSE strpos('{cs2}', "
-              f"substring(t, CAST(i AS INT), 1)) END")
+    vl_pad, vl_n = STREAMS["vl"].unknown, n_cs
     sqls["vl_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
+WITH ids AS (
     SELECT doc_id,
-           list_slice(
-               list_transform(generate_series(1, length(t)), i -> {vl_enc})
-               || [0]
-               || list_transform(generate_series(1, least(length(t), 2)),
-                    i -> {vl_enc})
+           list_slice({_rec_ids("vl")}
                || list_transform(generate_series(1, 25), i -> {vl_pad}),
                1, 25) AS ids
-    FROM base
+    FROM (SELECT doc_id, coalesce(text, '') AS t FROM documents)
 ),
 cuts AS (
     SELECT doc_id, ids,
@@ -5423,20 +5291,8 @@ FROM cuts"""
 
     # --- R4m CANLabelDecode (seq_end = argmin, not an eos search;
     #     SPACE-joined latex symbols) ---
-    can_enc = (f"CASE WHEN strpos('{cs2}', substring(t, CAST(i AS INT), "
-               f"1)) = 0 THEN {n_cs - 1} ELSE strpos('{cs2}', "
-               f"substring(t, CAST(i AS INT), 1)) - 1 END")
     sqls["can_decode"] = f"""
-WITH base AS (SELECT doc_id, coalesce(text, '') AS t FROM documents),
-ids AS (
-    SELECT doc_id,
-           (list_transform(generate_series(1, length(t)), i -> {can_enc})
-            || [0]
-            || list_transform(generate_series(1, least(length(t), 2)),
-                 i -> {can_enc})
-           ) AS ids
-    FROM base
-),
+{_rec_ids_cte("can")},
 cuts AS (SELECT doc_id, ids,
                 list_position(ids, list_min(ids)) AS p FROM ids)
 SELECT doc_id,

@@ -186,7 +186,8 @@ WP_MAX_PIECE = 4
 #: [UNK] arm is unreachable by construction.
 WP_REL_FREQ = 0.004
 #: Unrolled matcher steps; each advances >= 1 char, corpus words are
-#: <= 8 chars, so 12 leaves margin (asserted consumed in the pytest).
+#: <= 8 chars, so 12 leaves margin. A word the steps do not consume
+#: raises (``wordpiece_encode``) rather than emit a truncated row.
 WP_STEPS = 12
 
 
@@ -229,7 +230,9 @@ def wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits one row per word type: the segmentation, piece count, corpus
     frequency, and the fertility contribution — the table a tokenizer
     pipeline ships as its encode artifact (documents then join it
-    broadcast, exactly like ``bpe_encode``).
+    broadcast, exactly like ``bpe_encode``). A word that WP_STEPS steps
+    do not consume raises, naming the word, so ``consumed`` is always
+    true.
 
     Scale shape: the matcher unrolls WP_STEPS projection steps over the
     VOCABULARY-SIZED word-type table with the two piece arrays riding a
@@ -277,5 +280,9 @@ def wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word", F.col("freq").cast("long").alias("freq"),
         F.col("toks").alias("pieces"),
         F.size(F.split("toks", " ")).cast("long").alias("n_pieces"),
-        (F.col("pos") >= F.length("word")).alias("consumed"))
+        F.when(F.col("pos") >= F.length("word"), F.lit(True))
+        .otherwise(F.raise_error(F.concat(
+            F.lit(f"wordpiece_encode: {WP_STEPS} matcher steps do not "
+                  f"consume the word '"), F.col("word"), F.lit("'"))))
+        .alias("consumed"))
         .orderBy("word"))

@@ -1,4 +1,5 @@
-"""Recognition-analog stage (R1/R2/R3) — sort-to-batch Arrow map + CTC decode.
+"""Recognition-analog stages: R1/R2/R3 (sort-to-batch Arrow map + CTC
+decode) and the R4 decoder demos.
 
 The reference's recognizer (tools/infer/predict_rec.py:393-633) sorts crops
 by aspect ratio so same-batch crops share padded width (argsort :396-400),
@@ -25,9 +26,24 @@ Spark restatement:
 Round-trip contract: ``decode(encode(text)) == text`` exactly, score 1.0
 (0.0 for empty text — the reference's conf_list=[0] fallback), which makes
 the stage oracle-checkable end to end.
+
+R4: the 13 other decoder families of rec_postprocess.py (Attn, SAR, NRTR,
+ViTSTR, SRN, RFL, SEED, SATRN, PREN, ABINet, SPIN, VL, CAN), each a pure
+JVM projection (``*_decode``) twinned by a ``kernels.*_label_decode``
+kernel and a DuckDB query in ``entry_queries.oracle_sql()``. Each demo
+feeds its decoder a deterministic "model output" id stream built from
+the document text. The streams are data, written once in
+:data:`STREAMS` and rendered into Spark SQL here (:func:`_text_ids`) and
+into DuckDB SQL in ``oracle_sql()``; each engine's decode walk over the
+stream (eos cut, ignored ids, negative wrap, dictionary lookup) stays
+hand-written, since that walk is what the twin checks. The tests spell
+the same streams a third time as Python lists: a renderer that drifts
+from the table's meaning fails there, even when both engines agree.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,19 +65,83 @@ REC_SCHEMA = ("doc_id string, span_idx long, rec_text string, "
 _CS = CHARSET.replace("\\", "\\\\").replace("'", "\\'")
 
 
-def _text_ids(unknown, offset: str = "") -> tuple[str, str]:
-    """The decoder demos' shared encode, as SQL: the id arrays of
-    ``text`` and of its first 2 chars. A charset char maps to its
-    1-based CHARSET position followed by ``offset`` (SQL text such as
-    ``" - 1"``), an out-of-dict char to ``unknown``. ``filter(c != '')``
-    guards the empty-text edge: split('', '') yields [''] and Spark's
-    instr(s, '') is 1, which would fabricate a char id."""
+#: Segment markers of a decoder demo's id stream (:data:`STREAMS`): the
+#: encoded text, and the encoded first two characters of the text.
+BODY, HEAD2 = "BODY", "HEAD2"
+
+
+class Every(NamedTuple):
+    """A stream segment: ``id``, emitted only when ``doc_id % k = 0``."""
+    k: int
+    id: int
+
+
+class IdStream(NamedTuple):
+    """One decoder demo's "model output". A charset char encodes to its
+    1-based CHARSET position plus ``shift``, any other char to
+    ``unknown``; ``segments`` are, in order, BODY, HEAD2, a literal id
+    or an :class:`Every`."""
+    unknown: int
+    shift: int
+    segments: tuple
+
+
+_N = len(CHARSET)
+
+#: The R4 decoder demos' id streams, by family; each decoder's docstring
+#: says what every segment exercises. The ids ``_N + 21`` and up lie
+#: past their family's dictionary.
+STREAMS = {
+    "attn": IdStream(0, 0, (0, BODY, _N + 1, HEAD2)),
+    "sar": IdStream(_N, -1, (Every(5, _N + 1), BODY, _N + 2, _N + 1,
+                             HEAD2)),
+    "nrtr": IdStream(1, 3, (Every(4, 2), BODY, Every(2, 0), Every(7, -1),
+                            _N + 24, 3, HEAD2)),
+    "vitstr": IdStream(_N + 22, 1, (2, Every(4, 0), BODY, Every(7, -1),
+                                    1, HEAD2)),
+    "srn": IdStream(_N, -1, (Every(5, _N + 1), BODY, Every(3, _N), _N + 1,
+                             HEAD2, Every(7, -1))),
+    "rfl": IdStream(0, 0, (Every(5, _N + 1), BODY, Every(3, 0), _N + 1,
+                           HEAD2, Every(7, -1))),
+    "seed": IdStream(_N + 2, -1, (BODY, Every(3, _N + 1), Every(7, -1), _N,
+                                  HEAD2)),
+    "satrn": IdStream(_N, -1, (Every(5, _N + 1), BODY, Every(7, -1),
+                               _N + 1, HEAD2)),
+    "pren": IdStream(2, 2, (Every(3, 0), BODY, Every(7, -1), 1, HEAD2)),
+    "abinet": IdStream(_N + 21, 0, (BODY, Every(7, -1), 0, HEAD2)),
+    "spin": IdStream(0, 1, (Every(5, 1), BODY, Every(3, 0), 1, HEAD2,
+                            Every(7, -1))),
+    "vl": IdStream(_N + 30, 0, (BODY, 0, HEAD2)),
+    "can": IdStream(_N - 1, -1, (BODY, 0, HEAD2)),
+}
+
+
+def _text_ids(family: str) -> str:
+    """``STREAMS[family]`` as Spark SQL over ``doc_id`` and ``text``.
+    ``filter(c != '')`` guards the empty-text edge: split('', '') yields
+    [''] and Spark's instr(s, '') is 1, which would fabricate a char
+    id."""
+    s = STREAMS[family]
+
     def enc(src: str) -> str:
         return (f"transform(filter(split({src}, ''), c -> c != ''), "
-                f"c -> CASE WHEN instr('{_CS}', c) = 0 THEN {unknown} "
-                f"ELSE instr('{_CS}', c){offset} END)")
-    return (enc("coalesce(text, '')"),
-            enc("substring(coalesce(text, ''), 1, 2)"))
+                f"c -> CASE WHEN instr('{_CS}', c) = 0 THEN {s.unknown} "
+                f"ELSE instr('{_CS}', c) + {s.shift} END)")
+    text = {BODY: enc("coalesce(text, '')"),
+            HEAD2: enc("substring(coalesce(text, ''), 1, 2)")}
+
+    def seg(x) -> str:
+        if x in text:
+            return text[x]
+        if isinstance(x, Every):
+            return (f"CASE WHEN doc_id % {x.k} = 0 THEN array({x.id}) "
+                    f"ELSE array() END")
+        return f"array({x})"
+    return f"concat({', '.join(map(seg, s.segments))})"
+
+
+def _with_ids(docs: DataFrame, family: str) -> DataFrame:
+    return docs.withColumn("_ids", F.expr(_text_ids(family)))
 
 
 def ctc_encode_expr(text_col: str = "text"):
@@ -175,16 +255,11 @@ def attn_decode(docs: DataFrame) -> DataFrame:
     charset-filtered text followed by its charset-filtered first 2 chars.
     """
     eos = len(CHARSET) + 1
-    # filter(c != '') guards the empty-text edge: split('', '') yields ['']
-    # and Spark's instr(s, '') is 1, which would fabricate a char id.
-    ids = (f"concat(array(0), transform(filter(split(coalesce(text, ''), "
-           f"''), c -> c != ''), c -> instr('{_CS}', c)), array({eos}), "
-           f"transform(filter(split(substring(coalesce(text, ''), 1, 2), "
-           f"''), c -> c != ''), c -> instr('{_CS}', c)))")
-    decoded = (f"concat_ws('', transform(filter({ids}, "
+    decoded = (f"concat_ws('', transform(filter(_ids, "
                f"i -> i != 0 AND i != {eos}), "
                f"i -> substring('{_CS}', CAST(i AS INT), 1)))")
-    return docs.select("doc_id", F.expr(decoded).alias("attn_text"))
+    return _with_ids(docs, "attn").select(
+        "doc_id", F.expr(decoded).alias("attn_text"))
 
 
 def sar_decode(docs: DataFrame) -> DataFrame:
@@ -202,9 +277,6 @@ def sar_decode(docs: DataFrame) -> DataFrame:
     """
     n = len(CHARSET)
     ukn, eos, pad = n, n + 1, n + 2
-    body, head2 = _text_ids(ukn, " - 1")
-    ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array({eos}) "
-           f"ELSE array() END, {body}, array({pad}, {eos}), {head2})")
     # first eos at a 1-based position >= 2 breaks; pad and a position-1
     # eos are dropped; remaining ids map to chars or the '<UKN>' marker
     p = f"array_position(slice(_ids, 2, size(_ids) - 1), {eos})"
@@ -215,7 +287,7 @@ def sar_decode(docs: DataFrame) -> DataFrame:
     decoded = (f"concat_ws('', transform({kept}, "
                f"v -> CASE WHEN v = {ukn} THEN '<UKN>' "
                f"ELSE substring('{_CS}', CAST(v + 1 AS INT), 1) END))")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "sar")
             .select("doc_id", F.expr(decoded).alias("sar_text")))
 
 
@@ -238,12 +310,6 @@ def nrtr_decode(docs: DataFrame) -> DataFrame:
     which must NOT decode. Output: (doc_id, nrtr_text).
     """
     big = len(CHARSET) + 4          # dict size: one past the last index
-    body, head2 = _text_ids(1, " + 3")
-    ids = (f"concat(CASE WHEN doc_id % 4 = 0 THEN array(2) "
-           f"ELSE array() END, {body}, "
-           f"CASE WHEN doc_id % 2 = 0 THEN array(0) ELSE array() END, "
-           f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
-           f"array({big + 20}), array(3), {head2})")
     p = "array_position(_ids, 3)"
     cut = f"(CASE WHEN {p} > 0 THEN {p} - 1 ELSE size(_ids) END)"
     # negative ids wrap once (v + dict_size); anything still outside
@@ -255,7 +321,7 @@ def nrtr_decode(docs: DataFrame) -> DataFrame:
                f"v -> CASE WHEN v = 0 THEN 'blank' WHEN v = 1 THEN '<unk>' "
                f"WHEN v = 2 THEN '<s>' "
                f"ELSE substring('{_CS}', CAST(v - 3 AS INT), 1) END))")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "nrtr")
             .select("doc_id", F.expr(decoded).alias("nrtr_text")))
 
 
@@ -278,11 +344,6 @@ def vitstr_decode(docs: DataFrame) -> DataFrame:
     Output: (doc_id, vitstr_text).
     """
     big = len(CHARSET) + 2          # dict size: one past the last index
-    body, head2 = _text_ids(big + 20, " + 1")
-    ids = (f"concat(array(2), CASE WHEN doc_id % 4 = 0 THEN array(0) "
-           f"ELSE array() END, {body}, "
-           f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
-           f"array(1), {head2})")
     # the [:, 1:] drop happens FIRST, then the break scan
     dropped = "slice(_ids, 2, size(_ids) - 1)"
     p = f"array_position({dropped}, 1)"
@@ -293,7 +354,7 @@ def vitstr_decode(docs: DataFrame) -> DataFrame:
     decoded = (f"concat_ws('', transform({kept}, "
                f"v -> CASE WHEN v = 0 THEN '<s>' "
                f"ELSE substring('{_CS}', CAST(v - 1 AS INT), 1) END))")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "vitstr")
             .select("doc_id", F.expr(decoded).alias("vitstr_text")))
 
 
@@ -317,17 +378,11 @@ def srn_decode(docs: DataFrame) -> DataFrame:
     """
     n = len(CHARSET)
     beg, end = n, n + 1
-    body, head2 = _text_ids(beg, " - 1")
-    ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array({end}) "
-           f"ELSE array() END, {body}, "
-           f"CASE WHEN doc_id % 3 = 0 THEN array({beg}) ELSE array() END, "
-           f"array({end}), {head2}, "
-           f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END)")
     decoded = (f"concat_ws('', transform(filter(_ids, "
                f"v -> v != {beg} AND v != {end}), "
                f"v -> CASE WHEN v = -1 THEN '<EOS>' "
                f"ELSE substring('{_CS}', CAST(v + 1 AS INT), 1) END))")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "srn")
             .select("doc_id", F.expr(decoded).alias("srn_text")))
 
 
@@ -354,12 +409,6 @@ def rfl_decode(docs: DataFrame) -> DataFrame:
     """
     n = len(CHARSET)
     end = n + 1
-    body, head2 = _text_ids(0)
-    ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array({end}) "
-           f"ELSE array() END, {body}, "
-           f"CASE WHEN doc_id % 3 = 0 THEN array(0) ELSE array() END, "
-           f"array({end}), {head2}, "
-           f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END)")
     decoded = (f"concat_ws('', transform(filter(_ids, "
                f"v -> v != 0 AND v != {end}), "
                f"v -> CASE WHEN v = -1 THEN 'eos' "
@@ -377,7 +426,7 @@ def rfl_decode(docs: DataFrame) -> DataFrame:
            f"WHEN {s} - floor({s}) > 0.5 THEN floor({s}) + 1 "
            f"WHEN CAST(floor({s}) AS BIGINT) % 2 = 0 THEN floor({s}) "
            f"ELSE floor({s}) + 1 END) AS BIGINT)")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "rfl")
             .select("doc_id", F.expr(decoded).alias("rfl_text"),
                     F.expr(cnt).alias("rfl_cnt_len")))
 
@@ -400,18 +449,13 @@ def seed_decode(docs: DataFrame) -> DataFrame:
     """
     n = len(CHARSET)
     eos, pad, unk = n, n + 1, n + 2
-    body, head2 = _text_ids(unk, " - 1")
-    ids = (f"concat({body}, "
-           f"CASE WHEN doc_id % 3 = 0 THEN array({pad}) ELSE array() END, "
-           f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
-           f"array({eos}), {head2})")
     p = f"array_position(_ids, {eos})"
     cut = f"(CASE WHEN {p} > 0 THEN {p} - 1 ELSE size(_ids) END)"
     decoded = (f"concat_ws('', transform(slice(_ids, 1, CAST({cut} AS "
                f"INT)), v -> CASE WHEN v = {pad} THEN 'padding' "
                f"WHEN v = {unk} OR v = -1 THEN 'unknown' "
                f"ELSE substring('{_CS}', CAST(v + 1 AS INT), 1) END))")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "seed")
             .select("doc_id", F.expr(decoded).alias("seed_text")))
 
 
@@ -435,11 +479,6 @@ def satrn_decode(docs: DataFrame) -> DataFrame:
     """
     n = len(CHARSET)
     unk, end = n, n + 1
-    body, head2 = _text_ids(unk, " - 1")
-    ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array({end}) "
-           f"ELSE array() END, {body}, "
-           f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
-           f"array({end}), {head2})")
     # the idx==0 continue applies to the RAW stream; drop a leading eos
     # first, then break before the first remaining eos
     work = (f"(CASE WHEN size(_ids) > 0 AND element_at(_ids, 1) = {end} "
@@ -455,7 +494,7 @@ def satrn_decode(docs: DataFrame) -> DataFrame:
     # parsing); '^' is literal inside the class per the reference quirk
     cleaned = F.regexp_replace(F.lower(F.expr(raw)),
                                "[^A-Z^a-z0-9一-龥]", "")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "satrn")
             .select("doc_id", cleaned.alias("satrn_text")))
 
 
@@ -475,18 +514,13 @@ def pren_decode(docs: DataFrame) -> DataFrame:
     must NOT decode. Output: (doc_id, pren_text).
     """
     n = len(CHARSET)
-    body, head2 = _text_ids(2, " + 2")
-    ids = (f"concat(CASE WHEN doc_id % 3 = 0 THEN array(0) "
-           f"ELSE array() END, {body}, "
-           f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
-           f"array(1), {head2})")
     p = "array_position(_ids, 1)"
     cut = f"(CASE WHEN {p} > 0 THEN {p} - 1 ELSE size(_ids) END)"
     decoded = (f"concat_ws('', transform(filter(slice(_ids, 1, CAST({cut} "
                f"AS INT)), v -> v != 0 AND v != 2), "
                f"v -> CASE WHEN v = -1 THEN substring('{_CS}', {n}, 1) "
                f"ELSE substring('{_CS}', CAST(v - 2 AS INT), 1) END))")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "pren")
             .select("doc_id", F.expr(decoded).alias("pren_text")))
 
 
@@ -507,17 +541,13 @@ def abinet_decode(docs: DataFrame) -> DataFrame:
     """
     n = len(CHARSET)
     big = n + 1                        # dict size
-    body, head2 = _text_ids(big + 20)
-    ids = (f"concat({body}, "
-           f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END, "
-           f"array(0), {head2})")
     kept = (f"filter(transform(_ids, v -> CASE WHEN v < 0 THEN v + {big} "
             f"ELSE v END), v -> v >= 0 AND v < {big})")
     p = f"array_position({kept}, 0)"
     cut = f"(CASE WHEN {p} > 0 THEN {p} - 1 ELSE size({kept}) END)"
     decoded = (f"concat_ws('', transform(slice({kept}, 1, CAST({cut} AS "
                f"INT)), v -> substring('{_CS}', CAST(v AS INT), 1)))")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "abinet")
             .select("doc_id", F.expr(decoded).alias("abinet_text")))
 
 
@@ -537,17 +567,11 @@ def spin_decode(docs: DataFrame) -> DataFrame:
     (the last charset char joins). Output: (doc_id, spin_text).
     """
     n = len(CHARSET)
-    body, head2 = _text_ids(0, " + 1")
-    ids = (f"concat(CASE WHEN doc_id % 5 = 0 THEN array(1) "
-           f"ELSE array() END, {body}, "
-           f"CASE WHEN doc_id % 3 = 0 THEN array(0) ELSE array() END, "
-           f"array(1), {head2}, "
-           f"CASE WHEN doc_id % 7 = 0 THEN array(-1) ELSE array() END)")
     decoded = (f"concat_ws('', transform(filter(_ids, "
                f"v -> v != 0 AND v != 1), "
                f"v -> CASE WHEN v = -1 THEN substring('{_CS}', {n}, 1) "
                f"ELSE substring('{_CS}', CAST(v - 1 AS INT), 1) END))")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "spin")
             .select("doc_id", F.expr(decoded).alias("spin_text")))
 
 
@@ -570,9 +594,8 @@ def vl_decode(docs: DataFrame, nsteps: int = 25) -> DataFrame:
     their eos (length pins at nsteps). Output: (doc_id, vl_text, vl_len).
     """
     n = len(CHARSET)
-    pad = n + 30
-    body, head2 = _text_ids(pad)
-    ids = (f"slice(concat({body}, array(0), {head2}, "
+    pad = STREAMS["vl"].unknown
+    ids = (f"slice(concat({_text_ids('vl')}, "
            f"array_repeat({pad}, {nsteps})), 1, {nsteps})")
     p = "array_position(_ids, 0)"
     ln = f"(CASE WHEN {p} > 0 THEN {p} ELSE {nsteps} END)"
@@ -600,11 +623,8 @@ def can_decode(docs: DataFrame) -> DataFrame:
     2 chars) (never decodes — 0 is the global minimum whenever no 'a'
     precedes it). Output: (doc_id, can_text).
     """
-    n = len(CHARSET)
-    body, head2 = _text_ids(n - 1, " - 1")
-    ids = f"concat({body}, array(0), {head2})"
     p = "array_position(_ids, array_min(_ids))"
     decoded = (f"concat_ws(' ', transform(slice(_ids, 1, CAST({p} - 1 AS "
                f"INT)), v -> substring('{_CS}', CAST(v + 1 AS INT), 1)))")
-    return (docs.withColumn("_ids", F.expr(ids))
+    return (_with_ids(docs, "can")
             .select("doc_id", F.expr(decoded).alias("can_text")))

@@ -50,17 +50,24 @@ def test_per_doc_detectors_have_no_shuffle_and_pushed_filter(spark):
         assert "MapInArrow" in plan, name
 
 
-def test_sar_decode_is_pure_projection(spark):
-    """sar_decode: single codegen projection — no shuffle, no Python."""
+@pytest.mark.parametrize("name", [
+    "attn_decode", "sar_decode", "nrtr_decode", "vitstr_decode",
+    "srn_decode", "rfl_decode", "seed_decode", "satrn_decode",
+    "pren_decode", "abinet_decode", "spin_decode", "vl_decode",
+    "can_decode"])
+def test_sar_decode_is_pure_projection(spark, name):
+    """Each R4 decoder demo (sar_decode first, then the other 12, whose
+    id streams render from the same recognize.STREAMS table): a single
+    projection — no shuffle, no Python."""
     import paddleocr_spark.entry_queries as EQ
-    plan = _formatted(EQ.queries()["sar_decode"](spark, SF))
-    assert "Exchange" not in plan
+    plan = _formatted(EQ.queries()[name](spark, SF))
+    assert "Exchange" not in plan, name
     for py_node in ("MapInPandas", "MapInArrow", "ArrowEvalPython",
                     "BatchEvalPython"):
-        assert py_node not in plan
+        assert py_node not in plan, name
     # (the HOF lambdas keep the projection outside WholeStageCodegen but
     # still JVM-side — Scan → Project only)
-    assert "Scan parquet" in plan
+    assert "Scan parquet" in plan, name
 
 
 @pytest.fixture(scope="module")

@@ -8,6 +8,7 @@ DuckDB twin.
 from __future__ import annotations
 
 import pyarrow.parquet as pq
+import pytest
 
 from paddleocr_spark.functions.tokenizer import (BPE_MERGES, bpe_merges,
                                                  bpe_token_counts)
@@ -160,3 +161,23 @@ def test_wordpiece_matches_plain_python(spark):
     # the vocabulary threshold must actually split behavior: some words
     # stay whole (or near-whole), others fragment
     assert 0 < multi < len(freq)
+
+
+def test_wordpiece_raises_on_a_word_the_steps_cannot_consume(spark,
+                                                            tmp_path):
+    """A word longer than WP_STEPS whose multi-char pieces all stay under
+    WP_REL_FREQ takes one step per character: the unrolled matcher
+    cannot consume it, and the query names it instead of emitting a
+    truncated row."""
+    from paddleocr_spark.functions.tokenizer import (WP_STEPS,
+                                                     wordpiece_encode)
+
+    long_word = "qwertyuiopzxcvbnm"               # 17 distinct chars
+    assert len(long_word) > WP_STEPS
+    rows = [(i, "ab cd ef ab cd") for i in range(60)]
+    rows.append((60, f"ab {long_word}"))
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.mode("overwrite") \
+        .parquet(str(tmp_path / "documents.parquet"))
+    with pytest.raises(Exception, match=long_word):
+        wordpiece_encode(spark, str(tmp_path)).collect()

@@ -15,7 +15,15 @@ diffs this output before and after the change at two SFs:
 
 A query that raises prints ``name ERROR <exception class>``.
 
-Usage: python tools/query_hashes.py <sf_dir> [query ...]
+``--sql`` in place of the sf dir prints one ``name md5`` line per
+``oracle_sql()`` entry instead, hashing the DuckDB twin's SQL text with
+the fixture root (``entry_queries.FIXTURE_DIR``) replaced by a fixed
+placeholder, so two checkouts in different directories compare. It
+starts no Spark session (seconds, not minutes):
+
+    python tools/query_hashes.py --sql > after_sql.txt
+
+Usage: python tools/query_hashes.py (<sf_dir> | --sql) [query ...]
 """
 
 from __future__ import annotations
@@ -33,11 +41,25 @@ def canon_hash(df) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
+def sql_hashes(only: set[str]) -> int:
+    import __spark_entry__ as entry
+    from paddleocr_spark.entry_queries import FIXTURE_DIR
+
+    for name, sql in entry.oracle_sql().items():
+        if only and name not in only:
+            continue
+        sql = sql.replace(FIXTURE_DIR, "<FIXTURE_DIR>")
+        print(f"{name} {hashlib.md5(sql.encode()).hexdigest()}")
+    return 0
+
+
 def main() -> int:
     if len(sys.argv) < 2:
         print(__doc__.strip().splitlines()[-1], file=sys.stderr)
         return 2
     sf_dir, only = sys.argv[1], set(sys.argv[2:])
+    if sf_dir == "--sql":
+        return sql_hashes(only)
 
     import __spark_entry__ as entry
     from paddleocr_spark.session import get_spark
